@@ -13,11 +13,15 @@ gates it and the default backend is parquet with:
   * dynamic partition overwrite (only touched buckets replaced);
   * a ``_lineage`` sidecar table ``(bucket, n_rows, fingerprint)`` written
     per completed bucket — the resume set and the metrics table in one
-    (SURVEY A15).
+    (SURVEY A15).  The row is computed from the committed files, not from
+    the rows handed to the writer, and a bucket with no rows records
+    ``(b, 0, 0)``.
 
-Resume contract: :func:`resumable_write` skips buckets already present in
-the lineage sidecar; re-running after a kill converges to the same table
-(tests/test_lineage.py kills between buckets and re-runs).
+Resume contract: :func:`commit_buckets` — the one commit path, under both
+:func:`resumable_write` and the mentions checkpoint — commits only the
+buckets of ``range(N)`` missing from the lineage sidecar, and builds
+nothing when none are; re-running after a kill converges to the same
+table (tests/test_lineage.py kills between buckets and re-runs).
 """
 
 from __future__ import annotations
@@ -25,6 +29,7 @@ from __future__ import annotations
 import json
 import os
 from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +55,7 @@ def dynamic_partition_overwrite(spark: SparkSession):
             spark.conf.set(key, prev)
 
 LINEAGE_DIR = "_lineage"
+LINEAGE_SCHEMA = "bucket int, n_rows long, fingerprint long"
 MANIFEST = "_manifest.json"
 
 
@@ -79,77 +85,88 @@ def _lineage_of(df: DataFrame) -> DataFrame:
 
 
 def completed_buckets(spark: SparkSession, path: str) -> list[int]:
-    lpath = os.path.join(path, LINEAGE_DIR)
-    try:
-        return [r.bucket for r in spark.read.parquet(lpath).select("bucket").collect()]
-    except Exception:
+    """Buckets recorded in the lineage sidecar; ``[]`` when it does not
+    exist yet.  A sidecar that exists but cannot be read raises rather
+    than silently triggering a full recompute."""
+    lpath = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(path, LINEAGE_DIR))
+    if not lpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(lpath):
         return []
+    return [r.bucket for r in read_lineage(spark, path).select("bucket").collect()]
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(path, LINEAGE_DIR))
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(
+        os.path.join(path, LINEAGE_DIR))
+
+
+def commit_buckets(spark: SparkSession, path: str, n_buckets: int,
+                   bucketed: Callable[[list[int]], DataFrame], waves: int = 1,
+                   fail_after_buckets: int | None = None) -> list[int]:
+    """Commit the buckets of ``range(n_buckets)`` that the lineage sidecar
+    does not list yet; returns them.  ``bucketed(todo)`` gives the rows of
+    the buckets in ``todo``, with an int ``bucket`` column; it is not
+    called at all when every bucket is done.
+
+    The todo buckets are committed in ``waves`` sequential groups.  Each
+    wave is written once, co-located so each bucket directory gets one
+    file, then its lineage is computed from a partition-pruned readback of
+    the committed files (a bucket with no rows records ``(b, 0, 0)``) and
+    appended after the data — a kill between the two re-commits the wave.
+
+    ``fail_after_buckets`` is a test hook: raise after committing that
+    many buckets to simulate a mid-job kill.
+    """
+    done = set(completed_buckets(spark, path))
+    todo = [b for b in range(n_buckets) if b not in done]
+    wave_size = -(-len(todo) // max(1, int(waves))) or 1  # ceil; 1 if no todo
+    committed = 0
+    for i in range(0, len(todo), wave_size):
+        wave = todo[i:i + wave_size]
+        kill = fail_after_buckets is not None \
+            and fail_after_buckets - committed < len(wave)
+        if kill:
+            wave = wave[:fail_after_buckets - committed]
+        if wave:
+            df = bucketed(wave)
+            # co-locate each bucket before partitionBy: without it every
+            # write task opens a file per bucket directory (tasks × buckets
+            # files, measured 1.4-1.9× slower even at local[8]/64)
+            with dynamic_partition_overwrite(spark):
+                df.repartition(len(wave), "bucket").write.mode("overwrite") \
+                    .partitionBy("bucket").parquet(path)
+            written = spark.read.schema(df.schema).parquet(path) \
+                .filter(F.col("bucket").isin(wave))
+            have = {r.bucket: tuple(r) for r in _lineage_of(written).collect()}
+            spark.createDataFrame([have.get(b, (b, 0, 0)) for b in wave],
+                                  LINEAGE_SCHEMA) \
+                .write.mode("append").parquet(os.path.join(path, LINEAGE_DIR))
+            committed += len(wave)
+        if kill:
+            raise RuntimeError(
+                f"injected failure after {fail_after_buckets} buckets")
+    return todo
 
 
 def resumable_write(df: DataFrame, path: str, key: str = "subj",
                     n_buckets: int = 64,
                     fail_after_buckets: int | None = None) -> dict:
-    """Write ``df`` partitioned by bucket(key), skipping buckets whose
-    lineage rows already exist.  Returns a summary dict.
-
-    ``fail_after_buckets`` is a test hook: raise after materializing that
-    many buckets to simulate a mid-job kill.
-    """
+    """Write ``df`` partitioned by bucket(key) through
+    :func:`commit_buckets`; ``df`` is not evaluated when every bucket is
+    already committed.  Returns a summary dict."""
     spark = df.sparkSession
     bdf = with_bucket(df, key, n_buckets)
-    done = set(completed_buckets(spark, path))
-    todo_df = bdf.filter(~F.col("bucket").isin(list(done))) if done else bdf
-    # one pass over the remaining data; cache so lineage doesn't recompute it
-    todo_df = todo_df.persist()
-    try:
-        lineage = _lineage_of(todo_df).collect()
-        todo_buckets = sorted(r.bucket for r in lineage)
-        # co-locate each bucket before partitionBy: without this every
-        # write task opens a file per bucket directory (tasks × buckets
-        # files — 4M files at 1000 executors × 4096 buckets, and measured
-        # 1.4-1.9× slower even at local[8]/64); hash-repartitioned on the
-        # bucket column the output is ~one file per bucket
-        def _colocated(df_):
-            return df_.repartition(max(len(todo_buckets), 1), "bucket")
-
-        if fail_after_buckets is not None and fail_after_buckets < len(todo_buckets):
-            keep = set(todo_buckets[:fail_after_buckets])
-            part = todo_df.filter(F.col("bucket").isin(list(keep)))
-            with dynamic_partition_overwrite(spark):
-                _colocated(part).write.mode("overwrite") \
-                    .partitionBy("bucket").parquet(path)
-            _append_lineage(spark, path, [r for r in lineage if r.bucket in keep])
-            raise RuntimeError(
-                f"injected failure after {fail_after_buckets} buckets")
-        if todo_buckets:
-            with dynamic_partition_overwrite(spark):
-                _colocated(todo_df).write.mode("overwrite") \
-                    .partitionBy("bucket").parquet(path)
-            _append_lineage(spark, path, lineage)
-        manifest = {
-            "n_buckets": n_buckets, "key": key,
-            "completed": sorted(done | set(todo_buckets)),
-            "skipped_resume": sorted(done),
-        }
-        with open(os.path.join(path, MANIFEST), "w") as f:
-            json.dump(manifest, f)
-        return manifest
-    finally:
-        todo_df.unpersist()
-
-
-def _append_lineage(spark: SparkSession, path: str, rows: list) -> None:
-    if not rows:
-        return
-    lpath = os.path.join(path, LINEAGE_DIR)
-    spark.createDataFrame(
-        [(int(r.bucket), int(r.n_rows), int(r.fingerprint)) for r in rows],
-        schema="bucket int, n_rows long, fingerprint long",
-    ).write.mode("append").parquet(lpath)
+    todo = commit_buckets(
+        spark, path, n_buckets,
+        lambda wave: bdf.filter(F.col("bucket").isin(wave)),
+        fail_after_buckets=fail_after_buckets)
+    manifest = {
+        "n_buckets": n_buckets, "key": key,
+        "completed": list(range(n_buckets)),
+        "skipped_resume": sorted(set(range(n_buckets)) - set(todo)),
+    }
+    with open(os.path.join(path, MANIFEST), "w") as f:
+        json.dump(manifest, f)
+    return manifest
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:

@@ -2,12 +2,18 @@
 
 Stage graph (SURVEY §4 target plan):
 
-  pages ──(narrow mapInPandas, broadcast KB+automaton)──► mentions
+  pages ──filter todo url-buckets──(narrow mapInPandas, broadcast
+        KB+automaton)──► mentions
   mentions ──persist/materialize──┬─► mention triples  (narrow)
                                   └─► co-mention edges (shuffle url,par → agg)
   kb ───────────────────────────────► type/attribute triples (narrow)
   kb.redirects ──CC loop──► sameAs mapping ──broadcast──► canonical remap
   all ──► resumable bucketed write + per-partition lineage
+
+Both bucketed writes (the materialized mentions and the triple table) go
+through ``io.catalog.commit_buckets``: per wave, one shuffle on the bucket
+column and one dynamic-overwrite write, then lineage from a
+partition-pruned readback of the committed files.
 
 ``mentions`` is consumed by two branches, so it is persisted (or, with
 ``materialize_mentions``, written to parquet and re-read — the pattern a
@@ -24,12 +30,9 @@ from pyspark.storagelevel import StorageLevel
 
 from pyspark.sql import functions as F
 
-from ner_spark.io.catalog import (_append_lineage, _lineage_of,
-                                  completed_buckets,
-                                  dynamic_partition_overwrite,
-                                  resumable_write, with_bucket)
+from ner_spark.io.catalog import commit_buckets, resumable_write, with_bucket
 from ner_spark.kb.build import KBArtifacts, compile_kb
-from ner_spark.pipeline.ner import extract_mentions
+from ner_spark.pipeline.ner import MENTION_SCHEMA, extract_mentions
 from ner_spark.pipeline.triples import build_triples
 
 
@@ -46,11 +49,11 @@ def extract_mentions_resumable(
     **extract_kw,
 ) -> DataFrame:
     """Checkpoint-resumable mention extraction: pages are bucketed by
-    ``pmod(xxhash64(url), N)`` *before* the expensive UDF, completed buckets
-    (per the lineage sidecar) are filtered OUT of the scan, so a resumed run
-    re-reads only unprocessed pages — compute-level resume, not just
-    write-level (SCALE.md "Resume story").  Returns the full mentions table
-    read back from ``path``.
+    ``pmod(xxhash64(url), N)`` *before* the expensive UDF, and only pages
+    of the buckets :func:`commit_buckets` has left to do reach it, so a
+    resumed run re-reads only unprocessed pages — compute-level resume,
+    not just write-level (SCALE.md "Resume story").  Returns the full
+    mentions table read back from ``path``.
 
     ``waves`` (>1) splits the todo buckets into that many groups processed
     and committed sequentially — INCREMENTAL checkpointing within a run: a
@@ -61,61 +64,22 @@ def extract_mentions_resumable(
     scan by >10×, so single-digit wave counts bound the loss window to
     1/waves of the phase for a few percent of extra scan — the knob a
     multi-day 100 TB run sets to taste."""
-    from collections import namedtuple
-
-    LRow = namedtuple("LRow", "bucket n_rows fingerprint")
-    done = set(completed_buckets(spark, path))
     # cast to string FIRST: the mention-side bucket hashes the string url,
     # and xxhash64(long) != xxhash64(string) for the same value
     pages_b = pages.withColumn(
         "_bucket", F.pmod(F.xxhash64(F.col(url_col).cast("string")),
                           F.lit(n_buckets)).cast("int"))
-    todo_pages = pages_b.filter(~F.col("_bucket").isin(list(done))) if done \
-        else pages_b
-    # buckets being processed this run — a column-pruned url scan; zero-
-    # mention buckets still get a lineage row so resume never re-scans them
-    todo_buckets = sorted(
-        r._bucket for r in todo_pages.select("_bucket").distinct().collect())
-    if not todo_buckets:
-        if done:
-            return spark.read.parquet(path).drop("bucket")
-        # empty corpus, nothing ever written: empty mentions table
-        from ner_spark.pipeline.ner import MENTION_SCHEMA
-        return spark.createDataFrame([], MENTION_SCHEMA)
-    n_waves = max(1, min(int(waves), len(todo_buckets)))
-    wave_size = -(-len(todo_buckets) // n_waves)  # ceil
-    done_so_far = 0
-    for w in range(n_waves):
-        wave_buckets = todo_buckets[w * wave_size:(w + 1) * wave_size]
-        if not wave_buckets:
-            break
-        wave_pages = todo_pages if n_waves == 1 else todo_pages.filter(
-            F.col("_bucket").isin(list(wave_buckets)))
-        mentions = extract_mentions(wave_pages, artifacts, url_col=url_col,
+
+    def bucketed(todo: list[int]) -> DataFrame:
+        mentions = extract_mentions(pages_b.filter(F.col("_bucket").isin(todo)),
+                                    artifacts, url_col=url_col,
                                     text_col=text_col, **extract_kw)
-        bdf = with_bucket(mentions, "url", n_buckets).persist()
-        try:
-            have = {r.bucket: r for r in _lineage_of(bdf).collect()}
-            lineage = [have.get(b, LRow(b, 0, 0)) for b in wave_buckets]
-            fail_now = (fail_after_buckets is not None
-                        and fail_after_buckets - done_so_far < len(wave_buckets))
-            if fail_now:
-                keep = set(wave_buckets[:fail_after_buckets - done_so_far])
-                part = bdf.filter(F.col("bucket").isin(list(keep)))
-                with dynamic_partition_overwrite(spark):
-                    part.write.mode("overwrite") \
-                        .partitionBy("bucket").parquet(path)
-                _append_lineage(spark, path,
-                                [r for r in lineage if r.bucket in keep])
-                raise RuntimeError(
-                    f"injected failure after {fail_after_buckets} buckets")
-            with dynamic_partition_overwrite(spark):
-                bdf.write.mode("overwrite").partitionBy("bucket").parquet(path)
-            _append_lineage(spark, path, lineage)
-            done_so_far += len(wave_buckets)
-        finally:
-            bdf.unpersist()
-    return spark.read.parquet(path).drop("bucket")
+        return with_bucket(mentions, "url", n_buckets)
+
+    commit_buckets(spark, path, n_buckets, bucketed, waves=waves,
+                   fail_after_buckets=fail_after_buckets)
+    return spark.read.schema(MENTION_SCHEMA + ", bucket int").parquet(path) \
+        .drop("bucket")
 
 
 @dataclass

@@ -1,11 +1,14 @@
 """Resumable bucketed write: kill mid-job, resume, converge to the same
 table (north-rule checkpoint/lineage requirement)."""
 
+import glob
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from ner_spark.io.catalog import (completed_buckets, read_lineage,
-                                  resumable_write)
+from ner_spark.io.catalog import (_lineage_of, completed_buckets,
+                                  read_lineage, resumable_write)
 
 
 @pytest.fixture()
@@ -46,7 +49,14 @@ def test_kill_and_resume_converges(spark, triple_df, tmp_path):
     assert _table_fingerprint(spark, path) == _table_fingerprint(spark, clean)
 
 
-def test_lineage_counts_match_table(spark, triple_df, tmp_path):
+def _by_bucket(lineage_rows):
+    return {r.bucket: (r.n_rows, r.fingerprint) for r in lineage_rows}
+
+
+def test_lineage_counts_match_table(spark, triple_df, artifacts, pages_rows,
+                                    tmp_path):
+    from ner_spark.pipeline.run import extract_mentions_resumable
+
     path = str(tmp_path / "t")
     resumable_write(triple_df, path, n_buckets=8)
     lineage = {r.bucket: r.n_rows for r in read_lineage(spark, path).collect()}
@@ -55,6 +65,62 @@ def test_lineage_counts_match_table(spark, triple_df, tmp_path):
               .agg(F.count(F.lit(1)).alias("cnt")).collect()}
     assert lineage == actual
     assert sum(lineage.values()) == 500
+    # each recorded fingerprint is that of the committed rows of its bucket
+    assert _by_bucket(read_lineage(spark, path).collect()) == _by_bucket(
+        _lineage_of(spark.read.parquet(path)).collect())
+
+    # a bucket with no rows is recorded as (b, 0, 0)
+    sparse = str(tmp_path / "sparse")
+    resumable_write(triple_df.filter(F.col("subj") == "e:1"), sparse,
+                    n_buckets=8)
+    written = _by_bucket(_lineage_of(spark.read.parquet(sparse)).collect())
+    assert len(written) == 1
+    assert _by_bucket(read_lineage(spark, sparse).collect()) == {
+        b: written.get(b, (0, 0)) for b in range(8)}
+
+    # one parquet file per bucket directory, in both tables
+    mentions = str(tmp_path / "m")
+    pages = spark.createDataFrame(
+        [(p["url"], p["text"]) for p in pages_rows[:30]],
+        "url string, text string")
+    extract_mentions_resumable(spark, pages, artifacts, mentions, n_buckets=8)
+    for table in (path, mentions):
+        dirs = glob.glob(os.path.join(table, "bucket=*"))
+        assert dirs
+        for d in dirs:
+            assert len(glob.glob(os.path.join(d, "*.parquet"))) == 1, d
+
+
+def test_resume_does_not_evaluate_input(spark, triple_df, tmp_path):
+    """Once every bucket is committed, a rerun plans nothing: an input
+    that raises when evaluated is never touched."""
+    path = str(tmp_path / "t")
+    resumable_write(triple_df, path, n_buckets=4)
+
+    @F.udf("string")
+    def boom(s):
+        raise ValueError("input evaluated")
+
+    # on the bucket key, so no bucket filter can skip the UDF
+    poisoned = triple_df.withColumn("subj", boom("subj"))
+    with pytest.raises(Exception, match="input evaluated"):
+        poisoned.collect()
+    m = resumable_write(poisoned, path, n_buckets=4)
+    assert m["skipped_resume"] == [0, 1, 2, 3]
+
+
+def test_unreadable_lineage_raises(spark, triple_df, tmp_path):
+    """A missing sidecar means nothing is done; one that exists but cannot
+    be read must raise, not silently trigger a full recompute."""
+    from py4j.protocol import Py4JJavaError
+
+    assert completed_buckets(spark, str(tmp_path / "fresh")) == []
+    path = str(tmp_path / "t")
+    resumable_write(triple_df, path, n_buckets=4)
+    (tmp_path / "t" / "_lineage" / "part-garbage.parquet").write_bytes(
+        b"not a parquet file")
+    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+        completed_buckets(spark, path)
 
 
 def test_resumable_mentions_compute_prune(spark, artifacts, pages_rows, tmp_path):
