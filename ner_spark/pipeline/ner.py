@@ -50,6 +50,30 @@ def sanitized_pages(pages: DataFrame, url_col: str = "url",
     )
 
 
+def resolved_docs(urls, texts, bundle, atm, lang: str = "en",
+                  lowercase: bool = False, deaccent: bool = False,
+                  find_names: bool = False, names_strict: bool = False):
+    """The one per-document loop, shared by :func:`extract_mentions` and the
+    streaming co-mention pairs: yields ``(url, rows)`` per sanitized page,
+    rows as ``(start, end, par, kind, text, sense, iso, confidence)``
+    tuples.  See :func:`extract_mentions` for the scan modes."""
+    from ner_spark.semantics.lang import get_lang
+    from ner_spark.semantics.recognize import scan_and_resolve
+    from ner_spark.semantics.textnorm import remove_accent
+
+    lang_mod = get_lang(lang)
+    for url, text in zip(urls, texts):
+        if deaccent:
+            # -r uses the plain (possibly length-changing) removal
+            # (ner.py:614) — offsets refer to the transformed text, as in
+            # the reference
+            text = remove_accent(text)
+        scan_text = text.lower() if lowercase else None
+        yield url, scan_and_resolve(bundle, atm, text, scan_text,
+                                    find_names=find_names, lang=lang_mod,
+                                    as_tuples=True, names_strict=names_strict)
+
+
 def scan_mentions(pages: DataFrame, artifacts: KBArtifacts,
                   url_col: str = "url", text_col: str = "text",
                   byte_offsets: bool = False) -> DataFrame:
@@ -104,31 +128,16 @@ def extract_mentions(pages: DataFrame, artifacts: KBArtifacts,
     atm_bc = artifacts.automaton_bc
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ner_spark.semantics.lang import get_lang
-        from ner_spark.semantics.recognize import scan_and_resolve
-        from ner_spark.semantics.textnorm import remove_accent
-
-        lang_mod = get_lang(lang)
         bundle = bundle_bc.value
         atm = atm_bc.value
         cols = ["url", "start", "end", "par", "kind", "text",
                 "sense", "iso", "confidence"]
         for pdf in batches:
-            rows = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if deaccent:
-                    # -r uses the plain (possibly length-changing)
-                    # removal (ner.py:614) — offsets refer to the
-                    # transformed text, as in the reference
-                    text = remove_accent(text)
-                scan_text = text.lower() if lowercase else None
-                # fused C scan+resolve when covered; Python path otherwise
-                # (semantics/recognize.scan_and_resolve)
-                for r in scan_and_resolve(bundle, atm, text, scan_text,
-                                          find_names=find_names,
-                                          lang=lang_mod, as_tuples=True,
-                                          names_strict=names_strict):
-                    rows.append((url,) + r)
+            rows = [(url,) + r
+                    for url, doc in resolved_docs(
+                        pdf["url"], pdf["text"], bundle, atm, lang,
+                        lowercase, deaccent, find_names, names_strict)
+                    for r in doc]
             yield pd.DataFrame(rows, columns=cols)
 
     return src.mapInPandas(fn, schema=MENTION_SCHEMA)

@@ -9,14 +9,20 @@
  * differential fuzz test (tests/test_ckernel.py) pins C-vs-Python equality
  * on every output field.
  *
+ * One entry point, scan_resolve_doc: the automaton scan, the per-match
+ * pre-pass and stages b-k in one native call per document.
+ *
  * Division of labor (ckernel.py wrapper):
- *   Python supplies everything that needs re/dateutil/unicodedata —
- *     per-match source/deaccent-lower/pronoun-flag pre-pass, date matches
- *     with pre-rendered ISO strings, paragraph offsets, the deaccented
- *     "clean" text and proper-noun regex spans — plus a one-time interned
- *     KB pack (build_pack).
- *   C owns the sequential state machine: Mention/Register/Context,
- *     disambiguation, coreference, overlap/nearby filters, output rows.
+ *   Python supplies everything that needs re/dateutil/unicodedata — date
+ *     matches with pre-rendered ISO strings, paragraph offsets, and two
+ *     callbacks: frag_cb (source/deaccent-lower/pronoun flags of a
+ *     non-ASCII or NCR fragment, cached per KB pack) and lazy_cb (the
+ *     deaccented "clean" text and proper-noun regex spans, called only when
+ *     the overlap filter needs them) — plus one-time interned KB and
+ *     automaton packs (build_pack, build_atm).
+ *   C owns the scan and the sequential state machine: Mention/Register/
+ *     Context, disambiguation, coreference, overlap/nearby filters, output
+ *     rows.
  *
  * Anything this file cannot faithfully reproduce raises _resolve_ck.Fallback
  * and the wrapper re-runs the pure-Python path for that document.
@@ -31,7 +37,6 @@
 #include <cstring>
 #include <string>
 #include <unordered_map>
-#include <deque>
 #include <unordered_set>
 #include <vector>
 
@@ -338,9 +343,8 @@ struct Mention {
     int32_t start, end;
     int32_t source_id;
     int32_t flags;
-    // source / deaccent_lower(source) content: pointers into the fragment
-    // cache (fused scan path) or the Doc's per-call string store (the
-    // pre-scanned resolve_doc path) — both stable for the call's lifetime
+    // source / deaccent_lower(source) content: pointers into the KB pack's
+    // fragment cache, which is only cleared between documents
     const U32 *srcp = nullptr;
     const U32 *dlp = nullptr;
     vector<int64_t> senses;
@@ -487,10 +491,9 @@ struct Doc {
     vector<DateM> dates;
     vector<int64_t> paragraphs;
     vector<std::pair<int64_t, int64_t>> pnouns;  // proper-noun spans (clean)
-    bool pnouns_ready = false;    // fused path: filled lazily via callback
+    bool pnouns_ready = false;    // filled lazily via lazy_cb
     PyObject *lazy_cb = nullptr;  // () -> (clean|None, pnoun list|None)
     SIdx sidx;
-    std::deque<U32> strstore;     // owns per-call source/dl strings
     bool fallback = false;   // set → wrapper re-runs pure Python
 
     void fail() { fallback = true; }
@@ -1291,18 +1294,16 @@ static void remove_shorter(Doc &d, vector<int32_t> &order) {
     order.swap(out);
 }
 
-// fused path: clean text + proper-noun regex spans come from a Python
-// callback, invoked only when the overlap filter actually needs them
-// (mirrors resolve.py:1052-1057's early outs — same regex cost profile)
+// clean text + proper-noun regex spans come from a Python callback,
+// invoked only when the overlap filter actually needs them (mirrors
+// resolve.py:1052-1057's early outs — same regex cost profile)
 static bool ensure_pnouns(Doc &d) {
     if (d.pnouns_ready) return true;
     d.pnouns_ready = true;
-    if (!d.lazy_cb) return true;
     PyObject *res = PyObject_CallNoArgs(d.lazy_cb);
     if (!res) return false;  // Python error propagates
-    PyObject *clean_o = PyTuple_GET_ITEM(res, 0);
-    if (clean_o != Py_None) d.clean = to_u32(clean_o);
-    else if (d.clean.empty()) d.clean = d.text;  // clean == text
+    PyObject *clean_o = PyTuple_GET_ITEM(res, 0);  // None: clean == text
+    d.clean = clean_o != Py_None ? to_u32(clean_o) : d.text;
     PyObject *pl = PyTuple_GET_ITEM(res, 1);
     if (pl != Py_None) {
         Py_ssize_t np = PyList_GET_SIZE(pl);
@@ -1442,55 +1443,10 @@ static void remove_nearby(Doc &d, vector<int32_t> &entities) {
 }
 
 // ---------------------------------------------------------------------------
-// resolve_doc: the per-document driver (resolve.py:1356-1507, mode=default)
+// run_pipeline: the per-document driver (resolve.py:1356-1507, mode=default)
 // ---------------------------------------------------------------------------
 
 static PyObject *s_kb, *s_coref, *s_date, *s_interval;  // interned kinds
-
-static PyObject *run_pipeline(Doc &d);
-
-static bool parse_matches(Doc &d, PyObject *matches) {
-    Py_ssize_t n = PyList_GET_SIZE(matches);
-    d.men.resize((size_t)n);
-    for (Py_ssize_t i = 0; i < n; i++) {
-        PyObject *t = PyList_GET_ITEM(matches, i);
-        if (!PyTuple_Check(t) || PyTuple_GET_SIZE(t) != 8) {
-            PyErr_SetString(PyExc_ValueError, "match tuple arity != 8");
-            return false;
-        }
-        Mention &m = d.men[(size_t)i];
-        PyObject *ids = PyTuple_GET_ITEM(t, 0);
-        m.start = (int32_t)PyLong_AsLong(PyTuple_GET_ITEM(t, 1));
-        m.end = (int32_t)PyLong_AsLong(PyTuple_GET_ITEM(t, 2));
-        d.strstore.push_back(to_u32(PyTuple_GET_ITEM(t, 3)));
-        m.srcp = &d.strstore.back();
-        d.strstore.push_back(to_u32(PyTuple_GET_ITEM(t, 4)));
-        m.dlp = &d.strstore.back();
-        m.flags = (int32_t)PyLong_AsLong(PyTuple_GET_ITEM(t, 5));
-        PyObject *pms = PyTuple_GET_ITEM(t, 6);
-        m.source_id = (int32_t)PyLong_AsLong(PyTuple_GET_ITEM(t, 7));
-        // senses: resolve.py:111-116 (ordered dedup of nonzero ids)
-        Py_ssize_t nid = PySequence_Fast_GET_SIZE(ids);
-        if (nid == 1) {
-            int64_t v = PyLong_AsLongLong(PyTuple_GET_ITEM(ids, 0));
-            if (v != 0) m.senses.push_back(v);
-        } else {
-            for (Py_ssize_t j = 0; j < nid; j++) {
-                int64_t v = PyLong_AsLongLong(PyTuple_GET_ITEM(ids, j));
-                if (v != 0) m.senses.push_back(v);
-            }
-            ordered_dedup(m.senses);
-        }
-        if (pms != Py_None) {
-            Py_ssize_t np = PyTuple_GET_SIZE(pms);
-            m.pms.reserve((size_t)np);
-            for (Py_ssize_t j = 0; j < np; j++)
-                m.pms.push_back(PyLong_AsLongLong(PyTuple_GET_ITEM(pms, j)));
-        }
-        m.is_nationality = (m.flags & FL_IS_NAT) != 0;
-    }
-    return !PyErr_Occurred();
-}
 
 static bool parse_dates(Doc &d, PyObject *dates) {
     Py_ssize_t n = PyList_GET_SIZE(dates);
@@ -1514,39 +1470,6 @@ static bool parse_dates(Doc &d, PyObject *dates) {
         if (dm.has_swz_to) dm.swz_to = to_u32(swz_to);
     }
     return !PyErr_Occurred();
-}
-
-static PyObject *resolve_doc(PyObject *self, PyObject *args) {
-    PyObject *cap, *text_o, *clean_o, *matches, *dates, *paragraphs, *pnouns;
-    if (!PyArg_ParseTuple(args, "OO!OO!O!O!O", &cap, &PyUnicode_Type, &text_o,
-                          &clean_o, &PyList_Type, &matches, &PyList_Type,
-                          &dates, &PyList_Type, &paragraphs, &pnouns))
-        return NULL;
-    KBPack *kb = (KBPack *)PyCapsule_GetPointer(cap, "ner_spark.kbpack");
-    if (!kb) return NULL;
-
-    Doc d;
-    d.kb = kb;
-    d.text = to_u32(text_o);
-    d.clean = (clean_o == Py_None) ? d.text : to_u32(clean_o);
-    if (!parse_matches(d, matches) || !parse_dates(d, dates)) return NULL;
-    Py_ssize_t npar = PyList_GET_SIZE(paragraphs);
-    d.paragraphs.resize((size_t)npar);
-    for (Py_ssize_t i = 0; i < npar; i++)
-        d.paragraphs[(size_t)i] =
-            PyLong_AsLongLong(PyList_GET_ITEM(paragraphs, i));
-    if (pnouns != Py_None) {
-        Py_ssize_t np = PyList_GET_SIZE(pnouns);
-        d.pnouns.resize((size_t)np);
-        for (Py_ssize_t i = 0; i < np; i++) {
-            PyObject *t = PyList_GET_ITEM(pnouns, i);
-            d.pnouns[(size_t)i] = {
-                PyLong_AsLongLong(PyTuple_GET_ITEM(t, 0)),
-                PyLong_AsLongLong(PyTuple_GET_ITEM(t, 1))};
-        }
-    }
-    if (PyErr_Occurred()) return NULL;
-    return run_pipeline(d);
 }
 
 static PyObject *run_pipeline(Doc &d) {
@@ -1981,9 +1904,6 @@ static PyObject *scan_resolve_doc(PyObject *self, PyObject *args) {
 static PyMethodDef Methods[] = {
     {"build_pack", build_pack, METH_VARARGS,
      "build_pack(dict) -> capsule — intern a KBBundle snapshot"},
-    {"resolve_doc", resolve_doc, METH_VARARGS,
-     "resolve_doc(pack, text, clean, matches, dates, paragraphs, pnouns)"
-     " -> list[tuple]"},
     {"build_atm", build_atm, METH_VARARGS,
      "build_atm(keys, prefixes, first) -> capsule"},
     {"scan_resolve_doc", scan_resolve_doc, METH_VARARGS,

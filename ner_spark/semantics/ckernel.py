@@ -1,26 +1,28 @@
-"""Compiled resolve kernel: build, load, and dispatch.
+"""Compiled scan+resolve kernel: build, load, and dispatch.
 
-The hot path of the engine — the per-document sequential state machine in
-:mod:`ner_spark.semantics.resolve` — is CPython-bound (the r4 numpy-batch
-restructure measured ~5-15%; the residual cost is sequential interpreter
-state mutation).  This module compiles a C++ twin of that state machine
-(``_resolve_kernel.cpp``) with the system g++ at first use, caches the
-shared object keyed by a source hash, and exposes one entry point:
+The hot path of the engine — the automaton scan plus the per-document
+sequential state machine of :mod:`ner_spark.semantics.resolve` — is
+CPython-bound (the r4 numpy-batch restructure measured ~5-15%; the residual
+cost is sequential interpreter state mutation).  This module compiles a C++
+twin of both (``_resolve_kernel.cpp``) with the system g++ at first use,
+caches the shared object keyed by a source hash, and exposes one entry
+point:
 
-    try_resolve_document(...) -> rows | None
+    try_scan_resolve(...) -> rows | None
 
 ``None`` means "take the pure-Python path" — the kernel covers exactly the
 Spark production surface (mode="default", lang="en", find_names=False) and
-raises ``Fallback`` for any state it cannot reproduce bug-for-bug; the
-caller (resolve.resolve_document) falls through transparently.  Parity is
-pinned by the differential fuzz test (tests/test_ckernel.py) and the
-byte-identical reference goldens.
+raises ``Fallback`` for any state it cannot reproduce bug-for-bug; the one
+caller (recognize.scan_and_resolve) then runs ``atm.scan`` +
+``resolve.resolve_document``.  Parity is pinned by the differential fuzz
+test (tests/test_ckernel.py) and the byte-identical reference goldens.
 
 Division of labor: Python keeps everything that needs re / dateutil /
-unicodedata — the per-match pre-pass (NCR decode, deaccent+lower, pronoun
-class, nationality-form membership), date detection with pre-rendered ISO
-strings, paragraph offsets and the proper-noun regex spans — and C owns
-Mention/Register/Context and all sequential mutation.
+unicodedata — date detection with pre-rendered ISO strings, paragraph
+offsets, the pre-pass of non-ASCII / NCR match fragments (NCR decode,
+deaccent+lower, pronoun class; ``_frag_helper``) and the proper-noun regex
+spans (a lazy callback) — and C owns the scan, Mention/Register/Context and
+all sequential mutation.
 
 Env:
   NER_SPARK_CKERNEL=0   disable (pure Python everywhere)
@@ -272,105 +274,6 @@ def _atm_pack_for(atm):
 # ---------------------------------------------------------------------------
 # per-document dispatch
 # ---------------------------------------------------------------------------
-
-_pms_sorted_cache: dict[frozenset, tuple] = {}
-
-
-def _sorted_pms(fs):
-    # keyed by the frozenset itself (name_dict values are shared objects;
-    # an id() key could alias after a bundle is garbage-collected)
-    t = _pms_sorted_cache.get(fs)
-    if t is None:
-        t = tuple(sorted(fs))
-        if len(_pms_sorted_cache) > 1 << 16:  # bound per-process growth
-            _pms_sorted_cache.clear()
-        _pms_sorted_cache[fs] = t
-    return t
-
-
-def try_resolve_document(text, matches, kb, list_titles, find_names, mode,
-                         lang, split_interval, as_tuples):
-    """Returns the resolve_document result, or None when the kernel does not
-    cover this configuration (caller takes the Python path)."""
-    if FORCE_DISABLE or mode != "default" or find_names \
-            or getattr(lang, "code", None) != "en":
-        return None
-    ck = _load()
-    if ck is None:
-        return None
-    pack = _pack_for(kb)
-
-    nat_forms = kb.nationality_forms
-    ndget = kb.name_dict.get
-    pron = _PRON_MASK
-    src_intern: dict[str, int] = {}
-    pre = []
-    any_entity = False
-    for ids, start, end, fragment in matches:
-        source = fragment if "&#" not in fragment else ncr2unicode(fragment)
-        dl = _deaccent_lower(source)
-        pms = ndget(dl)
-        sl = source.lower()
-        flags = pron.get(sl, 0)
-        if sl.startswith("the "):
-            flags |= 8
-        if source.startswith("The "):
-            flags |= 16
-        if source == "There":
-            flags |= 32
-        has_sense = False
-        for i in ids:
-            if i != 0:
-                has_sense = True
-                break
-        if not has_sense and source in nat_forms:
-            flags |= 64
-        if has_sense or pms or (flags & 7):
-            any_entity = True
-        srcid = src_intern.setdefault(source, len(src_intern))
-        pre.append((tuple(ids), start, end, source, dl, flags,
-                    _sorted_pms(pms) if pms else None, srcid))
-
-    dates = []
-    for dm in find_dates(text, split_interval=split_interval):
-        if dm.iso_to is not None:
-            iso_out = f"{dm.iso.iso()} -- {dm.iso_to.iso()}"
-            swz_to = dm.iso_to.show_without_zeros()
-            is_interval = 1
-        else:
-            iso_out = dm.iso.iso()
-            swz_to = None
-            is_interval = 0
-        dates.append((dm.start, dm.end, dm.source, iso_out, dm.confidence,
-                      is_interval, dm.iso.show_without_zeros(), swz_to))
-
-    paragraphs = offsets_of_paragraphs(text)
-
-    clean = None
-    pnouns = None
-    if any_entity:
-        clean = remove_accent_unicode(text)
-        pnouns = find_proper_nouns(clean, list_titles,
-                                   lang.proper_nouns_preps)
-        if clean is text:
-            clean = None  # C reuses the text buffer
-
-    try:
-        rows = ck.resolve_doc(pack, text, clean, pre, dates, paragraphs,
-                              pnouns)
-    except ck.Fallback:
-        return None
-    if as_tuples:
-        return rows
-    # dict form (mode="default": no cands fields possible — every kept
-    # mention has a preferred sense, resolve.py:1470-1473)
-    out = []
-    for start, end, par, kind, txt, sense, iso, conf in rows:
-        out.append({"start": start, "end": end, "par": par, "kind": kind,
-                    "text": txt, "sense": sense, "iso": iso,
-                    "confidence": conf})
-    return out
-
 
 def _frag_helper(fragment):
     """Python side of the fragment pre-pass — called once per distinct

@@ -1,11 +1,13 @@
-"""Single-document oracle: the reference's ``recognize`` end-to-end.
+"""Per-document recognition: the reference's ``recognize`` end-to-end.
 
-This is the ground truth the Spark pipeline is parity-tested against
-(SURVEY §5.1): sanitize (ner.py:611) → optional lowercase/deaccent
-(``-d``/``-r``, ner.py:611-615) → automaton scan (ner.py:446-482) →
-per-document resolution stages b-k (ner.py:576-714), optionally with
-unknown-name discovery (``-n``).  Slow by design — test/oracle use only;
-the pipeline runs the same semantics modules inside Arrow-batched UDFs.
+Sanitize (ner.py:611) → optional lowercase/deaccent (``-d``/``-r``,
+ner.py:611-615) → automaton scan (ner.py:446-482) → per-document resolution
+stages b-k (ner.py:576-714), optionally with unknown-name discovery
+(``-n``).  :func:`scan_and_resolve` is the production per-document hot call
+— batch and streaming reach it through ``pipeline.ner.resolved_docs``, the
+CLI through :func:`recognize` — and the one place that decides between the
+fused C kernel and the pure-Python path.  The Spark pipeline is
+parity-tested against :func:`recognize` (SURVEY §5.1).
 """
 
 from __future__ import annotations

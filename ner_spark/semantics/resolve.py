@@ -3,10 +3,13 @@
 Brand-new code reproducing the observable semantics of the reference's
 per-document pipeline (/root/reference/ner.py:576-714 ``recognize`` stages
 f-j, /root/reference/ner/entity.py, /root/reference/ner/context.py), for
-English.  This module is pure Python over plain data: the Spark pipeline
-calls :func:`resolve_document` inside an Arrow-batched UDF (one call per
-document — the reference's only inherently sequential stage, SURVEY §2.5 W2),
-and the test oracle calls it directly.
+English.  This module is pure Python over plain data and never dispatches
+to native code.  The Spark pipeline resolves each document (the reference's
+only inherently sequential stage, SURVEY §2.5 W2) through
+``recognize.scan_and_resolve``, which runs the compiled twin
+(``_resolve_kernel.cpp`` via ``ckernel``) where it covers the configuration
+and falls back to :func:`resolve_document` otherwise; :func:`resolve_document`
+is also the oracle the kernel's differential fuzz compares against.
 
 Deliberately reproduced reference quirks (they change outputs):
 
@@ -1360,8 +1363,6 @@ def adjust_coreferences(entities_and_dates: list, new_names: list[Mention],
 # the per-document driver (recognize stages b-k, ner.py:576-714)
 # ---------------------------------------------------------------------------
 
-_ckernel = None  # lazily-imported ckernel module (circular-import guard)
-
 def stage_diff_tracer(out=None, fmt=None):
     """Build a ``trace`` callback for :func:`resolve_document` that emits a
     unified diff of the (start-sorted) mention list after every stage that
@@ -1439,23 +1440,10 @@ def resolve_document(
     intent-port of the reference's ``debugChangesInEntities`` stage-diff
     instrumentation (ner.py:598-608, libs/debug.py); pair with
     :func:`stage_diff_tracer` for the reference's unified-diff-to-stderr
-    rendering.  Tracing forces the pure-Python path (the C kernel has no
-    stage hooks) and is for debugging only.
+    rendering.  For debugging only.
     """
     if as_tuples and mode != "default":
         raise ValueError("as_tuples supports mode='default' only")
-    # compiled kernel (ckernel.py): covers the production surface
-    # (default/en/no -n) bug-for-bug; returns None → pure-Python path
-    global _ckernel
-    if _ckernel is None:
-        from . import ckernel as _ckernel_mod
-        _ckernel = _ckernel_mod
-    if trace is None:
-        rows = _ckernel.try_resolve_document(
-            text, matches, kb, list_titles, find_names, mode, lang,
-            split_interval, as_tuples)
-        if rows is not None:
-            return rows
     register = Register()
     global_senses: set[int] = set()
     figa_entities: list[Mention] = []

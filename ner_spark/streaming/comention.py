@@ -6,9 +6,9 @@ unbounded stream.  But the natural streaming unit is the PAGE (a crawled
 document arrives exactly once), and every co-mention pair is WITHIN one
 page — so the stream pipeline is:
 
-    page stream → stateless mapInPandas (scan + resolve + within-page
-    pair explode, same kernel as extract_mentions) → ONE stateful
-    groupBy(s1, s2) count
+    page stream → stateless mapInPandas (the per-document loop of
+    extract_mentions, ``pipeline.ner.resolved_docs``, + within-page pair
+    explode) → ONE stateful groupBy(s1, s2) count
 
 No stream-stream join, no streaming distinct, a single state-store
 aggregation keyed by the (bounded, KB-sized) entity-pair space.  Each
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ner_spark.kb.build import KBArtifacts
-from ner_spark.pipeline.ner import sanitized_pages
+from ner_spark.pipeline.ner import resolved_docs, sanitized_pages
 
 PAIR_SCHEMA = "url string, par int, s1 int, s2 int"
 
@@ -54,29 +54,17 @@ def comention_pair_stream(pages: DataFrame, artifacts: KBArtifacts,
     atm_bc = artifacts.automaton_bc
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ner_spark.semantics.lang import get_lang
-        from ner_spark.semantics.resolve import resolve_document
-        from ner_spark.semantics.textnorm import remove_accent
-
-        lang_mod = get_lang(lang)
         bundle = bundle_bc.value
         atm = atm_bc.value
         for pdf in batches:
             rows = []
-            for url, text in zip(pdf["url"], pdf["text"]):
-                if deaccent:  # -r: transforms the working text (ner.py:614)
-                    text = remove_accent(text)
-                scan_text = text.lower() if lowercase else text
-                matches = [(m.ids, m.start, m.end, m.fragment)
-                           for m in atm.scan(scan_text)]
+            for url, doc in resolved_docs(pdf["url"], pdf["text"], bundle,
+                                          atm, lang, lowercase, deaccent,
+                                          find_names):
                 per_par: dict[int, set[int]] = {}
-                # tuple row: (start, end, par, kind, text, sense, iso, conf)
-                for r in resolve_document(text, matches, bundle,
-                                          find_names=find_names,
-                                          lang=lang_mod, as_tuples=True):
-                    sense = r[5]
+                for _, _, par, _, _, sense, _, _ in doc:
                     if sense is not None:
-                        per_par.setdefault(r[2], set()).add(sense)
+                        per_par.setdefault(par, set()).add(sense)
                 for par, senses in per_par.items():
                     for s1, s2 in combinations(sorted(senses), 2):
                         rows.append((url, par, s1, s2))

@@ -1,12 +1,14 @@
-"""Differential parity gate for the compiled resolve kernel.
+"""Differential parity gate for the compiled scan+resolve kernel.
 
-The C kernel (semantics/_resolve_kernel.cpp via semantics/ckernel.py) must
-be bug-for-bug identical to the pure-Python resolve_document on its covered
-surface (mode="default", lang="en", find_names=False) — every row, every
-field, both output forms.  These tests drive both paths over the fixture
-corpora, a hand-built adversarial set, and a seeded random fuzz mix, and
-compare outputs exactly.  A parity break here is a release blocker: the
-Spark production pipeline dispatches to the kernel unconditionally.
+The fused C kernel (semantics/_resolve_kernel.cpp ``scan_resolve_doc`` via
+ckernel.try_scan_resolve, reached through recognize.scan_and_resolve) must
+be bug-for-bug identical to the pure-Python ``atm.scan`` + resolve_document
+on its covered surface (mode="default", lang="en", find_names=False) —
+every row, every field, both output forms.  These tests drive both paths
+over the fixture corpora, a hand-built adversarial set, and a seeded random
+fuzz mix, and compare outputs exactly.  A parity break here is a release
+blocker: the Spark production pipeline dispatches to the kernel
+unconditionally.
 """
 
 from __future__ import annotations
@@ -21,6 +23,7 @@ from ner_spark.semantics import ckernel
 from ner_spark.semantics.automaton import GazetteerAutomaton
 from ner_spark.semantics.kb import KBBundle, build_namelist
 from ner_spark.semantics.lang import get_lang
+from ner_spark.semantics.recognize import scan_and_resolve
 from ner_spark.semantics.resolve import resolve_document
 
 pytestmark = pytest.mark.skipif(
@@ -39,23 +42,17 @@ def env():
 
 
 def both(bundle, atm, lang, text, as_tuples=True, split_interval=True):
-    """(python, C-resolve-only, C-fused) — callers assert all equal."""
-    from ner_spark.semantics.recognize import scan_and_resolve
-
+    """(python, C-fused) — callers assert equal.  The fused call must not
+    fall back: a ``None`` from try_scan_resolve would compare Python with
+    itself."""
     matches = [(m.ids, m.start, m.end, m.fragment) for m in atm.scan(text)]
-    try:
-        ckernel.FORCE_DISABLE = True
-        py = resolve_document(text, matches, bundle, lang=lang,
-                              as_tuples=as_tuples,
-                              split_interval=split_interval)
-    finally:
-        ckernel.FORCE_DISABLE = False
-    ck = resolve_document(text, matches, bundle, lang=lang,
+    py = resolve_document(text, matches, bundle, lang=lang,
                           as_tuples=as_tuples, split_interval=split_interval)
-    fused = scan_and_resolve(bundle, atm, text, lang=lang,
-                             as_tuples=as_tuples,
-                             split_interval=split_interval)
-    assert ck == fused, "C resolve-only vs C fused disagree"
+    assert ckernel.try_scan_resolve(
+        bundle, atm, text, lang=lang, as_tuples=as_tuples,
+        split_interval=split_interval) is not None, "kernel fell back"
+    ck = scan_and_resolve(bundle, atm, text, lang=lang, as_tuples=as_tuples,
+                          split_interval=split_interval)
     return py, ck
 
 
@@ -142,26 +139,26 @@ def test_uncovered_surfaces_fall_through(env):
     bundle, atm, lang, _ = env
     # non-EN language and -n/-a/-s modes must return None from the kernel
     cs = get_lang("cs")
-    assert ckernel.try_resolve_document(
-        "text", [], bundle, frozenset(), False, "default", cs, True,
-        True) is None
-    assert ckernel.try_resolve_document(
-        "text", [], bundle, frozenset(), True, "default", lang, True,
-        True) is None
-    assert ckernel.try_resolve_document(
-        "text", [], bundle, frozenset(), False, "all", lang, True,
-        True) is None
+    assert ckernel.try_scan_resolve(
+        bundle, atm, "text", lang=cs, as_tuples=True) is None
+    assert ckernel.try_scan_resolve(
+        bundle, atm, "text", find_names=True, lang=lang,
+        as_tuples=True) is None
+    assert ckernel.try_scan_resolve(
+        bundle, atm, "text", mode="all", lang=lang) is None
+    assert ckernel.try_scan_resolve(
+        bundle, atm, "text", lang=lang, as_tuples=True) is not None
 
 
 def test_force_disable_roundtrip(env):
     bundle, atm, lang, kb_rows = env
     text = gen_pages(kb_rows, n_pages=1, seed=11)[0]["text"]
-    matches = [(m.ids, m.start, m.end, m.fragment) for m in atm.scan(text)]
-    r1 = resolve_document(text, matches, bundle, lang=lang, as_tuples=True)
+    r1 = scan_and_resolve(bundle, atm, text, lang=lang, as_tuples=True)
     ckernel.FORCE_DISABLE = True
     try:
-        r2 = resolve_document(text, matches, bundle, lang=lang,
-                              as_tuples=True)
+        assert ckernel.try_scan_resolve(
+            bundle, atm, text, lang=lang, as_tuples=True) is None
+        r2 = scan_and_resolve(bundle, atm, text, lang=lang, as_tuples=True)
     finally:
         ckernel.FORCE_DISABLE = False
-    assert r1 == r2
+    assert r1 == r2 and r1

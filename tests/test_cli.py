@@ -1,6 +1,7 @@
 """User-facing surface: LocalRecognizer API + `python -m ner_spark` CLI
 (reference ./ner.py parity: stdin, -f, daemon protocol, flags)."""
 
+import os
 import subprocess
 import sys
 
@@ -8,6 +9,8 @@ import pytest
 
 from ner_spark.api import LocalRecognizer
 from ner_spark.io.kbtsv import write_kb_tsv
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 KB_ROWS = [
     dict(id=1, type="person", name="George Washington", gender="M",
@@ -48,7 +51,7 @@ def test_local_recognizer_no_spark(kb_tsv):
 def _run_cli(args, stdin: str, kb_tsv: str) -> str:
     out = subprocess.run(
         [sys.executable, "-m", "ner_spark", "--kb", kb_tsv, *args],
-        input=stdin, capture_output=True, text=True, cwd="/root/repo",
+        input=stdin, capture_output=True, text=True, cwd=ROOT,
         timeout=120)
     assert out.returncode == 0, out.stderr
     return out.stdout

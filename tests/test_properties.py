@@ -151,8 +151,10 @@ def test_optimized_scan_equals_walk_random_keys(keys, text):
 @given(st.text(alphabet=st.characters(codec="utf-8"), max_size=400))
 def test_resolve_document_never_raises_on_junk(text):
     """100-TB web text contains every imaginable byte salad; the per-doc
-    kernel must process it without exceptions in every mode."""
+    kernel must process it without exceptions in every mode, and in the
+    default mode the C kernel must equal the pure-Python path."""
     from ner_spark.fixtures.dockb import dockb_rows
+    from ner_spark.semantics import ckernel
     from ner_spark.semantics.kb import KBBundle, build_namelist
     from ner_spark.semantics.recognize import (recognize,
                                                render_reference_lines)
@@ -173,4 +175,10 @@ def test_resolve_document_never_raises_on_junk(text):
     for mode in ("default", "all", "score"):
         rows_out = recognize(bundle, atm, text, mode=mode)
         render_reference_lines(rows_out)
+        if mode == "default":
+            ckernel.FORCE_DISABLE = True
+            try:
+                assert rows_out == recognize(bundle, atm, text, mode=mode)
+            finally:
+                ckernel.FORCE_DISABLE = False
     recognize(bundle, atm, text, find_names=True)

@@ -15,10 +15,11 @@ from __future__ import annotations
 import cProfile
 import json
 import pstats
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def build_fixtures(target_chars: int):

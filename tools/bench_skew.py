@@ -43,7 +43,7 @@ import statistics
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 HOT_SHARE = 0.30          # the hot entity's share of mention rows
 WARM_SHARE = 0.05         # three warm entities at this share each

@@ -13,9 +13,10 @@ Regenerate ONLY after deliberately reviewing the diff:
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ner_spark.fixtures.gen import gen_kb_rows, gen_pages  # noqa: E402
 from ner_spark.semantics.automaton import GazetteerAutomaton  # noqa: E402
