@@ -4,12 +4,13 @@
 (`./ner.py [-f file] [-d] [-a|-s] [-n] [-l] [-r]`, ner.py:723-751) without
 a SparkSession: compile the KB driver-side, recognize one document at a
 time, print reference-format lines.  :class:`Engine` — the Spark scale
-path: same KB compile broadcast to executors, pages DataFrame → mentions /
-triples.
+path: same KB compile broadcast to executors, pages DataFrame → mentions
+(the KG job itself is ``pipeline.run.run_kg_job``).
 """
 
 from __future__ import annotations
 
+from ner_spark.io.kbtsv import load_kb_rows
 from ner_spark.semantics.automaton import GazetteerAutomaton
 from ner_spark.semantics.kb import (KBBundle, build_namelist,
                                     build_uri_namelist)
@@ -21,7 +22,6 @@ def _compile_local(kb_rows: list[dict], lowercase: bool = False,
                    stop_list: set[str] | None = None, lang: str = "en"):
     from ner_spark.kb.build import _transform_namelist
     from ner_spark.semantics.lang import get_lang
-    from ner_spark.semantics.textnorm import remove_accent
 
     bundle = KBBundle.from_rows(kb_rows)
     if uri_mode:
@@ -29,12 +29,8 @@ def _compile_local(kb_rows: list[dict], lowercase: bool = False,
     else:
         namelist = build_namelist(bundle, stop_list=stop_list,
                                   lang=get_lang(lang))
-    if lowercase or deaccent:
-        def tf(k: str) -> str:
-            if deaccent:
-                k = remove_accent(k)
-            return k.lower() if lowercase else k
-        namelist = _transform_namelist(namelist, tf, bundle.get_score)
+    namelist = _transform_namelist(namelist, lowercase, deaccent,
+                                   bundle.get_score)
     return bundle, GazetteerAutomaton.build(namelist.items())
 
 
@@ -46,13 +42,7 @@ class LocalRecognizer:
                  deaccent: bool = False, uri_mode: bool = False,
                  stop_list: set[str] | None = None, lang: str = "en"):
         if kb_rows is None:
-            if kb_tsv is None:
-                from ner_spark.fixtures.gen import gen_kb_rows
-                kb_rows = gen_kb_rows()
-            else:
-                from ner_spark.io.kbtsv import read_kb_tsv
-                with open(kb_tsv) as fh:
-                    _, _, kb_rows = read_kb_tsv(fh)
+            kb_rows = load_kb_rows(kb_tsv)
         self.lowercase = lowercase
         self.deaccent = deaccent
         self.lang = lang
@@ -79,37 +69,17 @@ class LocalRecognizer:
 
 
 class Engine:
-    """Spark scale path with the same options."""
+    """Spark scale path; the compile's scan modes ride on the artifacts."""
 
     def __init__(self, spark, kb_rows: list[dict] | None = None,
                  kb_tsv: str | None = None, **compile_kw):
         from ner_spark.kb.build import compile_kb
 
         if kb_rows is None:
-            if kb_tsv is None:
-                from ner_spark.fixtures.gen import gen_kb_rows
-                kb_rows = gen_kb_rows()
-            else:
-                from ner_spark.io.kbtsv import read_kb_tsv
-                with open(kb_tsv) as fh:
-                    _, _, kb_rows = read_kb_tsv(fh)
+            kb_rows = load_kb_rows(kb_tsv)
         self.spark = spark
-        self._compile_kw = compile_kw
         self.artifacts = compile_kb(spark, kb_rows, **compile_kw)
 
     def mentions(self, pages, **kw):
         from ner_spark.pipeline.ner import extract_mentions
-        kw.setdefault("lowercase", self._compile_kw.get("lowercase", False))
-        kw.setdefault("deaccent", self._compile_kw.get("deaccent", False))
-        kw.setdefault("lang", self._compile_kw.get("lang", "en"))
         return extract_mentions(pages, self.artifacts, **kw)
-
-    def triples(self, pages, **kw):
-        from ner_spark.pipeline.triples import build_triples
-        m = self.mentions(pages, **kw).persist()
-        return build_triples(m, self.artifacts.kb_df)
-
-    def write_triples(self, pages, out_path: str, n_buckets: int = 64, **kw):
-        from ner_spark.io.catalog import resumable_write
-        return resumable_write(self.triples(pages, **kw), out_path,
-                               key="subj", n_buckets=n_buckets)

@@ -128,6 +128,16 @@ def read_kb_tsv(fh: TextIO) -> tuple[int, dict, list[dict]]:
     return version, head_kb, rows
 
 
+def load_kb_rows(path: str | None = None) -> list[dict]:
+    """Flat KB rows of the KB.tsv at ``path``; the synthetic fixture KB
+    when ``path`` is None."""
+    if path is None:
+        from ner_spark.fixtures.gen import gen_kb_rows
+        return gen_kb_rows()
+    with open(path) as fh:
+        return read_kb_tsv(fh)[2]
+
+
 def read_kb_tsv_spark(spark, path: str):
     """Distributed read of the data part: driver parses the tiny header,
     executors scan the TSV rows (the GB-scale part at real KB sizes).

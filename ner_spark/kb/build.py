@@ -102,15 +102,27 @@ def with_static_scores(kb_df: DataFrame) -> DataFrame:
     )
 
 
+SCAN_KEYS = ("lowercase", "deaccent", "lang")
+
+
 @dataclass
 class KBArtifacts:
-    """Everything the pipeline needs: relational KB + broadcast payloads."""
+    """Everything the pipeline needs: relational KB + broadcast payloads,
+    and the scan modes the automaton was compiled for (applied by every
+    scan of it)."""
 
     kb_df: DataFrame          # with static scores
     bundle_bc: "object"       # Broadcast[KBBundle]
     automaton_bc: "object"    # Broadcast[GazetteerAutomaton]
     n_entities: int
     n_keys: int
+    lowercase: bool = False   # -d: keys lowered, scan text lowered
+    deaccent: bool = False    # -r: keys and working text accent-stripped
+    lang: str = "en"          # language module of namelist + scan rules
+
+    @property
+    def scan_config(self) -> dict:
+        return {k: getattr(self, k) for k in SCAN_KEYS}
 
     @property
     def bundle(self) -> KBBundle:
@@ -121,15 +133,20 @@ class KBArtifacts:
         return self.automaton_bc.value
 
 
-def _transform_namelist(namelist: dict[str, list[int]], transform,
-                        conf_of) -> dict[str, list[int]]:
-    """Apply a key transform (lowercase -d / deaccent -r automaton variants,
-    create_cedar.sh:25,521-546); colliding keys merge with the
-    confidence-descending id order of uniq_namelist.py:88-94, fragment
-    marker 0 kept last."""
+def _transform_namelist(namelist: dict[str, list[int]], lowercase: bool,
+                        deaccent: bool, conf_of) -> dict[str, list[int]]:
+    """Key transform of the lowercase -d / deaccent -r automaton variants
+    (create_cedar.sh:25,521-546): deaccent, then lower, as the scan treats
+    the text.  Colliding keys merge with the confidence-descending id order
+    of uniq_namelist.py:88-94, fragment marker 0 kept last."""
+    if not (lowercase or deaccent):
+        return namelist
+    from ner_spark.semantics.textnorm import remove_accent
+
     out: dict[str, list[int]] = {}
     for key, ids in namelist.items():
-        k = transform(key)
+        k = remove_accent(key) if deaccent else key
+        k = k.lower() if lowercase else k
         if not k:
             continue
         if k in out:
@@ -188,8 +205,10 @@ def compile_kb(spark: SparkSession, rows: list[dict],
     changes, the analogue of the ETag/version handshake ner.py:756-810).
 
     ``lowercase`` builds the ``-d`` lowercase automaton variant and
-    ``deaccent`` the ``-r`` accent-stripped one (both may combine); the
-    matching text transform must be passed to extract_mentions.
+    ``deaccent`` the ``-r`` accent-stripped one (both may combine).  The
+    artifact records both flags and ``lang``, and every scan of it
+    (extract_mentions, scan_mentions, the streaming pairs) applies the
+    matching text transform.
 
     ``tagged_inflections`` (cs only — namegen runs solely in the cs
     build, create_cedar.sh:369): tagged-inflection TSV lines whose
@@ -205,8 +224,6 @@ def compile_kb(spark: SparkSession, rows: list[dict],
     if tagged_inflections is not None and lang != "cs":
         raise ValueError("tagged_inflections is a cs-mode input "
                          "(create_cedar.sh:369 runs namegen only for cs)")
-    from ner_spark.semantics.textnorm import remove_accent
-
     bundle = KBBundle.from_rows(rows)
     from ner_spark.semantics.lang import get_lang
 
@@ -231,12 +248,8 @@ def compile_kb(spark: SparkSession, rows: list[dict],
             # F13 (filter_namelist.sh): fragment ('N') rows keep only ids
             # whose KB line has a wikipedia URL
             namelist = filter_namelist_to_wiki(namelist, wiki_url_lines(bundle))
-    if lowercase or deaccent:
-        def tf(k: str) -> str:
-            if deaccent:
-                k = remove_accent(k)
-            return k.lower() if lowercase else k
-        namelist = _transform_namelist(namelist, tf, bundle.get_score)
+    namelist = _transform_namelist(namelist, lowercase, deaccent,
+                                   bundle.get_score)
     if qid_mode and not uri_mode:
         # -Q: line number → stripped Q-id; 0 stays the fragment marker.
         # URI mode is exempt: the reference's -u branch passes str(line_num)
@@ -288,6 +301,7 @@ def compile_kb(spark: SparkSession, rows: list[dict],
         automaton_bc=sc.broadcast(automaton),
         n_entities=bundle.n_rows(),
         n_keys=automaton.n_keys,
+        lowercase=lowercase, deaccent=deaccent, lang=lang,
     )
 
 
@@ -302,7 +316,7 @@ def save_kb_artifact(art: KBArtifacts, path: str,
         <path>/kb.parquet/       scored relational KB (kb_df)
         <path>/bundle.pkl        KBBundle (columnar broadcast payload)
         <path>/automaton.pkl     GazetteerAutomaton
-        <path>/MANIFEST.json     counts + version handshake key
+        <path>/MANIFEST.json     counts, scan config, version handshake key
 
     The version key plays the role of the reference's ETag/VERSION
     handshake (ner.py:756-810): ``load_kb_artifact(..., kb_version=...)``
@@ -319,7 +333,7 @@ def save_kb_artifact(art: KBArtifacts, path: str,
         pickle.dump(art.automaton, fh, protocol=pickle.HIGHEST_PROTOCOL)
     with open(os.path.join(path, "MANIFEST.json"), "w") as fh:
         _json.dump({"n_entities": art.n_entities, "n_keys": art.n_keys,
-                    "kb_version": kb_version}, fh)
+                    "kb_version": kb_version, **art.scan_config}, fh)
 
 
 def load_kb_artifact(spark: SparkSession, path: str,
@@ -328,12 +342,17 @@ def load_kb_artifact(spark: SparkSession, path: str,
     broadcast it — skips the entire driver-side compile.  At cluster scale
     the artifact lives on shared storage and every job (and every re-run
     of a resumable job) starts from it; the KB compile happens once per KB
-    snapshot, not once per job."""
+    snapshot, not once per job.  A MANIFEST without the scan config
+    raises: its scan modes are unknown, so the artifact must be
+    recompiled."""
     import json as _json
     import pickle
 
     with open(os.path.join(path, "MANIFEST.json")) as fh:
         manifest = _json.load(fh)
+    if not all(k in manifest for k in SCAN_KEYS):
+        raise ValueError(f"KB artifact {path} does not record its scan "
+                         f"config {SCAN_KEYS} — recompile it")
     if kb_version is not None and manifest.get("kb_version") != kb_version:
         raise ValueError(
             f"KB artifact version mismatch: artifact "
@@ -352,6 +371,7 @@ def load_kb_artifact(spark: SparkSession, path: str,
         automaton_bc=sc.broadcast(automaton),
         n_entities=manifest["n_entities"],
         n_keys=manifest["n_keys"],
+        **{k: manifest[k] for k in SCAN_KEYS},
     )
 
 

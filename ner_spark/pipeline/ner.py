@@ -56,7 +56,8 @@ def resolved_docs(urls, texts, bundle, atm, lang: str = "en",
     """The one per-document loop, shared by :func:`extract_mentions` and the
     streaming co-mention pairs: yields ``(url, rows)`` per sanitized page,
     rows as ``(start, end, par, kind, text, sense, iso, confidence)``
-    tuples.  See :func:`extract_mentions` for the scan modes."""
+    tuples.  It runs on executors, so the scan modes come as plain values
+    (the artifact's ``scan_config``); see :func:`extract_mentions`."""
     from ner_spark.semantics.lang import get_lang
     from ner_spark.semantics.recognize import scan_and_resolve
     from ner_spark.semantics.textnorm import remove_accent
@@ -79,19 +80,27 @@ def scan_mentions(pages: DataFrame, artifacts: KBArtifacts,
                   byte_offsets: bool = False) -> DataFrame:
     """Raw gazetteer matches only (stage M2) — no resolution.  Useful for
     debugging and for relational-filter queries; the production path is
-    :func:`extract_mentions` which fuses scan+resolve in one pass.
-    ``byte_offsets`` mirrors figa ``-b`` (figa/src/main.cpp:53,108-110):
-    start/end become offsets into the UTF-8 byte stream."""
+    :func:`extract_mentions` which fuses scan+resolve in one pass.  Scans
+    the same text as :func:`resolved_docs`: deaccented and/or lowered as
+    the artifact was compiled.  ``byte_offsets`` mirrors figa ``-b``
+    (figa/src/main.cpp:53,108-110): start/end become offsets into the
+    UTF-8 byte stream of that scanned text."""
     src = sanitized_pages(pages, url_col, text_col)
     atm_bc = artifacts.automaton_bc
+    lowercase, deaccent = artifacts.lowercase, artifacts.deaccent
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ner_spark.semantics.automaton import byte_offset_matches
+        from ner_spark.semantics.textnorm import remove_accent
 
         atm = atm_bc.value
         for pdf in batches:
             rows = []
             for url, text in zip(pdf["url"], pdf["text"]):
+                if deaccent:
+                    text = remove_accent(text)
+                if lowercase:
+                    text = text.lower()
                 ms = atm.scan(text)
                 if byte_offsets:
                     ms = byte_offset_matches(text, ms)
@@ -105,13 +114,13 @@ def scan_mentions(pages: DataFrame, artifacts: KBArtifacts,
 
 def extract_mentions(pages: DataFrame, artifacts: KBArtifacts,
                      url_col: str = "url", text_col: str = "text",
-                     lowercase: bool = False, deaccent: bool = False,
-                     find_names: bool = False, lang: str = "en",
+                     find_names: bool = False,
                      names_strict: bool = False) -> DataFrame:
     """pages → final mention rows (scan + stages b-k fused, zero-shuffle).
 
-    ``lowercase``/``deaccent`` mirror the reference's ``-d``/``-r`` modes
-    and must match the automaton variant compiled with the same flags:
+    The scan modes come from the artifact, as compiled by ``compile_kb``:
+    ``lang`` picks the language rules, and ``lowercase``/``deaccent``
+    mirror the reference's ``-d``/``-r`` modes.
     ``deaccent`` TRANSFORMS the working text (ner.py:614, plain removal —
     offsets refer to the deaccented text), while ``lowercase`` only lowers
     the SCAN input (ner.py:473-476: figa reads input_string.lower() but
@@ -126,6 +135,7 @@ def extract_mentions(pages: DataFrame, artifacts: KBArtifacts,
     src = sanitized_pages(pages, url_col, text_col)
     bundle_bc = artifacts.bundle_bc
     atm_bc = artifacts.automaton_bc
+    scan = artifacts.scan_config
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         bundle = bundle_bc.value
@@ -135,8 +145,9 @@ def extract_mentions(pages: DataFrame, artifacts: KBArtifacts,
         for pdf in batches:
             rows = [(url,) + r
                     for url, doc in resolved_docs(
-                        pdf["url"], pdf["text"], bundle, atm, lang,
-                        lowercase, deaccent, find_names, names_strict)
+                        pdf["url"], pdf["text"], bundle, atm,
+                        find_names=find_names, names_strict=names_strict,
+                        **scan)
                     for r in doc]
             yield pd.DataFrame(rows, columns=cols)
 

@@ -1,37 +1,34 @@
-"""End-to-end orchestration: pages + KB → canonicalized triple table.
+"""The KG job: pages + compiled KB → canonicalized triple table.
 
 Stage graph (SURVEY §4 target plan):
 
   pages ──filter todo url-buckets──(narrow mapInPandas, broadcast
         KB+automaton)──► mentions
-  mentions ──persist/materialize──┬─► mention triples  (narrow)
-                                  └─► co-mention edges (shuffle url,par → agg)
-  kb ───────────────────────────────► type/attribute triples (narrow)
+  mentions ──checkpoint──┬─► mention triples  (narrow)
+                         └─► co-mention edges (shuffle url,par → agg)
+  kb ──────────────────────► type/attribute triples (narrow)
   kb.redirects ──CC loop──► sameAs mapping ──broadcast──► canonical remap
   all ──► resumable bucketed write + per-partition lineage
 
-Both bucketed writes (the materialized mentions and the triple table) go
+Both bucketed writes (the mentions checkpoint and the triple table) go
 through ``io.catalog.commit_buckets``: per wave, one shuffle on the bucket
 column and one dynamic-overwrite write, then lineage from a
 partition-pruned readback of the committed files.
 
-``mentions`` is consumed by two branches, so it is persisted (or, with
-``materialize_mentions``, written to parquet and re-read — the pattern a
-multi-day 100 TB run would use so the expensive scan is checkpointed).
+``mentions`` is consumed by two branches, so :func:`run_kg_job` always
+writes it to parquet and re-reads it: the expensive scan is checkpointed,
+and a resumed run extracts only the pages of unfinished buckets.
 """
 
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
-
 from pyspark.sql import functions as F
 
 from ner_spark.io.catalog import commit_buckets, resumable_write, with_bucket
-from ner_spark.kb.build import KBArtifacts, compile_kb
+from ner_spark.kb.build import KBArtifacts
 from ner_spark.pipeline.ner import MENTION_SCHEMA, extract_mentions
 from ner_spark.pipeline.triples import build_triples
 
@@ -82,38 +79,21 @@ def extract_mentions_resumable(
         .drop("bucket")
 
 
-@dataclass
-class PipelineResult:
-    artifacts: KBArtifacts
-    mentions: DataFrame
-    triples: DataFrame
-    manifest: dict | None = None
-
-
-def run_pipeline(
-    spark: SparkSession,
-    pages: DataFrame,
-    kb_rows: list[dict],
-    out_path: str | None = None,
-    n_buckets: int = 64,
-    url_col: str = "url",
-    text_col: str = "text",
-    materialize_mentions: str | None = None,
-) -> PipelineResult:
-    artifacts = compile_kb(spark, kb_rows)
-    if materialize_mentions:
-        # checkpoint-resumable: completed url-buckets are pruned from the
-        # page scan itself on re-runs
-        mentions = extract_mentions_resumable(
-            spark, pages, artifacts, materialize_mentions,
-            n_buckets=n_buckets, url_col=url_col, text_col=text_col)
-    else:
-        mentions = extract_mentions(pages, artifacts, url_col=url_col,
-                                    text_col=text_col) \
-            .persist(StorageLevel.MEMORY_AND_DISK)
-    triples = build_triples(mentions, artifacts.kb_df)
-    manifest = None
-    if out_path:
-        manifest = resumable_write(triples, os.path.join(out_path, "triples"),
-                                   key="subj", n_buckets=n_buckets)
-    return PipelineResult(artifacts, mentions, triples, manifest)
+def run_kg_job(spark: SparkSession, pages: DataFrame, artifacts: KBArtifacts,
+               out: str, n_buckets: int = 64, waves: int = 1,
+               **extract_kw) -> dict:
+    """The KG job: checkpoint the mentions to ``out/mentions``
+    (:func:`extract_mentions_resumable`), build the triples from that
+    checkpoint and commit them to ``out/triples``, then count the table.
+    Re-running on the same ``out`` resumes both tables bucket by bucket.
+    Returns the triple count and the completed and resumed triple
+    buckets."""
+    mentions = extract_mentions_resumable(
+        spark, pages, artifacts, os.path.join(out, "mentions"),
+        n_buckets=n_buckets, waves=waves, **extract_kw)
+    t_path = os.path.join(out, "triples")
+    manifest = resumable_write(build_triples(mentions, artifacts.kb_df),
+                               t_path, key="subj", n_buckets=n_buckets)
+    return {"n_triples": spark.read.parquet(t_path).count(),
+            "buckets_completed": len(manifest["completed"]),
+            "buckets_resumed": len(manifest["skipped_resume"])}

@@ -1443,7 +1443,7 @@ static void remove_nearby(Doc &d, vector<int32_t> &entities) {
 }
 
 // ---------------------------------------------------------------------------
-// run_pipeline: the per-document driver (resolve.py:1356-1507, mode=default)
+// run_stages: the per-document driver (resolve.py:1356-1507, mode=default)
 // ---------------------------------------------------------------------------
 
 static PyObject *s_kb, *s_coref, *s_date, *s_interval;  // interned kinds
@@ -1472,7 +1472,7 @@ static bool parse_dates(Doc &d, PyObject *dates) {
     return !PyErr_Occurred();
 }
 
-static PyObject *run_pipeline(Doc &d) {
+static PyObject *run_stages(Doc &d) {
     const KBPack *kb = d.kb;
     (void)kb;
     Register reg(d.men.size());
@@ -1894,7 +1894,7 @@ static PyObject *scan_resolve_doc(PyObject *self, PyObject *args) {
             i++;
         }
     }
-    return run_pipeline(d);
+    return run_stages(d);
 }
 
 // ---------------------------------------------------------------------------

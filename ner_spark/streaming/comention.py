@@ -35,8 +35,6 @@ PAIR_SCHEMA = "url string, par int, s1 int, s2 int"
 
 def comention_pair_stream(pages: DataFrame, artifacts: KBArtifacts,
                           url_col: str = "url", text_col: str = "text",
-                          lang: str = "en", lowercase: bool = False,
-                          deaccent: bool = False,
                           find_names: bool = False) -> DataFrame:
     """pages (streaming or batch) → one row per distinct within-paragraph
     resolved-sense pair (s1 < s2) per page.  Stateless (pure mapInPandas
@@ -44,14 +42,15 @@ def comention_pair_stream(pages: DataFrame, artifacts: KBArtifacts,
     Pair semantics match comention_edges: distinct (url, par, sense) over
     sense-resolved mentions, pairs within the same (url, par).
 
-    ``lowercase``/``deaccent``/``find_names`` forward the same scan modes
-    as :func:`~ner_spark.pipeline.ner.extract_mentions` (-d/-r/-n) so a
-    deployment whose batch KG runs a non-default mode gets a streaming KG
-    built from the SAME mention set — the automaton must be the variant
-    compiled with matching flags, exactly as on the batch path."""
+    The scan modes (-d/-r, ``lang``) come from the artifact and
+    ``find_names`` (-n) is forwarded, exactly as in
+    :func:`~ner_spark.pipeline.ner.extract_mentions`, so a deployment whose
+    batch KG runs a non-default mode gets a streaming KG built from the
+    SAME mention set."""
     src = sanitized_pages(pages, url_col, text_col)
     bundle_bc = artifacts.bundle_bc
     atm_bc = artifacts.automaton_bc
+    scan = artifacts.scan_config
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         bundle = bundle_bc.value
@@ -59,8 +58,7 @@ def comention_pair_stream(pages: DataFrame, artifacts: KBArtifacts,
         for pdf in batches:
             rows = []
             for url, doc in resolved_docs(pdf["url"], pdf["text"], bundle,
-                                          atm, lang, lowercase, deaccent,
-                                          find_names):
+                                          atm, find_names=find_names, **scan):
                 per_par: dict[int, set[int]] = {}
                 for _, _, par, _, _, sense, _, _ in doc:
                     if sense is not None:

@@ -56,8 +56,8 @@ def stream_mentions(
     **extract_kw,
 ) -> StreamingQuery:
     """Watch ``input_path`` for page parquet files; append mention rows.
-    ``extract_kw`` (lang/lowercase/deaccent/find_names) forwards to
-    :func:`extract_mentions`."""
+    ``extract_kw`` (find_names/names_strict) forwards to
+    :func:`extract_mentions`; the scan modes come from ``artifacts``."""
     pages = (
         spark.readStream.schema(PAGES_SCHEMA).parquet(input_path)
     )

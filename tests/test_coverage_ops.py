@@ -192,6 +192,28 @@ def test_lowercase_variant(spark, variant_rows):
     assert [(r["text"], r["sense"]) for r in out] == [("WASHINGTON", 2)]
 
 
+def test_scan_mentions_applies_artifact_scan_modes(spark, variant_rows):
+    """scan_mentions scans the text resolved_docs scans: lowered for a
+    lowercase artifact (whose keys are all lower-case), deaccented for a
+    deaccent one — raw text would miss both."""
+    from ner_spark.kb.build import compile_kb
+    from ner_spark.pipeline.ner import scan_mentions
+
+    df = spark.createDataFrame(
+        [("u1", "we saw WASHINGTON yesterday ."),
+         ("u2", "Antonín Dvořák composed music .")], "url string, text string")
+    low = compile_kb(spark, variant_rows, lowercase=True,
+                     add_pronouns=False, add_subname_fragments=False)
+    got = {(r.url, r.start, r.end, tuple(r.ids))
+           for r in scan_mentions(df, low).collect()}
+    assert ("u1", 7, 17, (2,)) in got
+    dea = compile_kb(spark, variant_rows, deaccent=True,
+                     add_pronouns=False, add_subname_fragments=False)
+    got = {(r.url, r.start, r.end, tuple(r.ids))
+           for r in scan_mentions(df, dea).collect()}
+    assert ("u2", 0, 14, (1,)) in got
+
+
 def test_deaccent_variant(spark, variant_rows):
     from ner_spark.kb.build import compile_kb
 

@@ -89,14 +89,34 @@ def test_comention_edges_symmetric_ordering(spark, pages_df, artifacts):
         assert e.weight >= 1
 
 
-def test_run_pipeline_end_to_end(spark, kb_rows, pages_df, tmp_path):
-    from ner_spark.pipeline.run import run_pipeline
+def test_run_kg_job_end_to_end(spark, pages_df, artifacts, tmp_path):
+    """The one KG job: a first run commits every bucket of both tables, a
+    rerun on the same ``out`` resumes all of them with the same count, and
+    waves only change how the mentions checkpoint is committed."""
+    from ner_spark.io.catalog import read_lineage
+    from ner_spark.pipeline.run import run_kg_job
 
-    res = run_pipeline(spark, pages_df, kb_rows, out_path=str(tmp_path),
-                       n_buckets=8)
-    assert res.manifest is not None
-    written = spark.read.parquet(str(tmp_path / "triples"))
-    assert written.count() == res.triples.count()
+    def lineage(path):
+        return sorted(tuple(r) for r in read_lineage(spark, path).collect())
+
+    out = str(tmp_path / "one")
+    first = run_kg_job(spark, pages_df, artifacts, out, n_buckets=8)
+    assert first["n_triples"] > 0
+    assert (first["buckets_completed"], first["buckets_resumed"]) == (8, 0)
+    tables = {t: lineage(f"{out}/{t}") for t in ("mentions", "triples")}
+    for rows in tables.values():
+        assert [r[0] for r in rows] == list(range(8))
+    assert sum(r[1] for r in tables["triples"]) == first["n_triples"]
+
+    again = run_kg_job(spark, pages_df, artifacts, out, n_buckets=8)
+    assert again == dict(first, buckets_resumed=8)
+    # nothing re-committed: the lineage of both tables is unchanged
+    assert {t: lineage(f"{out}/{t}") for t in tables} == tables
+
+    waved = str(tmp_path / "waves")
+    res = run_kg_job(spark, pages_df, artifacts, waved, n_buckets=8, waves=2)
+    assert res == first
+    assert lineage(f"{waved}/triples") == tables["triples"]
 
 def test_null_and_empty_text_safe(spark, artifacts):
     """Crawl tables contain null/empty text; the pipeline must pass them
@@ -214,12 +234,16 @@ def test_apply_delta_roundtrip(spark):
 def test_kb_artifact_save_load_roundtrip(spark, kb_rows, pages_df,
                                          artifacts, tmp_path):
     """save_kb_artifact → load_kb_artifact reproduces the compiled KB
-    exactly: same mention set, same scored-KB rows, version handshake
-    enforced (the production prebuilt-.dct deployment form,
-    ner.py:432-443 / 756-810)."""
+    exactly: same mention set, same scored-KB rows, same scan config,
+    version handshake enforced (the production prebuilt-.dct deployment
+    form, ner.py:432-443 / 756-810)."""
+    import json
+    import os
+
     import pytest as _pytest
 
-    from ner_spark.kb.build import load_kb_artifact, save_kb_artifact
+    from ner_spark.kb.build import (compile_kb, load_kb_artifact,
+                                    save_kb_artifact)
     from ner_spark.pipeline.ner import extract_mentions
 
     path = str(tmp_path / "kb_art")
@@ -241,3 +265,30 @@ def test_kb_artifact_save_load_roundtrip(spark, kb_rows, pages_df,
     # stale-version handshake fails fast
     with _pytest.raises(ValueError, match="version mismatch"):
         load_kb_artifact(spark, path, kb_version="v2")
+    assert loaded.scan_config == {"lowercase": False, "deaccent": False,
+                                  "lang": "en"}
+
+    # a -d -r artifact comes back with its scan config and scans with it:
+    # on upper-cased, accented pages the mentions only match when both
+    # modes reach the scan
+    dr = compile_kb(spark, kb_rows, lowercase=True, deaccent=True)
+    dr_path = str(tmp_path / "kb_art_dr")
+    save_kb_artifact(dr, dr_path)
+    dr_loaded = load_kb_artifact(spark, dr_path)
+    assert dr_loaded.scan_config == {"lowercase": True, "deaccent": True,
+                                     "lang": "en"}
+    shouted = pages_df.select(
+        "url", F.upper(F.translate("text", "e", "é")).alias("text"))
+    m_want = sorted(map(key, extract_mentions(shouted, dr).collect()))
+    m_got = sorted(map(key, extract_mentions(shouted, dr_loaded).collect()))
+    assert m_got == m_want and len(m_got) > 200
+
+    # a MANIFEST that predates the recorded scan config is refused
+    manifest = os.path.join(dr_path, "MANIFEST.json")
+    with open(manifest) as fh:
+        old = {k: v for k, v in json.load(fh).items()
+               if k not in ("lowercase", "deaccent", "lang")}
+    with open(manifest, "w") as fh:
+        json.dump(old, fh)
+    with _pytest.raises(ValueError, match="recompile"):
+        load_kb_artifact(spark, dr_path)

@@ -63,10 +63,11 @@ def test_pair_stream_is_stateless_streaming_node(spark, artifacts, tmp_path):
 
 
 def test_pair_stream_forwards_scan_modes(spark, kb_rows, pages_rows):
-    """Batch frame under -d -r (lowercase + deaccent): the pair explode must
-    equal comention_edges over extract_mentions with the same flags, so the
-    shared per-document loop forwards the scan modes.  Accented and
-    upper-cased pages only match when both modes reach the scan."""
+    """Batch frame over a -d -r (lowercase + deaccent) artifact: the pair
+    explode must equal comention_edges over extract_mentions with the same
+    artifact, so the shared per-document loop takes the scan modes from the
+    artifact.  Accented and upper-cased pages only match when both modes
+    reach the scan."""
     from ner_spark.kb.build import compile_kb
     from ner_spark.pipeline.ner import extract_mentions
     from ner_spark.pipeline.triples import comention_edges
@@ -77,14 +78,15 @@ def test_pair_stream_forwards_scan_modes(spark, kb_rows, pages_rows):
     rows = [(p["url"], p["text"].replace("e", "é") if i % 2
              else p["text"].upper()) for i, p in enumerate(pages_rows)]
     df = spark.createDataFrame(rows, "url string, text string")
-    flags = dict(lowercase=True, deaccent=True)
 
     def edges(frame):
         return {(r.subj, r.obj): r.weight for r in frame.collect()}
 
-    got = edges(comention_edge_counts(comention_pair_stream(df, art, **flags)))
-    want = edges(comention_edges(extract_mentions(df, art, **flags)))
+    got = edges(comention_edge_counts(comention_pair_stream(df, art)))
+    want = edges(comention_edges(extract_mentions(df, art)))
     assert got == want
     assert len(got) > 0
-    # the flags matter on this corpus: without them the scan finds less
-    assert got != edges(comention_edge_counts(comention_pair_stream(df, art)))
+    # the flags matter on this corpus: an artifact compiled without them
+    # finds less
+    plain = compile_kb(spark, kb_rows)
+    assert got != edges(comention_edge_counts(comention_pair_stream(df, plain)))

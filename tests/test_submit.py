@@ -76,3 +76,13 @@ def test_spark_submit_packaged_zip(tmp_path, sf_dir, spark):
     assert summary2["n_triples"] == summary["n_triples"]
     assert summary2["buckets_resumed"] == 4
     assert summary2["kb"] == "artifact"     # re-run loads the prebuilt KB
+
+    # the artifact was compiled without -d: a --lowercase job on it is
+    # refused instead of scanning with flags the KB was not built for
+    proc3 = subprocess.run(cmd + ["--lowercase"], capture_output=True,
+                           text=True, timeout=420, cwd=str(tmp_path), env=env)
+    assert proc3.returncode != 0
+    # spark-submit merges the Python process's stderr into its stdout
+    log = proc3.stdout + proc3.stderr
+    assert "scan config mismatch" in log
+    assert "'lowercase': True" in log

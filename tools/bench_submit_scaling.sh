@@ -32,7 +32,7 @@ run() {  # run <cpuset> <master> <tag>
   echo "=== $tag cpuset=$cpuset master=$master $(date +%T)" >&2
   taskset -c "$cpuset" spark-submit --master "$master" --driver-memory 24g \
     --py-files build/ner_spark.zip tools/run_job.py \
-    --pages "$PAGES" --out "$out/o" --buckets 8 --materialize-mentions \
+    --pages "$PAGES" --out "$out/o" --buckets 8 \
     ${EXTRA[@]+"${EXTRA[@]}"} 2>/dev/null | tail -1
   rm -rf "$out"
 }

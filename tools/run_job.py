@@ -5,12 +5,14 @@
     python tools/package.py                       # → build/ner_spark.zip
     spark-submit --py-files build/ner_spark.zip \\
         tools/run_job.py --pages <parquet> --kb <KB.tsv> --out <dir> \\
-        [--buckets 64] [--find-names] [--lowercase] [--deaccent]
+        [--buckets 64] [--resume-waves 1] [--find-names] \\
+        [--lowercase] [--deaccent] [--lang en] [--kb-artifact <dir>]
 
 With no --kb the synthetic fixture KB is compiled (useful for smoke runs).
-The job writes the canonicalized triple table with per-bucket lineage
-(resumable: re-running with the same --out skips completed buckets) and
-prints a one-line JSON summary.
+``pipeline.run.run_kg_job`` checkpoints the mentions and writes the
+canonicalized triple table, both with per-bucket lineage (re-running with
+the same --out skips completed buckets); a one-line JSON summary is
+printed.  A loaded --kb-artifact must match --lowercase/--deaccent/--lang.
 """
 
 from __future__ import annotations
@@ -40,8 +42,6 @@ def main() -> None:
     ap.add_argument("--tagged-inflections", default=None, metavar="TSV",
                     help="namegen tagged-inflections TSV (cs only, "
                          "create_cedar.sh:369)")
-    ap.add_argument("--materialize-mentions", action="store_true",
-                    help="checkpoint mentions (compute-level resume)")
     ap.add_argument("--resume-waves", type=int, default=1, metavar="N",
                     help="split mention extraction into N sequentially "
                          "committed waves (incremental checkpointing: a "
@@ -56,11 +56,9 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from ner_spark.io.catalog import resumable_write
-    from ner_spark.io.kbtsv import read_kb_tsv
+    from ner_spark.io.kbtsv import load_kb_rows
     from ner_spark.kb.build import compile_kb, load_kb_artifact, save_kb_artifact
-    from ner_spark.pipeline.ner import extract_mentions
-    from ner_spark.pipeline.triples import build_triples
+    from ner_spark.pipeline.run import run_kg_job
 
     # under spark-submit the session/master comes from the launcher config
     spark = SparkSession.builder.appName("ner-spark-kgc").getOrCreate()
@@ -73,15 +71,12 @@ def main() -> None:
     art_dir = args.kb_artifact
     have_artifact = art_dir and os.path.exists(
         os.path.join(art_dir, "MANIFEST.json"))
+    scan = dict(lowercase=args.lowercase, deaccent=args.deaccent,
+                lang=args.lang)
 
     kb_rows = tagged = None
     if not have_artifact:
-        if args.kb:
-            with open(args.kb) as fh:
-                _, _, kb_rows = read_kb_tsv(fh)
-        else:
-            from ner_spark.fixtures.gen import gen_kb_rows
-            kb_rows = gen_kb_rows()
+        kb_rows = load_kb_rows(args.kb)
         if args.tagged_inflections:
             with open(args.tagged_inflections) as fh:
                 tagged = fh.read().splitlines()
@@ -89,33 +84,24 @@ def main() -> None:
     t0 = time.time()
     if have_artifact:
         art = load_kb_artifact(spark, art_dir)
+        if art.scan_config != scan:
+            spark.stop()
+            sys.exit(f"KB artifact scan config mismatch: {art_dir} was "
+                     f"compiled with {art.scan_config}, the job asks for "
+                     f"{scan}; recompile the artifact or pass its "
+                     f"--lowercase/--deaccent/--lang")
     else:
-        art = compile_kb(spark, kb_rows, lowercase=args.lowercase,
-                         deaccent=args.deaccent, lang=args.lang,
-                         tagged_inflections=tagged)
+        art = compile_kb(spark, kb_rows, tagged_inflections=tagged, **scan)
         if art_dir:
             save_kb_artifact(art, art_dir)
-    pages = spark.read.parquet(args.pages)
-    kw = dict(url_col=args.url_col, text_col=args.text_col,
-              lowercase=args.lowercase, deaccent=args.deaccent,
-              find_names=args.find_names, lang=args.lang)
-    if args.materialize_mentions:
-        from ner_spark.pipeline.run import extract_mentions_resumable
-        mentions = extract_mentions_resumable(
-            spark, pages, art, os.path.join(args.out, "mentions"),
-            n_buckets=args.buckets, waves=args.resume_waves, **kw)
-    else:
-        mentions = extract_mentions(pages, art, **kw).persist()
-    triples = build_triples(mentions, art.kb_df)
-    manifest = resumable_write(triples, os.path.join(args.out, "triples"),
-                               key="subj", n_buckets=args.buckets)
-    n = spark.read.parquet(os.path.join(args.out, "triples")).count()
+    res = run_kg_job(spark, spark.read.parquet(args.pages), art, args.out,
+                     n_buckets=args.buckets, waves=args.resume_waves,
+                     url_col=args.url_col, text_col=args.text_col,
+                     find_names=args.find_names)
     dt = time.time() - t0
     print(json.dumps({
-        "n_triples": n, "sec": round(dt, 2),
-        "triples_per_sec": round(n / dt, 1),
-        "buckets_completed": len(manifest["completed"]),
-        "buckets_resumed": len(manifest["skipped_resume"]),
+        **res, "sec": round(dt, 2),
+        "triples_per_sec": round(res["n_triples"] / dt, 1),
         "kb": "artifact" if have_artifact else "compiled",
         "out": args.out,
     }))
