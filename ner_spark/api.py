@@ -4,34 +4,16 @@
 (`./ner.py [-f file] [-d] [-a|-s] [-n] [-l] [-r]`, ner.py:723-751) without
 a SparkSession: compile the KB driver-side, recognize one document at a
 time, print reference-format lines.  :class:`Engine` — the Spark scale
-path: same KB compile broadcast to executors, pages DataFrame → mentions
+path: the same KB compile (``kb.build.compile_gazetteer``, under
+``compile_kb``) broadcast to executors, pages DataFrame → mentions
 (the KG job itself is ``pipeline.run.run_kg_job``).
 """
 
 from __future__ import annotations
 
 from ner_spark.io.kbtsv import load_kb_rows
-from ner_spark.semantics.automaton import GazetteerAutomaton
-from ner_spark.semantics.kb import (KBBundle, build_namelist,
-                                    build_uri_namelist)
+from ner_spark.kb.build import compile_gazetteer
 from ner_spark.semantics.recognize import recognize, render_reference_lines
-
-
-def _compile_local(kb_rows: list[dict], lowercase: bool = False,
-                   deaccent: bool = False, uri_mode: bool = False,
-                   stop_list: set[str] | None = None, lang: str = "en"):
-    from ner_spark.kb.build import _transform_namelist
-    from ner_spark.semantics.lang import get_lang
-
-    bundle = KBBundle.from_rows(kb_rows)
-    if uri_mode:
-        namelist = build_uri_namelist(bundle)
-    else:
-        namelist = build_namelist(bundle, stop_list=stop_list,
-                                  lang=get_lang(lang))
-    namelist = _transform_namelist(namelist, lowercase, deaccent,
-                                   bundle.get_score)
-    return bundle, GazetteerAutomaton.build(namelist.items())
 
 
 class LocalRecognizer:
@@ -46,8 +28,9 @@ class LocalRecognizer:
         self.lowercase = lowercase
         self.deaccent = deaccent
         self.lang = lang
-        self.bundle, self.automaton = _compile_local(
-            kb_rows, lowercase, deaccent, uri_mode, stop_list, lang)
+        self.bundle, self.automaton = compile_gazetteer(
+            kb_rows, stop_list=stop_list, lowercase=lowercase,
+            deaccent=deaccent, uri_mode=uri_mode, lang=lang)
 
     def recognize(self, text: str, mode: str = "default",
                   find_names: bool = False,

@@ -1,14 +1,11 @@
-"""KB compile artifacts: namelist TSV sink, automaton file sink/source,
-typeflag codec (SURVEY S7/S10/X16).
+"""KB compile side formats: namelist TSV sink/source and typeflag codec
+(SURVEY S7/S10/X16).  The one versioned KB artifact is
+``kb.build.save_kb_artifact``/``load_kb_artifact``.
 
   * namelist TSV: ``key \\t id;id;...;N`` — the uniq_namelist output format
     (/root/reference/automata/src/uniq_namelist.py:104-107; parsed back by
     figa, figa/src/figa_cedar.cpp:129-251, figa/test_figa.py:31-50).
     'N' encodes the name-fragment marker we store as id 0;
-  * automaton artifact: pickled GazetteerAutomaton + KB version key — the
-    analogue of the serialized ``.dct``/``.ct`` trie (figa/src/main.cpp:
-    154-218), invalidated when the KB version changes like the reference's
-    version handshake (ner.py:756-810, ner/ner_knowledge_base.py:118-129);
   * typeflags: ``P:<F/G>:<N/P>:<gender>`` for persons, ``L[:subtype]`` for
     geographical (/root/reference/automata/src/get_entities_with_typeflags.py:
     4, 38-92).
@@ -16,14 +13,9 @@ typeflag codec (SURVEY S7/S10/X16).
 
 from __future__ import annotations
 
-import os
-import pickle
 from typing import TextIO
 
-from ner_spark.semantics.automaton import GazetteerAutomaton
 from ner_spark.semantics.kb import KBBundle
-
-_MAGIC = b"NERSPARK-ATM-1\n"
 
 
 def write_namelist_tsv(namelist: dict[str, list[int]], fh: TextIO) -> None:
@@ -42,32 +34,6 @@ def read_namelist_tsv(fh: TextIO) -> dict[str, list[int]]:
         key, _, links = line.partition("\t")
         out[key] = [0 if x == "N" else int(x) for x in links.split(";") if x]
     return out
-
-
-def save_automaton(atm: GazetteerAutomaton, path: str, kb_version: str) -> None:
-    with open(path, "wb") as fh:
-        fh.write(_MAGIC)
-        fh.write(kb_version.encode() + b"\n")
-        pickle.dump(atm, fh, protocol=pickle.HIGHEST_PROTOCOL)
-
-
-def load_automaton(path: str, kb_version: str | None = None) -> GazetteerAutomaton:
-    """Load; if ``kb_version`` is given and differs from the stored one,
-    raise — the caller must rebuild (version handshake semantics)."""
-    with open(path, "rb") as fh:
-        if fh.read(len(_MAGIC)) != _MAGIC:
-            raise ValueError(f"{path}: not an automaton artifact")
-        stored = fh.readline().rstrip(b"\n").decode()
-        if kb_version is not None and stored != kb_version:
-            raise ValueError(
-                f"automaton built for KB version {stored!r}, need {kb_version!r}")
-        return pickle.load(fh)
-
-
-def automaton_path(directory: str, lang: str = "en",
-                   variant: str = "") -> str:
-    name = f"automata{('-' + variant) if variant else ''}-{lang}.atm"
-    return os.path.join(directory, name)
 
 
 def typeflags(kb: KBBundle, line: int, ntype: str | None = None) -> str:

@@ -1,19 +1,22 @@
-"""KB compile job (SURVEY §3.3 / M1, Spark-first).
+"""KB compile (SURVEY §3.3 / M1): one compile, one artifact.
 
-Two cooperating outputs:
+  * :func:`compile_gazetteer` is the one KB compile, Spark-free: flat KB
+    rows → scored :class:`KBBundle` + :class:`GazetteerAutomaton`.  The
+    CLI (``api.LocalRecognizer``), the golden/kernel tools and
+    :func:`compile_kb` all call it;
+  * :func:`compile_kb` adds the relational ``kb`` DataFrame (with the
+    bundle's A10/A11 static scores; used by the triple/attribute stages
+    and as the small side of broadcast joins) and broadcasts the bundle
+    and automaton — one read-only copy per executor, the idiomatic
+    replacement for the reference's shared-memory KB daemon
+    (ner/kb_daemon.py:30-61) and memory-mapped ``.dct`` automaton;
+  * :func:`save_kb_artifact` / :func:`load_kb_artifact` persist that
+    compile as the one reusable, versioned KB artifact.
 
-  * a relational ``kb`` DataFrame with the A10/A11 static scores computed
-    as a pure DataFrame job (groupBy type → max, broadcast join back,
-    column arithmetic — metrics_knowledge_base.py:330-387 semantics); used
-    by the triple/attribute stages and as the small side of broadcast joins;
-  * broadcast artifacts: the picklable :class:`KBBundle` + compiled
-    :class:`GazetteerAutomaton` — one read-only copy per executor, the
-    idiomatic replacement for the reference's shared-memory KB daemon
-    (ner/kb_daemon.py:30-61) and memory-mapped ``.dct`` automaton.
-
-The Python and DataFrame score paths are tested for equality
-(tests/test_kb_build.py), so either can be treated as the oracle of the
-other.
+:func:`with_static_scores` is the same scoring as a pure DataFrame job
+(groupBy type → max, broadcast join back, column arithmetic —
+metrics_knowledge_base.py:330-387); tests/test_kb.py holds it equal to
+the bundle's scores, so either is the oracle of the other.
 """
 
 from __future__ import annotations
@@ -136,17 +139,18 @@ class KBArtifacts:
 def _transform_namelist(namelist: dict[str, list[int]], lowercase: bool,
                         deaccent: bool, conf_of) -> dict[str, list[int]]:
     """Key transform of the lowercase -d / deaccent -r automaton variants
-    (create_cedar.sh:25,521-546): deaccent, then lower, as the scan treats
-    the text.  Colliding keys merge with the confidence-descending id order
+    (create_cedar.sh:25,521-546): each key becomes the form the scan reads
+    (``textnorm.apply_scan_modes``, the rule every scan applies to its
+    text).  Colliding keys merge with the confidence-descending id order
     of uniq_namelist.py:88-94, fragment marker 0 kept last."""
     if not (lowercase or deaccent):
         return namelist
-    from ner_spark.semantics.textnorm import remove_accent
+    from ner_spark.semantics.textnorm import apply_scan_modes
 
     out: dict[str, list[int]] = {}
     for key, ids in namelist.items():
-        k = remove_accent(key) if deaccent else key
-        k = k.lower() if lowercase else k
+        k, scan_k = apply_scan_modes(key, lowercase, deaccent)
+        k = scan_k if scan_k is not None else k
         if not k:
             continue
         if k in out:
@@ -189,26 +193,29 @@ def _fold_surname_derivatives(bundle: KBBundle, tagged_expanded: dict) -> None:
         bundle.name_dict = nd
 
 
-def compile_kb(spark: SparkSession, rows: list[dict],
-               stop_list: set[str] | None = None,
-               filter_keys: bool = True,
-               add_pronouns: bool = True,
-               add_subname_fragments: bool = True,
-               lowercase: bool = False,
-               deaccent: bool = False,
-               uri_mode: bool = False,
-               wiki_filter: bool = False,
-               lang: str = "en",
-               tagged_inflections: list[str] | None = None,
-               qid_mode: bool = False) -> KBArtifacts:
-    """Driver-side KB compile + broadcast (rebuilt when the KB snapshot
-    changes, the analogue of the ETag/version handshake ner.py:756-810).
+def compile_gazetteer(rows: list[dict],
+                      stop_list: set[str] | None = None,
+                      filter_keys: bool = True,
+                      add_pronouns: bool = True,
+                      add_subname_fragments: bool = True,
+                      lowercase: bool = False,
+                      deaccent: bool = False,
+                      uri_mode: bool = False,
+                      wiki_filter: bool = False,
+                      lang: str = "en",
+                      tagged_inflections: list[str] | None = None,
+                      qid_mode: bool = False
+                      ) -> tuple[KBBundle, GazetteerAutomaton]:
+    """The one KB compile, Spark-free: flat KB rows → (scored
+    :class:`KBBundle`, :class:`GazetteerAutomaton`) — the reference's
+    KB2namelist → uniq_namelist → figa ``.dct`` pipeline.  Used by
+    :func:`compile_kb` (which adds the relational KB and the broadcasts),
+    by ``api.LocalRecognizer`` and by the golden/kernel tools.
 
     ``lowercase`` builds the ``-d`` lowercase automaton variant and
-    ``deaccent`` the ``-r`` accent-stripped one (both may combine).  The
-    artifact records both flags and ``lang``, and every scan of it
-    (extract_mentions, scan_mentions, the streaming pairs) applies the
-    matching text transform.
+    ``deaccent`` the ``-r`` accent-stripped one (both may combine): every
+    key goes through ``textnorm.apply_scan_modes``, the rule every scan of
+    the automaton applies to its text.
 
     ``tagged_inflections`` (cs only — namegen runs solely in the cs
     build, create_cedar.sh:369): tagged-inflection TSV lines whose
@@ -270,26 +277,36 @@ def compile_kb(spark: SparkSession, rows: list[dict],
                     vals.append(v)
             remapped[key] = vals
         namelist = remapped
-    automaton = GazetteerAutomaton.build(namelist.items())
-    # scored KB DataFrame: for driver-sized KBs attach the bundle's scores
-    # (computed once above; proven equal to the DataFrame job in
-    # tests/test_kb.py) — skips an 8-stage groupBy/broadcast round-trip per
-    # compile.  Past ~100k rows the distributed score job takes over.
-    if bundle.n_rows() <= 100_000:
-        import pandas as pd
+    return bundle, GazetteerAutomaton.build(namelist.items())
 
-        base = kb_rows_to_df(spark, rows)
-        ids = [int(r["id"]) for r in rows]
-        scores = spark.createDataFrame(pd.DataFrame({
-            "id": pd.array(ids, dtype="int64"),
-            "score_wiki": [bundle.cols["score_wiki"][i] for i in ids],
-            "score_metrics": [bundle.cols["score_metrics"][i] for i in ids],
-            "confidence": [bundle.cols["confidence"][i] for i in ids],
-        }), schema="id long, score_wiki double, score_metrics double, "
-                   "confidence double")
-        kb_df = base.join(F.broadcast(scores), "id")
-    else:  # pragma: no cover - exercised at real scale
-        kb_df = with_static_scores(kb_rows_to_df(spark, rows))
+
+def compile_kb(spark: SparkSession, rows: list[dict],
+               lowercase: bool = False, deaccent: bool = False,
+               lang: str = "en", **compile_kw) -> KBArtifacts:
+    """Driver-side KB compile + broadcast (rebuilt when the KB snapshot
+    changes, the analogue of the ETag/version handshake ner.py:756-810):
+    :func:`compile_gazetteer` (same options), plus the scored relational
+    KB and the broadcasts.  The artifact records ``lowercase``,
+    ``deaccent`` and ``lang``, and every scan of it (extract_mentions,
+    scan_mentions, the streaming pairs) applies the matching text
+    transform."""
+    bundle, automaton = compile_gazetteer(
+        rows, lowercase=lowercase, deaccent=deaccent, lang=lang,
+        **compile_kw)
+    # scored KB DataFrame: the bundle's scores (computed once by
+    # KBBundle.from_rows; with_static_scores is the DataFrame-job oracle
+    # they are tested against in tests/test_kb.py)
+    import pandas as pd
+
+    ids = [int(r["id"]) for r in rows]
+    scores = spark.createDataFrame(pd.DataFrame({
+        "id": pd.array(ids, dtype="int64"),
+        "score_wiki": [bundle.cols["score_wiki"][i] for i in ids],
+        "score_metrics": [bundle.cols["score_metrics"][i] for i in ids],
+        "confidence": [bundle.cols["confidence"][i] for i in ids],
+    }), schema="id long, score_wiki double, score_metrics double, "
+               "confidence double")
+    kb_df = kb_rows_to_df(spark, rows).join(F.broadcast(scores), "id")
     # cache + eager materialization: the triple builder reads the scored KB
     # from several branches (types, attributes, redirects)
     kb_df = kb_df.cache()
@@ -305,6 +322,10 @@ def compile_kb(spark: SparkSession, rows: list[dict],
     )
 
 
+def _local_uri(path: str, name: str) -> str:
+    return "file://" + os.path.abspath(os.path.join(path, name))
+
+
 def save_kb_artifact(art: KBArtifacts, path: str,
                      kb_version: str = "") -> None:
     """Persist a compiled KB as a reusable artifact directory — the
@@ -318,6 +339,11 @@ def save_kb_artifact(art: KBArtifacts, path: str,
         <path>/automaton.pkl     GazetteerAutomaton
         <path>/MANIFEST.json     counts, scan config, version handshake key
 
+    ``path`` is a driver-local or NFS directory: all four files go
+    through the local filesystem (``kb.parquet`` as a ``file://`` URI,
+    whatever the Hadoop default FS is), so the artifact is never split
+    across two filesystems.
+
     The version key plays the role of the reference's ETag/VERSION
     handshake (ner.py:756-810): ``load_kb_artifact(..., kb_version=...)``
     fails fast on a stale artifact instead of silently serving old links.
@@ -326,7 +352,7 @@ def save_kb_artifact(art: KBArtifacts, path: str,
     import pickle
 
     os.makedirs(path, exist_ok=True)
-    art.kb_df.write.mode("overwrite").parquet(os.path.join(path, "kb.parquet"))
+    art.kb_df.write.mode("overwrite").parquet(_local_uri(path, "kb.parquet"))
     with open(os.path.join(path, "bundle.pkl"), "wb") as fh:
         pickle.dump(art.bundle, fh, protocol=pickle.HIGHEST_PROTOCOL)
     with open(os.path.join(path, "automaton.pkl"), "wb") as fh:
@@ -342,8 +368,10 @@ def load_kb_artifact(spark: SparkSession, path: str,
     broadcast it — skips the entire driver-side compile.  At cluster scale
     the artifact lives on shared storage and every job (and every re-run
     of a resumable job) starts from it; the KB compile happens once per KB
-    snapshot, not once per job.  A MANIFEST without the scan config
-    raises: its scan modes are unknown, so the artifact must be
+    snapshot, not once per job.  ``path`` is a driver-local or NFS
+    directory, read through the local filesystem like
+    :func:`save_kb_artifact` writes it.  A MANIFEST without the scan
+    config raises: its scan modes are unknown, so the artifact must be
     recompiled."""
     import json as _json
     import pickle
@@ -362,7 +390,7 @@ def load_kb_artifact(spark: SparkSession, path: str,
         bundle = pickle.load(fh)
     with open(os.path.join(path, "automaton.pkl"), "rb") as fh:
         automaton = pickle.load(fh)
-    kb_df = spark.read.parquet(os.path.join(path, "kb.parquet")).cache()
+    kb_df = spark.read.parquet(_local_uri(path, "kb.parquet")).cache()
     kb_df.count()
     sc = spark.sparkContext
     return KBArtifacts(

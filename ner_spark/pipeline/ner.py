@@ -60,16 +60,11 @@ def resolved_docs(urls, texts, bundle, atm, lang: str = "en",
     (the artifact's ``scan_config``); see :func:`extract_mentions`."""
     from ner_spark.semantics.lang import get_lang
     from ner_spark.semantics.recognize import scan_and_resolve
-    from ner_spark.semantics.textnorm import remove_accent
+    from ner_spark.semantics.textnorm import apply_scan_modes
 
     lang_mod = get_lang(lang)
     for url, text in zip(urls, texts):
-        if deaccent:
-            # -r uses the plain (possibly length-changing) removal
-            # (ner.py:614) — offsets refer to the transformed text, as in
-            # the reference
-            text = remove_accent(text)
-        scan_text = text.lower() if lowercase else None
+        text, scan_text = apply_scan_modes(text, lowercase, deaccent)
         yield url, scan_and_resolve(bundle, atm, text, scan_text,
                                     find_names=find_names, lang=lang_mod,
                                     as_tuples=True, names_strict=names_strict)
@@ -91,16 +86,14 @@ def scan_mentions(pages: DataFrame, artifacts: KBArtifacts,
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ner_spark.semantics.automaton import byte_offset_matches
-        from ner_spark.semantics.textnorm import remove_accent
+        from ner_spark.semantics.textnorm import apply_scan_modes
 
         atm = atm_bc.value
         for pdf in batches:
             rows = []
             for url, text in zip(pdf["url"], pdf["text"]):
-                if deaccent:
-                    text = remove_accent(text)
-                if lowercase:
-                    text = text.lower()
+                text, scan_text = apply_scan_modes(text, lowercase, deaccent)
+                text = scan_text if scan_text is not None else text
                 ms = atm.scan(text)
                 if byte_offsets:
                     ms = byte_offset_matches(text, ms)
@@ -119,19 +112,16 @@ def extract_mentions(pages: DataFrame, artifacts: KBArtifacts,
     """pages → final mention rows (scan + stages b-k fused, zero-shuffle).
 
     The scan modes come from the artifact, as compiled by ``compile_kb``:
-    ``lang`` picks the language rules, and ``lowercase``/``deaccent``
-    mirror the reference's ``-d``/``-r`` modes.
-    ``deaccent`` TRANSFORMS the working text (ner.py:614, plain removal —
-    offsets refer to the deaccented text), while ``lowercase`` only lowers
-    the SCAN input (ner.py:473-476: figa reads input_string.lower() but
-    the Entity keeps the original string, so resolution context slices
-    and the printed text stay original-case; mention sources come from
-    the lowered scan).  NB ``str.lower()`` can change length for rare
-    code points (e.g. U+0130 İ → 2 chars), shifting scan offsets against
-    the original text — the reference applies lowered-scan offsets to the
-    original string with exactly the same caveat (bug-for-bug parity).
-    ``find_names`` enables unknown-name discovery (``-n``,
-    ner.py:696-697)."""
+    ``lang`` picks the language rules, and ``lowercase``/``deaccent`` (the
+    reference's ``-d``/``-r``) go through ``textnorm.apply_scan_modes``:
+    ``-r`` transforms the working text, ``-d`` lowers only the scan input
+    (mention sources come from the lowered scan; context slices and the
+    printed text stay original-case).  NB ``str.lower()`` can change
+    length for rare code points (e.g. U+0130 İ → 2 chars), shifting scan
+    offsets against the original text — the reference applies
+    lowered-scan offsets to the original string with exactly the same
+    caveat (bug-for-bug parity).  ``find_names`` enables unknown-name
+    discovery (``-n``, ner.py:696-697)."""
     src = sanitized_pages(pages, url_col, text_col)
     bundle_bc = artifacts.bundle_bc
     atm_bc = artifacts.automaton_bc

@@ -662,7 +662,6 @@ def build_namelist(
     add_pronouns: bool = True,
     add_subname_fragments: bool = True,
     lang: "object" = None,
-    tagged_inflections: "Iterable[str] | None" = None,
     tagged_expanded: "dict | None" = None,
 ) -> dict[str, list[int]]:
     """Key → ordered KB ids (+ trailing 0 for the 'N' fragment marker).
@@ -671,12 +670,12 @@ def build_namelist(
     filtering, and uniq_namelist.py:44-107 (merge + confidence-descending
     order with deterministic id tie-break, SURVEY §1.4.4).
 
-    ``tagged_inflections`` (cs mode, create_cedar.sh:369): namegen
-    tagged-inflection TSV lines; each line's expanded inflected surface
-    forms (semantics/inflect.py) become namelist keys for the KB rows
-    whose NAME equals the line's base name, and its subnames join the
-    fragment ('N'-marker) set — the same merge/ordering path as every
-    other key.
+    ``tagged_expanded`` (cs mode, create_cedar.sh:369): namegen
+    tagged-inflection lines as expanded by
+    ``inflect.expand_tagged_inflections``; each base name's inflected
+    surface forms become namelist keys for the KB rows whose NAME equals
+    it, and its subnames join the fragment ('N'-marker) set — the same
+    merge/ordering path as every other key.
     """
     from .variants import all_person_variants, geographical_variants
 
@@ -755,18 +754,13 @@ def build_namelist(
                 for v in variants:
                     add(v, i, t)
 
-    if tagged_inflections is not None or tagged_expanded is not None:
-        if tagged_expanded is None:  # compile_kb pre-expands (it also
-            from .inflect import expand_tagged_inflections  # consumes the
-            tagged_expanded = expand_tagged_inflections(  # surname channel)
-                tagged_inflections)
-
+    if tagged_expanded is not None:
         by_name: dict[str, list[int]] = {}
         for i in range(1, kb.n_rows() + 1):
             by_name.setdefault(kb.get_data_for(i, "NAME"), []).append(i)
         # surnames are NOT namelist content — the reference routes them to
-        # a separate derivatives dump (KB2namelist.py:678); compile_kb
-        # folds them into the name gazetteer's name_dict instead
+        # a separate derivatives dump (KB2namelist.py:678);
+        # compile_gazetteer folds them into the name gazetteer's name_dict
         for base, (infl, subs, _sur) in tagged_expanded.items():
             for i in by_name.get(base, []):
                 t = kb.get_ent_type(i)

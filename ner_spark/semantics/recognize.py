@@ -1,7 +1,9 @@
 """Per-document recognition: the reference's ``recognize`` end-to-end.
 
 Sanitize (ner.py:611) → optional lowercase/deaccent (``-d``/``-r``,
-ner.py:611-615) → automaton scan (ner.py:446-482) → per-document resolution
+ner.py:611-615, via ``textnorm.apply_scan_modes`` — the one copy of that
+rule, shared with the Spark loop and the automaton key transform) →
+automaton scan (ner.py:446-482) → per-document resolution
 stages b-k (ner.py:576-714), optionally with unknown-name discovery
 (``-n``).  :func:`scan_and_resolve` is the production per-document hot call
 — batch and streaming reach it through ``pipeline.ner.resolved_docs``, the
@@ -16,7 +18,7 @@ from .automaton import GazetteerAutomaton
 from .kb import KBBundle
 from .lang import EN, LangModule
 from .resolve import resolve_document
-from .textnorm import remove_accent, sanitize
+from .textnorm import apply_scan_modes, sanitize
 
 
 def scan_and_resolve(
@@ -67,16 +69,11 @@ def recognize(
 ) -> list[dict]:
     """Returns final mention rows (see resolve_document) for one document.
     ``mode``: default / all (``-a``) / score (``-s``)."""
-    text = sanitize(raw_text)
-    if deaccent:
-        text = remove_accent(text)  # plain removal, ner.py:614
-    # -d lowers only the SCAN input (ner.py:473-476); resolution and
-    # output keep the original-case string
-    scan_text = text.lower() if lowercase else text
+    text, scan_text = apply_scan_modes(sanitize(raw_text), lowercase,
+                                       deaccent)
     return scan_and_resolve(
-        kb, automaton, text, scan_text if lowercase else None,
-        list_titles, find_names=find_names, mode=mode, lang=lang,
-        names_strict=names_strict,
+        kb, automaton, text, scan_text, list_titles, find_names=find_names,
+        mode=mode, lang=lang, names_strict=names_strict,
     )
 
 

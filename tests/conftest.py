@@ -53,3 +53,14 @@ def sf_dir():
 def pytest_configure(config):
     config.addinivalue_line(
         "markers", "slow: end-to-end smoke tests (spark-submit subprocess)")
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Name the reference-backed skips: the figa-binary and highlight
+    byte-parity tests skip when the reference tree (or the figa binary
+    built from it) is absent, which the overall skip total does not say."""
+    n = sum("reference tree" in str(r.longrepr)
+            for r in terminalreporter.stats.get("skipped", []))
+    terminalreporter.write_line(
+        f"{n} reference-backed tests skipped (reference tree or its figa "
+        f"binary absent)")

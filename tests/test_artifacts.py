@@ -1,14 +1,10 @@
-"""KB compile artifacts: namelist TSV round-trip, automaton file artifact
-with version handshake, typeflag codec."""
+"""KB compile artifacts: namelist TSV round-trip, the KB artifact's one
+filesystem, typeflag codec."""
 
 import io
 
-import pytest
-
-from ner_spark.kb.artifacts import (automaton_path, load_automaton,
-                                    read_namelist_tsv, save_automaton,
-                                    typeflags, write_namelist_tsv)
-from ner_spark.semantics.automaton import GazetteerAutomaton
+from ner_spark.kb.artifacts import (read_namelist_tsv, typeflags,
+                                    write_namelist_tsv)
 from ner_spark.semantics.kb import KBBundle, build_namelist
 
 
@@ -27,31 +23,26 @@ def test_namelist_tsv_roundtrip(kb_rows):
     assert lines["he"] == "N"
 
 
-def test_automaton_artifact_roundtrip(tmp_path, kb_rows):
-    bundle = KBBundle.from_rows(kb_rows)
-    atm = GazetteerAutomaton.build(build_namelist(bundle).items())
-    p = automaton_path(str(tmp_path), "en")
-    assert p.endswith("automata-en.atm")
-    save_automaton(atm, p, kb_version="KB-42")
-    got = load_automaton(p, kb_version="KB-42")
-    assert dict(got.iter_keys()) == dict(atm.iter_keys())
-    # scan behaviour identical after reload
-    text = "George Washington was here ."
-    assert got.scan(text) == atm.scan(text)
+def test_kb_artifact_stays_on_the_local_filesystem(spark, artifacts,
+                                                   tmp_path):
+    """All four artifact files go through the local filesystem: with the
+    Hadoop default FS pointing at a scheme no filesystem serves, the
+    artifact still saves and loads (a bare ``kb.parquet`` path would
+    resolve against the default FS while the pickles and MANIFEST go
+    through ``open()``)."""
+    from ner_spark.kb.build import load_kb_artifact, save_kb_artifact
 
-
-def test_automaton_version_handshake(tmp_path):
-    atm = GazetteerAutomaton.build([("x y", (1,))])
-    p = str(tmp_path / "a.atm")
-    save_automaton(atm, p, kb_version="v1")
-    load_automaton(p)          # no expectation → ok
-    load_automaton(p, "v1")    # matching → ok
-    with pytest.raises(ValueError, match="version"):
-        load_automaton(p, "v2")
-    with open(p, "wb") as fh:
-        fh.write(b"garbage")
-    with pytest.raises(ValueError, match="not an automaton"):
-        load_automaton(p)
+    path = str(tmp_path / "kb_art")
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    default_fs = conf.get("fs.defaultFS")
+    conf.set("fs.defaultFS", "unregistered-scheme:///")
+    try:
+        save_kb_artifact(artifacts, path, kb_version="v1")
+        loaded = load_kb_artifact(spark, path, kb_version="v1")
+        assert loaded.kb_df.count() == artifacts.n_entities
+    finally:
+        conf.set("fs.defaultFS", default_fs)
+    assert (tmp_path / "kb_art" / "kb.parquet").is_dir()
 
 
 def test_typeflags_codec():

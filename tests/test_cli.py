@@ -114,3 +114,27 @@ def test_engine_propagates_lang(spark):
         "url string, text string")
     got = {(r.kind, r.text, r.sense) for r in eng.mentions(df).collect()}
     assert ("coref", "on", 1) in got  # cs pronoun resolved in the UDF
+
+
+@pytest.mark.parametrize("lang", ["en", "cs"])
+def test_local_recognizer_agrees_with_spark_path(spark, kb_rows, pages_rows,
+                                                 lang):
+    """The CLI front end (LocalRecognizer) and the Spark front end
+    (compile_kb → extract_mentions) share one compile and one -d/-r rule:
+    with both modes on, upper-cased accented pages give the same
+    (start, end, kind, sense) rows through either."""
+    from ner_spark.kb.build import compile_kb
+    from ner_spark.pipeline.ner import extract_mentions
+
+    pages = [(p["url"], p["text"].upper().replace("E", "É"))
+             for p in pages_rows[:20]]
+    rec = LocalRecognizer(kb_rows, lowercase=True, deaccent=True, lang=lang)
+    want = sorted((url, r["start"], r["end"], r["kind"], r["sense"])
+                  for url, text in pages for r in rec.recognize(text))
+    art = compile_kb(spark, kb_rows, lowercase=True, deaccent=True,
+                     lang=lang)
+    df = spark.createDataFrame(pages, "url string, text string")
+    got = sorted((r.url, r.start, r.end, r.kind, r.sense)
+                 for r in extract_mentions(df, art).collect())
+    assert got == want
+    assert sum(kind == "kb" for _, _, _, kind, _ in want) > 50

@@ -168,7 +168,7 @@ def test_writer_scales_compact(write, read, ext, tmp_path):
 
 
 def test_migrate_automaton_roundtrip(tmp_path):
-    """tools/migrate_automaton: namelist TSV → .dct → .atm → .ct → TSV
+    """tools/migrate_automaton: namelist TSV → .dct → .ct → TSV
     preserves the namelist exactly."""
     import importlib.util
     spec = importlib.util.spec_from_file_location(
@@ -183,10 +183,10 @@ def test_migrate_automaton_roundtrip(tmp_path):
     tsv0 = str(tmp_path / "a.tsv")
     with open(tsv0, "w") as fh:
         write_namelist_tsv(NAMELIST, fh)
-    chain = [tsv0, str(tmp_path / "b.dct"), str(tmp_path / "c.atm"),
-             str(tmp_path / "d.ct"), str(tmp_path / "e.tsv")]
+    chain = [tsv0, str(tmp_path / "b.dct"), str(tmp_path / "d.ct"),
+             str(tmp_path / "e.tsv")]
     for src, dst in zip(chain, chain[1:]):
-        mig._write(mig._read(src), dst, "v-test")
+        mig._write(mig._read(src), dst)
     assert mig._read(chain[-1]) == NAMELIST
 
 

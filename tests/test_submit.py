@@ -86,3 +86,16 @@ def test_spark_submit_packaged_zip(tmp_path, sf_dir, spark):
     log = proc3.stdout + proc3.stderr
     assert "scan config mismatch" in log
     assert "'lowercase': True" in log
+
+    # the artifact was compiled from the synthetic KB: a job over another
+    # KB.tsv is refused instead of silently linking against the old KB
+    from ner_spark.fixtures.gen import gen_kb_rows
+    from ner_spark.io.kbtsv import write_kb_tsv
+
+    kb_tsv = tmp_path / "KB.tsv"
+    with open(kb_tsv, "w") as fh:
+        write_kb_tsv(gen_kb_rows()[:20], fh)
+    proc4 = subprocess.run(cmd + ["--kb", str(kb_tsv)], capture_output=True,
+                           text=True, timeout=420, cwd=str(tmp_path), env=env)
+    assert proc4.returncode != 0
+    assert "version mismatch" in proc4.stdout + proc4.stderr

@@ -26,15 +26,10 @@ def build_fixtures(target_chars: int):
     import random
 
     from ner_spark.fixtures.gen import gen_kb_rows, gen_pages
-    from ner_spark.kb.build import compile_kb  # noqa: F401 (driver-side only)
-    from ner_spark.semantics.kb import KBBundle, build_namelist
-    from ner_spark.semantics.automaton import GazetteerAutomaton
-    from ner_spark.semantics.lang import get_lang
+    from ner_spark.kb.build import compile_gazetteer
 
     kb_rows = gen_kb_rows()
-    bundle = KBBundle.from_rows(kb_rows)
-    namelist = build_namelist(bundle, lang=get_lang("en"))
-    atm = GazetteerAutomaton.build(namelist.items())
+    bundle, atm = compile_gazetteer(kb_rows)
 
     # dense: alternate KB surfaces and filler words, ~1 KB docs
     surfaces = [r["name"] for r in kb_rows if r.get("name")]

@@ -19,9 +19,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ner_spark.fixtures.gen import gen_kb_rows, gen_pages  # noqa: E402
-from ner_spark.semantics.automaton import GazetteerAutomaton  # noqa: E402
-from ner_spark.semantics.kb import KBBundle, build_namelist  # noqa: E402
-from ner_spark.semantics.lang import get_lang  # noqa: E402
+from ner_spark.kb.build import compile_gazetteer  # noqa: E402
 from ner_spark.semantics.recognize import (recognize,  # noqa: E402
                                            render_reference_lines)
 
@@ -31,9 +29,7 @@ MODES = ("default", "all", "score")
 
 def main() -> None:
     kb_rows = gen_kb_rows()
-    bundle = KBBundle.from_rows(kb_rows)
-    namelist = build_namelist(bundle, lang=get_lang("en"))
-    atm = GazetteerAutomaton.build(namelist.items())
+    bundle, atm = compile_gazetteer(kb_rows)
     pages = gen_pages(kb_rows, n_pages=N_DOCS, seed=20260817)
     for p in pages:
         for mode in MODES:

@@ -1,21 +1,21 @@
 #!/usr/bin/env python
-"""Automaton artifact converter — migrate between the reference's binary
-dictionaries and this engine's formats.
+"""Namelist converter — migrate between the reference's binary
+dictionaries and the namelist text form.
 
-    python tools/migrate_automaton.py SRC DST [--kb-version V]
+    python tools/migrate_automaton.py SRC DST
 
 Formats are chosen by extension:
 
   * ``.ct``   cedar node dump (figa/src/cedar.h save/open)
   * ``.dct``  darts-clone unit dump (figa/src/darts.h)
   * ``.tsv``  namelist text (``key \\t id;…;N`` — uniq_namelist output)
-  * ``.atm``  this repo's versioned broadcast-pickle artifact
-              (kb/artifacts.save_automaton; --kb-version stamps it)
 
 Any source converts to any destination: an existing figa deployment's
-``.dct`` becomes a Spark broadcast artifact in one step, and a namelist
-built here compiles to a binary the unmodified figa binary loads
-(verified in tests/test_ctdict.py).  Driver-sized migration tooling.
+``.dct`` becomes a namelist this engine reads, and a namelist built here
+compiles to a binary the unmodified figa binary loads (verified in
+tests/test_ctdict.py).  The engine's own deployable KB form is the
+versioned KB artifact (``kb.build.save_kb_artifact``), compiled from the
+KB itself.  Driver-sized migration tooling.
 """
 
 from __future__ import annotations
@@ -29,7 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def _read(path: str) -> dict[str, list[int]]:
     from ner_spark.io.ctdict import read_ct, read_dct
-    from ner_spark.kb.artifacts import load_automaton, read_namelist_tsv
+    from ner_spark.kb.artifacts import read_namelist_tsv
 
     if path.endswith(".dct"):
         return read_dct(path)
@@ -38,15 +38,12 @@ def _read(path: str) -> dict[str, list[int]]:
     if path.endswith(".tsv"):
         with open(path) as fh:
             return read_namelist_tsv(fh)
-    if path.endswith(".atm"):
-        return {k: list(v) for k, v in load_automaton(path).keys.items()}
     raise SystemExit(f"unknown source format: {path}")
 
 
-def _write(namelist: dict[str, list[int]], path: str, kb_version: str) -> None:
+def _write(namelist: dict[str, list[int]], path: str) -> None:
     from ner_spark.io.ctdict import write_ct, write_dct
-    from ner_spark.kb.artifacts import save_automaton, write_namelist_tsv
-    from ner_spark.semantics.automaton import GazetteerAutomaton
+    from ner_spark.kb.artifacts import write_namelist_tsv
 
     if path.endswith(".dct"):
         write_dct(namelist.items(), path)
@@ -55,9 +52,6 @@ def _write(namelist: dict[str, list[int]], path: str, kb_version: str) -> None:
     elif path.endswith(".tsv"):
         with open(path, "w") as fh:
             write_namelist_tsv(namelist, fh)
-    elif path.endswith(".atm"):
-        save_automaton(GazetteerAutomaton.build(namelist.items()),
-                       path, kb_version)
     else:
         raise SystemExit(f"unknown destination format: {path}")
 
@@ -66,10 +60,9 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("src")
     ap.add_argument("dst")
-    ap.add_argument("--kb-version", default="migrated")
     args = ap.parse_args()
     nl = _read(args.src)
-    _write(nl, args.dst, args.kb_version)
+    _write(nl, args.dst)
     print(f"{args.src} -> {args.dst}: {len(nl)} keys")
 
 

@@ -12,18 +12,36 @@ With no --kb the synthetic fixture KB is compiled (useful for smoke runs).
 ``pipeline.run.run_kg_job`` checkpoints the mentions and writes the
 canonicalized triple table, both with per-bucket lineage (re-running with
 the same --out skips completed buckets); a one-line JSON summary is
-printed.  A loaded --kb-artifact must match --lowercase/--deaccent/--lang.
+printed.  A loaded --kb-artifact must match --lowercase/--deaccent/--lang
+and the KB inputs: its version key is the sha256 of the --kb and
+--tagged-inflections bytes ("synthetic" for the fixture KB), so an
+artifact compiled from another KB is refused.
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def kb_version(kb: str | None, tagged_inflections: str | None) -> str:
+    """Version key of the KB inputs, the artifact handshake key."""
+    if kb is None and tagged_inflections is None:
+        return "synthetic"
+    h = hashlib.sha256()
+    for path in (kb, tagged_inflections):
+        h.update(b"\0")
+        if path:
+            with open(path, "rb") as fh:
+                for chunk in iter(lambda: fh.read(1 << 20), b""):
+                    h.update(chunk)
+    return h.hexdigest()
 
 
 def main() -> None:
@@ -73,6 +91,7 @@ def main() -> None:
         os.path.join(art_dir, "MANIFEST.json"))
     scan = dict(lowercase=args.lowercase, deaccent=args.deaccent,
                 lang=args.lang)
+    version = kb_version(args.kb, args.tagged_inflections)
 
     kb_rows = tagged = None
     if not have_artifact:
@@ -83,17 +102,21 @@ def main() -> None:
 
     t0 = time.time()
     if have_artifact:
-        art = load_kb_artifact(spark, art_dir)
-        if art.scan_config != scan:
+        try:
+            art = load_kb_artifact(spark, art_dir, kb_version=version)
+            if art.scan_config != scan:
+                raise ValueError(
+                    f"KB artifact scan config mismatch: {art_dir} was "
+                    f"compiled with {art.scan_config}, the job asks for "
+                    f"{scan}; recompile the artifact or pass its "
+                    f"--lowercase/--deaccent/--lang")
+        except ValueError as e:
             spark.stop()
-            sys.exit(f"KB artifact scan config mismatch: {art_dir} was "
-                     f"compiled with {art.scan_config}, the job asks for "
-                     f"{scan}; recompile the artifact or pass its "
-                     f"--lowercase/--deaccent/--lang")
+            sys.exit(str(e))
     else:
         art = compile_kb(spark, kb_rows, tagged_inflections=tagged, **scan)
         if art_dir:
-            save_kb_artifact(art, art_dir)
+            save_kb_artifact(art, art_dir, kb_version=version)
     res = run_kg_job(spark, spark.read.parquet(args.pages), art, args.out,
                      n_buckets=args.buckets, waves=args.resume_waves,
                      url_col=args.url_col, text_col=args.text_col,
