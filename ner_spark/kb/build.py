@@ -6,10 +6,12 @@
     :func:`compile_kb` all call it;
   * :func:`compile_kb` adds the relational ``kb`` DataFrame (with the
     bundle's A10/A11 static scores; used by the triple/attribute stages
-    and as the small side of broadcast joins) and broadcasts the bundle
-    and automaton — one read-only copy per executor, the idiomatic
+    and as the small side of broadcast joins), builds the C kernel's flat
+    KB image (``ckernel.kb_image``) and broadcasts the three — the
     replacement for the reference's shared-memory KB daemon
-    (ner/kb_daemon.py:30-61) and memory-mapped ``.dct`` automaton;
+    (ner/kb_daemon.py:30-61) and memory-mapped ``.dct`` automaton.  A
+    Python worker reads the image; it unpickles the bundle and the
+    automaton only when a document falls back to Python;
   * :func:`save_kb_artifact` / :func:`load_kb_artifact` persist that
     compile as the one reusable, versioned KB artifact.
 
@@ -28,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ner_spark.semantics.automaton import GazetteerAutomaton
+from ner_spark.semantics.ckernel import IMAGE_VERSION, kb_image
 from ner_spark.semantics.kb import (KB_COLUMNS, KBBundle,
                                     build_autocomplete_namelists,
                                     build_namelist, build_uri_namelist,
@@ -117,6 +120,7 @@ class KBArtifacts:
     kb_df: DataFrame          # with static scores
     bundle_bc: "object"       # Broadcast[KBBundle]
     automaton_bc: "object"    # Broadcast[GazetteerAutomaton]
+    image_bc: "object"        # Broadcast[bytes]: ckernel.kb_image
     n_entities: int
     n_keys: int
     lowercase: bool = False   # -d: keys lowered, scan text lowered
@@ -316,6 +320,7 @@ def compile_kb(spark: SparkSession, rows: list[dict],
         kb_df=kb_df,
         bundle_bc=sc.broadcast(bundle),
         automaton_bc=sc.broadcast(automaton),
+        image_bc=sc.broadcast(kb_image(bundle, automaton)),
         n_entities=bundle.n_rows(),
         n_keys=automaton.n_keys,
         lowercase=lowercase, deaccent=deaccent, lang=lang,
@@ -337,9 +342,11 @@ def save_kb_artifact(art: KBArtifacts, path: str,
         <path>/kb.parquet/       scored relational KB (kb_df)
         <path>/bundle.pkl        KBBundle (columnar broadcast payload)
         <path>/automaton.pkl     GazetteerAutomaton
-        <path>/MANIFEST.json     counts, scan config, version handshake key
+        <path>/kb_image.bin      the C kernel's KB image (ckernel.kb_image)
+        <path>/MANIFEST.json     counts, scan config, image format,
+                                 version handshake key
 
-    ``path`` is a driver-local or NFS directory: all four files go
+    ``path`` is a driver-local or NFS directory: all five files go
     through the local filesystem (``kb.parquet`` as a ``file://`` URI,
     whatever the Hadoop default FS is), so the artifact is never split
     across two filesystems.
@@ -357,9 +364,12 @@ def save_kb_artifact(art: KBArtifacts, path: str,
         pickle.dump(art.bundle, fh, protocol=pickle.HIGHEST_PROTOCOL)
     with open(os.path.join(path, "automaton.pkl"), "wb") as fh:
         pickle.dump(art.automaton, fh, protocol=pickle.HIGHEST_PROTOCOL)
+    with open(os.path.join(path, "kb_image.bin"), "wb") as fh:
+        fh.write(art.image_bc.value)
     with open(os.path.join(path, "MANIFEST.json"), "w") as fh:
         _json.dump({"n_entities": art.n_entities, "n_keys": art.n_keys,
-                    "kb_version": kb_version, **art.scan_config}, fh)
+                    "kb_version": kb_version,
+                    "image_format": IMAGE_VERSION, **art.scan_config}, fh)
 
 
 def load_kb_artifact(spark: SparkSession, path: str,
@@ -371,8 +381,8 @@ def load_kb_artifact(spark: SparkSession, path: str,
     snapshot, not once per job.  ``path`` is a driver-local or NFS
     directory, read through the local filesystem like
     :func:`save_kb_artifact` writes it.  A MANIFEST without the scan
-    config raises: its scan modes are unknown, so the artifact must be
-    recompiled."""
+    config, or with another KB image format, raises: the artifact must be
+    recompiled.  Nothing is built: the saved image is broadcast as is."""
     import json as _json
     import pickle
 
@@ -386,10 +396,17 @@ def load_kb_artifact(spark: SparkSession, path: str,
             f"KB artifact version mismatch: artifact "
             f"{manifest.get('kb_version')!r} != requested {kb_version!r} "
             f"(stale artifact — recompile; ner.py:756-810 handshake)")
+    if manifest.get("image_format") != IMAGE_VERSION:
+        raise ValueError(
+            f"KB artifact {path} has KB image format "
+            f"{manifest.get('image_format')!r}, this kernel reads "
+            f"{IMAGE_VERSION} — recompile it")
     with open(os.path.join(path, "bundle.pkl"), "rb") as fh:
         bundle = pickle.load(fh)
     with open(os.path.join(path, "automaton.pkl"), "rb") as fh:
         automaton = pickle.load(fh)
+    with open(os.path.join(path, "kb_image.bin"), "rb") as fh:
+        image = fh.read()
     kb_df = spark.read.parquet(_local_uri(path, "kb.parquet")).cache()
     kb_df.count()
     sc = spark.sparkContext
@@ -397,6 +414,7 @@ def load_kb_artifact(spark: SparkSession, path: str,
         kb_df=kb_df,
         bundle_bc=sc.broadcast(bundle),
         automaton_bc=sc.broadcast(automaton),
+        image_bc=sc.broadcast(image),
         n_entities=manifest["n_entities"],
         n_keys=manifest["n_keys"],
         **{k: manifest[k] for k in SCAN_KEYS},

@@ -4,9 +4,11 @@ Design for 100 TB (SURVEY §4 physical plan): the whole per-document NER —
 scan + disambiguation + coreference — is ONE narrow ``mapInPandas`` stage
 over the pages table.  The reference has no cross-document state
 (ner.py:837-856 resets per doc), so this stage needs **zero shuffles**: one
-Arrow batch in, mention rows out, KB + automaton read from a per-executor
-broadcast.  Everything relational (dedup, co-mention join, canonicalization)
-happens downstream on the much smaller mentions/triples tables.
+Arrow batch in, mention rows out, the C kernel reading the broadcast KB
+image in place (the bundle and automaton broadcasts are unpickled only for
+a document that falls back to Python).  Everything relational (dedup,
+co-mention join, canonicalization) happens downstream on the much smaller
+mentions/triples tables.
 
 Column pruning matters: we select only (url, text) before the UDF so the
 parquet/Iceberg scan never reads the binary ``html`` column (verified by
@@ -50,24 +52,38 @@ def sanitized_pages(pages: DataFrame, url_col: str = "url",
     )
 
 
-def resolved_docs(urls, texts, bundle, atm, lang: str = "en",
-                  lowercase: bool = False, deaccent: bool = False,
-                  find_names: bool = False, names_strict: bool = False):
+def resolved_docs(urls, texts, image_bc, bundle_bc, atm_bc,
+                  lang: str = "en", lowercase: bool = False,
+                  deaccent: bool = False, find_names: bool = False,
+                  names_strict: bool = False):
     """The one per-document loop, shared by :func:`extract_mentions` and the
     streaming co-mention pairs: yields ``(url, rows)`` per sanitized page,
     rows as ``(start, end, par, kind, text, sense, iso, confidence)``
     tuples.  It runs on executors, so the scan modes come as plain values
-    (the artifact's ``scan_config``); see :func:`extract_mentions`."""
+    (the artifact's ``scan_config``); see :func:`extract_mentions`.
+
+    ``image_bc``, ``bundle_bc`` and ``atm_bc`` are the artifact's
+    broadcasts (anything with a ``.value``).  The C kernel gets only the
+    KB image; the bundle and the automaton are read the first time a
+    document falls back to Python."""
+    from ner_spark.semantics import ckernel
     from ner_spark.semantics.lang import get_lang
-    from ner_spark.semantics.recognize import scan_and_resolve
+    from ner_spark.semantics.recognize import resolve_in_python
     from ner_spark.semantics.textnorm import apply_scan_modes
 
     lang_mod = get_lang(lang)
+    image = (ckernel.wrap_image(image_bc.value)
+             if ckernel.covers(lang_mod, find_names) else None)
     for url, text in zip(urls, texts):
         text, scan_text = apply_scan_modes(text, lowercase, deaccent)
-        yield url, scan_and_resolve(bundle, atm, text, scan_text,
-                                    find_names=find_names, lang=lang_mod,
-                                    as_tuples=True, names_strict=names_strict)
+        rows = None if image is None else ckernel.scan_resolve(
+            image, text, scan_text, lang=lang_mod, as_tuples=True)
+        if rows is None:
+            rows = resolve_in_python(
+                bundle_bc.value, atm_bc.value, text, scan_text,
+                find_names=find_names, lang=lang_mod, as_tuples=True,
+                names_strict=names_strict)
+        yield url, rows
 
 
 def scan_mentions(pages: DataFrame, artifacts: KBArtifacts,
@@ -123,19 +139,17 @@ def extract_mentions(pages: DataFrame, artifacts: KBArtifacts,
     caveat (bug-for-bug parity).  ``find_names`` enables unknown-name
     discovery (``-n``, ner.py:696-697)."""
     src = sanitized_pages(pages, url_col, text_col)
-    bundle_bc = artifacts.bundle_bc
-    atm_bc = artifacts.automaton_bc
+    broadcasts = (artifacts.image_bc, artifacts.bundle_bc,
+                  artifacts.automaton_bc)
     scan = artifacts.scan_config
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bundle = bundle_bc.value
-        atm = atm_bc.value
         cols = ["url", "start", "end", "par", "kind", "text",
                 "sense", "iso", "confidence"]
         for pdf in batches:
             rows = [(url,) + r
                     for url, doc in resolved_docs(
-                        pdf["url"], pdf["text"], bundle, atm,
+                        pdf["url"], pdf["text"], *broadcasts,
                         find_names=find_names, names_strict=names_strict,
                         **scan)
                     for r in doc]

@@ -16,10 +16,12 @@
  *   Python supplies everything that needs re/dateutil/unicodedata — date
  *     matches with pre-rendered ISO strings, paragraph offsets, and two
  *     callbacks: frag_cb (source/deaccent-lower/pronoun flags of a
- *     non-ASCII or NCR fragment, cached per KB pack) and lazy_cb (the
+ *     non-ASCII or NCR fragment, cached per KB image) and lazy_cb (the
  *     deaccented "clean" text and proper-noun regex spans, called only when
- *     the overlap filter needs them) — plus one-time interned KB and
- *     automaton packs (build_pack, build_atm).
+ *     the overlap filter needs them) — plus the KB image (ckernel.kb_image):
+ *     the KB columns, lookup tables and word-id trie as one flat buffer,
+ *     built once on the driver, bounds-checked once by wrap_image and read
+ *     in place.
  *   C owns the scan and the sequential state machine: Mention/Register/
  *     Context, disambiguation, coreference, overlap/nearby filters, output
  *     rows.
@@ -59,6 +61,22 @@ static U32 to_u32(PyObject *s) {
     return out;
 }
 
+// A view into the KB image: an id list is a (pointer, length) slice of an
+// int array, a string (Str) a slice of the UCS-4 blob, with the
+// data()/size() pair the string helpers below take.
+template <typename T>
+struct Span {
+    const T *p;
+    size_t n;
+    const T *data() const { return p; }
+    size_t size() const { return n; }
+    bool empty() const { return n == 0; }
+    T back() const { return p[n - 1]; }
+    const T *begin() const { return p; }
+    const T *end() const { return p + n; }
+};
+typedef Span<Py_UCS4> Str;
+
 static inline bool u32_eq(const Py_UCS4 *a, Py_ssize_t an,
                           const Py_UCS4 *b, Py_ssize_t bn) {
     if (an != bn) return false;
@@ -66,7 +84,8 @@ static inline bool u32_eq(const Py_UCS4 *a, Py_ssize_t an,
     return memcmp(a, b, (size_t)an * sizeof(Py_UCS4)) == 0;
 }
 
-static inline bool u32_eq(const U32 &a, const U32 &b) {
+template <typename A, typename B>
+static inline bool u32_eq(const A &a, const B &b) {
     return u32_eq(a.data(), (Py_ssize_t)a.size(), b.data(), (Py_ssize_t)b.size());
 }
 
@@ -87,14 +106,16 @@ static Py_ssize_t u32_find(const Py_UCS4 *hay, Py_ssize_t n,
     return -1;
 }
 
-static inline Py_ssize_t u32_find(const U32 &hay, const U32 &needle,
+template <typename H, typename N>
+static inline Py_ssize_t u32_find(const H &hay, const N &needle,
                                   Py_ssize_t start, Py_ssize_t end) {
     return u32_find(hay.data(), (Py_ssize_t)hay.size(), needle.data(),
                     (Py_ssize_t)needle.size(), start, end);
 }
 
 // "a in b" (substring anywhere)
-static inline bool u32_contains(const U32 &hay, const U32 &needle) {
+template <typename H, typename N>
+static inline bool u32_contains(const H &hay, const N &needle) {
     return u32_find(hay, needle, 0, (Py_ssize_t)hay.size()) != -1;
 }
 
@@ -107,208 +128,345 @@ static Py_ssize_t bisect_right(const vector<int64_t> &a, int64_t x) {
 }
 
 // ---------------------------------------------------------------------------
-// KB pack (build_pack): interned, columnar KB snapshot + EN lang tables
+// KB image (ckernel.kb_image): one flat, position-independent buffer built
+// on the driver, checked once here and then read in place
 // ---------------------------------------------------------------------------
 
 // context-dispatch kinds — MUST match KBBundle.CTX_* (kb.py:253)
 enum { CTX_GEO = 0, CTX_PERSON = 1, CTX_ORG = 2, CTX_EVENT = 3,
        CTX_CHAR = 4, CTX_NONE = 5 };
 
-struct KBPack {
-    int64_t n;  // rows; all arrays sized n+1, index 0 neutral
-    vector<double> score;            // score_arr
-    vector<int32_t> name_sid, country_sid, loc_sid;
-    vector<int32_t> founded_sid, cancelled_sid, start_sid, end_sid;
-    vector<uint8_t> gender;          // 0 none / 1 M / 2 F
-    vector<uint8_t> person_exact;    // person_flag_arr (exact-type tuple)
-    vector<uint8_t> artist, group, person_sub, loc_sub, geo_sub;
-    vector<uint8_t> type_exact;      // 0 none / 1 == "person" / 2 == "location"
-    vector<uint8_t> ctx_kind;
-    vector<uint32_t> ctx_char;       // codepoint (0 when none)
-    vector<vector<int32_t>> jobs, roles, nats, pdates;  // sids
-    vector<U32> strtab;              // sid -> content
-    vector<U32> type_str;            // full type strings (Context init tarr)
-    int32_t empty_sid;               // sid of ""
-    // EN language tables (lang.py EN)
-    vector<U32> verbs;               // " was ", " were ", " is "
-    vector<U32> there_ctx;           // location-coref right contexts
-    U32 apos_s;                      // "'s"
-    U32 into_pad;                    // " into "
-    // fused-scan support (ckernel.try_scan_resolve)
-    std::unordered_map<std::u32string, vector<int64_t>> name_dict;  // dl → ids
-    std::unordered_set<std::u32string> nat_forms;
-    std::unordered_map<std::u32string, int32_t> pron;  // source_lower → mask
-    // fragment pre-pass cache (fragments repeat Zipf-heavily); mutable at
-    // scan time — safe: one GIL-held call at a time per process
-    struct FragInfo {
-        U32 source, dl;
-        int32_t flags;       // pron|the_lower|The_title|There (not is_nat)
-        bool is_nat_form;    // source ∈ nationality_forms
-        const vector<int64_t> *pms;  // name_dict hit or null
-    };
-    std::unordered_map<std::u32string, FragInfo> frag_cache;
+#define IMAGE_VERSION 1  // ckernel.IMAGE_VERSION
+static const char IMAGE_MAGIC[8] = {'N', 'E', 'R', 'K', 'B', 'I', 'M', 'G'};
+
+// section order — MUST match ckernel._SECTIONS
+enum {
+    S_META, S_STR_OFF, S_STR_BLOB, S_SCORE,
+    S_NAME_SID, S_COUNTRY_SID, S_LOC_SID, S_START_SID, S_END_SID, S_TYPE_SID,
+    S_CTX_CHAR,
+    S_GENDER, S_PERSON_EXACT, S_ARTIST, S_GROUP, S_PERSON_SUB, S_LOC_SUB,
+    S_GEO_SUB, S_TYPE_EXACT, S_CTX_KIND,
+    S_JOBS_OFF, S_JOBS, S_ROLES_OFF, S_ROLES, S_NATS_OFF, S_NATS,
+    S_PDATES_OFF, S_PDATES,
+    S_VERBS, S_THERE_CTX,
+    S_ND_SLOTS, S_ND_KEY, S_ND_OFF, S_ND_IDS,
+    S_NATF_SLOTS, S_NATF_KEY,
+    S_PRON_SLOTS, S_PRON_KEY, S_PRON_MASK,
+    S_W_SLOTS, S_W_KEY,
+    S_T_KEYS, S_T_NEXT,
+    S_S_TERM, S_TERM_OFF, S_TERM_IDS,
+    S_COUNT
+};
+static const uint8_t SECTION_ELEM[S_COUNT] = {
+    8, 4, 4, 8,
+    4, 4, 4, 4, 4, 4,
+    4,
+    1, 1, 1, 1, 1, 1, 1, 1, 1,
+    4, 4, 4, 4, 4, 4,
+    4, 4,
+    4, 4,
+    4, 4, 4, 8,
+    4, 4,
+    4, 4, 4,
+    4, 4,
+    8, 4,
+    4, 4, 8,
+};
+enum { META_N_ROWS, META_EMPTY_SID, META_N_STATES, META_COUNT };
+
+// the hashes ckernel.kb_image places keys with: FNV-1a over code points,
+// folded, for strings; the splitmix64 finalizer for trie transitions
+static inline uint64_t str_hash(const Py_UCS4 *s, size_t n) {
+    uint64_t h = 0xcbf29ce484222325ULL;
+    for (size_t i = 0; i < n; i++) {
+        h ^= s[i];
+        h *= 0x100000001b3ULL;
+    }
+    return h ^ (h >> 32);
+}
+
+static inline uint64_t mix64(uint64_t x) {
+    x ^= x >> 30;
+    x *= 0xbf58476d1ce4e5b9ULL;
+    x ^= x >> 27;
+    x *= 0x94d049bb133111ebULL;
+    x ^= x >> 31;
+    return x;
+}
+
+static const uint64_t T_EMPTY = ~(uint64_t)0;
+
+// open-addressing string table: slots hold an entry index (-1 = empty),
+// an entry's key is a strtab id
+struct StrTable {
+    Span<int32_t> slots;  // power-of-two capacity
+    Span<int32_t> key;
 };
 
-static void pack_destructor(PyObject *cap) {
-    delete (KBPack *)PyCapsule_GetPointer(cap, "ner_spark.kbpack");
+struct FragInfo {
+    U32 source, dl;
+    int32_t flags;        // pron|the_lower|The_title|There (not is_nat)
+    bool is_nat_form;     // source ∈ nationality_forms
+    Span<int64_t> pms;    // name_dict hit (empty when none)
+};
+
+struct KBImage {
+    Py_buffer view;               // holds the buffer's exporter alive
+    vector<uint64_t> aligned;     // copy, only when the buffer is misaligned
+    int64_t n = 0;                // rows; row arrays hold n+1, index 0 neutral
+    int32_t empty_sid = 0;        // sid of ""
+    Span<uint32_t> str_off;
+    Span<Py_UCS4> str_blob;
+    const double *score;
+    const int32_t *name_sid, *country_sid, *loc_sid, *start_sid, *end_sid,
+        *type_sid;
+    const uint32_t *ctx_char;     // codepoint (0 when none)
+    const uint8_t *gender;        // 0 none / 1 M / 2 F
+    const uint8_t *person_exact;  // person_flag_arr (exact-type tuple)
+    const uint8_t *artist, *group, *person_sub, *loc_sub, *geo_sub;
+    const uint8_t *type_exact;    // 0 none / 1 == "person" / 2 == "location"
+    const uint8_t *ctx_kind;
+    struct CSR {
+        Span<uint32_t> off;
+        Span<int32_t> val;
+        Span<int32_t> operator[](size_t i) const {
+            return Span<int32_t>{val.p + off.p[i], off.p[i + 1] - off.p[i]};
+        }
+    } jobs, roles, nats, pdates;  // sids per row
+    // EN language tables (lang.py EN)
+    vector<Str> verbs;            // " was ", " were ", " is "
+    vector<Str> there_ctx;        // location-coref right contexts
+    // fused-scan tables (ckernel.try_scan_resolve)
+    StrTable name_dict;           // dl → ids (nd_off/nd_ids)
+    Span<uint32_t> nd_off;
+    Span<int64_t> nd_ids;
+    StrTable nat_forms;
+    StrTable pron;                // source_lower → mask
+    Span<int32_t> pron_mask;
+    // word-id trie: words → wid, (state, sep, wid) → next state,
+    // final states → their id lists
+    StrTable words;
+    Span<uint64_t> t_keys;        // (state << 32 | sep << 31 | wid)
+    Span<int32_t> t_next;
+    Span<int32_t> s_term;         // state → term index (-1: not final)
+    Span<uint32_t> term_off;
+    Span<int64_t> term_ids;
+    // fragment pre-pass cache (fragments repeat Zipf-heavily); mutable at
+    // scan time — safe: one GIL-held call at a time per process
+    std::unordered_map<std::u32string, FragInfo> frag_cache;
+
+    Str str(int32_t sid) const {
+        return Str{str_blob.p + str_off.p[sid],
+                   str_off.p[sid + 1] - str_off.p[sid]};
+    }
+    // entry index of s in t, or -1
+    int32_t find(const StrTable &t, const Py_UCS4 *s, size_t len) const {
+        size_t mask = t.slots.n - 1;
+        size_t pos = (size_t)str_hash(s, len) & mask;
+        for (size_t i = 0; i < t.slots.n; i++, pos = (pos + 1) & mask) {
+            int32_t e = t.slots.p[pos];
+            if (e < 0) return -1;
+            Str k = str(t.key.p[e]);
+            if (u32_eq(k.p, (Py_ssize_t)k.n, s, (Py_ssize_t)len)) return e;
+        }
+        return -1;
+    }
+    // next trie state, or -1
+    int32_t step(int32_t state, int sep, int32_t wid) const {
+        uint64_t key = (uint64_t)(uint32_t)state << 32 |
+                       (uint64_t)sep << 31 | (uint64_t)(uint32_t)wid;
+        size_t mask = t_keys.n - 1;
+        size_t pos = (size_t)mix64(key) & mask;
+        for (size_t i = 0; i < t_keys.n; i++, pos = (pos + 1) & mask) {
+            uint64_t k = t_keys.p[pos];
+            if (k == key) return t_next.p[pos];
+            if (k == T_EMPTY) return -1;
+        }
+        return -1;
+    }
+};
+
+static void image_destructor(PyObject *cap) {
+    KBImage *img = (KBImage *)PyCapsule_GetPointer(cap, "ner_spark.kbimage");
+    PyBuffer_Release(&img->view);
+    delete img;
 }
 
-static bool get_int_list(PyObject *d, const char *key, vector<int64_t> &out) {
-    PyObject *o = PyDict_GetItemString(d, key);
-    if (!o || !PyList_Check(o)) {
-        PyErr_Format(PyExc_ValueError, "pack arg %s missing/not list", key);
-        return false;
-    }
-    Py_ssize_t n = PyList_GET_SIZE(o);
-    out.resize((size_t)n);
-    for (Py_ssize_t i = 0; i < n; i++) {
-        out[(size_t)i] = PyLong_AsLongLong(PyList_GET_ITEM(o, i));
-        if (out[(size_t)i] == -1 && PyErr_Occurred()) return false;
-    }
-    return true;
-}
+// ---- one-time bounds check: every offset, index and enum the scan and
+// the stages read is in range afterwards, so a bad image raises here and
+// never reaches them
 
 template <typename T>
-static bool get_small_list(PyObject *d, const char *key, vector<T> &out) {
-    vector<int64_t> tmp;
-    if (!get_int_list(d, key, tmp)) return false;
-    out.assign(tmp.begin(), tmp.end());
+static bool all_in(Span<T> s, int64_t lo, int64_t hi) {  // lo <= v < hi
+    for (size_t i = 0; i < s.n; i++)
+        if ((int64_t)s.p[i] < lo || (int64_t)s.p[i] >= hi) return false;
     return true;
 }
 
-static bool get_dbl_list(PyObject *d, const char *key, vector<double> &out) {
-    PyObject *o = PyDict_GetItemString(d, key);
-    if (!o || !PyList_Check(o)) {
-        PyErr_Format(PyExc_ValueError, "pack arg %s missing/not list", key);
-        return false;
-    }
-    Py_ssize_t n = PyList_GET_SIZE(o);
-    out.resize((size_t)n);
-    for (Py_ssize_t i = 0; i < n; i++) {
-        out[(size_t)i] = PyFloat_AsDouble(PyList_GET_ITEM(o, i));
-        if (out[(size_t)i] == -1.0 && PyErr_Occurred()) return false;
-    }
+static bool offsets_ok(Span<uint32_t> off, size_t nval) {
+    if (off.n == 0 || off.p[0] != 0 || off.p[off.n - 1] != nval) return false;
+    for (size_t i = 1; i < off.n; i++)
+        if (off.p[i] < off.p[i - 1]) return false;
     return true;
 }
 
-static bool get_sid_lists(PyObject *d, const char *key,
-                          vector<vector<int32_t>> &out) {
-    PyObject *o = PyDict_GetItemString(d, key);
-    if (!o || !PyList_Check(o)) {
-        PyErr_Format(PyExc_ValueError, "pack arg %s missing/not list", key);
-        return false;
-    }
-    Py_ssize_t n = PyList_GET_SIZE(o);
-    out.resize((size_t)n);
-    for (Py_ssize_t i = 0; i < n; i++) {
-        PyObject *t = PyList_GET_ITEM(o, i);
-        Py_ssize_t m = PySequence_Fast_GET_SIZE(t);  // tuples
-        out[(size_t)i].resize((size_t)m);
-        for (Py_ssize_t j = 0; j < m; j++) {
-            out[(size_t)i][(size_t)j] =
-                (int32_t)PyLong_AsLong(PyTuple_GET_ITEM(t, j));
-        }
-    }
-    return !PyErr_Occurred();
+static bool pow2(size_t n) { return n && !(n & (n - 1)); }
+
+static const char *check_table(const StrTable &t, int64_t n_str) {
+    if (!pow2(t.slots.n)) return "hash table capacity";
+    if (!all_in(t.slots, -1, (int64_t)t.key.n)) return "hash slot";
+    if (!all_in(t.key, 0, n_str)) return "hash key";
+    return nullptr;
 }
 
-static bool get_str_list(PyObject *d, const char *key, vector<U32> &out) {
-    PyObject *o = PyDict_GetItemString(d, key);
-    if (!o || !PyList_Check(o)) {
-        PyErr_Format(PyExc_ValueError, "pack arg %s missing/not list", key);
-        return false;
+static const char *load_image(KBImage *img, const uint8_t *buf, size_t size) {
+    const size_t head = 16 + 16 * (size_t)S_COUNT;
+    if (size < head) return "truncated header";
+    if (memcmp(buf, IMAGE_MAGIC, 8) != 0) return "bad magic";
+    uint32_t version, nsec;
+    memcpy(&version, buf + 8, 4);
+    memcpy(&nsec, buf + 12, 4);
+    if (version != IMAGE_VERSION) return "format version mismatch";
+    if (nsec != S_COUNT) return "section count";
+    const void *sec[S_COUNT];
+    size_t cnt[S_COUNT];
+    for (int s = 0; s < S_COUNT; s++) {
+        uint64_t off, nbytes;
+        memcpy(&off, buf + 16 + 16 * s, 8);
+        memcpy(&nbytes, buf + 24 + 16 * s, 8);
+        if (off % 8 || off < head || off > size || nbytes > size - off ||
+            nbytes % SECTION_ELEM[s])
+            return "section out of bounds";
+        sec[s] = buf + off;
+        cnt[s] = nbytes / SECTION_ELEM[s];
     }
-    Py_ssize_t n = PyList_GET_SIZE(o);
-    out.resize((size_t)n);
-    for (Py_ssize_t i = 0; i < n; i++)
-        out[(size_t)i] = to_u32(PyList_GET_ITEM(o, i));
-    return !PyErr_Occurred();
+#define SPAN(T, s) Span<T>{(const T *)sec[s], cnt[s]}
+    Span<int64_t> meta = SPAN(int64_t, S_META);
+    if (meta.n != META_COUNT) return "meta";
+    int64_t n = meta.p[META_N_ROWS];
+    if (n < 0 || n >= INT32_MAX) return "row count";
+    img->n = n;
+    const size_t rows = (size_t)n + 1;
+    img->str_off = SPAN(uint32_t, S_STR_OFF);
+    img->str_blob = SPAN(Py_UCS4, S_STR_BLOB);
+    if (!offsets_ok(img->str_off, img->str_blob.n)) return "string offsets";
+    const int64_t n_str = (int64_t)img->str_off.n - 1;
+    img->empty_sid = (int32_t)meta.p[META_EMPTY_SID];
+    if (meta.p[META_EMPTY_SID] < 0 || meta.p[META_EMPTY_SID] >= n_str)
+        return "empty sid";
+    static const int row_sid[] = {S_NAME_SID, S_COUNTRY_SID, S_LOC_SID,
+                                  S_START_SID, S_END_SID, S_TYPE_SID};
+    for (int s : row_sid)
+        if (cnt[s] != rows || !all_in(SPAN(int32_t, s), 0, n_str))
+            return "row string ids";
+    for (int s = S_GENDER; s <= S_CTX_KIND; s++)
+        if (cnt[s] != rows) return "row flags";
+    if (cnt[S_SCORE] != rows || cnt[S_CTX_CHAR] != rows) return "row arrays";
+    if (!all_in(SPAN(uint8_t, S_GENDER), 0, 3) ||
+        !all_in(SPAN(uint8_t, S_TYPE_EXACT), 0, 3) ||
+        !all_in(SPAN(uint8_t, S_CTX_KIND), 0, CTX_NONE + 1))
+        return "row enums";
+    img->score = (const double *)sec[S_SCORE];
+    img->name_sid = (const int32_t *)sec[S_NAME_SID];
+    img->country_sid = (const int32_t *)sec[S_COUNTRY_SID];
+    img->loc_sid = (const int32_t *)sec[S_LOC_SID];
+    img->start_sid = (const int32_t *)sec[S_START_SID];
+    img->end_sid = (const int32_t *)sec[S_END_SID];
+    img->type_sid = (const int32_t *)sec[S_TYPE_SID];
+    img->ctx_char = (const uint32_t *)sec[S_CTX_CHAR];
+    img->gender = (const uint8_t *)sec[S_GENDER];
+    img->person_exact = (const uint8_t *)sec[S_PERSON_EXACT];
+    img->artist = (const uint8_t *)sec[S_ARTIST];
+    img->group = (const uint8_t *)sec[S_GROUP];
+    img->person_sub = (const uint8_t *)sec[S_PERSON_SUB];
+    img->loc_sub = (const uint8_t *)sec[S_LOC_SUB];
+    img->geo_sub = (const uint8_t *)sec[S_GEO_SUB];
+    img->type_exact = (const uint8_t *)sec[S_TYPE_EXACT];
+    img->ctx_kind = (const uint8_t *)sec[S_CTX_KIND];
+    KBImage::CSR *csr[] = {&img->jobs, &img->roles, &img->nats, &img->pdates};
+    for (int k = 0; k < 4; k++) {
+        csr[k]->off = SPAN(uint32_t, S_JOBS_OFF + 2 * k);
+        csr[k]->val = SPAN(int32_t, S_JOBS + 2 * k);
+        if (csr[k]->off.n != rows + 1 ||
+            !offsets_ok(csr[k]->off, csr[k]->val.n) ||
+            !all_in(csr[k]->val, 0, n_str))
+            return "row id lists";
+    }
+    for (int s : {S_VERBS, S_THERE_CTX}) {
+        Span<int32_t> sids = SPAN(int32_t, s);
+        if (!all_in(sids, 0, n_str)) return "language tables";
+        vector<Str> &out = s == S_VERBS ? img->verbs : img->there_ctx;
+        for (int32_t sid : sids) out.push_back(img->str(sid));
+    }
+    img->name_dict = StrTable{SPAN(int32_t, S_ND_SLOTS), SPAN(int32_t, S_ND_KEY)};
+    img->nd_off = SPAN(uint32_t, S_ND_OFF);
+    img->nd_ids = SPAN(int64_t, S_ND_IDS);
+    img->nat_forms = StrTable{SPAN(int32_t, S_NATF_SLOTS),
+                              SPAN(int32_t, S_NATF_KEY)};
+    img->pron = StrTable{SPAN(int32_t, S_PRON_SLOTS), SPAN(int32_t, S_PRON_KEY)};
+    img->pron_mask = SPAN(int32_t, S_PRON_MASK);
+    img->words = StrTable{SPAN(int32_t, S_W_SLOTS), SPAN(int32_t, S_W_KEY)};
+    for (const StrTable *t : {&img->name_dict, &img->nat_forms, &img->pron,
+                              &img->words}) {
+        const char *err = check_table(*t, n_str);
+        if (err) return err;
+    }
+    if (img->nd_off.n != img->name_dict.key.n + 1 ||
+        !offsets_ok(img->nd_off, img->nd_ids.n))
+        return "name_dict ids";
+    if (img->pron_mask.n != img->pron.key.n) return "pronoun masks";
+    img->t_keys = SPAN(uint64_t, S_T_KEYS);
+    img->t_next = SPAN(int32_t, S_T_NEXT);
+    img->s_term = SPAN(int32_t, S_S_TERM);
+    img->term_off = SPAN(uint32_t, S_TERM_OFF);
+    img->term_ids = SPAN(int64_t, S_TERM_IDS);
+    int64_t n_states = meta.p[META_N_STATES];
+    if (n_states < 1 || (size_t)n_states != img->s_term.n) return "trie states";
+    if (!pow2(img->t_keys.n) || img->t_next.n != img->t_keys.n ||
+        !all_in(img->t_next, -1, n_states))
+        return "trie transitions";
+    if (img->term_off.n == 0 ||
+        !all_in(img->s_term, -1, (int64_t)img->term_off.n - 1) ||
+        !offsets_ok(img->term_off, img->term_ids.n))
+        return "trie ids";
+#undef SPAN
+    return nullptr;
 }
 
-static PyObject *build_pack(PyObject *self, PyObject *args) {
-    PyObject *d;
-    if (!PyArg_ParseTuple(args, "O!", &PyDict_Type, &d)) return NULL;
-    KBPack *p = new KBPack();
-    bool ok =
-        get_dbl_list(d, "score", p->score) &&
-        get_small_list(d, "name_sid", p->name_sid) &&
-        get_small_list(d, "country_sid", p->country_sid) &&
-        get_small_list(d, "loc_sid", p->loc_sid) &&
-        get_small_list(d, "founded_sid", p->founded_sid) &&
-        get_small_list(d, "cancelled_sid", p->cancelled_sid) &&
-        get_small_list(d, "start_sid", p->start_sid) &&
-        get_small_list(d, "end_sid", p->end_sid) &&
-        get_small_list(d, "gender", p->gender) &&
-        get_small_list(d, "person_exact", p->person_exact) &&
-        get_small_list(d, "artist", p->artist) &&
-        get_small_list(d, "group", p->group) &&
-        get_small_list(d, "person_sub", p->person_sub) &&
-        get_small_list(d, "loc_sub", p->loc_sub) &&
-        get_small_list(d, "geo_sub", p->geo_sub) &&
-        get_small_list(d, "type_exact", p->type_exact) &&
-        get_small_list(d, "ctx_kind", p->ctx_kind) &&
-        get_small_list(d, "ctx_char", p->ctx_char) &&
-        get_sid_lists(d, "jobs", p->jobs) &&
-        get_sid_lists(d, "roles", p->roles) &&
-        get_sid_lists(d, "nats", p->nats) &&
-        get_sid_lists(d, "pdates", p->pdates) &&
-        get_str_list(d, "strtab", p->strtab) &&
-        get_str_list(d, "type_str", p->type_str) &&
-        get_str_list(d, "verbs", p->verbs) &&
-        get_str_list(d, "there_ctx", p->there_ctx);
-    if (ok) {  // fused-scan tables
-        PyObject *nd = PyDict_GetItemString(d, "name_dict");
-        PyObject *nf = PyDict_GetItemString(d, "nat_forms");
-        PyObject *pk = PyDict_GetItemString(d, "pron_keys");
-        PyObject *pm = PyDict_GetItemString(d, "pron_masks");
-        if (!nd || !nf || !pk || !pm) {
-            PyErr_SetString(PyExc_ValueError, "fused-scan pack args missing");
-            ok = false;
-        } else {
-            std::u32string key;
-            for (Py_ssize_t i = 0; ok && i < PyList_GET_SIZE(nd); i++) {
-                PyObject *kv = PyList_GET_ITEM(nd, i);
-                U32 k = to_u32(PyTuple_GET_ITEM(kv, 0));
-                key.assign(k.begin(), k.end());
-                PyObject *ids = PyTuple_GET_ITEM(kv, 1);
-                vector<int64_t> v((size_t)PyTuple_GET_SIZE(ids));
-                for (size_t j = 0; j < v.size(); j++)
-                    v[j] = PyLong_AsLongLong(
-                        PyTuple_GET_ITEM(ids, (Py_ssize_t)j));
-                p->name_dict.emplace(key, std::move(v));
-            }
-            for (Py_ssize_t i = 0; ok && i < PyList_GET_SIZE(nf); i++) {
-                U32 k = to_u32(PyList_GET_ITEM(nf, i));
-                key.assign(k.begin(), k.end());
-                p->nat_forms.insert(key);
-            }
-            for (Py_ssize_t i = 0; ok && i < PyList_GET_SIZE(pk); i++) {
-                U32 k = to_u32(PyList_GET_ITEM(pk, i));
-                key.assign(k.begin(), k.end());
-                p->pron[key] =
-                    (int32_t)PyLong_AsLong(PyList_GET_ITEM(pm, i));
-            }
-            ok = !PyErr_Occurred();
-        }
+// wrap_image(buffer) -> capsule: check the image once, then read it in
+// place (a misaligned buffer is copied once into an aligned one)
+static PyObject *wrap_image(PyObject *self, PyObject *arg) {
+    KBImage *img = new KBImage();
+    if (PyObject_GetBuffer(arg, &img->view, PyBUF_SIMPLE) < 0) {
+        delete img;
+        return NULL;
     }
-    if (ok) {
-        PyObject *es = PyDict_GetItemString(d, "empty_sid");
-        if (!es) { PyErr_SetString(PyExc_ValueError, "empty_sid missing"); ok = false; }
-        else p->empty_sid = (int32_t)PyLong_AsLong(es);
+    const uint8_t *buf = (const uint8_t *)img->view.buf;
+    size_t size = (size_t)img->view.len;
+    if ((uintptr_t)buf % 8) {
+        img->aligned.resize((size + 7) / 8);
+        memcpy(img->aligned.data(), buf, size);
+        buf = (const uint8_t *)img->aligned.data();
     }
-    if (!ok) { delete p; return NULL; }
-    p->n = (int64_t)p->score.size() - 1;
-    static const Py_UCS4 APOS_S[] = {'\'', 's'};
-    p->apos_s.assign(APOS_S, APOS_S + 2);
-    static const Py_UCS4 INTO[] = {' ', 'i', 'n', 't', 'o', ' '};
-    p->into_pad.assign(INTO, INTO + 6);
-    return PyCapsule_New(p, "ner_spark.kbpack", pack_destructor);
+    const char *err = load_image(img, buf, size);
+    if (err) {
+        PyBuffer_Release(&img->view);
+        delete img;
+        PyErr_Format(PyExc_ValueError, "bad KB image: %s", err);
+        return NULL;
+    }
+    PyObject *cap = PyCapsule_New(img, "ner_spark.kbimage", image_destructor);
+    if (!cap) {
+        PyBuffer_Release(&img->view);
+        delete img;
+    }
+    return cap;
 }
 
 // Python-list indexing semantics for the KB hot arrays (resolve.py indexes
 // plain lists, so a negative line id silently wraps — bug-for-bug parity).
 // Returns -1 when Python would raise IndexError (caller raises Fallback).
-static inline int64_t kb_index(const KBPack *p, int64_t line) {
+static inline int64_t kb_index(const KBImage *p, int64_t line) {
     if (line >= 0) return line <= p->n ? line : -1;
     int64_t i = p->n + 1 + line;
     return i >= 0 ? i : -1;
@@ -453,7 +611,7 @@ struct ED {          // entities_and_dates element
 struct Doc;  // fwd
 
 struct Context {
-    const KBPack *kb;
+    const KBImage *kb;
     Doc *doc;
     vector<int64_t> paragraphs;
     vector<ParStats> par;            // by paragraph index
@@ -485,7 +643,7 @@ struct SIdx {  // _doc_sentence_index (resolve.py:531-554)
 };
 
 struct Doc {
-    const KBPack *kb;
+    const KBImage *kb;
     U32 text, clean;
     vector<Mention> men;
     vector<DateM> dates;
@@ -507,7 +665,7 @@ static void find_all(const U32 &text, Py_UCS4 c, vector<int64_t> &out) {
         if (text[i] == c) out.push_back((int64_t)i);
 }
 
-static void find_all_str(const U32 &text, const U32 &needle,
+static void find_all_str(const U32 &text, const Str &needle,
                          vector<int64_t> &out) {
     // resolve.py:522-528 _find_all: find(needle, i+1) — overlapping allowed
     Py_ssize_t i = u32_find(text, needle, 0, (Py_ssize_t)text.size());
@@ -613,7 +771,7 @@ bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
                         return false;
                     }
                     int64_t line = p.v;
-                    const U32 &t = kb->type_str[(size_t)line];
+                    Str t = kb->str(kb->type_sid[(size_t)line]);
                     uint32_t fk = t.empty() ? 0 : (uint32_t)t.back();
                     Bucket &b = ps.fields[fk];
                     int32_t nm_sid = kb->name_sid[(size_t)line];
@@ -621,7 +779,7 @@ bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
                     b.total += 1;
                     if (kb->geo_sub[(size_t)line]) {
                         int32_t c_sid = kb->country_sid[(size_t)line];
-                        if (!kb->strtab[(size_t)c_sid].empty()) {
+                        if (!kb->str(c_sid).empty()) {
                             b.cnt[c_sid] += 1;
                             b.total += 1;
                         }
@@ -634,7 +792,7 @@ bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
                         if (ci < 0) { d.fail(); return false; }
                         if (kb->person_sub[(size_t)ci]) {
                             for (int32_t rsid : kb->roles[(size_t)ci]) {
-                                const U32 &role = kb->strtab[(size_t)rsid];
+                                Str role = kb->str(rsid);
                                 if (u32_find(d.text, role, par_off, par_end) != -1) {
                                     bool have = false;
                                     for (int32_t q : ps.profs)
@@ -719,25 +877,25 @@ double Context::person_percentile(Doc &d, int64_t candidate) {
     int64_t ci = kb_index(kb, candidate);
     if (ci < 0) { d.fail(); return 0.0; }
     double nat_score = 0.0;
-    const vector<int32_t> &person_nats = kb->nats[(size_t)ci];
+    Span<int32_t> person_nats = kb->nats[(size_t)ci];
     for (int32_t nm_idx : ps.nat_mentions) {
         const U32 &nat = d.men[(size_t)nm_idx].src_text();
         for (int32_t psid : person_nats)
-            if (u32_eq(nat, kb->strtab[(size_t)psid])) { nat_score += 1; break; }
+            if (u32_eq(nat, kb->str(psid))) { nat_score += 1; break; }
     }
     if (!ps.nat_mentions.empty())
         nat_score = nat_score * 100.0 / (double)ps.nat_mentions.size();
     double date_score = 0.0;
-    const vector<int32_t> &person_dates = kb->pdates[(size_t)ci];
+    Span<int32_t> person_dates = kb->pdates[(size_t)ci];
     for (const U32 *cd : ps.dates)
         for (int32_t dsid : person_dates) {
-            const U32 &pd = kb->strtab[(size_t)dsid];
+            Str pd = kb->str(dsid);
             if (u32_contains(*cd, pd) || u32_contains(pd, *cd)) date_score += 1;
         }
     if (!ps.dates.empty())
         date_score = date_score * 100.0 / (double)ps.dates.size();
     double prof_score = 0.0;
-    const vector<int32_t> &roles = kb->roles[(size_t)ci];
+    Span<int32_t> roles = kb->roles[(size_t)ci];
     const int32_t empty_probe[1] = {kb->empty_sid};
     const int32_t *probe = roles.empty() ? empty_probe : roles.data();
     size_t nprobe = roles.empty() ? 1 : roles.size();
@@ -784,7 +942,7 @@ double Context::org_event_percentile(Doc &d, int64_t candidate,
     double date_score = 0.0;
     for (const U32 *cd : ps.dates)
         for (int k = 0; k < 2; k++) {
-            const U32 &od = kb->strtab[(size_t)ds[k]];
+            Str od = kb->str(ds[k]);
             if (!cd->empty() && !od.empty() &&
                 (u32_contains(*cd, od) || u32_contains(od, *cd)))
                 date_score += 1;
@@ -813,15 +971,17 @@ static void ordered_dedup(vector<int64_t> &v) {
     v.resize(w);
 }
 
+static const Py_UCS4 INTO_PAD[] = {' ', 'i', 'n', 't', 'o', ' '};
+
 // EN sense eliminations (lang.py:42-61 _en_sense_rules)
 static bool en_sense_rules(Doc &d, Mention &m) {
-    const KBPack *kb = d.kb;
+    const KBImage *kb = d.kb;
     Py_ssize_t n = (Py_ssize_t)d.text.size();
     bool rs = m.end + 2 <= n && d.text[(size_t)m.end] == '\'' &&
               d.text[(size_t)m.end + 1] == 's';
     bool the = m.flags & FL_THE_TITLE;
     bool ls = m.start >= 6 &&
-              u32_eq(d.text.data() + m.start - 6, 6, kb->into_pad.data(), 6);
+              u32_eq(d.text.data() + m.start - 6, 6, INTO_PAD, 6);
     if (!(rs || the || ls)) return true;
     vector<int64_t> out;
     for (int64_t s : m.senses) {
@@ -838,7 +998,7 @@ static bool en_sense_rules(Doc &d, Mention &m) {
 
 // resolve.py:557-659 disambiguate_without_context
 static bool dwoc(Doc &d, Register &reg, int32_t mi) {
-    const KBPack *kb = d.kb;
+    const KBImage *kb = d.kb;
     Mention &m = d.men[(size_t)mi];
     if ((m.flags & FL_PRON_ANY) || !m.pms.empty()) {
         m.is_coreference = true;
@@ -891,7 +1051,7 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
             if (paren_in) {
                 sentence = right_sentence(d, m);
                 have_sentence = true;
-                for (const U32 &verb : kb->verbs) {
+                for (const Str &verb : kb->verbs) {
                     verb_index = u32_find(sentence, verb, 0,
                                           (Py_ssize_t)sentence.size());
                     if (verb_index != -1) break;
@@ -918,7 +1078,7 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
             if (!kb->person_exact[(size_t)si]) continue;
             vector<int32_t> cand;
             for (int32_t jsid : kb->jobs[(size_t)si]) {
-                const U32 &job = kb->strtab[(size_t)jsid];
+                Str job = kb->str(jsid);
                 // search " " + job + " " in the window
                 bool found = false;
                 if (have_sentence) {
@@ -958,7 +1118,7 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
                 int64_t si = kb_index(kb, s);
                 if (si < 0) { d.fail(); return false; }
                 if (!kb->person_exact[(size_t)si]) continue;
-                const vector<int32_t> &jb = kb->jobs[(size_t)si];
+                Span<int32_t> jb = kb->jobs[(size_t)si];
                 const int32_t empty_probe[1] = {kb->empty_sid};
                 const int32_t *probe = jb.empty() ? empty_probe : jb.data();
                 size_t np = jb.empty() ? 1 : jb.size();
@@ -1007,7 +1167,7 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
 // batch pre-pass in resolve.py:741-817 is observably identical — its own
 // docstring carries the proof)
 static bool dwc(Doc &d, Context &ctx, Register &reg, int32_t mi) {
-    const KBPack *kb = d.kb;
+    const KBImage *kb = d.kb;
     Mention &m = d.men[(size_t)mi];
     if (m.is_coreference || m.candidates.empty()) return true;
     ctx.recompute_paragraph_offset(m.start);
@@ -1079,7 +1239,7 @@ static bool dwc(Doc &d, Context &ctx, Register &reg, int32_t mi) {
 static bool is_location_coreference(Doc &d, const Mention &m) {
     if (!(m.flags & FL_THERE)) return false;
     Py_ssize_t n = (Py_ssize_t)d.text.size();
-    for (const U32 &s : d.kb->there_ctx) {
+    for (const Str &s : d.kb->there_ctx) {
         Py_ssize_t sl = (Py_ssize_t)s.size();
         if (m.end + sl <= n &&
             memcmp(d.text.data() + m.end, s.data(),
@@ -1211,7 +1371,7 @@ static bool fix_poor(Doc &d, Register &reg, const vector<int32_t> &entities) {
 // the C kernel serves mode="default" only)
 static bool resolve_corefs(Doc &d, Context &ctx, Register &reg,
                            const vector<int32_t> &entities) {
-    const KBPack *kb = d.kb;
+    const KBImage *kb = d.kb;
     for (int32_t mi : entities) {
         Mention &e = d.men[(size_t)mi];
         if (!e.is_coreference && pref_truthy(e.pref)) {
@@ -1401,7 +1561,7 @@ static bool overlap_filter(Doc &d, vector<int32_t> &entities) {
 
 // resolve.py:1136-1155 remove_nearby_entities
 static void remove_nearby(Doc &d, vector<int32_t> &entities) {
-    const KBPack *kb = d.kb;
+    const KBImage *kb = d.kb;
     for (size_t i = 1; i < entities.size(); i++) {
         Mention &ent = d.men[(size_t)entities[i]];
         Mention &bef = d.men[(size_t)entities[i - 1]];
@@ -1473,7 +1633,7 @@ static bool parse_dates(Doc &d, PyObject *dates) {
 }
 
 static PyObject *run_stages(Doc &d) {
-    const KBPack *kb = d.kb;
+    const KBImage *kb = d.kb;
     (void)kb;
     Register reg(d.men.size());
 
@@ -1678,59 +1838,18 @@ static void tokenize_spans(const U32 &t,
     }
 }
 
-struct AtmPack {
-    std::unordered_map<std::u32string, vector<int64_t>> keys;  // path → ids
-    std::unordered_set<std::u32string> prefixes;
-    std::unordered_set<std::u32string> first;
-};
-
-static void atm_destructor(PyObject *cap) {
-    delete (AtmPack *)PyCapsule_GetPointer(cap, "ner_spark.atmpack");
-}
-
-static PyObject *build_atm(PyObject *self, PyObject *args) {
-    PyObject *keys, *prefixes, *first;
-    if (!PyArg_ParseTuple(args, "O!O!O!", &PyList_Type, &keys, &PyList_Type,
-                          &prefixes, &PyList_Type, &first))
-        return NULL;
-    AtmPack *p = new AtmPack();
-    std::u32string key;
-    for (Py_ssize_t i = 0; i < PyList_GET_SIZE(keys); i++) {
-        PyObject *kv = PyList_GET_ITEM(keys, i);
-        U32 k = to_u32(PyTuple_GET_ITEM(kv, 0));
-        key.assign(k.begin(), k.end());
-        PyObject *ids = PyTuple_GET_ITEM(kv, 1);
-        vector<int64_t> v((size_t)PyTuple_GET_SIZE(ids));
-        for (size_t j = 0; j < v.size(); j++)
-            v[j] = PyLong_AsLongLong(PyTuple_GET_ITEM(ids, (Py_ssize_t)j));
-        p->keys.emplace(key, std::move(v));
-    }
-    for (Py_ssize_t i = 0; i < PyList_GET_SIZE(prefixes); i++) {
-        U32 k = to_u32(PyList_GET_ITEM(prefixes, i));
-        key.assign(k.begin(), k.end());
-        p->prefixes.insert(key);
-    }
-    for (Py_ssize_t i = 0; i < PyList_GET_SIZE(first); i++) {
-        U32 k = to_u32(PyList_GET_ITEM(first, i));
-        key.assign(k.begin(), k.end());
-        p->first.insert(key);
-    }
-    if (PyErr_Occurred()) { delete p; return NULL; }
-    return PyCapsule_New(p, "ner_spark.atmpack", atm_destructor);
-}
-
-// fragment → (source, dl, flags, is_nat_form, pms) with a per-KB cache.
+// fragment → (source, dl, flags, is_nat_form, pms) with a per-image cache.
 // ASCII fragments without NCRs are handled fully in C (deaccent is the
 // identity, str.lower == ASCII tolower); everything else goes through the
 // Python helper once per distinct fragment.  Returns null on Python error.
-static const KBPack::FragInfo *frag_info(KBPack *kb, const Py_UCS4 *frag,
-                                         Py_ssize_t flen, PyObject *frag_cb) {
+static const FragInfo *frag_info(KBImage *kb, const Py_UCS4 *frag,
+                                 Py_ssize_t flen, PyObject *frag_cb) {
     static std::u32string key;  // scratch (single-threaded under the GIL)
     key.assign(frag, frag + flen);
     auto it = kb->frag_cache.find(key);
     if (it != kb->frag_cache.end()) return &it->second;
 
-    KBPack::FragInfo fi;
+    FragInfo fi;
     bool ascii_ok = true;
     bool has_amp_hash = false;
     for (Py_ssize_t i = 0; i < flen; i++) {
@@ -1744,10 +1863,8 @@ static const KBPack::FragInfo *frag_info(KBPack *kb, const Py_UCS4 *frag,
         for (auto &c : fi.dl)
             if (c >= 'A' && c <= 'Z') c += 32;
         fi.flags = 0;
-        static std::u32string sl;
-        sl.assign(fi.dl.begin(), fi.dl.end());
-        auto pit = kb->pron.find(sl);
-        if (pit != kb->pron.end()) fi.flags |= pit->second;
+        int32_t pe = kb->find(kb->pron, fi.dl.data(), fi.dl.size());
+        if (pe >= 0) fi.flags |= kb->pron_mask.p[pe];
         if (fi.dl.size() >= 4 && fi.dl[0] == 't' && fi.dl[1] == 'h' &&
             fi.dl[2] == 'e' && fi.dl[3] == ' ')
             fi.flags |= FL_THE_LOWER;
@@ -1770,30 +1887,26 @@ static const KBPack::FragInfo *frag_info(KBPack *kb, const Py_UCS4 *frag,
         Py_DECREF(res);
         if (PyErr_Occurred()) return NULL;
     }
-    static std::u32string srckey;
-    srckey.assign(fi.source.begin(), fi.source.end());
-    fi.is_nat_form = kb->nat_forms.count(srckey) != 0;
-    static std::u32string dlkey;
-    dlkey.assign(fi.dl.begin(), fi.dl.end());
-    auto nit = kb->name_dict.find(dlkey);
-    fi.pms = nit == kb->name_dict.end() ? nullptr : &nit->second;
+    fi.is_nat_form =
+        kb->find(kb->nat_forms, fi.source.data(), fi.source.size()) >= 0;
+    int32_t ne = kb->find(kb->name_dict, fi.dl.data(), fi.dl.size());
+    fi.pms = ne < 0 ? Span<int64_t>{nullptr, 0}
+                    : Span<int64_t>{kb->nd_ids.p + kb->nd_off.p[ne],
+                                    kb->nd_off.p[ne + 1] - kb->nd_off.p[ne]};
     auto ins = kb->frag_cache.emplace(key, std::move(fi));
     return &ins.first->second;
 }
 
-// scan_resolve_doc(kbpack, atmpack, text, scan_text|None, dates,
-//                  paragraphs, lazy_cb, frag_cb) -> list[tuple]
+// scan_resolve_doc(image, text, scan_text|None, dates, paragraphs,
+//                  lazy_cb, frag_cb) -> list[tuple]
 static PyObject *scan_resolve_doc(PyObject *self, PyObject *args) {
-    PyObject *kcap, *acap, *text_o, *scan_o, *dates, *paragraphs, *lazy_cb,
-        *frag_cb;
-    if (!PyArg_ParseTuple(args, "OOO!OO!O!OO", &kcap, &acap, &PyUnicode_Type,
+    PyObject *icap, *text_o, *scan_o, *dates, *paragraphs, *lazy_cb, *frag_cb;
+    if (!PyArg_ParseTuple(args, "OO!OO!O!OO", &icap, &PyUnicode_Type,
                           &text_o, &scan_o, &PyList_Type, &dates,
                           &PyList_Type, &paragraphs, &lazy_cb, &frag_cb))
         return NULL;
-    KBPack *kb = (KBPack *)PyCapsule_GetPointer(kcap, "ner_spark.kbpack");
+    KBImage *kb = (KBImage *)PyCapsule_GetPointer(icap, "ner_spark.kbimage");
     if (!kb) return NULL;
-    AtmPack *atm = (AtmPack *)PyCapsule_GetPointer(acap, "ner_spark.atmpack");
-    if (!atm) return NULL;
     // bound the fragment cache BETWEEN documents only — mention structs
     // hold pointers into it for the duration of one call
     if (kb->frag_cache.size() > (1u << 20)) kb->frag_cache.clear();
@@ -1818,47 +1931,52 @@ static PyObject *scan_resolve_doc(PyObject *self, PyObject *args) {
     if (PyErr_Occurred()) return NULL;
 
     // --- scan (automaton.py:160-215: longest match, non-overlapping,
-    //     lazy separators, strong \n/\r delimiters) ---
+    //     lazy separators, strong \n/\r delimiters) as a walk of the
+    //     word-id trie: a word no key uses has no id and ends the walk ---
     vector<std::pair<int64_t, int64_t>> spans;
     tokenize_spans(st, spans);
     Py_ssize_t nw = (Py_ssize_t)spans.size();
-    std::u32string path, word;
+    auto word_id = [&](Py_ssize_t k) {
+        return kb->find(kb->words, st.data() + spans[(size_t)k].first,
+                        (size_t)(spans[(size_t)k].second -
+                                 spans[(size_t)k].first));
+    };
     std::unordered_map<std::u32string, int32_t> src_intern;
     Py_ssize_t i = 0;
     while (i < nw) {
-        word.assign(st.begin() + spans[(size_t)i].first,
-                    st.begin() + spans[(size_t)i].second);
-        if (!atm->first.count(word)) { i++; continue; }
-        path = word;
+        int32_t wid = word_id(i);
+        int32_t state = wid < 0 ? -1 : kb->step(0, 0, wid);
+        if (state < 0) { i++; continue; }
         Py_ssize_t j = i;
         Py_ssize_t best_j = -1;
-        const vector<int64_t> *best_ids = nullptr;
+        int32_t best_term = -1;
         for (;;) {
-            auto kit = atm->keys.find(path);
-            if (kit != atm->keys.end()) {
+            int32_t term = kb->s_term.p[state];
+            if (term >= 0) {
                 best_j = j;
-                best_ids = &kit->second;
+                best_term = term;
             }
-            if (!atm->prefixes.count(path)) break;
             if (j + 1 >= nw) break;  // EOF acts as a strong delimiter
             int64_t gap_s = spans[(size_t)j].second;
             int64_t gap_e = spans[(size_t)j + 1].first;
+            int sep = 0;
             if (gap_s != gap_e) {
                 // strong delimiter = newline as the FIRST delimiter char
                 // after the word (figa_cedar.tpp:1005-1012); later gap
                 // chars load as empty words and never break the chain
                 Py_UCS4 gc = st[(size_t)gap_s];
                 if (gc == '\n' || gc == '\r') break;
-                path.push_back(' ');
+                sep = 1;
             }
+            wid = word_id(j + 1);
+            state = wid < 0 ? -1 : kb->step(state, sep, wid);
+            if (state < 0) break;
             j++;
-            path.append(st.begin() + spans[(size_t)j].first,
-                        st.begin() + spans[(size_t)j].second);
         }
-        if (best_ids != nullptr) {
+        if (best_j >= 0) {
             int64_t start = spans[(size_t)i].first;
             int64_t end = spans[(size_t)best_j].second;
-            const KBPack::FragInfo *fi =
+            const FragInfo *fi =
                 frag_info(kb, st.data() + start, end - start, frag_cb);
             if (!fi) return NULL;
             d.men.emplace_back();
@@ -1868,11 +1986,13 @@ static PyObject *scan_resolve_doc(PyObject *self, PyObject *args) {
             m.srcp = &fi->source;
             m.dlp = &fi->dl;
             // senses: ordered dedup of nonzero ids (resolve.py:111-116)
-            const vector<int64_t> &ids = *best_ids;
+            Span<int64_t> ids{kb->term_ids.p + kb->term_off.p[best_term],
+                              kb->term_off.p[best_term + 1] -
+                                  kb->term_off.p[best_term]};
             bool has_sense = false;
             if (ids.size() == 1) {
-                if (ids[0] != 0) {
-                    m.senses.push_back(ids[0]);
+                if (ids.p[0] != 0) {
+                    m.senses.push_back(ids.p[0]);
                     has_sense = true;
                 }
             } else {
@@ -1884,7 +2004,7 @@ static PyObject *scan_resolve_doc(PyObject *self, PyObject *args) {
             m.flags = fi->flags;
             if (!has_sense && fi->is_nat_form) m.flags |= FL_IS_NAT;
             m.is_nationality = (m.flags & FL_IS_NAT) != 0;
-            if (fi->pms != nullptr) m.pms = *fi->pms;
+            m.pms.assign(fi->pms.begin(), fi->pms.end());
             static std::u32string sk;
             sk.assign(fi->source.begin(), fi->source.end());
             auto si = src_intern.emplace(sk, (int32_t)src_intern.size());
@@ -1902,13 +2022,12 @@ static PyObject *scan_resolve_doc(PyObject *self, PyObject *args) {
 // ---------------------------------------------------------------------------
 
 static PyMethodDef Methods[] = {
-    {"build_pack", build_pack, METH_VARARGS,
-     "build_pack(dict) -> capsule — intern a KBBundle snapshot"},
-    {"build_atm", build_atm, METH_VARARGS,
-     "build_atm(keys, prefixes, first) -> capsule"},
+    {"wrap_image", wrap_image, METH_O,
+     "wrap_image(buffer) -> capsule — check a ckernel.kb_image buffer once "
+     "and read it in place; ValueError on a bad image"},
     {"scan_resolve_doc", scan_resolve_doc, METH_VARARGS,
-     "scan_resolve_doc(kbpack, atmpack, text, scan_text, dates, paragraphs,"
-     " lazy_cb, frag_cb) -> list[tuple]"},
+     "scan_resolve_doc(image, text, scan_text, dates, paragraphs, lazy_cb,"
+     " frag_cb) -> list[tuple]"},
     {NULL, NULL, 0, NULL}};
 
 static struct PyModuleDef moduledef = {
@@ -1922,6 +2041,7 @@ PyMODINIT_FUNC PyInit__resolve_ck(void) {
     FallbackError = PyErr_NewException("_resolve_ck.Fallback", NULL, NULL);
     Py_INCREF(FallbackError);
     PyModule_AddObject(m, "Fallback", FallbackError);
+    PyModule_AddIntConstant(m, "IMAGE_VERSION", IMAGE_VERSION);
     s_kb = PyUnicode_InternFromString("kb");
     s_coref = PyUnicode_InternFromString("coref");
     s_date = PyUnicode_InternFromString("date");

@@ -32,10 +32,12 @@ key via one dict probe, and otherwise extends the path word-by-word with
 O(1) hash lookups.  This is observably equivalent to the char-trie walk:
 values can only exist at word ends, and a path that is neither a key nor
 a stored prefix can never be completed (same backtrack point as the trie).
-The structure pickles compactly → ``sparkContext.broadcast`` (the Spark
-analogue of the reference's memory-mapped ``.dct`` automaton file,
-figa/src/figa.cpp:22-31).  Link values are KB row ids; id 0 marks a
-pronoun / name-fragment key (ner.py:417; 'N' links uniq_namelist.py:104-107).
+This class is the Python path (fallback and fuzz oracle); the C kernel
+walks the same keys as a word-id trie inside the flat KB image
+(``ckernel.kb_image``), the Spark analogue of the reference's
+memory-mapped ``.dct`` automaton file (figa/src/figa.cpp:22-31).  Link
+values are KB row ids; id 0 marks a pronoun / name-fragment key
+(ner.py:417; 'N' links uniq_namelist.py:104-107).
 """
 
 from __future__ import annotations
@@ -123,13 +125,6 @@ class GazetteerAutomaton:
         self.keys: dict[str, tuple[int, ...]] = {}   # path → ids
         self.prefixes: set[str] = set()              # word-boundary prefixes
         self.first: set[str] = set()                 # key-initial words
-
-    def __getstate__(self):
-        # the C kernel caches a compiled pack as a PyCapsule under _ck_*
-        # (semantics/ckernel.py) — per-process state, rebuilt lazily after
-        # unpickle; it must never ride a pickle (broadcast or artifact)
-        return {k: v for k, v in self.__dict__.items()
-                if not k.startswith("_ck_")}
 
     @property
     def n_keys(self) -> int:

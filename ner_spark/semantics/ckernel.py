@@ -5,17 +5,27 @@ sequential state machine of :mod:`ner_spark.semantics.resolve` — is
 CPython-bound (the r4 numpy-batch restructure measured ~5-15%; the residual
 cost is sequential interpreter state mutation).  This module compiles a C++
 twin of both (``_resolve_kernel.cpp``) with the system g++ at first use,
-caches the shared object keyed by a source hash, and exposes one entry
-point:
+caches the shared object keyed by a source hash, and exposes:
 
-    try_scan_resolve(...) -> rows | None
+    kb_image(bundle, automaton) -> bytes    driver side, numpy only
+    wrap_image(image) -> handle             checks the image once
+    scan_resolve(handle, text, ...) -> rows | None
+    try_scan_resolve(bundle, automaton, text, ...) -> rows | None
+
+The KB image is the kernel's whole KB: the bundle's columns, the subname,
+nationality-form and pronoun tables, and the automaton as a word-id trie,
+in one flat, position-independent buffer.  ``compile_kb`` builds it once
+and broadcasts it; a worker wraps it zero-copy and never unpickles the
+bundle or the automaton unless a document falls back to Python.
+``try_scan_resolve`` serves direct object callers: it builds the image
+lazily and caches it on the bundle (``_ck_image``, never pickled).
 
 ``None`` means "take the pure-Python path" — the kernel covers exactly the
 Spark production surface (mode="default", lang="en", find_names=False) and
-raises ``Fallback`` for any state it cannot reproduce bug-for-bug; the one
-caller (recognize.scan_and_resolve) then runs ``atm.scan`` +
-``resolve.resolve_document``.  Parity is pinned by the differential fuzz
-test (tests/test_ckernel.py) and the byte-identical reference goldens.
+raises ``Fallback`` for any state it cannot reproduce bug-for-bug; the
+callers (recognize.scan_and_resolve, pipeline.ner.resolved_docs) then run
+``recognize.resolve_in_python``.  Parity is pinned by the differential
+fuzz test (tests/test_ckernel.py) and the byte-identical reference goldens.
 
 Division of labor: Python keeps everything that needs re / dateutil /
 unicodedata — date detection with pre-rendered ISO strings, paragraph
@@ -35,6 +45,7 @@ from __future__ import annotations
 import hashlib
 import importlib.util
 import os
+import struct
 import subprocess
 import sys
 import sysconfig
@@ -144,11 +155,37 @@ def available() -> bool:
 
 
 # ---------------------------------------------------------------------------
-# KB pack
+# KB image
 # ---------------------------------------------------------------------------
 
-# EN tables mirrored into the pack (lang.py EN; en location-coref contexts)
-_EN_VERBS = [" was ", " were ", " is "]
+IMAGE_VERSION = 1  # _resolve_kernel.cpp IMAGE_VERSION; bump on any change
+_MAGIC = b"NERKBIMG"
+# the section table, in order (the kernel's S_* enum mirrors it)
+_SECTIONS = (
+    ("meta", "<i8"),  # n_rows, empty_sid, n_states
+    ("str_off", "<u4"), ("str_blob", "<u4"),  # UCS-4 strtab
+    ("score", "<f8"),
+    ("name_sid", "<i4"), ("country_sid", "<i4"), ("loc_sid", "<i4"),
+    ("start_sid", "<i4"), ("end_sid", "<i4"), ("type_sid", "<i4"),
+    ("ctx_char", "<u4"),
+    ("gender", "u1"), ("person_exact", "u1"), ("artist", "u1"),
+    ("group", "u1"), ("person_sub", "u1"), ("loc_sub", "u1"),
+    ("geo_sub", "u1"), ("type_exact", "u1"), ("ctx_kind", "u1"),
+    ("jobs_off", "<u4"), ("jobs", "<i4"),
+    ("roles_off", "<u4"), ("roles", "<i4"),
+    ("nats_off", "<u4"), ("nats", "<i4"),
+    ("pdates_off", "<u4"), ("pdates", "<i4"),
+    ("verbs", "<i4"), ("there_ctx", "<i4"),
+    ("nd_slots", "<i4"), ("nd_key", "<i4"), ("nd_off", "<u4"),
+    ("nd_ids", "<i8"),
+    ("natf_slots", "<i4"), ("natf_key", "<i4"),
+    ("pron_slots", "<i4"), ("pron_key", "<i4"), ("pron_mask", "<i4"),
+    ("w_slots", "<i4"), ("w_key", "<i4"),
+    ("t_keys", "<u8"), ("t_next", "<i4"),
+    ("s_term", "<i4"), ("term_off", "<u4"), ("term_ids", "<i8"),
+)
+
+# EN tables mirrored into the image (en location-coref contexts)
 _EN_THERE_CTX = [" is ", " are ", " was ", " were ", " has ", " have ",
                  " had "]
 _PRON_MASK = {  # lang.py EN.pronouns → C flag bits (M=1, F=2, L=4)
@@ -160,115 +197,209 @@ _PRON_MASK = {  # lang.py EN.pronouns → C flag bits (M=1, F=2, L=4)
 _PERSON_EXACT = ("person", "person:artist", "person:fictional")
 
 
-def _build_pack(kb):
-    """Intern the KBBundle into the C pack (content-equal strings share one
-    sid, so every dict/membership the Python twin does by string value the
-    kernel does by int compare)."""
-    ck = _load()
+def _ucs4(strings):
+    """strings → (UCS-4 code points, offsets) as numpy arrays."""
+    import numpy as np
+
+    blob = np.frombuffer("".join(strings).encode("utf-32-le",
+                                                  "surrogatepass"), "<u4")
+    off = np.zeros(len(strings) + 1, "<u4")
+    off[1:] = np.cumsum([len(s) for s in strings])
+    return blob, off
+
+
+def _str_hashes(strings):
+    """The kernel's ``str_hash``: FNV-1a over code points, folded — one
+    numpy pass per character position, longest strings first."""
+    import numpy as np
+
+    blob, off = _ucs4(strings)
+    lens = np.diff(off).astype(np.int64)
+    order = np.argsort(-lens, kind="stable")
+    starts, lens = off[:-1].astype(np.int64)[order], lens[order]
+    cps = blob.astype(np.uint64)
+    h = np.full(len(strings), 0xcbf29ce484222325, np.uint64)
+    for j in range(int(lens[0]) if len(lens) else 0):
+        k = int(np.searchsorted(-lens, -j))  # strings longer than j
+        h[:k] = (h[:k] ^ cps[starts[:k] + j]) * np.uint64(0x100000001b3)
+    out = np.empty_like(h)
+    out[order] = h
+    return out ^ (out >> np.uint64(32))
+
+
+def _mix64(x):
+    """The kernel's ``mix64`` (the splitmix64 finalizer)."""
+    import numpy as np
+
+    x = x ^ (x >> np.uint64(30))
+    x = x * np.uint64(0xbf58476d1ce4e5b9)
+    x = x ^ (x >> np.uint64(27))
+    x = x * np.uint64(0x94d049bb133111eb)
+    return x ^ (x >> np.uint64(31))
+
+
+def _place(hashes):
+    """Linear-probing slots (entry index, -1 empty) at load < 0.5, filled
+    in rounds: each round every unplaced entry tries its current slot, the
+    lowest entry wins a free one, the rest probe on — so every slot a
+    lookup passes before its key is occupied, as sequential insertion
+    guarantees."""
+    import numpy as np
+
+    cap = 1 << max(3, (2 * len(hashes)).bit_length())
+    mask = cap - 1
+    slots = np.full(cap, -1, np.int32)
+    pos = (hashes & np.uint64(mask)).astype(np.int64)
+    todo = np.arange(len(hashes))
+    while todo.size:
+        p = pos[todo]
+        free = np.flatnonzero(slots[p] == -1)
+        won_slots, first = np.unique(p[free], return_index=True)
+        won = free[first]
+        slots[won_slots] = todo[won]
+        todo = np.delete(todo, won)
+        pos[todo] = (pos[todo] + 1) & mask
+    return slots
+
+
+def _csr(lists):
+    import numpy as np
+
+    off = np.zeros(len(lists) + 1, "<u4")
+    off[1:] = np.cumsum([len(x) for x in lists])
+    return off, [v for x in lists for v in x]
+
+
+def kb_image(kb, automaton) -> bytes:
+    """The kernel's KB as one flat, position-independent image: a header
+    (magic, version, a table of 8-byte-aligned sections), the interned
+    UCS-4 strtab, the fixed-width per-row arrays, CSR id lists, linear-
+    probing tables for the subname dict, the nationality forms and the
+    pronouns, and the automaton as a word-id trie.  A trie step maps
+    ``(state, sep ∈ {"", " "}, word id)`` to the next state and final
+    states carry their ids; a key with an irregular gap (which the scan
+    never builds) gets no transition, so it never matches — as in
+    :class:`GazetteerAutomaton`.  Built once per KB on the driver; numpy
+    only, no compiled code."""
+    from collections import defaultdict
+
+    import numpy as np
+
+    from .automaton import _TOKEN_RE
+    from .lang import EN
+
+    intern: dict[str, int] = defaultdict(lambda: len(intern))
+    sid = intern.__getitem__  # str → strtab id, interning on first use
+
     n = kb.n_rows()
-    intern: dict[str, int] = {}
-    strtab: list[str] = []
-
-    def sid(s: str) -> int:
-        i = intern.get(s)
-        if i is None:
-            i = intern[s] = len(strtab)
-            strtab.append(s)
-        return i
-
-    empty_sid = sid("")
     tarr = kb.type_arr()
-    score = [float(x) for x in kb.score_arr()]
-    names = kb.name_arr()
-    genders = kb.gender_arr()
-    countries = kb.country_arr()
-    kinds = kb.ctx_kind_arr()
-    kchars = kb.ctx_char_arr()
-    name_sid = [sid(x) for x in names]
-    country_sid = [sid(x) for x in countries]
-    loc_sid, founded_sid, cancelled_sid, start_sid, end_sid = [], [], [], [], []
-    jobs, roles, nats, pdates = [], [], [], []
-    for i in range(n + 1):
-        if i == 0:
-            loc_sid.append(empty_sid)
-            founded_sid.append(empty_sid)
-            cancelled_sid.append(empty_sid)
-            start_sid.append(empty_sid)
-            end_sid.append(empty_sid)
-            jobs.append(())
-            roles.append(())
-            nats.append(())
-            pdates.append(())
-            continue
-        loc_sid.append(sid(kb.get_data_for(i, "LOCATION")))
-        founded_sid.append(sid(kb.get_data_for(i, "FOUNDED")))
-        cancelled_sid.append(sid(kb.get_data_for(i, "CANCELLED")))
-        start_sid.append(sid(kb.get_data_for(i, "START")))
-        end_sid.append(sid(kb.get_data_for(i, "END")))
-        jobs.append(tuple(sid(j) for j in kb.get_multival(i, "JOBS")))
-        roles.append(tuple(sid(r) for r in kb.get_multival(i, "ROLES")))
-        # frozensets → sorted for determinism (membership-only consumers)
-        nats.append(tuple(sid(x) for x in sorted(kb.get_nationalities(i))))
-        pdates.append(tuple(sid(x) for x in sorted(kb.get_dates(i))))
-    args = {
-        "score": score,
-        "name_sid": name_sid,
-        "country_sid": country_sid,
-        "loc_sid": loc_sid,
-        "founded_sid": founded_sid,
-        "cancelled_sid": cancelled_sid,
-        "start_sid": start_sid,
-        "end_sid": end_sid,
-        "gender": [1 if g == "M" else 2 if g == "F" else 0 for g in genders],
-        "person_exact": [1 if t in _PERSON_EXACT else 0 for t in tarr],
-        "artist": [1 if f else 0 for f in kb.artist_flag_arr()],
-        "group": [1 if f else 0 for f in kb.group_flag_arr()],
-        "person_sub": [1 if f else 0 for f in kb.person_sub_flag_arr()],
-        "loc_sub": [1 if f else 0 for f in kb.loc_sub_flag_arr()],
-        "geo_sub": [1 if f else 0 for f in kb.geo_sub_flag_arr()],
+    sec = {
+        "score": kb.score_arr(),
+        "name_sid": [sid(x) for x in kb.name_arr()],
+        "country_sid": [sid(x) for x in kb.country_arr()],
+        "type_sid": [sid(t) for t in tarr],
+        "ctx_char": [ord(c) if c else 0 for c in kb.ctx_char_arr()],
+        "gender": [1 if g == "M" else 2 if g == "F" else 0
+                   for g in kb.gender_arr()],
+        "person_exact": [t in _PERSON_EXACT for t in tarr],
+        "artist": kb.artist_flag_arr(),
+        "group": kb.group_flag_arr(),
+        "person_sub": kb.person_sub_flag_arr(),
+        "loc_sub": kb.loc_sub_flag_arr(),
+        "geo_sub": kb.geo_sub_flag_arr(),
         "type_exact": [1 if t == "person" else 2 if t == "location" else 0
                        for t in tarr],
-        "ctx_kind": list(kinds),
-        "ctx_char": [ord(c) if c else 0 for c in kchars],
-        "jobs": jobs,
-        "roles": roles,
-        "nats": nats,
-        "pdates": pdates,
-        "strtab": strtab,
-        "type_str": list(tarr),
-        "verbs": _EN_VERBS,
-        "there_ctx": _EN_THERE_CTX,
-        "empty_sid": empty_sid,
-        # fused-scan tables (scan_resolve_doc)
-        "name_dict": [(k, tuple(sorted(v)))
-                      for k, v in kb.name_dict.items()],
-        "nat_forms": sorted(kb.nationality_forms),
-        "pron_keys": list(_PRON_MASK),
-        "pron_masks": list(_PRON_MASK.values()),
+        "ctx_kind": kb.ctx_kind_arr(),
+        "verbs": [sid(v) for v in EN.verbs],
+        "there_ctx": [sid(v) for v in _EN_THERE_CTX],
     }
-    return ck.build_pack(args)
+    rows = range(1, n + 1)
+    for name, col in (("loc_sid", "LOCATION"), ("start_sid", "START"),
+                      ("end_sid", "END")):
+        sec[name] = [sid("")] + [sid(kb.get_data_for(i, col)) for i in rows]
+    lists = {
+        "jobs": lambda i: kb.get_multival(i, "JOBS"),
+        "roles": lambda i: kb.get_multival(i, "ROLES"),
+        # frozensets → sorted for determinism (membership-only consumers)
+        "nats": lambda i: sorted(kb.get_nationalities(i)),
+        "pdates": lambda i: sorted(kb.get_dates(i)),
+    }
+    for name, values in lists.items():
+        sec[name + "_off"], sec[name] = _csr(
+            [()] + [[sid(v) for v in values(i)] for i in rows])
+
+    tables = {}  # name → keys, placed below once every string is interned
+    nd = sorted(kb.name_dict.items())
+    tables["nd"] = [k for k, _ in nd]
+    sec["nd_off"], sec["nd_ids"] = _csr([sorted(v) for _, v in nd])
+    tables["natf"] = sorted(kb.nationality_forms)
+    tables["pron"] = list(_PRON_MASK)
+    sec["pron_mask"] = list(_PRON_MASK.values())
+
+    # word-id trie over the automaton's key paths (tokenized as
+    # GazetteerAutomaton.add tokenized the raw keys)
+    words: dict[str, int] = {}
+    trans: dict[tuple[int, int, int], int] = {}
+    term: dict[int, tuple] = {}
+    for path, ids in automaton.keys.items():
+        state, end = 0, None
+        for m in _TOKEN_RE.finditer(path):
+            gap = "" if end is None else path[end:m.start()]
+            if gap not in ("", " "):
+                break  # irregular gap: the scan never builds this path
+            wid = words.setdefault(m.group(), len(words))
+            state = trans.setdefault((state, len(gap), wid), len(trans) + 1)
+            end = m.end()
+        else:
+            term[state] = ids
+    tables["w"] = list(words)
+    n_states = len(trans) + 1
+    tk = np.array(list(trans), np.uint64).reshape(-1, 3)
+    tkey = (tk[:, 0] << np.uint64(32)) | (tk[:, 1] << np.uint64(31)) | tk[:, 2]
+    slots = _place(_mix64(tkey))
+    sec["t_keys"] = np.full(len(slots), 2**64 - 1, np.uint64)
+    sec["t_next"] = np.full(len(slots), -1, np.int32)
+    used = slots >= 0
+    sec["t_keys"][used] = tkey[slots[used]]
+    sec["t_next"][used] = np.fromiter(trans.values(), np.int32,
+                                      len(trans))[slots[used]]
+    s_term = np.full(n_states, -1, np.int32)
+    s_term[list(term)] = np.arange(len(term))
+    sec["s_term"] = s_term
+    sec["term_off"], sec["term_ids"] = _csr(list(term.values()))
+
+    for name, keys in tables.items():
+        sec[name + "_key"] = [sid(k) for k in keys]
+        sec[name + "_slots"] = _place(_str_hashes(keys))
+    sec["meta"] = [n, sid(""), n_states]
+    sec["str_blob"], sec["str_off"] = _ucs4(list(intern))  # every sid taken
+
+    head = 16 + 16 * len(_SECTIONS)
+    table, chunks, pos = [], [], head
+    for name, dtype in _SECTIONS:
+        b = np.ascontiguousarray(sec[name], dtype=dtype).tobytes()
+        pad = -len(b) % 8
+        table += [pos, len(b)]
+        chunks.append(b + bytes(pad))
+        pos += len(b) + pad
+    return b"".join([_MAGIC, struct.pack("<II", IMAGE_VERSION,
+                                         len(_SECTIONS)),
+                     np.asarray(table, "<u8").tobytes(), *chunks])
 
 
-def _pack_for(kb):
-    """One pack per bundle per process, cached on the bundle itself
-    (broadcast unpickling yields one bundle per executor process)."""
-    pack = kb.__dict__.get("_ck_pack_en")
-    if pack is None:
-        pack = _build_pack(kb)
-        kb.__dict__["_ck_pack_en"] = pack
-    return pack
+_wrapped = (None, None)  # (image, handle) of the last wrap_image call
 
 
-def _atm_pack_for(atm):
-    """One C automaton pack per GazetteerAutomaton per process."""
-    pack = atm.__dict__.get("_ck_atm_pack")
-    if pack is None:
-        ck = _load()
-        pack = ck.build_atm(
-            [(k, tuple(ids)) for k, ids in atm.keys.items()],
-            list(atm.prefixes), list(atm.first))
-        atm.__dict__["_ck_atm_pack"] = pack
-    return pack
+def wrap_image(image):
+    """The kernel's handle on an image (bytes or any buffer), checked once
+    — magic, version, every section bound and index — and then read in
+    place; ValueError on a bad image.  The handle of the last image
+    wrapped is memoized, so a worker that reads the same broadcast value
+    for every batch wraps it once and keeps its fragment cache."""
+    global _wrapped
+    if _wrapped[0] is not image:
+        _wrapped = (image, _load().wrap_image(image))
+    return _wrapped[1]
 
 
 # ---------------------------------------------------------------------------
@@ -307,20 +438,20 @@ def _dates_for(text, split_interval):
     return dates
 
 
-def try_scan_resolve(kb, atm, text, scan_text=None,
-                     list_titles=frozenset(), find_names=False,
-                     mode="default", lang=None, split_interval=True,
-                     as_tuples=False):
-    """Fused scan+resolve in C.  Returns rows, or None when the kernel does
-    not cover this configuration (caller runs atm.scan + resolve_document)."""
-    if FORCE_DISABLE or mode != "default" or find_names \
-            or getattr(lang, "code", None) != "en":
-        return None
+def covers(lang, find_names=False, mode="default") -> bool:
+    """Whether the kernel runs this configuration at all; when not, every
+    document takes the pure-Python path."""
+    return (not FORCE_DISABLE and mode == "default" and not find_names
+            and getattr(lang, "code", None) == "en" and available())
+
+
+def scan_resolve(image, text, scan_text=None, list_titles=frozenset(),
+                 lang=None, split_interval=True, as_tuples=False):
+    """Fused scan+resolve in C over a wrapped image (:func:`wrap_image`)
+    for a configuration :func:`covers` admits.  Returns rows, or None when
+    this document raises ``Fallback`` (the caller runs
+    ``recognize.resolve_in_python``)."""
     ck = _load()
-    if ck is None:
-        return None
-    pack = _pack_for(kb)
-    apack = _atm_pack_for(atm)
     dates = _dates_for(text, split_interval)
     paragraphs = offsets_of_paragraphs(text)
 
@@ -333,7 +464,7 @@ def try_scan_resolve(kb, atm, text, scan_text=None,
 
     try:
         rows = ck.scan_resolve_doc(
-            pack, apack, text,
+            image, text,
             None if scan_text is None or scan_text is text else scan_text,
             dates, paragraphs, lazy, _frag_helper)
     except ck.Fallback:
@@ -343,3 +474,21 @@ def try_scan_resolve(kb, atm, text, scan_text=None,
     return [{"start": s, "end": e, "par": p, "kind": k, "text": t,
              "sense": sn, "iso": iso, "confidence": c}
             for s, e, p, k, t, sn, iso, c in rows]
+
+
+def try_scan_resolve(kb, atm, text, scan_text=None,
+                     list_titles=frozenset(), find_names=False,
+                     mode="default", lang=None, split_interval=True,
+                     as_tuples=False):
+    """:func:`scan_resolve` for object callers: the image of ``kb`` +
+    ``atm`` is built on first use and cached on the bundle (``_ck_*``
+    never rides a pickle).  Returns None when the kernel does not cover
+    this configuration or this document."""
+    if not covers(lang, find_names, mode):
+        return None
+    cached = kb.__dict__.get("_ck_image")
+    if cached is None or cached[0] is not atm:
+        handle = _load().wrap_image(kb_image(kb, atm))
+        cached = kb.__dict__["_ck_image"] = (atm, handle)
+    return scan_resolve(cached[1], text, scan_text, list_titles, lang,
+                        split_interval, as_tuples)

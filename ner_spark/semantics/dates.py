@@ -171,11 +171,15 @@ _ANY_DIGIT_RE = re.compile(r"\d")
 # the huge alternation can be replaced by anchored ``match`` attempts at
 # exactly those candidate positions: the group-1 start of any _ALL_RE
 # match is necessarily a candidate, and the full match starts one char
-# earlier (the consumed ``\\W``) or at offset 0 (the ``^`` branch).  The
-# candidate prefilter is a tiny alternation the regex engine scans at
-# C memchr speed; equivalence with the plain finditer loop is pinned by
-# tests/test_dates.py's differential property test.
-_CAND_RE = re.compile(r"(?i)\d|led|úno|bře|dub|kvě|čer|čec|srp|zář|ríj|lis|pro")
+# earlier (the consumed ``\\W``) or at offset 0 (the ``^`` branch) — so a
+# candidate preceded by a word char can never match and the prefilter's
+# ``(?<!\\w)`` drops it (every candidate char is a word char, so that
+# never hides a later candidate either).  The candidate prefilter is a
+# tiny alternation the regex engine scans at C memchr speed; equivalence
+# with the plain finditer loop is pinned by tests/test_dates.py's
+# differential property test.
+_CAND_RE = re.compile(
+    r"(?i)(?<!\w)(?:\d|led|úno|bře|dub|kvě|čer|čec|srp|zář|ríj|lis|pro)")
 
 
 def _scan_candidates(text: str):

@@ -20,9 +20,12 @@ Brand-new code reproducing the reference's KB semantics:
     order, trailing 'N'); key suitability per namelist.py:968-1015 taking the
     ``derived_names`` branch of the unresolved merge conflict (SURVEY §1.4.5).
 
-The bundle is a plain picklable object: the Spark pipeline broadcasts ONE
-copy per executor — the idiomatic replacement for the reference's POSIX
-shared-memory KB daemon (ner/kb_daemon.py:30-61, SURVEY S5).
+The bundle is a plain picklable object.  The Spark pipeline broadcasts it
+with the automaton and the C kernel's flat KB image (semantics/ckernel.py
+``kb_image``); a Python worker reads the image and unpickles the bundle
+only when a document falls back to Python — the replacement for the
+reference's POSIX shared-memory KB daemon (ner/kb_daemon.py:30-61,
+SURVEY S5); SCALE.md "Memory and spill" has the per-worker bytes.
 """
 
 from __future__ import annotations
@@ -204,11 +207,14 @@ class KBBundle:
     _ctx_kind_np: object = field(default=None, repr=False)
 
     def __getstate__(self):
-        # C-kernel pack capsules (_ck_*, semantics/ckernel.py) are
-        # per-process and rebuilt lazily — never pickled (broadcast or
-        # KB artifact)
-        return {k: v for k, v in self.__dict__.items()
-                if not k.startswith("_ck_")}
+        # only the source state rides a pickle (broadcast or KB artifact):
+        # the derived caches above and the kernel's image handle (_ck_*,
+        # semantics/ckernel.py) are per-process and refill lazily
+        return {"cols": self.cols, "name_dict": self.name_dict,
+                "nationality_forms": self.nationality_forms}
+
+    def __setstate__(self, state):
+        self.__init__(**state)
 
     # -- reference accessor surface ------------------------------------
     def n_rows(self) -> int:

@@ -5,10 +5,11 @@ ner.py:611-615, via ``textnorm.apply_scan_modes`` — the one copy of that
 rule, shared with the Spark loop and the automaton key transform) →
 automaton scan (ner.py:446-482) → per-document resolution
 stages b-k (ner.py:576-714), optionally with unknown-name discovery
-(``-n``).  :func:`scan_and_resolve` is the production per-document hot call
-— batch and streaming reach it through ``pipeline.ner.resolved_docs``, the
-CLI through :func:`recognize` — and the one place that decides between the
-fused C kernel and the pure-Python path.  The Spark pipeline is
+(``-n``).  :func:`scan_and_resolve` is the per-document call on KB
+objects (the CLI reaches it through :func:`recognize`): it runs the fused C
+kernel when that covers the configuration and :func:`resolve_in_python`
+otherwise.  Batch and streaming (``pipeline.ner.resolved_docs``) make the
+same choice on the broadcast KB image.  The Spark pipeline is
 parity-tested against :func:`recognize` (SURVEY §5.1).
 """
 
@@ -34,10 +35,10 @@ def scan_and_resolve(
     as_tuples: bool = False,
     names_strict: bool = False,
 ) -> list:
-    """Scan + resolve one (sanitized) document — the pipeline's per-row hot
-    call.  Dispatches to the fused C kernel (scan, pre-pass and resolution
-    in one native pass) when it covers the configuration; otherwise runs
-    ``automaton.scan`` + :func:`resolve_document` in Python — observably
+    """Scan + resolve one (sanitized) document — the per-row hot call of
+    the CLI and the tools.  Dispatches to the fused C kernel (scan,
+    pre-pass and resolution in one native pass) when it covers the
+    configuration; otherwise runs :func:`resolve_in_python` — observably
     identical by the ckernel differential suite."""
     from . import ckernel
 
@@ -46,6 +47,26 @@ def scan_and_resolve(
         lang, split_interval, as_tuples)
     if rows is not None:
         return rows
+    return resolve_in_python(kb, automaton, text, scan_text, list_titles,
+                             find_names, mode, lang, split_interval,
+                             as_tuples, names_strict)
+
+
+def resolve_in_python(
+    kb: KBBundle,
+    automaton: GazetteerAutomaton,
+    text: str,
+    scan_text: "str | None" = None,
+    list_titles: frozenset[str] = frozenset(),
+    find_names: bool = False,
+    mode: str = "default",
+    lang: LangModule = EN,
+    split_interval: bool = True,
+    as_tuples: bool = False,
+    names_strict: bool = False,
+) -> list:
+    """The pure-Python path: ``automaton.scan`` + :func:`resolve_document`
+    — the kernel's fallback and its fuzz oracle."""
     matches = automaton.scan(scan_text if scan_text is not None else text)
     return resolve_document(
         text, [(m.ids, m.start, m.end, m.fragment) for m in matches], kb,

@@ -48,17 +48,16 @@ def comention_pair_stream(pages: DataFrame, artifacts: KBArtifacts,
     batch KG runs a non-default mode gets a streaming KG built from the
     SAME mention set."""
     src = sanitized_pages(pages, url_col, text_col)
-    bundle_bc = artifacts.bundle_bc
-    atm_bc = artifacts.automaton_bc
+    broadcasts = (artifacts.image_bc, artifacts.bundle_bc,
+                  artifacts.automaton_bc)
     scan = artifacts.scan_config
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bundle = bundle_bc.value
-        atm = atm_bc.value
         for pdf in batches:
             rows = []
-            for url, doc in resolved_docs(pdf["url"], pdf["text"], bundle,
-                                          atm, find_names=find_names, **scan):
+            for url, doc in resolved_docs(pdf["url"], pdf["text"],
+                                          *broadcasts, find_names=find_names,
+                                          **scan):
                 per_par: dict[int, set[int]] = {}
                 for _, _, par, _, _, sense, _, _ in doc:
                     if sense is not None:

@@ -23,7 +23,7 @@ from ner_spark.semantics import ckernel
 from ner_spark.semantics.automaton import GazetteerAutomaton
 from ner_spark.semantics.kb import KBBundle, build_namelist
 from ner_spark.semantics.lang import get_lang
-from ner_spark.semantics.recognize import scan_and_resolve
+from ner_spark.semantics.recognize import resolve_in_python, scan_and_resolve
 from ner_spark.semantics.resolve import resolve_document
 
 pytestmark = pytest.mark.skipif(
@@ -162,3 +162,169 @@ def test_force_disable_roundtrip(env):
     finally:
         ckernel.FORCE_DISABLE = False
     assert r1 == r2 and r1
+
+
+def test_trie_scan_matches_automaton_scan(env):
+    """The kernel walks the automaton as a word-id trie in the KB image:
+    keys with irregular gaps (double space, tab) never match, a key that
+    is only a prefix of another does, longest match wins, punctuation
+    attaches with an empty separator, id lists may be empty or hold 0."""
+    bundle, _, lang, _ = env
+    atm = GazetteerAutomaton.build([
+        ("Marie Krause", [1]), ("Marie Krause Jr.", [2, 0]),
+        ("Hugo  Wagner", [2]), ("Hugo\tWagner", [2]), ("Hugo", [0]),
+        ("Greta Svoboda-Fischer", [3]), ("U.S.", [4]), ("Emil", ()),
+        ("http://x.org/a", [5]), ("Alice Peters", [6, 6, 0]),
+    ])
+    docs = [
+        "Marie Krause met Marie Krause Jr. and Hugo Wagner, Hugo  Wagner.",
+        "Hugo\tWagner and Greta Svoboda-Fischer in the U.S. with Emil.",
+        "see http://x.org/a and Alice Peters.\nMarie\nKrause Marie",
+        "Marie Krause Jr Marie Krause Jr. Greta Svoboda -Fischer U.S",
+    ]
+    for text in docs:
+        py = resolve_in_python(bundle, atm, text, lang=lang, as_tuples=True)
+        ck = ckernel.try_scan_resolve(bundle, atm, text, lang=lang,
+                                      as_tuples=True)
+        assert ck == py, text
+
+
+def test_pickled_bundle_size_unchanged_by_kernel_call(env):
+    """Only the bundle's source state rides a pickle: the derived caches
+    a kernel call (and the image build) fill stay in the process."""
+    import pickle
+
+    bundle, atm, lang, kb_rows = env
+    fresh = pickle.loads(pickle.dumps(bundle))
+    before = len(pickle.dumps(fresh))
+    text = gen_pages(kb_rows, n_pages=1, seed=5)[0]["text"]
+    assert scan_and_resolve(fresh, atm, text, lang=lang, as_tuples=True)
+    assert fresh.__dict__.get("_ck_image") and fresh._type_arr
+    assert len(pickle.dumps(fresh)) == before
+
+
+def _section(image, name):
+    """(offset, nbytes) of a named section of a KB image."""
+    import struct
+
+    i = [n for n, _ in ckernel._SECTIONS].index(name)
+    return struct.unpack_from("<QQ", image, 16 + 16 * i)
+
+
+def test_bad_image_raises_value_error(env):
+    """A truncated, corrupted or old-version image fails when it is
+    wrapped, with ValueError, before the kernel reads any of it."""
+    import struct
+
+    bundle, atm, lang, _ = env
+    image = ckernel.kb_image(bundle, atm)
+    ck = ckernel._load()
+    assert ck.IMAGE_VERSION == ckernel.IMAGE_VERSION
+    # the intact image wraps, also from a misaligned buffer (copied once)
+    text = "Marie Krause met Hugo Wagner. He was here."
+    rows = ckernel.scan_resolve(ck.wrap_image(image), text, lang=lang)
+    shifted = memoryview(b"x" + image)[1:]
+    assert ckernel.scan_resolve(ck.wrap_image(shifted), text,
+                                lang=lang) == rows and rows
+
+    def bad(mutate):
+        b = bytearray(image)
+        mutate(b)
+        return bytes(b)
+
+    name_off, _ = _section(image, "name_sid")
+    slots_off, _ = _section(image, "w_slots")
+    next_off, _ = _section(image, "t_next")
+    cases = {
+        "truncated header": image[:40],
+        "truncated sections": image[:len(image) // 2],
+        "one byte short": image[:-1],
+        "magic": bad(lambda b: b.__setitem__(slice(0, 8), b"NOTANIMG")),
+        "old version": bad(lambda b: struct.pack_into(
+            "<I", b, 8, ckernel.IMAGE_VERSION - 1)),
+        "section count": bad(lambda b: struct.pack_into("<I", b, 12, 3)),
+        "section offset": bad(lambda b: struct.pack_into(
+            "<Q", b, 16 + 16 * 4, len(image) + 8)),
+        "misaligned section": bad(lambda b: struct.pack_into(
+            "<Q", b, 16 + 16 * 4, name_off + 4)),
+        "string id": bad(lambda b: struct.pack_into(
+            "<i", b, name_off + 4, 1 << 30)),
+        "hash slot": bad(lambda b: struct.pack_into(
+            "<i", b, slots_off, 1 << 30)),
+        "trie state": bad(lambda b: struct.pack_into(
+            "<i", b, next_off, 1 << 30)),
+    }
+    for case, img in cases.items():
+        with pytest.raises(ValueError, match="bad KB image"):
+            ck.wrap_image(img)
+        assert img != image, case
+
+
+def test_corrupted_image_never_crashes(env):
+    """Seeded byte flips anywhere in the image: each wrap either raises
+    ValueError or yields an image the kernel scans without crashing
+    (rows or Fallback).  Run under ASan/UBSan by test_sanitizers.py."""
+    bundle, atm, lang, kb_rows = env
+    image = ckernel.kb_image(bundle, atm)
+    ck = ckernel._load()
+    text = gen_pages(kb_rows, n_pages=1, seed=3)[0]["text"]
+    head = 16 + 16 * len(ckernel._SECTIONS)
+    rng = random.Random(9)
+    n_ok = 0
+    for _ in range(300):
+        b = bytearray(image)
+        for _ in range(rng.randint(1, 4)):
+            # the header and table half the time, the sections otherwise
+            pos = rng.randrange(head if rng.random() < 0.5 else len(b))
+            b[pos] ^= 1 << rng.randrange(8)
+        try:
+            handle = ck.wrap_image(bytes(b))
+        except ValueError:
+            continue
+        n_ok += 1
+        ckernel.scan_resolve(handle, text, lang=lang, as_tuples=True)
+    assert n_ok > 0
+
+
+def test_extraction_reads_only_the_image(env, monkeypatch):
+    """resolved_docs hands the kernel only the KB image: when the kernel
+    covers every document, the bundle and automaton broadcasts are never
+    read; when a document falls back they are, and the rows equal the
+    pure-Python path's."""
+    from ner_spark.pipeline.ner import resolved_docs
+
+    bundle, atm, lang, kb_rows = env
+
+    class Value:
+        def __init__(self, value):
+            self._value = value
+
+        @property
+        def value(self):
+            if isinstance(self._value, Exception):
+                raise self._value
+            return self._value
+
+    pages = gen_pages(kb_rows, n_pages=20, seed=13)
+    urls = [p["url"] for p in pages]
+    texts = [p["text"] for p in pages]
+    image = Value(ckernel.kb_image(bundle, atm))
+    unread = Value(AssertionError("broadcast read on the C path"))
+    got = list(resolved_docs(urls, texts, image, unread, unread))
+
+    ckernel.FORCE_DISABLE = True
+    try:
+        want = list(resolved_docs(urls, texts, unread, Value(bundle),
+                                  Value(atm)))
+    finally:
+        ckernel.FORCE_DISABLE = False
+    assert got == want and sum(len(r) for _, r in got) > 50
+
+    # one document falls back: the broadcasts load, rows still equal
+    real = ckernel.scan_resolve
+    monkeypatch.setattr(ckernel, "scan_resolve", lambda img, text, *a, **k: (
+        None if text == texts[3] else real(img, text, *a, **k)))
+    with pytest.raises(AssertionError, match="broadcast read"):
+        list(resolved_docs(urls, texts, image, unread, unread))
+    assert list(resolved_docs(urls, texts, image, Value(bundle),
+                              Value(atm))) == want

@@ -121,11 +121,17 @@ def test_anchored_scan_equals_plain_finditer():
         "edge 2000",
         "2000 edge",
         "ŘÍJ 1999 vs ríj 1999 vs Ríj 1999",
+        # candidates right after a word char (dropped by the prefilter)
+        "a1999 xled é12 1999x",
+        "a1999-2000 x12. 11. 1694 éled. 5, 1200 _1999 ŠPro. 9, 1300",
+        # candidates at offset 1, after a word char and after a non-word one
+        "x1999", "é1999", " 1999", "(1999)", "xlis. 12, 2007", ".lis. 12, 2007",
     ]
     # plus deterministic random soup mixing digits, stems, punctuation
     rng = random.Random(4)
     atoms = ["1999", "12", "led", "pro", "lis", " ", ".", ",", "-", "–",
-             "do", "a", "Z", "\n", "(", "x7", "07", "2021-05-04", "1690s"]
+             "do", "a", "Z", "\n", "(", "x7", "07", "2021-05-04", "1690s",
+             "é", "_", "xled", "a1999"]
     for _ in range(200):
         samples.append("".join(rng.choice(atoms)
                                for _ in range(rng.randrange(0, 40))))

@@ -262,6 +262,8 @@ def test_kb_artifact_save_load_roundtrip(spark, kb_rows, pages_df,
     m_want = sorted(map(key, extract_mentions(pages_df, artifacts).collect()))
     m_got = sorted(map(key, extract_mentions(pages_df, loaded).collect()))
     assert m_got == m_want and len(m_got) > 200
+    # the loaded artifact broadcasts the saved KB image, built nothing
+    assert loaded.image_bc.value == artifacts.image_bc.value
     # stale-version handshake fails fast
     with _pytest.raises(ValueError, match="version mismatch"):
         load_kb_artifact(spark, path, kb_version="v2")
@@ -292,3 +294,14 @@ def test_kb_artifact_save_load_roundtrip(spark, kb_rows, pages_df,
         json.dump(old, fh)
     with _pytest.raises(ValueError, match="recompile"):
         load_kb_artifact(spark, dr_path)
+
+    # so is one whose KB image has another format version
+    from ner_spark.semantics.ckernel import IMAGE_VERSION
+
+    manifest = os.path.join(path, "MANIFEST.json")
+    with open(manifest) as fh:
+        old = dict(json.load(fh), image_format=IMAGE_VERSION - 1)
+    with open(manifest, "w") as fh:
+        json.dump(old, fh)
+    with _pytest.raises(ValueError, match="image format.*recompile"):
+        load_kb_artifact(spark, path, kb_version="v1")

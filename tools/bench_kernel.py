@@ -6,7 +6,9 @@ Two fixtures:
     worst case for the match-path walk;
   * web    — the realistic gen_pages corpus (~0.5-2 mentions / 100 words).
 
-Prints ONE JSON line with MB-chars/s for scan-only and scan+resolve.
+Prints ONE JSON line with MB-chars/s for scan-only and scan+resolve, plus
+the KB image's size, build seconds and wrap seconds (what one worker pays
+before its first document).
 Usage: python tools/bench_kernel.py [n_mb] [--profile]
 """
 
@@ -73,6 +75,14 @@ def run(bundle, atm, texts, resolve: bool) -> tuple[float, int, int]:
     return time.perf_counter() - t0, n_chars, n_out
 
 
+def _wrap_s(ckernel, image: bytearray) -> float:
+    """Seconds to check and wrap a fresh copy of the image (a new object,
+    so the handle memo in ckernel.wrap_image does not answer)."""
+    t0 = time.perf_counter()
+    ckernel.wrap_image(image)
+    return round(time.perf_counter() - t0, 6)
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     mb = float(args[0]) if args else 2.0
@@ -90,6 +100,15 @@ def main() -> None:
 
     trials = 3  # min-of-k: external VM load only ever adds time
     out = {}
+    from ner_spark.semantics import ckernel
+
+    t0 = time.perf_counter()
+    image = ckernel.kb_image(bundle, atm)
+    out["image_bytes"] = len(image)
+    out["image_build_s"] = round(time.perf_counter() - t0, 4)
+    if ckernel.available():
+        out["image_wrap_s"] = min(
+            _wrap_s(ckernel, bytearray(image)) for _ in range(trials))
     for name, texts in (("dense", dense), ("web", web)):
         t_scan, n_chars, n_m = min(
             (run(bundle, atm, texts, resolve=False) for _ in range(trials)),
