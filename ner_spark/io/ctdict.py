@@ -119,7 +119,7 @@ def write_ct(items, path: str) -> int:
     """Compile namelist items into a figa-loadable ``.ct`` double array.
 
     ``items``: iterable of (key, ordered value list) — e.g.
-    ``build_namelist(...).items()`` or ``GazetteerAutomaton.keys.items()``.
+    ``build_namelist(...).items()`` or ``GazetteerAutomaton.iter_keys()``.
     Static XOR packing, sliding-window free-list (deterministic for a
     given input — no randomness); returns the node count
     written.  Keys must not contain NUL or 0x01 bytes (0x01 is the

@@ -6,9 +6,9 @@
     :func:`compile_kb` all call it;
   * :func:`compile_kb` adds the relational ``kb`` DataFrame (with the
     bundle's A10/A11 static scores; used by the triple/attribute stages
-    and as the small side of broadcast joins), builds the C kernel's flat
-    KB image (``ckernel.kb_image``) and broadcasts the three — the
-    replacement for the reference's shared-memory KB daemon
+    and as the small side of broadcast joins), serializes the bundle and
+    the automaton's trie as the C kernel's KB image and broadcasts the
+    three — the replacement for the reference's shared-memory KB daemon
     (ner/kb_daemon.py:30-61) and memory-mapped ``.dct`` automaton.  A
     Python worker reads the image; it unpickles the bundle and the
     automaton only when a document falls back to Python;
@@ -341,7 +341,7 @@ def save_kb_artifact(art: KBArtifacts, path: str,
 
         <path>/kb.parquet/       scored relational KB (kb_df)
         <path>/bundle.pkl        KBBundle (columnar broadcast payload)
-        <path>/automaton.pkl     GazetteerAutomaton
+        <path>/automaton.pkl     GazetteerAutomaton (the word-id trie)
         <path>/kb_image.bin      the C kernel's KB image (ckernel.kb_image)
         <path>/MANIFEST.json     counts, scan config, image format,
                                  version handshake key
@@ -381,8 +381,8 @@ def load_kb_artifact(spark: SparkSession, path: str,
     snapshot, not once per job.  ``path`` is a driver-local or NFS
     directory, read through the local filesystem like
     :func:`save_kb_artifact` writes it.  A MANIFEST without the scan
-    config, or with another KB image format, raises: the artifact must be
-    recompiled.  Nothing is built: the saved image is broadcast as is."""
+    config or with another KB image format, or an old string-path
+    automaton, raises: recompile.  The saved image is broadcast as is."""
     import json as _json
     import pickle
 

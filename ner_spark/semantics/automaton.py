@@ -23,19 +23,19 @@ CEDAR tries).  Reproduces the observable semantics of the reference's
   - offsets are in characters; this module emits 0-based half-open
     [start, end) spans, i.e. already in the form ner.py:426 converts to.
 
-Physical design (performance, not semantics): instead of walking a char
-trie dict-per-node, keys are stored as *word-boundary path strings* —
-``keys[path] → ids`` plus a ``prefixes`` set holding every word-boundary
-prefix of every key and a ``first`` index of key-initial words.  The scan
-tokenizes once (compiled regex, C speed), skips any word that starts no
-key via one dict probe, and otherwise extends the path word-by-word with
-O(1) hash lookups.  This is observably equivalent to the char-trie walk:
-values can only exist at word ends, and a path that is neither a key nor
-a stored prefix can never be completed (same backtrack point as the trie).
-This class is the Python path (fallback and fuzz oracle); the C kernel
-walks the same keys as a word-id trie inside the flat KB image
-(``ckernel.kb_image``), the Spark analogue of the reference's
-memory-mapped ``.dct`` automaton file (figa/src/figa.cpp:22-31).  Link
+Physical design (performance, not semantics): keys are stored as a
+*word-id trie* — ``words`` maps each key word to an id, ``trans`` maps a
+packed step ``(state << 32) | (sep << 31) | word_id`` (``sep`` 1 for a
+" " gap) to the next state, ``term`` maps final states to their ids.  The
+scan tokenizes once (compiled regex, C speed), maps tokens to word ids,
+skips any word with no step from the root via one dict probe, and extends
+a match with one int-keyed probe per word.  Observably equivalent to the
+char-trie walk: values only exist at word ends, and a state with no step
+for the next word can never be completed (same backtrack point).  This
+class is the Python path (fallback and fuzz oracle) and the one source of
+the C kernel's trie: ``ckernel.kb_image`` serializes its three fields into
+the flat KB image, the Spark analogue of the reference's memory-mapped
+``.dct`` automaton file (figa/src/figa.cpp:22-31).  Link
 values are KB row ids; id 0 marks a pronoun / name-fragment key
 (ner.py:417; 'N' links uniq_namelist.py:104-107).
 """
@@ -48,7 +48,6 @@ from typing import Iterable, Iterator, NamedTuple
 
 _ASCII_SPACE = set(" \t\n\r\v\f")
 _ASCII_PUNCT = set(string.punctuation)
-_STRONG = ("\n", "\r")
 
 
 def _is_cntrl(c: str) -> bool:
@@ -118,17 +117,28 @@ class Match(NamedTuple):
     fragment: str
 
 
+_SPACE = 1 << 31        # trie step bit: " " separator before the word
+_WORD = _SPACE - 1      # trie step bits: the word id
+
+
 class GazetteerAutomaton:
-    """Word-hash gazetteer with a token-anchored longest-match walk."""
+    """Word-id trie gazetteer with a token-anchored longest-match walk."""
 
     def __init__(self) -> None:
-        self.keys: dict[str, tuple[int, ...]] = {}   # path → ids
-        self.prefixes: set[str] = set()              # word-boundary prefixes
-        self.first: set[str] = set()                 # key-initial words
+        self.words: dict[str, int] = {}               # word → word id
+        self.trans: dict[int, int] = {}               # step → next state
+        self.term: dict[int, tuple[int, ...]] = {}    # final state → ids
+
+    def __setstate__(self, state: dict) -> None:
+        if "trans" not in state:
+            raise ValueError(
+                "GazetteerAutomaton pickled in the old string-path layout "
+                "(keys/prefixes/first) — recompile the KB artifact")
+        self.__dict__.update(state)
 
     @property
     def n_keys(self) -> int:
-        return len(self.keys)
+        return len(self.term)
 
     @classmethod
     def build(cls, namelist: Iterable[tuple[str, Iterable[int]]]) -> "GazetteerAutomaton":
@@ -138,89 +148,81 @@ class GazetteerAutomaton:
         return atm
 
     def add(self, key: str, ids: Iterable[int]) -> None:
-        """Add a namelist key, BYTE-FAITHFUL in its inter-word gaps.
-
-        The stored path joins the key's words with the RAW gap text between
-        them.  ``scan`` only ever constructs candidate paths with canonical
-        separators ("" for adjacent words, " " for any whitespace run —
-        the reference consumes one delimiter per break,
+        """Add a namelist key as trie steps (the one place a key becomes
+        steps), BYTE-FAITHFUL in its inter-word gaps.  ``scan`` only walks
+        canonical separators ("" for adjacent words, " " for any
+        whitespace run — the reference consumes one delimiter per break,
         figa_cedar.tpp:986-1003), so a key with an irregular gap (double
-        space, tab) can never match — exactly the reference byte-trie's
-        behaviour (figa stores key bytes verbatim).  Whitespace
-        normalization is the NAMELIST BUILDER's job (build_namelist:
-        ``re.sub(r"\\s+", " ", key)``), not the automaton's; every key the
+        space, tab) gets no step past it and never matches — exactly the
+        reference byte-trie's behaviour (figa stores key bytes verbatim).
+        Whitespace normalization is the NAMELIST BUILDER's job
+        (build_namelist: ``re.sub(r"\\s+", " ", key)``); every key the
         pipeline produces is already canonical.  Remaining documented
         divergence: leading/trailing key whitespace is dropped by
         tokenization (the reference would store it → unmatchable), and
-        keys containing a strong delimiter (\\n/\\r) are rejected outright."""
+        keys containing a strong delimiter (\\n/\\r) are rejected."""
         words = tokenize(key)
-        if not words:
-            return
-        if any(w.sep is None for w in words[:-1]):
-            return  # key contains a strong delimiter → unmatchable
-        path = words[0].text
-        self.first.add(path)
-        parts = [path]
-        for w0, w1 in zip(words, words[1:]):
-            self.prefixes.add("".join(parts))
-            parts.append(key[w0.end:w1.start])  # raw gap, byte-faithful
-            parts.append(w1.text)
-        self.keys["".join(parts)] = tuple(ids)
+        if not words or any(w.sep is None for w in words[:-1]):
+            return  # empty, or a strong delimiter inside → unmatchable
+        state, end = 0, words[0].start
+        for w in words:
+            gap = key[end:w.start]
+            if gap not in ("", " "):
+                return  # irregular gap: the scan never builds this path
+            wid = self.words.setdefault(w.text, len(self.words))
+            state = self.trans.setdefault(
+                (state << 32) | (_SPACE if gap else 0) | wid,
+                len(self.trans) + 1)
+            end = w.end
+        self.term[state] = tuple(ids)
 
     def scan(self, text: str) -> list[Match]:
         """Longest-match, non-overlapping scan; matches start/end at words.
 
-        Hot path: one ``finditer`` pass fills flat span arrays (no Word
-        namedtuple per token), and the inter-word separator is computed
-        LAZILY — only while extending a candidate match path, which for
-        typical text is a small fraction of words (most fail the ``first``
-        probe and cost exactly one dict lookup).  Observably identical to
-        walking :func:`tokenize` output."""
-        # two C-side passes beat one Python loop with three appends:
-        # findall materializes the token strings without match objects,
-        # and the span listcomp is one method call per token
-        texts: list[str] = _TOKEN_RE.findall(text)
-        spans = [mo.span() for mo in _TOKEN_RE.finditer(text)]
+        Hot path: one ``finditer`` pass keeps the match objects (no Word
+        namedtuple per token), one C-side ``map`` gives the word ids, and
+        offsets and the inter-word separator are read LAZILY — only while
+        extending a candidate match, a small fraction of words in typical
+        text (most have no step from the root: one dict lookup).
+        Observably identical to walking :func:`tokenize` output."""
+        mos = list(_TOKEN_RE.finditer(text))
+        # word ids by one C-side map; None: the word is in no key
+        wids = list(map(self.words.get, map(re.Match.group, mos)))
+        trans, term = self.trans, self.term
         out: list[Match] = []
-        keys = self.keys
-        prefixes = self.prefixes
-        first = self.first
-        nw = len(texts)
+        nw = len(mos)
         i = 0
         while i < nw:
-            word = texts[i]
-            if word not in first:
+            state = trans.get(wids[i])  # root step: state 0, sep ""
+            if state is None:
                 i += 1
                 continue
-            path = word
             j = i
-            best_j = -1
-            best_ids: tuple[int, ...] | None = None
+            best_j, best_ids = -1, None
             while True:
-                ids = keys.get(path)
+                ids = term.get(state)
                 if ids is not None:
                     best_j, best_ids = j, ids
-                if path not in prefixes:
-                    break
                 if j + 1 >= nw:
                     break  # EOF acts as a strong delimiter
-                gap_s = spans[j][1]
-                gap_e = spans[j + 1][0]
-                if gap_s == gap_e:
-                    sep = ""
-                else:
+                wid = wids[j + 1]
+                if wid is None:
+                    break
+                gap_s = mos[j].end()
+                step = (state << 32) | wid
+                if gap_s != mos[j + 1].start():
                     if text[gap_s] in "\n\r":
                         # strong delimiter = newline as the FIRST delimiter
-                        # char after the word (figa_cedar.tpp:1005-1012);
-                        # a newline deeper in the gap is consumed as an
-                        # empty word and does not break the path
+                        # char after the word (figa_cedar.tpp:1005-1012); a
+                        # newline deeper in the gap does not break the path
                         break
-                    sep = " "
+                    step |= _SPACE
+                state = trans.get(step)
+                if state is None:
+                    break
                 j += 1
-                path = path + sep + texts[j]
             if best_ids is not None:
-                start = spans[i][0]
-                end = spans[best_j][1]
+                start, end = mos[i].start(), mos[best_j].end()
                 out.append(Match(best_ids, start, end, text[start:end]))
                 i = best_j + 1  # consume matched words → no overlaps
             else:
@@ -228,19 +230,27 @@ class GazetteerAutomaton:
         return out
 
     def iter_keys(self) -> Iterator[tuple[str, tuple[int, ...]]]:
-        """Yield (key path, ids) — used by the reflexive round-trip test,
-        the same contract as figa/test_figa.py:85-98."""
-        yield from self.keys.items()
+        """Yield (key path, ids), each path rebuilt from the trie — used by
+        the reflexive round-trip test, the same contract as
+        figa/test_figa.py:85-98.  A state is numbered after its parent,
+        so one pass over the steps spells every state's path."""
+        words = list(self.words)
+        path = {0: ""}
+        for step, state in self.trans.items():
+            path[state] = (path[step >> 32] + (" " if step & _SPACE else "")
+                           + words[step & _WORD])
+        for state, ids in self.term.items():
+            yield path[state], ids
 
     def autocomplete(self, prefix: str, m: int = 5) -> list[tuple[str, tuple[int, ...]]]:
         """First ``m`` keys strictly extending ``prefix``, in byte order —
         the trie-DFS emission order of the reference's autocomplete
         (figa_cedar.tpp:66-118; default top-k 5, main.cpp:59-60).  The
         exact prefix itself is not returned (the DFS starts below it)."""
-        hits = [k for k in self.keys
+        hits = [(k, ids) for k, ids in self.iter_keys()
                 if k.startswith(prefix) and k != prefix]
-        hits.sort(key=lambda k: k.encode())
-        return [(k, self.keys[k]) for k in hits[:m]]
+        hits.sort(key=lambda kv: kv[0].encode())
+        return hits[:m]
 
 
 def byte_offset_matches(text: str, matches: "list[Match]") -> "list[Match]":

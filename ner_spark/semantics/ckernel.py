@@ -275,17 +275,16 @@ def kb_image(kb, automaton) -> bytes:
     (magic, version, a table of 8-byte-aligned sections), the interned
     UCS-4 strtab, the fixed-width per-row arrays, CSR id lists, linear-
     probing tables for the subname dict, the nationality forms and the
-    pronouns, and the automaton as a word-id trie.  A trie step maps
-    ``(state, sep ∈ {"", " "}, word id)`` to the next state and final
-    states carry their ids; a key with an irregular gap (which the scan
-    never builds) gets no transition, so it never matches — as in
-    :class:`GazetteerAutomaton`.  Built once per KB on the driver; numpy
-    only, no compiled code."""
+    pronouns, and the automaton's word-id trie.  The trie sections only
+    serialize :class:`GazetteerAutomaton`'s own fields: ``words`` is the
+    word table, ``trans`` (packed ``(state, sep ∈ {"", " "}, word id)``
+    step → next state) the hashed step table, ``term`` the final states'
+    CSR ids.  Built once per KB on the driver; numpy only, no compiled
+    code."""
     from collections import defaultdict
 
     import numpy as np
 
-    from .automaton import _TOKEN_RE
     from .lang import EN
 
     intern: dict[str, int] = defaultdict(lambda: len(intern))
@@ -336,26 +335,11 @@ def kb_image(kb, automaton) -> bytes:
     tables["pron"] = list(_PRON_MASK)
     sec["pron_mask"] = list(_PRON_MASK.values())
 
-    # word-id trie over the automaton's key paths (tokenized as
-    # GazetteerAutomaton.add tokenized the raw keys)
-    words: dict[str, int] = {}
-    trans: dict[tuple[int, int, int], int] = {}
-    term: dict[int, tuple] = {}
-    for path, ids in automaton.keys.items():
-        state, end = 0, None
-        for m in _TOKEN_RE.finditer(path):
-            gap = "" if end is None else path[end:m.start()]
-            if gap not in ("", " "):
-                break  # irregular gap: the scan never builds this path
-            wid = words.setdefault(m.group(), len(words))
-            state = trans.setdefault((state, len(gap), wid), len(trans) + 1)
-            end = m.end()
-        else:
-            term[state] = ids
-    tables["w"] = list(words)
+    # the automaton's word-id trie, as GazetteerAutomaton.add built it
+    trans, term = automaton.trans, automaton.term
+    tables["w"] = list(automaton.words)
     n_states = len(trans) + 1
-    tk = np.array(list(trans), np.uint64).reshape(-1, 3)
-    tkey = (tk[:, 0] << np.uint64(32)) | (tk[:, 1] << np.uint64(31)) | tk[:, 2]
+    tkey = np.fromiter(trans, np.uint64, len(trans))
     slots = _place(_mix64(tkey))
     sec["t_keys"] = np.full(len(slots), 2**64 - 1, np.uint64)
     sec["t_next"] = np.full(len(slots), -1, np.int32)

@@ -101,10 +101,12 @@ def test_compile_kb_qid_mode(spark, kb_rows):
     art = compile_kb(spark, qrows, qid_mode=True)
     base = compile_kb(spark, kb_rows)
     # same key set, values remapped line→qid (line 3 kept as-is)
+    art_keys = dict(art.automaton.iter_keys())
+    base_keys = dict(base.automaton.iter_keys())
     assert art.automaton.n_keys == base.automaton.n_keys
-    assert set(art.automaton.keys) == set(base.automaton.keys)
-    for key, ids in base.automaton.keys.items():
-        got = art.automaton.keys[key]
+    assert set(art_keys) == set(base_keys)
+    for key, ids in base_keys.items():
+        got = art_keys[key]
         want: list[int] = []
         for i in ids:
             v = i if i in (0, 3) else 1000 + i
@@ -125,24 +127,25 @@ def test_per_type_autocomplete_automata(kb_rows):
 
     atms = compile_autocomplete(kb_rows)
     assert set(atms) == {"p", "l", "x"}
+    keys = {cls: dict(atm.iter_keys()) for cls, atm in atms.items()}
     kb = KBBundle.from_rows(kb_rows)
     # every key is its own NONACCENT form; no fragment marker anywhere
     for cls, atm in atms.items():
         assert atm.n_keys > 0
-        for key, ids in atm.keys.items():
+        for key, ids in keys[cls].items():
             assert key == remove_accent(key.lower()), (cls, key)
             assert 0 not in ids, (cls, key)
     # class filtering: p links are all persons, l all geographical
-    for key, ids in atms["p"].keys.items():
+    for key, ids in keys["p"].items():
         assert all("person" in kb.get_ent_type(i) for i in ids), key
-    for key, ids in atms["l"].keys.items():
+    for key, ids in keys["l"].items():
         assert all("geographical" in kb.get_ent_type(i) for i in ids), key
     # x carries every class: each p/l entry's ids are a subset of x's
     for cls in ("p", "l"):
-        for key, ids in atms[cls].keys.items():
-            assert set(ids) <= set(atms["x"].keys[key]), (cls, key)
+        for key, ids in keys[cls].items():
+            assert set(ids) <= set(keys["x"][key]), (cls, key)
     # the walk works: a person surname prefix suggests person entries only
-    some_person = next(k for k in atms["p"].keys if " " in k)
+    some_person = next(k for k in keys["p"] if " " in k)
     prefix = some_person[: len(some_person) // 2]
     hits = atms["p"].autocomplete(prefix, 5)
     assert hits and all(k.startswith(prefix) for k, _ in hits)

@@ -167,9 +167,12 @@ def test_writer_scales_compact(write, read, ext, tmp_path):
     assert n <= 4 * total_bytes, f"sparse output: {n} units"
 
 
-def test_migrate_automaton_roundtrip(tmp_path):
+def test_migrate_automaton_roundtrip(kb_rows, pages_rows, tmp_path):
     """tools/migrate_automaton: namelist TSV → .dct → .ct → TSV
-    preserves the namelist exactly."""
+    preserves the namelist exactly; and a ``.ct``/``.dct`` converts into
+    the automaton's trie with no code of its own — the automaton built
+    from either file has the fixture KB's keys and matches on the
+    fixture pages."""
     import importlib.util
     spec = importlib.util.spec_from_file_location(
         "migrate_automaton", os.path.join(
@@ -188,6 +191,21 @@ def test_migrate_automaton_roundtrip(tmp_path):
     for src, dst in zip(chain, chain[1:]):
         mig._write(mig._read(src), dst)
     assert mig._read(chain[-1]) == NAMELIST
+
+    from ner_spark.kb.build import compile_gazetteer
+    from ner_spark.semantics.automaton import GazetteerAutomaton
+
+    _, src = compile_gazetteer(kb_rows)
+    texts = [p["text"] for p in pages_rows]
+    want = [src.scan(t) for t in texts]
+    assert sum(map(len, want)) > 100
+    for write, read, ext in ((write_ct, read_ct, "ct"),
+                             (write_dct, read_dct, "dct")):
+        out = str(tmp_path / f"kb.{ext}")
+        write(src.iter_keys(), out)
+        atm = GazetteerAutomaton.build(read(out).items())
+        assert dict(atm.iter_keys()) == dict(src.iter_keys()), ext
+        assert [atm.scan(t) for t in texts] == want, ext
 
 
 # -- layer 2b: randomized differential fuzz vs the reference scanner --------

@@ -305,3 +305,19 @@ def test_kb_artifact_save_load_roundtrip(spark, kb_rows, pages_df,
         json.dump(old, fh)
     with _pytest.raises(ValueError, match="image format.*recompile"):
         load_kb_artifact(spark, path, kb_version="v1")
+
+    # and so is an automaton pickled in the old string-path layout
+    # (keys/prefixes/first): at load, not at the first Python fallback
+    import pickle
+
+    from ner_spark.semantics.automaton import GazetteerAutomaton
+
+    with open(manifest, "w") as fh:
+        json.dump(dict(old, image_format=IMAGE_VERSION), fh)
+    stale = GazetteerAutomaton.__new__(GazetteerAutomaton)
+    stale.__dict__.update(keys={"Praha": (1,)}, prefixes=set(),
+                          first={"Praha"})
+    with open(os.path.join(path, "automaton.pkl"), "wb") as fh:
+        pickle.dump(stale, fh)
+    with _pytest.raises(ValueError, match="string-path layout.*recompile"):
+        load_kb_artifact(spark, path, kb_version="v1")

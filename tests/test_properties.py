@@ -46,31 +46,41 @@ def test_scan_matches_never_overlap_and_slice_correctly(text):
         prev_end = m.end
 
 
+# canonical keys over plain words, punctuation-adjacent words (U.S.,
+# x-y) and URIs; id lists that are empty or hold the fragment marker 0
+KEY = st.one_of(
+    st.text(alphabet="abcXY .-", min_size=1, max_size=12),
+    st.sampled_from(["U.S.", "the U.S. army", "x-y", "x - y", "a.b-c",
+                     "http://ex.org/a,b?c", "see https://ex.org/a b"]))
+IDS = st.lists(st.integers(min_value=0, max_value=3), max_size=3).map(tuple)
+
+
 @settings(max_examples=100, deadline=None)
-@given(st.lists(st.text(alphabet="abcXY ", min_size=1, max_size=12),
-                min_size=1, max_size=20))
-def test_reflexive_roundtrip_on_random_keys(keys):
+@given(st.lists(st.tuples(KEY, IDS), min_size=1, max_size=20))
+def test_reflexive_roundtrip_on_random_keys(entries):
     """The reflexive contract holds for CANONICAL keys — the only kind the
     pipeline produces (build_namelist collapses \\s+ and strips).  Raw keys
     with irregular gaps are byte-faithfully stored and must match nothing
-    (the reference byte-trie's behaviour) — asserted in the else branch."""
+    (the reference byte-trie's behaviour) — asserted in the else branch.
+    ``iter_keys`` spells every canonical key back from the trie."""
     import re
 
     namelist = {}
     irregular = []
-    for i, k in enumerate(keys):
+    for k, ids in entries:
         canon = re.sub(r"\s+", " ", k).strip()
         if not tokenize(canon):
             continue
         if canon == k:
-            namelist.setdefault(k, i + 1)
+            namelist.setdefault(k, ids)
         elif re.sub(r"\s+", " ", k.strip()) != k.strip():
             # irregular INTERNAL gap → unmatchable; keys differing only in
             # leading/trailing whitespace stay matchable (documented
             # divergence: tokenization drops the outer whitespace)
             irregular.append(k)
-    atm = GazetteerAutomaton.build(
-        (k, (v,)) for k, v in namelist.items())
+    atm = GazetteerAutomaton.build(namelist.items())
+    assert dict(atm.iter_keys()) == namelist
+    assert atm.n_keys == len(list(atm.iter_keys()))
     for key, ids in atm.iter_keys():
         ms = atm.scan(key)
         assert len(ms) == 1
@@ -90,14 +100,23 @@ def test_sanitize_idempotent_and_length_preserving(text):
     assert ";" not in s
 
 
-def _scan_via_tokenize(atm, text):
-    """Straightforward walk over tokenize() output — the pre-optimization
-    algorithm, kept as the semantic spec for the lazy-separator scan."""
+def _scan_via_tokenize(namelist, text):
+    """Straightforward walk over tokenize() output, with the namelist's
+    keys as word-boundary path strings (raw gaps kept, so a key with an
+    irregular gap is a path the walk never builds) — the pre-trie
+    algorithm, kept as the semantic spec for the trie scan."""
     from ner_spark.semantics.automaton import Match, tokenize
 
+    keys, prefixes, first = {}, set(), set()
+    for key, ids in namelist:
+        kw = tokenize(key)
+        if not kw or any(w.sep is None for w in kw[:-1]):
+            continue  # strong delimiter inside → unmatchable
+        first.add(kw[0].text)
+        prefixes.update(key[kw[0].start:w.end] for w in kw[:-1])
+        keys[key[kw[0].start:kw[-1].end]] = tuple(ids)
     words = tokenize(text)
     out = []
-    keys, prefixes, first = atm.keys, atm.prefixes, atm.first
     nw = len(words)
     i = 0
     while i < nw:
@@ -131,11 +150,13 @@ def _scan_via_tokenize(atm, text):
 @settings(max_examples=200, deadline=None)
 @given(st.text(alphabet=st.characters(codec="utf-8"), max_size=200))
 def test_optimized_scan_equals_tokenize_walk(text):
-    atm = GazetteerAutomaton.build([
+    namelist = [
         ("ab", (1,)), ("ab cd", (2,)), ("cd", (3,)), ("x-y", (4,)),
         ("http://a.b/c", (5,)), ("-", (6,)), ("a b c d", (7,)),
-    ])
-    assert atm.scan(text) == _scan_via_tokenize(atm, text)
+        ("x\ty", (8,)), ("ab\ncd", (9,)),
+    ]
+    atm = GazetteerAutomaton.build(namelist)
+    assert atm.scan(text) == _scan_via_tokenize(namelist, text)
 
 
 @settings(max_examples=100, deadline=None)
@@ -143,8 +164,9 @@ def test_optimized_scan_equals_tokenize_walk(text):
                 min_size=1, max_size=8),
        st.text(alphabet="ab -\n.x", max_size=120))
 def test_optimized_scan_equals_walk_random_keys(keys, text):
-    atm = GazetteerAutomaton.build([(k, (i + 1,)) for i, k in enumerate(keys)])
-    assert atm.scan(text) == _scan_via_tokenize(atm, text)
+    namelist = [(k, (i + 1,)) for i, k in enumerate(keys)]
+    atm = GazetteerAutomaton.build(namelist)
+    assert atm.scan(text) == _scan_via_tokenize(namelist, text)
 
 
 @settings(max_examples=150, deadline=None)

@@ -8,7 +8,7 @@ Two fixtures:
 
 Prints ONE JSON line with MB-chars/s for scan-only and scan+resolve, plus
 the KB image's size, build seconds and wrap seconds (what one worker pays
-before its first document).
+before its first document) and the pickled automaton's size.
 Usage: python tools/bench_kernel.py [n_mb] [--profile]
 """
 
@@ -18,6 +18,7 @@ import cProfile
 import json
 import pstats
 import os
+import pickle
 import sys
 import time
 
@@ -106,6 +107,7 @@ def main() -> None:
     image = ckernel.kb_image(bundle, atm)
     out["image_bytes"] = len(image)
     out["image_build_s"] = round(time.perf_counter() - t0, 4)
+    out["automaton_bytes"] = len(pickle.dumps(atm, pickle.HIGHEST_PROTOCOL))
     if ckernel.available():
         out["image_wrap_s"] = min(
             _wrap_s(ckernel, bytearray(image)) for _ in range(trials))
