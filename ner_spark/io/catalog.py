@@ -26,7 +26,6 @@ table (tests/test_lineage.py kills between buckets and re-runs).
 
 from __future__ import annotations
 
-import json
 import os
 from contextlib import contextmanager
 from typing import Callable
@@ -56,7 +55,6 @@ def dynamic_partition_overwrite(spark: SparkSession):
 
 LINEAGE_DIR = "_lineage"
 LINEAGE_SCHEMA = "bucket int, n_rows long, fingerprint long"
-MANIFEST = "_manifest.json"
 
 
 def iceberg_available(spark: SparkSession) -> bool:
@@ -159,14 +157,11 @@ def resumable_write(df: DataFrame, path: str, key: str = "subj",
         spark, path, n_buckets,
         lambda wave: bdf.filter(F.col("bucket").isin(wave)),
         fail_after_buckets=fail_after_buckets)
-    manifest = {
+    return {
         "n_buckets": n_buckets, "key": key,
         "completed": list(range(n_buckets)),
         "skipped_resume": sorted(set(range(n_buckets)) - set(todo)),
     }
-    with open(os.path.join(path, MANIFEST), "w") as f:
-        json.dump(manifest, f)
-    return manifest
 
 
 def read_table(spark: SparkSession, path: str) -> DataFrame:

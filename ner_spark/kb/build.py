@@ -7,11 +7,11 @@
   * :func:`compile_kb` adds the relational ``kb`` DataFrame (with the
     bundle's A10/A11 static scores; used by the triple/attribute stages
     and as the small side of broadcast joins), serializes the bundle and
-    the automaton's trie as the C kernel's KB image and broadcasts the
-    three — the replacement for the reference's shared-memory KB daemon
-    (ner/kb_daemon.py:30-61) and memory-mapped ``.dct`` automaton.  A
-    Python worker reads the image; it unpickles the bundle and the
-    automaton only when a document falls back to Python;
+    the automaton's trie as the C kernel's KB image (its only serialized
+    form) and broadcasts the two — the replacement for the reference's
+    shared-memory KB daemon (ner/kb_daemon.py:30-61) and ``.dct`` file.
+    A worker reads the image; only a Python fallback unpickles the bundle
+    and decodes the automaton (``ckernel.image_automaton``);
   * :func:`save_kb_artifact` / :func:`load_kb_artifact` persist that
     compile as the one reusable, versioned KB artifact.
 
@@ -25,12 +25,14 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass
+from hashlib import sha256
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ner_spark.semantics.automaton import GazetteerAutomaton
-from ner_spark.semantics.ckernel import IMAGE_VERSION, kb_image
+from ner_spark.semantics.ckernel import IMAGE_VERSION, image_automaton, \
+    kb_image
 from ner_spark.semantics.kb import (KB_COLUMNS, KBBundle,
                                     build_autocomplete_namelists,
                                     build_namelist, build_uri_namelist,
@@ -119,7 +121,6 @@ class KBArtifacts:
 
     kb_df: DataFrame          # with static scores
     bundle_bc: "object"       # Broadcast[KBBundle]
-    automaton_bc: "object"    # Broadcast[GazetteerAutomaton]
     image_bc: "object"        # Broadcast[bytes]: ckernel.kb_image
     n_entities: int
     n_keys: int
@@ -137,7 +138,7 @@ class KBArtifacts:
 
     @property
     def automaton(self) -> GazetteerAutomaton:
-        return self.automaton_bc.value
+        return image_automaton(self.image_bc.value)
 
 
 def _transform_namelist(namelist: dict[str, list[int]], lowercase: bool,
@@ -319,7 +320,6 @@ def compile_kb(spark: SparkSession, rows: list[dict],
     return KBArtifacts(
         kb_df=kb_df,
         bundle_bc=sc.broadcast(bundle),
-        automaton_bc=sc.broadcast(automaton),
         image_bc=sc.broadcast(kb_image(bundle, automaton)),
         n_entities=bundle.n_rows(),
         n_keys=automaton.n_keys,
@@ -341,12 +341,12 @@ def save_kb_artifact(art: KBArtifacts, path: str,
 
         <path>/kb.parquet/       scored relational KB (kb_df)
         <path>/bundle.pkl        KBBundle (columnar broadcast payload)
-        <path>/automaton.pkl     GazetteerAutomaton (the word-id trie)
-        <path>/kb_image.bin      the C kernel's KB image (ckernel.kb_image)
-        <path>/MANIFEST.json     counts, scan config, image format,
-                                 version handshake key
+        <path>/kb_image.bin      the C kernel's KB image (ckernel.kb_image),
+                                 also the automaton's only serialized form
+        <path>/MANIFEST.json     counts, scan config, image format and
+                                 sha256, version handshake key
 
-    ``path`` is a driver-local or NFS directory: all five files go
+    ``path`` is a driver-local or NFS directory: all four files go
     through the local filesystem (``kb.parquet`` as a ``file://`` URI,
     whatever the Hadoop default FS is), so the artifact is never split
     across two filesystems.
@@ -362,14 +362,13 @@ def save_kb_artifact(art: KBArtifacts, path: str,
     art.kb_df.write.mode("overwrite").parquet(_local_uri(path, "kb.parquet"))
     with open(os.path.join(path, "bundle.pkl"), "wb") as fh:
         pickle.dump(art.bundle, fh, protocol=pickle.HIGHEST_PROTOCOL)
-    with open(os.path.join(path, "automaton.pkl"), "wb") as fh:
-        pickle.dump(art.automaton, fh, protocol=pickle.HIGHEST_PROTOCOL)
     with open(os.path.join(path, "kb_image.bin"), "wb") as fh:
         fh.write(art.image_bc.value)
     with open(os.path.join(path, "MANIFEST.json"), "w") as fh:
         _json.dump({"n_entities": art.n_entities, "n_keys": art.n_keys,
-                    "kb_version": kb_version,
-                    "image_format": IMAGE_VERSION, **art.scan_config}, fh)
+                    "kb_version": kb_version, "image_format": IMAGE_VERSION,
+                    "image_sha256": sha256(art.image_bc.value).hexdigest(),
+                    **art.scan_config}, fh)
 
 
 def load_kb_artifact(spark: SparkSession, path: str,
@@ -381,8 +380,9 @@ def load_kb_artifact(spark: SparkSession, path: str,
     snapshot, not once per job.  ``path`` is a driver-local or NFS
     directory, read through the local filesystem like
     :func:`save_kb_artifact` writes it.  A MANIFEST without the scan
-    config or with another KB image format, or an old string-path
-    automaton, raises: recompile.  The saved image is broadcast as is."""
+    config, with another KB image format or with an ``image_sha256``
+    that is missing or not the image's (``wrap_image`` checks bounds, not
+    content) raises: recompile.  The image is broadcast as is."""
     import json as _json
     import pickle
 
@@ -401,19 +401,19 @@ def load_kb_artifact(spark: SparkSession, path: str,
             f"KB artifact {path} has KB image format "
             f"{manifest.get('image_format')!r}, this kernel reads "
             f"{IMAGE_VERSION} — recompile it")
-    with open(os.path.join(path, "bundle.pkl"), "rb") as fh:
-        bundle = pickle.load(fh)
-    with open(os.path.join(path, "automaton.pkl"), "rb") as fh:
-        automaton = pickle.load(fh)
     with open(os.path.join(path, "kb_image.bin"), "rb") as fh:
         image = fh.read()
+    if manifest.get("image_sha256") != sha256(image).hexdigest():
+        raise ValueError(f"KB artifact {path}: kb_image.bin does not match "
+                         f"the image_sha256 of its MANIFEST — recompile it")
+    with open(os.path.join(path, "bundle.pkl"), "rb") as fh:
+        bundle = pickle.load(fh)
     kb_df = spark.read.parquet(_local_uri(path, "kb.parquet")).cache()
     kb_df.count()
     sc = spark.sparkContext
     return KBArtifacts(
         kb_df=kb_df,
         bundle_bc=sc.broadcast(bundle),
-        automaton_bc=sc.broadcast(automaton),
         image_bc=sc.broadcast(image),
         n_entities=manifest["n_entities"],
         n_keys=manifest["n_keys"],

@@ -5,8 +5,8 @@ scan + disambiguation + coreference — is ONE narrow ``mapInPandas`` stage
 over the pages table.  The reference has no cross-document state
 (ner.py:837-856 resets per doc), so this stage needs **zero shuffles**: one
 Arrow batch in, mention rows out, the C kernel reading the broadcast KB
-image in place (the bundle and automaton broadcasts are unpickled only for
-a document that falls back to Python).  Everything relational (dedup,
+image in place (a document that falls back to Python unpickles the bundle
+and decodes the automaton from the image).  Everything relational (dedup,
 co-mention join, canonicalization) happens downstream on the much smaller
 mentions/triples tables.
 
@@ -52,7 +52,7 @@ def sanitized_pages(pages: DataFrame, url_col: str = "url",
     )
 
 
-def resolved_docs(urls, texts, image_bc, bundle_bc, atm_bc,
+def resolved_docs(urls, texts, image_bc, bundle_bc,
                   lang: str = "en", lowercase: bool = False,
                   deaccent: bool = False, find_names: bool = False,
                   names_strict: bool = False):
@@ -62,9 +62,9 @@ def resolved_docs(urls, texts, image_bc, bundle_bc, atm_bc,
     tuples.  It runs on executors, so the scan modes come as plain values
     (the artifact's ``scan_config``); see :func:`extract_mentions`.
 
-    ``image_bc``, ``bundle_bc`` and ``atm_bc`` are the artifact's
-    broadcasts (anything with a ``.value``).  The C kernel gets only the
-    KB image; the bundle and the automaton are read the first time a
+    ``image_bc`` and ``bundle_bc`` are the artifact's broadcasts (anything
+    with a ``.value``).  The C kernel gets only the KB image; the bundle
+    is read, and the automaton decoded from the image, the first time a
     document falls back to Python."""
     from ner_spark.semantics import ckernel
     from ner_spark.semantics.lang import get_lang
@@ -80,9 +80,9 @@ def resolved_docs(urls, texts, image_bc, bundle_bc, atm_bc,
             image, text, scan_text, lang=lang_mod, as_tuples=True)
         if rows is None:
             rows = resolve_in_python(
-                bundle_bc.value, atm_bc.value, text, scan_text,
-                find_names=find_names, lang=lang_mod, as_tuples=True,
-                names_strict=names_strict)
+                bundle_bc.value, ckernel.image_automaton(image_bc.value),
+                text, scan_text, find_names=find_names, lang=lang_mod,
+                as_tuples=True, names_strict=names_strict)
         yield url, rows
 
 
@@ -97,14 +97,15 @@ def scan_mentions(pages: DataFrame, artifacts: KBArtifacts,
     (figa/src/main.cpp:53,108-110): start/end become offsets into the
     UTF-8 byte stream of that scanned text."""
     src = sanitized_pages(pages, url_col, text_col)
-    atm_bc = artifacts.automaton_bc
+    image_bc = artifacts.image_bc
     lowercase, deaccent = artifacts.lowercase, artifacts.deaccent
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ner_spark.semantics.automaton import byte_offset_matches
+        from ner_spark.semantics.ckernel import image_automaton
         from ner_spark.semantics.textnorm import apply_scan_modes
 
-        atm = atm_bc.value
+        atm = image_automaton(image_bc.value)
         for pdf in batches:
             rows = []
             for url, text in zip(pdf["url"], pdf["text"]):
@@ -139,8 +140,7 @@ def extract_mentions(pages: DataFrame, artifacts: KBArtifacts,
     caveat (bug-for-bug parity).  ``find_names`` enables unknown-name
     discovery (``-n``, ner.py:696-697)."""
     src = sanitized_pages(pages, url_col, text_col)
-    broadcasts = (artifacts.image_bc, artifacts.bundle_bc,
-                  artifacts.automaton_bc)
+    broadcasts = (artifacts.image_bc, artifacts.bundle_bc)
     scan = artifacts.scan_config
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

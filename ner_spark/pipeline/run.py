@@ -3,7 +3,7 @@
 Stage graph (SURVEY §4 target plan):
 
   pages ──filter todo url-buckets──(narrow mapInPandas, broadcast
-        KB+automaton)──► mentions
+        KB bundle + KB image)──► mentions
   mentions ──checkpoint──┬─► mention triples  (narrow)
                          └─► co-mention edges (shuffle url,par → agg)
   kb ──────────────────────► type/attribute triples (narrow)

@@ -35,7 +35,9 @@ for the next word can never be completed (same backtrack point).  This
 class is the Python path (fallback and fuzz oracle) and the one source of
 the C kernel's trie: ``ckernel.kb_image`` serializes its three fields into
 the flat KB image, the Spark analogue of the reference's memory-mapped
-``.dct`` automaton file (figa/src/figa.cpp:22-31).  Link
+``.dct`` automaton file (figa/src/figa.cpp:22-31), and
+``ckernel.image_automaton`` decodes them back — the image is the only
+serialized automaton a KB artifact stores or broadcasts.  Link
 values are KB row ids; id 0 marks a pronoun / name-fragment key
 (ner.py:417; 'N' links uniq_namelist.py:104-107).
 """
@@ -128,13 +130,6 @@ class GazetteerAutomaton:
         self.words: dict[str, int] = {}               # word → word id
         self.trans: dict[int, int] = {}               # step → next state
         self.term: dict[int, tuple[int, ...]] = {}    # final state → ids
-
-    def __setstate__(self, state: dict) -> None:
-        if "trans" not in state:
-            raise ValueError(
-                "GazetteerAutomaton pickled in the old string-path layout "
-                "(keys/prefixes/first) — recompile the KB artifact")
-        self.__dict__.update(state)
 
     @property
     def n_keys(self) -> int:

@@ -8,15 +8,17 @@ twin of both (``_resolve_kernel.cpp``) with the system g++ at first use,
 caches the shared object keyed by a source hash, and exposes:
 
     kb_image(bundle, automaton) -> bytes    driver side, numpy only
+    image_automaton(image) -> automaton     the trie back, numpy only
     wrap_image(image) -> handle             checks the image once
     scan_resolve(handle, text, ...) -> rows | None
     try_scan_resolve(bundle, automaton, text, ...) -> rows | None
 
 The KB image is the kernel's whole KB: the bundle's columns, the subname,
 nationality-form and pronoun tables, and the automaton as a word-id trie,
-in one flat, position-independent buffer.  ``compile_kb`` builds it once
-and broadcasts it; a worker wraps it zero-copy and never unpickles the
-bundle or the automaton unless a document falls back to Python.
+in one flat, position-independent buffer, the automaton's only serialized
+form.  ``compile_kb`` builds it once and broadcasts it; a worker wraps it
+zero-copy and unpickles the bundle and decodes the automaton only when a
+document falls back to Python.
 ``try_scan_resolve`` serves direct object callers: it builds the image
 lazily and caches it on the bundle (``_ck_image``, never pickled).
 
@@ -42,6 +44,7 @@ Env:
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import importlib.util
 import os
@@ -51,6 +54,7 @@ import sys
 import sysconfig
 import tempfile
 
+from .automaton import GazetteerAutomaton
 from .dates import find_dates
 from .resolve import offsets_of_paragraphs, find_proper_nouns, _deaccent_lower
 from .textnorm import ncr2unicode, remove_accent_unicode
@@ -279,8 +283,8 @@ def kb_image(kb, automaton) -> bytes:
     serialize :class:`GazetteerAutomaton`'s own fields: ``words`` is the
     word table, ``trans`` (packed ``(state, sep ∈ {"", " "}, word id)``
     step → next state) the hashed step table, ``term`` the final states'
-    CSR ids.  Built once per KB on the driver; numpy only, no compiled
-    code."""
+    CSR ids; :func:`image_automaton` reads them back.  Built once per KB
+    on the driver; numpy only, no compiled code."""
     from collections import defaultdict
 
     import numpy as np
@@ -371,19 +375,39 @@ def kb_image(kb, automaton) -> bytes:
                      np.asarray(table, "<u8").tobytes(), *chunks])
 
 
-_wrapped = (None, None)  # (image, handle) of the last wrap_image call
+@functools.lru_cache(maxsize=1)
+def image_automaton(image) -> GazetteerAutomaton:
+    """The automaton a KB image serializes, read back in :func:`kb_image`'s
+    insertion order (steps by ``t_next``, final states by ``s_term``):
+    ``kb_image(kb, image_automaton(image)) == image``.  Memoized for the
+    last image, like :func:`wrap_image`: a worker decodes it once."""
+    import numpy as np
+
+    tab = np.frombuffer(image, "<u8", 2 * len(_SECTIONS), 16).tolist()
+    sec = {name: np.frombuffer(image, dt, n // np.dtype(dt).itemsize, pos)
+           for (name, dt), pos, n in zip(_SECTIONS, tab[::2], tab[1::2])}
+    off, nxt, s_term = sec["str_off"].tolist(), sec["t_next"], sec["s_term"]
+    strtab = sec["str_blob"].tobytes().decode("utf-32-le", "surrogatepass")
+    atm = GazetteerAutomaton()
+    atm.words = {strtab[off[s]:off[s + 1]]: i
+                 for i, s in enumerate(sec["w_key"].tolist())}
+    used = np.argsort(nxt)[np.count_nonzero(nxt < 0):]
+    atm.trans = dict(zip(sec["t_keys"][used].tolist(), nxt[used].tolist()))
+    final = np.argsort(s_term)[np.count_nonzero(s_term < 0):].tolist()
+    toff, ids = sec["term_off"].tolist(), sec["term_ids"].tolist()
+    atm.term = {s: tuple(ids[toff[k]:toff[k + 1]])
+                for k, s in enumerate(final)}
+    return atm
 
 
+@functools.lru_cache(maxsize=1)
 def wrap_image(image):
-    """The kernel's handle on an image (bytes or any buffer), checked once
-    — magic, version, every section bound and index — and then read in
-    place; ValueError on a bad image.  The handle of the last image
-    wrapped is memoized, so a worker that reads the same broadcast value
-    for every batch wraps it once and keeps its fragment cache."""
-    global _wrapped
-    if _wrapped[0] is not image:
-        _wrapped = (image, _load().wrap_image(image))
-    return _wrapped[1]
+    """The kernel's handle on an image, checked once — magic, version,
+    every section bound and index — and then read in place; ValueError on
+    a bad image.  The handle of the last image wrapped is memoized, so a
+    worker that reads the same broadcast value for every batch wraps it
+    once and keeps its fragment cache."""
+    return _load().wrap_image(image)
 
 
 # ---------------------------------------------------------------------------

@@ -21,10 +21,10 @@ Brand-new code reproducing the reference's KB semantics:
     ``derived_names`` branch of the unresolved merge conflict (SURVEY §1.4.5).
 
 The bundle is a plain picklable object.  The Spark pipeline broadcasts it
-with the automaton and the C kernel's flat KB image (semantics/ckernel.py
-``kb_image``); a Python worker reads the image and unpickles the bundle
-only when a document falls back to Python — the replacement for the
-reference's POSIX shared-memory KB daemon (ner/kb_daemon.py:30-61,
+with the C kernel's flat KB image, which holds the automaton (semantics/
+ckernel.py ``kb_image``); a Python worker reads the image and unpickles
+the bundle only when a document falls back to Python — the replacement
+for the reference's POSIX shared-memory KB daemon (ner/kb_daemon.py:30-61,
 SURVEY S5); SCALE.md "Memory and spill" has the per-worker bytes.
 """
 
@@ -670,7 +670,8 @@ def build_namelist(
     lang: "object" = None,
     tagged_expanded: "dict | None" = None,
 ) -> dict[str, list[int]]:
-    """Key → ordered KB ids (+ trailing 0 for the 'N' fragment marker).
+    """Key → ordered KB ids (+ trailing 0 for the 'N' fragment marker);
+    keys sorted, so the KB image does not depend on the hash seed.
 
     Reproduces KB2namelist.py:824-886 (entry generation), namelist key
     filtering, and uniq_namelist.py:44-107 (merge + confidence-descending
@@ -799,4 +800,4 @@ def build_namelist(
         for p in pronouns:
             out.setdefault(p, [0])
             out.setdefault(p.capitalize(), [0])
-    return out
+    return dict(sorted(out.items()))

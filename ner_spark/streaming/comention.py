@@ -48,8 +48,7 @@ def comention_pair_stream(pages: DataFrame, artifacts: KBArtifacts,
     batch KG runs a non-default mode gets a streaming KG built from the
     SAME mention set."""
     src = sanitized_pages(pages, url_col, text_col)
-    broadcasts = (artifacts.image_bc, artifacts.bundle_bc,
-                  artifacts.automaton_bc)
+    broadcasts = (artifacts.image_bc, artifacts.bundle_bc)
     scan = artifacts.scan_config
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -157,14 +157,15 @@ def highlight_pages(pages, artifacts, url_col: str = "url",
     """(url, text) pages → (url, html) with automaton mentions
     highlighted — scan + render inside one Arrow batch, no shuffle."""
     from ner_spark.pipeline.ner import sanitized_pages
+    from ner_spark.semantics.ckernel import image_automaton
 
     src = sanitized_pages(pages, url_col, text_col)
-    atm_bc = artifacts.automaton_bc   # only the broadcast enters the closure
+    image_bc = artifacts.image_bc   # only the broadcast enters the closure
 
     def fn(batches):
         import pandas as pd
 
-        atm = atm_bc.value
+        atm = image_automaton(image_bc.value)
         for pdf in batches:
             htmls = []
             for text in pdf["text"]:

@@ -288,9 +288,9 @@ def test_corrupted_image_never_crashes(env):
 
 def test_extraction_reads_only_the_image(env, monkeypatch):
     """resolved_docs hands the kernel only the KB image: when the kernel
-    covers every document, the bundle and automaton broadcasts are never
-    read; when a document falls back they are, and the rows equal the
-    pure-Python path's."""
+    covers every document, the bundle broadcast is never read; a document
+    that falls back reads the bundle and takes its automaton from the
+    image, and the rows equal the pure-Python path's."""
     from ner_spark.pipeline.ner import resolved_docs
 
     bundle, atm, lang, kb_rows = env
@@ -310,21 +310,22 @@ def test_extraction_reads_only_the_image(env, monkeypatch):
     texts = [p["text"] for p in pages]
     image = Value(ckernel.kb_image(bundle, atm))
     unread = Value(AssertionError("broadcast read on the C path"))
-    got = list(resolved_docs(urls, texts, image, unread, unread))
+    got = list(resolved_docs(urls, texts, image, unread))
 
     ckernel.FORCE_DISABLE = True
     try:
-        want = list(resolved_docs(urls, texts, unread, Value(bundle),
-                                  Value(atm)))
+        want = list(resolved_docs(urls, texts, image, Value(bundle)))
     finally:
         ckernel.FORCE_DISABLE = False
     assert got == want and sum(len(r) for _, r in got) > 50
+    assert [r for _, r in want] == [
+        resolve_in_python(bundle, atm, t, lang=lang, as_tuples=True)
+        for t in texts]
 
-    # one document falls back: the broadcasts load, rows still equal
+    # one document falls back: the bundle loads, rows still equal
     real = ckernel.scan_resolve
     monkeypatch.setattr(ckernel, "scan_resolve", lambda img, text, *a, **k: (
         None if text == texts[3] else real(img, text, *a, **k)))
     with pytest.raises(AssertionError, match="broadcast read"):
-        list(resolved_docs(urls, texts, image, unread, unread))
-    assert list(resolved_docs(urls, texts, image, Value(bundle),
-                              Value(atm))) == want
+        list(resolved_docs(urls, texts, image, unread))
+    assert list(resolved_docs(urls, texts, image, Value(bundle))) == want

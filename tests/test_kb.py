@@ -261,6 +261,59 @@ def test_compile_kb_wiki_filter_flag(spark):
     assert all(i in (0, 1) for i in nk_filt["Alice"])
 
 
+# -- the compiled KB image: hash-seed independent, decodes to its trie -----
+
+# compile variants: default, -d -r, -u, -Q and no pronoun keys, over the
+# fixture rows with Q-ids (ignored outside -Q)
+VARIANTS = {"default": {}, "lowercase+deaccent": dict(lowercase=True,
+                                                      deaccent=True),
+            "uri_mode": dict(uri_mode=True), "qid_mode": dict(qid_mode=True),
+            "no_pronouns": dict(add_pronouns=False)}
+_IMAGE_SHA256 = f"""
+import hashlib
+from ner_spark.fixtures.gen import gen_kb_rows
+from ner_spark.kb.build import compile_gazetteer
+from ner_spark.semantics.ckernel import kb_image
+rows = [dict(r, qid=f"Q{{1000 + r['id']}}") for r in gen_kb_rows()]
+for kw in {list(VARIANTS.values())!r}:
+    print(hashlib.sha256(kb_image(*compile_gazetteer(rows, **kw))).hexdigest())
+"""
+
+
+def test_kb_image_independent_of_hash_seed():
+    """Two compiles of the fixture KB in processes with different
+    PYTHONHASHSEED give byte-identical KB images, in every variant:
+    build_namelist orders its keys, so trie state numbering does not
+    follow set iteration order."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shas = [subprocess.run(
+        [sys.executable, "-c", _IMAGE_SHA256], cwd=root, check=True,
+        capture_output=True, text=True,
+        env=dict(os.environ, PYTHONHASHSEED=seed)).stdout.split()
+        for seed in ("1", "2")]
+    assert len(shas[0]) == len(VARIANTS) and shas[0] == shas[1]
+
+
+@pytest.mark.parametrize("variant", VARIANTS)
+def test_kb_image_decodes_to_its_automaton(kb_rows, variant):
+    """image_automaton inverts kb_image: the decoded trie serializes to
+    the same bytes and spells the same keys in the same order."""
+    from ner_spark.kb.build import compile_gazetteer
+    from ner_spark.semantics.ckernel import image_automaton, kb_image
+
+    rows = [dict(r, qid=f"Q{1000 + r['id']}") for r in kb_rows]
+    bundle, atm = compile_gazetteer(rows, **VARIANTS[variant])
+    image = kb_image(bundle, atm)
+    decoded = image_automaton(image)
+    assert kb_image(bundle, decoded) == image
+    assert list(decoded.iter_keys()) == list(atm.iter_keys())
+    assert decoded.n_keys == atm.n_keys > 0
+
+
 def test_unsuitable_key_person_list_of():
     """EN person keys starting 'List of ' are dropped
     (namelist.py:990-994 + en/namelist.py:14)."""

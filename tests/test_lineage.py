@@ -33,6 +33,11 @@ def test_write_then_resume_noop(spark, triple_df, tmp_path):
     m2 = resumable_write(triple_df, path, n_buckets=8)
     assert m2["skipped_resume"] == m1["completed"]  # nothing recomputed
     assert _table_fingerprint(spark, path) == before
+    # a URI output path: every step goes through the Hadoop FS
+    uri = "file://" + str(tmp_path / "u")
+    assert resumable_write(triple_df, uri, n_buckets=8) == m1
+    assert resumable_write(triple_df, uri, n_buckets=8) == m2
+    assert _table_fingerprint(spark, uri) == before
 
 
 def test_kill_and_resume_converges(spark, triple_df, tmp_path):

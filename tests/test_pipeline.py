@@ -248,6 +248,9 @@ def test_kb_artifact_save_load_roundtrip(spark, kb_rows, pages_df,
 
     path = str(tmp_path / "kb_art")
     save_kb_artifact(artifacts, path, kb_version="v1")
+    # the image is the artifact's only serialized automaton
+    assert sorted(os.listdir(path)) == ["MANIFEST.json", "bundle.pkl",
+                                        "kb.parquet", "kb_image.bin"]
     loaded = load_kb_artifact(spark, path, kb_version="v1")
 
     assert loaded.n_entities == artifacts.n_entities
@@ -306,18 +309,34 @@ def test_kb_artifact_save_load_roundtrip(spark, kb_rows, pages_df,
     with _pytest.raises(ValueError, match="image format.*recompile"):
         load_kb_artifact(spark, path, kb_version="v1")
 
-    # and so is an automaton pickled in the old string-path layout
-    # (keys/prefixes/first): at load, not at the first Python fallback
-    import pickle
+    # and so is one whose kb_image.bin does not match the image_sha256 of
+    # its MANIFEST: a byte flipped inside the score section passes every
+    # bounds check wrap_image makes, so only the content check catches it
+    import struct
 
-    from ner_spark.semantics.automaton import GazetteerAutomaton
+    from ner_spark.semantics import ckernel
 
+    saved = dict(old, image_format=IMAGE_VERSION)
     with open(manifest, "w") as fh:
-        json.dump(dict(old, image_format=IMAGE_VERSION), fh)
-    stale = GazetteerAutomaton.__new__(GazetteerAutomaton)
-    stale.__dict__.update(keys={"Praha": (1,)}, prefixes=set(),
-                          first={"Praha"})
-    with open(os.path.join(path, "automaton.pkl"), "wb") as fh:
-        pickle.dump(stale, fh)
-    with _pytest.raises(ValueError, match="string-path layout.*recompile"):
+        json.dump(saved, fh)
+    assert load_kb_artifact(spark, path, kb_version="v1").n_keys
+    image_path = os.path.join(path, "kb_image.bin")
+    image = artifacts.image_bc.value
+    i = [n for n, _ in ckernel._SECTIONS].index("score")
+    score_off, _ = struct.unpack_from("<QQ", image, 16 + 16 * i)
+    flipped = bytearray(image)
+    flipped[score_off + 3] ^= 0x10
+    with open(image_path, "wb") as fh:
+        fh.write(flipped)
+    with _pytest.raises(ValueError, match="image_sha256.*recompile"):
+        load_kb_artifact(spark, path, kb_version="v1")
+
+    # as is a MANIFEST that records no image_sha256 (every artifact saved
+    # with an automaton.pkl beside the image)
+    with open(image_path, "wb") as fh:
+        fh.write(image)
+    del saved["image_sha256"]
+    with open(manifest, "w") as fh:
+        json.dump(saved, fh)
+    with _pytest.raises(ValueError, match="image_sha256.*recompile"):
         load_kb_artifact(spark, path, kb_version="v1")

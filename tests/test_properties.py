@@ -1,6 +1,8 @@
 """Property-based tests (hypothesis): structural invariants of the
 tokenizer, automaton and resolve pipeline that must hold for ANY input."""
 
+import functools
+
 from hypothesis import given, settings, strategies as st
 
 from ner_spark.semantics.automaton import (GazetteerAutomaton, is_delimiter,
@@ -46,6 +48,14 @@ def test_scan_matches_never_overlap_and_slice_correctly(text):
         prev_end = m.end
 
 
+@functools.lru_cache(maxsize=1)
+def _fixture_bundle():
+    from ner_spark.fixtures.gen import gen_kb_rows
+    from ner_spark.semantics.kb import KBBundle
+
+    return KBBundle.from_rows(gen_kb_rows())
+
+
 # canonical keys over plain words, punctuation-adjacent words (U.S.,
 # x-y) and URIs; id lists that are empty or hold the fragment marker 0
 KEY = st.one_of(
@@ -62,8 +72,11 @@ def test_reflexive_roundtrip_on_random_keys(entries):
     pipeline produces (build_namelist collapses \\s+ and strips).  Raw keys
     with irregular gaps are byte-faithfully stored and must match nothing
     (the reference byte-trie's behaviour) — asserted in the else branch.
-    ``iter_keys`` spells every canonical key back from the trie."""
+    ``iter_keys`` spells every canonical key back from the trie, also
+    after a round trip through the KB image."""
     import re
+
+    from ner_spark.semantics.ckernel import image_automaton, kb_image
 
     namelist = {}
     irregular = []
@@ -81,6 +94,8 @@ def test_reflexive_roundtrip_on_random_keys(entries):
     atm = GazetteerAutomaton.build(namelist.items())
     assert dict(atm.iter_keys()) == namelist
     assert atm.n_keys == len(list(atm.iter_keys()))
+    decoded = image_automaton(kb_image(_fixture_bundle(), atm))
+    assert list(decoded.iter_keys()) == list(atm.iter_keys())
     for key, ids in atm.iter_keys():
         ms = atm.scan(key)
         assert len(ms) == 1
