@@ -1,14 +1,18 @@
 """Mention extraction: the hot path of the engine.
 
 Design for 100 TB (SURVEY §4 physical plan): the whole per-document NER —
-scan + disambiguation + coreference — is ONE narrow ``mapInPandas`` stage
+scan + disambiguation + coreference — is ONE narrow ``mapInArrow`` stage
 over the pages table.  The reference has no cross-document state
 (ner.py:837-856 resets per doc), so this stage needs **zero shuffles**: one
-Arrow batch in, mention rows out, the C kernel reading the broadcast KB
-image in place (a document that falls back to Python unpickles the bundle
-and decodes the automaton from the image).  Everything relational (dedup,
-co-mention join, canonicalization) happens downstream on the much smaller
-mentions/triples tables.
+Arrow batch in, one Arrow batch of mention rows out, the C kernel reading
+the broadcast KB image in place (a document that falls back to Python
+unpickles the bundle and decodes the automaton from the image).  Everything
+relational (dedup, co-mention join, canonicalization) happens downstream on
+the much smaller mentions/triples tables.
+
+Its workers never load pandas: they read a batch with ``to_pylist()``
+and emit one built from buffers by :func:`arrow_batch` (pyarrow's
+constructors from Python objects load pandas through pyarrow's shim).
 
 Column pruning matters: we select only (url, text) before the UDF so the
 parquet/Iceberg scan never reads the binary ``html`` column (verified by
@@ -21,9 +25,13 @@ byte-identical to the Python ``re`` implementation.
 
 from __future__ import annotations
 
+import operator
+from functools import partial
+from itertools import chain, repeat
 from typing import Iterator
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -38,6 +46,71 @@ MENTION_SCHEMA = (
     "text string, sense int, iso string, confidence int"
 )
 SCAN_SCHEMA = "url string, start int, end int, fragment string, ids array<int>"
+
+
+def arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow form of a ``mapInArrow`` output schema, on the driver
+    (parsing DDL needs the JVM); the UDF carries it to the workers."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    return to_arrow_schema(DataType.fromDDL(ddl))
+
+
+def _offsets(lengths, n: int) -> pa.Buffer:
+    out = np.zeros(n + 1, np.int64)
+    np.cumsum(np.fromiter(lengths, np.int64, n), out=out[1:])
+    if out[-1] >= 2**31:
+        raise OverflowError("Arrow column over 2 GiB: lower "
+                            "spark.sql.execution.arrow.maxRecordsPerBatch")
+    return pa.py_buffer(out.astype(np.int32))
+
+
+def _array(typ: pa.DataType, col, n: int) -> pa.Array:
+    """``n`` values (None = null) → an int32, string or list array.  A
+    None makes the one-pass build raise TypeError; then the nulls are
+    filled and a validity bitmap added."""
+    try:
+        return _dense(typ, col, n, None)
+    except TypeError:
+        mask = np.frombuffer(bytes(map(operator.is_not, col, repeat(None))),
+                             np.bool_)
+        if mask.all():
+            raise
+    fill = 0 if typ == pa.int32() else "" if typ == pa.string() else ()
+    return _dense(typ, [fill if v is None else v for v in col], n,
+                  pa.py_buffer(np.packbits(mask, bitorder="little")))
+
+
+def _dense(typ: pa.DataType, col, n: int, valid) -> pa.Array:
+    if typ == pa.int32():
+        data = pa.py_buffer(np.fromiter(col, np.int32, n))
+        return pa.Array.from_buffers(typ, n, [valid, data])
+    if pa.types.is_list(typ):
+        flat = list(chain.from_iterable(col))
+        return pa.Array.from_buffers(
+            typ, n, [valid, _offsets(map(len, col), n)],
+            children=[_array(typ.value_type, flat, len(flat))])
+    joined = "".join(col)
+    if joined.isascii():  # one encode; char lengths are the byte lengths
+        blob, lengths = joined.encode("ascii"), map(len, col)
+    else:
+        encoded = [v.encode() for v in col]
+        blob, lengths = b"".join(encoded), map(len, encoded)
+    return pa.Array.from_buffers(
+        typ, n, [valid, _offsets(lengths, n), pa.py_buffer(blob)])
+
+
+def arrow_batch(columns, schema: pa.Schema) -> pa.RecordBatch:
+    """Columns of Python values (no columns = zero rows) → one batch of
+    ``schema``, assembled with ``pa.Array.from_buffers``."""
+    columns = columns or [()] * len(schema)
+    n = len(columns[0])
+    if len(columns) != len(schema) or any(len(c) != n for c in columns):
+        raise ValueError("arrow_batch: columns do not fit the schema")
+    return pa.RecordBatch.from_arrays(
+        [_array(f.type, c, n) for f, c in zip(schema, columns)],
+        schema=schema)
 
 
 def sanitized_pages(pages: DataFrame, url_col: str = "url",
@@ -99,27 +172,41 @@ def scan_mentions(pages: DataFrame, artifacts: KBArtifacts,
     src = sanitized_pages(pages, url_col, text_col)
     image_bc = artifacts.image_bc
     lowercase, deaccent = artifacts.lowercase, artifacts.deaccent
+    schema = arrow_schema(SCAN_SCHEMA)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ner_spark.semantics.automaton import byte_offset_matches
         from ner_spark.semantics.ckernel import image_automaton
         from ner_spark.semantics.textnorm import apply_scan_modes
 
         atm = image_automaton(image_bc.value)
-        for pdf in batches:
+        for batch in batches:
             rows = []
-            for url, text in zip(pdf["url"], pdf["text"]):
+            for url, text in zip(batch.column(0).to_pylist(),
+                                 batch.column(1).to_pylist()):
                 text, scan_text = apply_scan_modes(text, lowercase, deaccent)
                 text = scan_text if scan_text is not None else text
                 ms = atm.scan(text)
                 if byte_offsets:
                     ms = byte_offset_matches(text, ms)
-                for m in ms:
-                    rows.append((url, m.start, m.end, m.fragment, list(m.ids)))
-            yield pd.DataFrame(
-                rows, columns=["url", "start", "end", "fragment", "ids"])
+                rows += [(url, m.start, m.end, m.fragment, m.ids) for m in ms]
+            yield arrow_batch(list(zip(*rows)), schema)
 
-    return src.mapInPandas(fn, schema=SCAN_SCHEMA)
+    return src.mapInArrow(fn, SCAN_SCHEMA)
+
+
+def mention_batches(batches: Iterator[pa.RecordBatch], image_bc, bundle_bc,
+                    schema: pa.Schema, **kw) -> Iterator[pa.RecordBatch]:
+    """The extraction UDF: sanitized (url, text) page batches → batches of
+    ``schema``, the Arrow form of :data:`MENTION_SCHEMA`."""
+    for batch in batches:
+        urls, rows = [], []
+        for url, doc in resolved_docs(batch.column(0).to_pylist(),
+                                      batch.column(1).to_pylist(),
+                                      image_bc, bundle_bc, **kw):
+            urls += [url] * len(doc)
+            rows += doc
+        yield arrow_batch([urls, *zip(*rows)] if rows else None, schema)
 
 
 def extract_mentions(pages: DataFrame, artifacts: KBArtifacts,
@@ -139,20 +226,9 @@ def extract_mentions(pages: DataFrame, artifacts: KBArtifacts,
     lowered-scan offsets to the original string with exactly the same
     caveat (bug-for-bug parity).  ``find_names`` enables unknown-name
     discovery (``-n``, ner.py:696-697)."""
-    src = sanitized_pages(pages, url_col, text_col)
-    broadcasts = (artifacts.image_bc, artifacts.bundle_bc)
-    scan = artifacts.scan_config
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["url", "start", "end", "par", "kind", "text",
-                "sense", "iso", "confidence"]
-        for pdf in batches:
-            rows = [(url,) + r
-                    for url, doc in resolved_docs(
-                        pdf["url"], pdf["text"], *broadcasts,
-                        find_names=find_names, names_strict=names_strict,
-                        **scan)
-                    for r in doc]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return src.mapInPandas(fn, schema=MENTION_SCHEMA)
+    fn = partial(mention_batches, image_bc=artifacts.image_bc,
+                 bundle_bc=artifacts.bundle_bc,
+                 schema=arrow_schema(MENTION_SCHEMA), find_names=find_names,
+                 names_strict=names_strict, **artifacts.scan_config)
+    return sanitized_pages(pages, url_col, text_col).mapInArrow(
+        fn, MENTION_SCHEMA)

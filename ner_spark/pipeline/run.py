@@ -2,8 +2,8 @@
 
 Stage graph (SURVEY §4 target plan):
 
-  pages ──filter todo url-buckets──(narrow mapInPandas, broadcast
-        KB bundle + KB image)──► mentions
+  pages ──filter todo url-buckets──(narrow mapInArrow, broadcast
+        KB image + KB bundle; Arrow batches in and out)──► mentions
   mentions ──checkpoint──┬─► mention triples  (narrow)
                          └─► co-mention edges (shuffle url,par → agg)
   kb ──────────────────────► type/attribute triples (narrow)

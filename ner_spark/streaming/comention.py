@@ -6,9 +6,10 @@ unbounded stream.  But the natural streaming unit is the PAGE (a crawled
 document arrives exactly once), and every co-mention pair is WITHIN one
 page — so the stream pipeline is:
 
-    page stream → stateless mapInPandas (the per-document loop of
+    page stream → stateless mapInArrow (the per-document loop of
     extract_mentions, ``pipeline.ner.resolved_docs``, + within-page pair
-    explode) → ONE stateful groupBy(s1, s2) count
+    explode, out through ``arrow_batch``) → ONE stateful groupBy(s1, s2)
+    count
 
 No stream-stream join, no streaming distinct, a single state-store
 aggregation keyed by the (bounded, KB-sized) entity-pair space.  Each
@@ -20,24 +21,45 @@ tests/test_stream_comention.py.
 
 from __future__ import annotations
 
+from functools import partial
 from itertools import combinations
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ner_spark.kb.build import KBArtifacts
-from ner_spark.pipeline.ner import resolved_docs, sanitized_pages
+from ner_spark.pipeline.ner import (arrow_batch, arrow_schema, resolved_docs,
+                                    sanitized_pages)
 
 PAIR_SCHEMA = "url string, par int, s1 int, s2 int"
+
+
+def pair_batches(batches: Iterator[pa.RecordBatch], image_bc, bundle_bc,
+                 schema: pa.Schema, **kw) -> Iterator[pa.RecordBatch]:
+    """The pair UDF: sanitized (url, text) page batches → batches of
+    ``schema``, the Arrow form of :data:`PAIR_SCHEMA`."""
+    for batch in batches:
+        rows = []
+        for url, doc in resolved_docs(batch.column(0).to_pylist(),
+                                      batch.column(1).to_pylist(),
+                                      image_bc, bundle_bc, **kw):
+            per_par: dict[int, set[int]] = {}
+            for _, _, par, _, _, sense, _, _ in doc:
+                if sense is not None:
+                    per_par.setdefault(par, set()).add(sense)
+            for par, senses in per_par.items():
+                for s1, s2 in combinations(sorted(senses), 2):
+                    rows.append((url, par, s1, s2))
+        yield arrow_batch(list(zip(*rows)), schema)
 
 
 def comention_pair_stream(pages: DataFrame, artifacts: KBArtifacts,
                           url_col: str = "url", text_col: str = "text",
                           find_names: bool = False) -> DataFrame:
     """pages (streaming or batch) → one row per distinct within-paragraph
-    resolved-sense pair (s1 < s2) per page.  Stateless (pure mapInPandas
+    resolved-sense pair (s1 < s2) per page.  Stateless (pure mapInArrow
     over the page batch), so it composes with any streaming aggregation.
     Pair semantics match comention_edges: distinct (url, par, sense) over
     sense-resolved mentions, pairs within the same (url, par).
@@ -47,26 +69,12 @@ def comention_pair_stream(pages: DataFrame, artifacts: KBArtifacts,
     :func:`~ner_spark.pipeline.ner.extract_mentions`, so a deployment whose
     batch KG runs a non-default mode gets a streaming KG built from the
     SAME mention set."""
-    src = sanitized_pages(pages, url_col, text_col)
-    broadcasts = (artifacts.image_bc, artifacts.bundle_bc)
-    scan = artifacts.scan_config
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, doc in resolved_docs(pdf["url"], pdf["text"],
-                                          *broadcasts, find_names=find_names,
-                                          **scan):
-                per_par: dict[int, set[int]] = {}
-                for _, _, par, _, _, sense, _, _ in doc:
-                    if sense is not None:
-                        per_par.setdefault(par, set()).add(sense)
-                for par, senses in per_par.items():
-                    for s1, s2 in combinations(sorted(senses), 2):
-                        rows.append((url, par, s1, s2))
-            yield pd.DataFrame(rows, columns=["url", "par", "s1", "s2"])
-
-    return src.mapInPandas(fn, schema=PAIR_SCHEMA)
+    fn = partial(pair_batches, image_bc=artifacts.image_bc,
+                 bundle_bc=artifacts.bundle_bc,
+                 schema=arrow_schema(PAIR_SCHEMA), find_names=find_names,
+                 **artifacts.scan_config)
+    return sanitized_pages(pages, url_col, text_col).mapInArrow(
+        fn, PAIR_SCHEMA)
 
 
 def comention_edge_counts(pairs: DataFrame) -> DataFrame:

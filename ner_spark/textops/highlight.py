@@ -21,8 +21,10 @@ stdlib Python and imports cleanly — tests/test_highlight.py):
   header/footer (:253).
 
 The distributed form (`highlight_pages`) renders per page inside the
-same Arrow batch as the automaton scan — one narrow mapInPandas, no
-shuffle; HTML strings never leave their input partition.
+same Arrow batch as the automaton scan — one narrow mapInArrow, no
+shuffle; HTML strings never leave their input partition.  It scans the
+text ``apply_scan_modes`` gives, like ``scan_mentions``, and renders the
+working text (with ``-d``, names keep their case).
 """
 
 from __future__ import annotations
@@ -154,24 +156,28 @@ def render_html_highlights(text: str,
 
 def highlight_pages(pages, artifacts, url_col: str = "url",
                     text_col: str = "text"):
-    """(url, text) pages → (url, html) with automaton mentions
+    """(url, text) pages → (``url_col``, html) with automaton mentions
     highlighted — scan + render inside one Arrow batch, no shuffle."""
-    from ner_spark.pipeline.ner import sanitized_pages
+    from ner_spark.pipeline.ner import (arrow_batch, arrow_schema,
+                                        sanitized_pages)
     from ner_spark.semantics.ckernel import image_automaton
+    from ner_spark.semantics.textnorm import apply_scan_modes
 
-    src = sanitized_pages(pages, url_col, text_col)
+    ddl = f"{url_col} string, html string"
+    schema = arrow_schema(ddl)
     image_bc = artifacts.image_bc   # only the broadcast enters the closure
+    lowercase, deaccent = artifacts.lowercase, artifacts.deaccent
 
     def fn(batches):
-        import pandas as pd
-
         atm = image_automaton(image_bc.value)
-        for pdf in batches:
+        for batch in batches:
             htmls = []
-            for text in pdf["text"]:
-                rows = [(m.ids[0], m.start + 1, m.end, m.fragment)
-                        for m in atm.scan(text)]
+            for text in batch.column(1).to_pylist():
+                text, scan_text = apply_scan_modes(text, lowercase, deaccent)
+                ms = atm.scan(scan_text if scan_text is not None else text)
+                rows = [(m.ids[0], m.start + 1, m.end, text[m.start:m.end])
+                        for m in ms]
                 htmls.append(render_html_highlights(text, rows))
-            yield pd.DataFrame({"url": pdf[url_col], "html": htmls})
+            yield arrow_batch([batch.column(0).to_pylist(), htmls], schema)
 
-    return src.mapInPandas(fn, schema=f"{url_col} string, html string")
+    return sanitized_pages(pages, url_col, text_col).mapInArrow(fn, ddl)

@@ -89,7 +89,39 @@ def test_highlight_pages_distributed(spark, artifacts, pages_rows):
     assert len(out) == 8
     assert all(r.html.startswith("<html>") for r in out)
     assert any("<span" in r.html for r in out)
-    # no shuffle: single narrow stage
+    # no shuffle: single narrow stage, Arrow batches (no pandas) in and out
     plan = highlight_pages(pages, artifacts)._jdf.queryExecution() \
         .executedPlan().toString()
     assert "Exchange" not in plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
+
+
+def test_highlight_pages_scans_with_the_artifact_modes(spark, kb_rows):
+    """A -d (lowercase) artifact's keys are lowered, so the scan must read
+    the lowered text, as scan_mentions and extract_mentions do; the HTML
+    keeps the page's case."""
+    from ner_spark.kb.build import compile_kb
+    from ner_spark.pipeline.ner import extract_mentions, scan_mentions
+    from ner_spark.textops.highlight import highlight_pages
+
+    art = compile_kb(spark, kb_rows, lowercase=True)
+    pages = spark.createDataFrame(
+        [("u1", "Yesterday Marie Krause arrived.")], "url string, text string")
+    assert scan_mentions(pages, art).count() == 1
+    assert extract_mentions(pages, art).count() == 1
+    html = highlight_pages(pages, art).collect()[0].html
+    assert '<span style="color: red;" >Marie Krause</span>' in html
+
+
+def test_highlight_pages_names_its_url_column(spark, artifacts):
+    """The output url column is named ``url_col``, whatever the input
+    column was called."""
+    from ner_spark.textops.highlight import highlight_pages
+
+    pages = spark.createDataFrame(
+        [("p1", "Yesterday Marie Krause arrived.")],
+        "page string, body string")
+    out = highlight_pages(pages, artifacts, url_col="page", text_col="body")
+    assert out.columns == ["page", "html"]
+    row = out.collect()[0]
+    assert row.page == "p1" and "<span" in row.html

@@ -56,12 +56,13 @@ def test_kb_join_is_broadcast(spark, sf_dir):
 
 
 def test_extract_mentions_zero_shuffle(spark, parquet_pages, artifacts):
-    """pages → mentions is one narrow stage: no Exchange in the plan."""
+    """pages → mentions is one narrow stage: no Exchange in the plan, and
+    the UDF exchanges Arrow batches (no pandas conversion)."""
     from ner_spark.pipeline.ner import extract_mentions
 
     plan = _plan(extract_mentions(parquet_pages, artifacts))
     assert "Exchange" not in plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
 
 
 def test_sanitize_is_whole_stage_codegen(spark, parquet_pages):

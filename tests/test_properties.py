@@ -1,13 +1,18 @@
 """Property-based tests (hypothesis): structural invariants of the
-tokenizer, automaton and resolve pipeline that must hold for ANY input."""
+tokenizer, automaton and resolve pipeline, and of the UDFs' Arrow builder,
+that must hold for ANY input."""
 
 import functools
 
+import pytest
 from hypothesis import given, settings, strategies as st
 
+from ner_spark.pipeline.ner import (MENTION_SCHEMA, SCAN_SCHEMA, arrow_batch,
+                                    arrow_schema)
 from ner_spark.semantics.automaton import (GazetteerAutomaton, is_delimiter,
                                            tokenize)
 from ner_spark.semantics.textnorm import sanitize
+from ner_spark.streaming.comention import PAIR_SCHEMA
 
 TEXT = st.text(
     alphabet=st.characters(min_codepoint=1, max_codepoint=0x2FF),
@@ -219,3 +224,36 @@ def test_resolve_document_never_raises_on_junk(text):
             finally:
                 ckernel.FORCE_DISABLE = False
     recognize(bundle, atm, text, find_names=True)
+
+
+def _arrow_values(typ):
+    """Python values of an Arrow ``typ`` of the UDF schemas, None included."""
+    import pyarrow as pa
+
+    if pa.types.is_int32(typ):
+        base = st.integers(-2**31, 2**31 - 1)
+    elif pa.types.is_string(typ):
+        base = st.sampled_from(["", "é", "𝄞"]) | st.text(max_size=8)
+    else:
+        base = st.lists(_arrow_values(typ.value_type), max_size=4)
+    return st.none() | base
+
+
+@pytest.mark.parametrize("ddl", [MENTION_SCHEMA, SCAN_SCHEMA, PAIR_SCHEMA],
+                         ids=["mention", "scan", "pair"])
+@settings(max_examples=100, deadline=None)
+@given(data=st.data())
+def test_arrow_batch_equals_from_pylist(spark, ddl, data):
+    """The buffer-built batch of the UDFs equals pyarrow's own conversion
+    of the same rows: nulls, empty and non-ASCII strings, empty lists and
+    zero rows included."""
+    import pyarrow as pa
+
+    schema = arrow_schema(ddl)
+    rows = data.draw(st.lists(st.tuples(
+        *(_arrow_values(f.type) for f in schema)), max_size=12))
+    got = arrow_batch(list(zip(*rows)), schema)
+    got.validate(full=True)
+    want = pa.RecordBatch.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=schema)
+    assert got.equals(want)

@@ -47,8 +47,9 @@ def test_streaming_comention_incremental_equals_batch(
 
 
 def test_pair_stream_is_stateless_streaming_node(spark, artifacts, tmp_path):
-    """The pair explode must stay stateless (plain MapInPandas on the
-    stream) — the ONLY stateful operator is the downstream count agg."""
+    """The pair explode must stay stateless (plain MapInArrow on the
+    stream, no pandas conversion) — the ONLY stateful operator is the
+    downstream count agg."""
     from ner_spark.streaming.comention import (comention_edge_counts,
                                                comention_pair_stream)
 
@@ -57,7 +58,7 @@ def test_pair_stream_is_stateless_streaming_node(spark, artifacts, tmp_path):
     pairs = comention_pair_stream(stream, artifacts)
     assert pairs.isStreaming
     plan = pairs._jdf.queryExecution().analyzed().toString()
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan and "MapInPandas" not in plan
     counts = comention_edge_counts(pairs)
     assert counts.isStreaming
 

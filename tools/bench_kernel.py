@@ -8,7 +8,9 @@ Two fixtures:
 
 Prints ONE JSON line with MB-chars/s for scan-only and scan+resolve, plus
 the KB image's size, build seconds and wrap seconds (what one worker pays
-before its first document) and decode seconds (its first Python fallback).
+before its first document) and decode seconds (its first Python fallback),
+and ``arrow_build_s``: the extraction UDF's output step (transpose, then
+``pipeline.ner.arrow_batch``) over the web fixture's ``arrow_rows`` rows.
 Usage: python tools/bench_kernel.py [n_mb] [--profile]
 """
 
@@ -75,11 +77,15 @@ def run(bundle, atm, texts, resolve: bool) -> tuple[float, int, int]:
     return time.perf_counter() - t0, n_chars, n_out
 
 
+def _seconds(fn) -> float:
+    t0 = time.perf_counter()
+    fn()
+    return time.perf_counter() - t0
+
+
 def _unmemoized_s(fn, image: bytes) -> float:
     """Seconds of one call of a memoized ckernel function, past its memo."""
-    t0 = time.perf_counter()
-    fn.__wrapped__(image)
-    return round(time.perf_counter() - t0, 6)
+    return round(_seconds(lambda: fn.__wrapped__(image)), 6)
 
 
 def main() -> None:
@@ -121,6 +127,25 @@ def main() -> None:
         out[f"{name}_full_mb_s"] = round(n_chars / t_full / 1e6, 3)
         out[f"{name}_mentions"] = n_m
         out[f"{name}_resolved"] = n_r
+
+    from ner_spark.pipeline.ner import (MENTION_SCHEMA, arrow_batch,
+                                        arrow_schema)
+    from ner_spark.semantics.lang import get_lang
+    from ner_spark.semantics.recognize import scan_and_resolve
+    from ner_spark.session import get_spark
+
+    spark = get_spark("bench_kernel", master="local[1]")
+    schema = arrow_schema(MENTION_SCHEMA)  # DDL parsing needs the JVM
+    spark.stop()
+    docs = [(f"https://example.org/page/{i}", scan_and_resolve(
+        bundle, atm, text, lang=get_lang("en"), as_tuples=True))
+        for i, text in enumerate(web)]
+    urls = [url for url, doc in docs for _ in doc]
+    rows = [r for _, doc in docs for r in doc]
+    out["arrow_build_s"] = round(min(_seconds(
+        lambda: arrow_batch([urls, *zip(*rows)], schema))
+        for _ in range(trials)), 6)
+    out["arrow_rows"] = len(rows)
     print(json.dumps(out))
 
 
