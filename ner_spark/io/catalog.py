@@ -4,13 +4,13 @@ North-rule requirement: the triple table is written partitioned, with a
 per-partition lineage/metrics table, and a killed job can resume without
 recomputing completed partitions (idempotent re-run).
 
-Preferred backend is Apache Iceberg (hidden-partition bucket(subj), snapshot
-isolation); its runtime jar is not in this image, so :func:`iceberg_available`
-gates it and the default backend is parquet with:
+The backend is parquet; there is no Iceberg backend, but the layout is
+Iceberg-shaped:
 
   * explicit ``bucket = pmod(xxhash64(subj), N)`` partition column —
     the same layout ``partitionedBy(bucket(N, subj))`` would give on Iceberg;
-  * dynamic partition overwrite (only touched buckets replaced);
+  * dynamic partition overwrite (only touched buckets replaced), set as a
+    per-write option so the session's own overwrite mode never changes;
   * a ``_lineage`` sidecar table ``(bucket, n_rows, fingerprint)`` written
     per completed bucket — the resume set and the metrics table in one
     (SURVEY A15).  The row is computed from the committed files, not from
@@ -27,43 +27,14 @@ table (tests/test_lineage.py kills between buckets and re-runs).
 from __future__ import annotations
 
 import os
-from contextlib import contextmanager
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-@contextmanager
-def dynamic_partition_overwrite(spark: SparkSession):
-    """Set partitionOverwriteMode=dynamic for the duration of a write and
-    restore the previous value — session-wide overwrite semantics must not
-    silently change for unrelated writes later in the session."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, "dynamic")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
 LINEAGE_DIR = "_lineage"
 LINEAGE_SCHEMA = "bucket int, n_rows long, fingerprint long"
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.iceberg.spark.SparkCatalog")
-        return True
-    except Exception:
-        return False
 
 
 def with_bucket(df: DataFrame, key: str = "subj", n_buckets: int = 64) -> DataFrame:
@@ -129,9 +100,9 @@ def commit_buckets(spark: SparkSession, path: str, n_buckets: int,
             # co-locate each bucket before partitionBy: without it every
             # write task opens a file per bucket directory (tasks × buckets
             # files, measured 1.4-1.9× slower even at local[8]/64)
-            with dynamic_partition_overwrite(spark):
-                df.repartition(len(wave), "bucket").write.mode("overwrite") \
-                    .partitionBy("bucket").parquet(path)
+            df.repartition(len(wave), "bucket").write.mode("overwrite") \
+                .option("partitionOverwriteMode", "dynamic") \
+                .partitionBy("bucket").parquet(path)
             written = spark.read.schema(df.schema).parquet(path) \
                 .filter(F.col("bucket").isin(wave))
             have = {r.bucket: tuple(r) for r in _lineage_of(written).collect()}
@@ -162,7 +133,3 @@ def resumable_write(df: DataFrame, path: str, key: str = "subj",
         "completed": list(range(n_buckets)),
         "skipped_resume": sorted(set(range(n_buckets)) - set(todo)),
     }
-
-
-def read_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)

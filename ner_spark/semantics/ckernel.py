@@ -2,10 +2,11 @@
 
 The hot path of the engine — the automaton scan plus the per-document
 sequential state machine of :mod:`ner_spark.semantics.resolve` — is
-CPython-bound (the r4 numpy-batch restructure measured ~5-15%; the residual
-cost is sequential interpreter state mutation).  This module compiles a C++
-twin of both (``_resolve_kernel.cpp``) with the system g++ at first use,
-caches the shared object keyed by a source hash, and exposes:
+CPython-bound: its cost is sequential interpreter state mutation, which
+numpy batching does not absorb (~5-15%, BASELINE.md "Kernel — round 4").
+This module compiles a C++ twin of both (``_resolve_kernel.cpp``) with the
+system g++ at first use, caches the shared object keyed by a source hash,
+and exposes:
 
     kb_image(bundle, automaton) -> bytes    driver side, numpy only
     image_automaton(image) -> automaton     the trie back, numpy only

@@ -4,7 +4,8 @@ Brand-new code reproducing the reference's KB semantics:
 
   - accessor surface mirrors /root/reference/ner/ner_knowledge_base.py
     (get_ent_type:289-294, get_data_for:206-214, get_score:323-343,
-    get_dates:297-303, get_nationalities:310-320, people_named:346-351);
+    get_dates:297-303, get_nationalities:310-320); its subname lookup
+    (346-351) is a plain ``name_dict.get``, done inline by resolve_document;
   - ``get_ent_type`` returns a plain STRING and every type test in the
     pipeline is a substring test (SURVEY §1.4.1) — e.g. 'geo' matches
     'geographical';
@@ -203,8 +204,6 @@ class KBBundle:
     _loc_sub: list = field(default_factory=list, repr=False)
     _geo_sub: list = field(default_factory=list, repr=False)
     _country_arr: list = field(default_factory=list, repr=False)
-    _score_np: object = field(default=None, repr=False)
-    _ctx_kind_np: object = field(default=None, repr=False)
 
     def __getstate__(self):
         # only the source state rides a pickle (broadcast or KB artifact):
@@ -337,22 +336,6 @@ class KBBundle:
             self._loc_sub = ["location" in t for t in self.type_arr()]
         return self._loc_sub
 
-    # numpy twins of score_arr / ctx_kind_arr for the batched
-    # disambiguation pre-pass (resolve.disambiguate_all_with_context):
-    # one fancy-indexed gather per document replaces per-mention list
-    # indexing.  Values identical to the list forms by construction.
-    def score_np(self):
-        if self._score_np is None:
-            import numpy as np
-            self._score_np = np.asarray(self.score_arr(), dtype=np.float64)
-        return self._score_np
-
-    def ctx_kind_np(self):
-        if self._ctx_kind_np is None:
-            import numpy as np
-            self._ctx_kind_np = np.asarray(self.ctx_kind_arr(), dtype=np.int8)
-        return self._ctx_kind_np
-
     def get_ent_type(self, line: int) -> str:
         """Type path STRING; all callers do substring tests (SURVEY §1.4.1)."""
         # hot accessor (~10 calls per mention) — direct indexing, no
@@ -417,9 +400,6 @@ class KBBundle:
             c = tuple(data.split(MULTIVAL)) if data else ()
             self._multival_cache[key] = c
         return c
-
-    def people_named(self, subname: str) -> frozenset[int]:
-        return self.name_dict.get(subname, frozenset())
 
     # -- construction ----------------------------------------------------
     @classmethod

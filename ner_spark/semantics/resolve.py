@@ -49,11 +49,6 @@ from .kb import KBBundle
 from .lang import EN, LangModule
 from .textnorm import ncr2unicode, remove_accent_unicode
 
-try:  # baked into the image; gated per the environment rule anyway
-    import numpy as np
-except ImportError:  # pragma: no cover
-    np = None
-
 _PAR_RE = re.compile(r"(\r?\n|\r)\1+")  # ner.py:156
 _ALL_SPACES_RE = re.compile(r"^[ ]+$")  # ner.py:556 adjacency gap test
 
@@ -515,55 +510,10 @@ def _right_sentence(text: str, m: Mention) -> str:
     return "".join(out)
 
 
-def _apply_en_sense_rules(m: Mention, kb: KBBundle, text: str) -> None:
-    """EN-specific eliminations (ner/lang_modules/en/entity.py:12-20);
-    kept as a named function for tests — the pipeline goes through the
-    language module's ``sense_rules`` hook."""
-    EN.sense_rules(m, kb, text)
-
-
-def _find_all(text: str, needle: str) -> tuple[int, ...]:
-    out = []
-    i = text.find(needle)
-    while i != -1:
-        out.append(i)
-        i = text.find(needle, i + 1)
-    return tuple(out)
-
-
-def _doc_sentence_index(text: str, verbs: tuple):
-    """Per-document occurrence index for the verb+JOBS rule
-    (entity.py:151-185).
-
-    The reference builds the right-sentence STRING per mention
-    (``text[m.end:first dot]`` — the whole document tail when there is no
-    dot) and substring-scans it for each copula verb: O(doc) copying and
-    scanning per person mention.  The sentence content is a pure function
-    of (text, m.end), so one pass per document collecting the positions
-    of every dot, paren, and verb occurrence turns the per-mention work
-    into a handful of bisects with byte-identical outcomes (the scalar
-    path is kept for sentences containing parens, where the reference
-    REMOVES paren spans before searching — _right_sentence).  NOT
-    memoized: resolve_document builds the index once per document and
-    threads it as ``sidx`` to every mention, and an lru_cache here would
-    pin full multi-MB document strings (plus O(doc) position tuples)
-    inside each long-lived Python worker for no hot-path gain."""
-    return (
-        _find_all(text, "."),
-        _find_all(text, "("),
-        _find_all(text, ")"),
-        tuple((v, _find_all(text, v)) for v in verbs),
-        any(text.find(v) != -1 for v in verbs),
-    )
-
-
 def disambiguate_without_context(m: Mention, kb: KBBundle, text: str,
                                  register: Register,
-                                 lang: LangModule = EN,
-                                 sidx=None) -> None:
-    """entity.py:134-207.  ``sidx``: optional pre-fetched
-    ``_doc_sentence_index(text, lang.verbs)`` (the bulk sweep hoists the
-    per-call cache lookup; semantics identical)."""
+                                 lang: LangModule = EN) -> None:
+    """entity.py:134-207."""
     if m.source_lower in lang.pronouns or m.partial_match_senses:
         m.is_coreference = True
         return
@@ -584,52 +534,19 @@ def disambiguate_without_context(m: Mention, kb: KBBundle, text: str,
     # senses, so skip it entirely when no sense is person-typed (the
     # reference computes it unconditionally; results are identical).
     verb_index = -1
-    has_person = False
     pflag = kb.person_flag_arr()
-    for s in m.senses:
-        if pflag[s]:
-            has_person = True
-            break
-    sentence = None  # built only on the paren fallback path
-    send = -1
-    if has_person:
-        dots, opens, closes, verb_occ, has_verbs = \
-            sidx if sidx is not None else _doc_sentence_index(text, lang.verbs)
-        if has_verbs:
-            e_end = m.end
-            di = bisect_left(dots, e_end)
-            send = dots[di] + 1 if di < len(dots) else len(text)
-            oi = bisect_left(opens, e_end)
-            ci = bisect_left(closes, e_end)
-            if (oi < len(opens) and opens[oi] < send) \
-                    or (ci < len(closes) and closes[ci] < send):
-                # paren inside the sentence: the reference strips paren
-                # spans before searching — take the scalar path
-                sentence = _right_sentence(text, m)
-                for verb in lang.verbs:
-                    verb_index = sentence.find(verb)
-                    if verb_index != -1:
-                        break
-            else:
-                # sentence == text[e_end:send]; first fitting occurrence
-                # per verb via bisect (occurrences are sorted, so if the
-                # earliest one at/after e_end overruns send, all do)
-                for verb, occ in verb_occ:
-                    k = bisect_left(occ, e_end)
-                    if k < len(occ) and occ[k] + len(verb) <= send:
-                        verb_index = occ[k] - e_end
-                        break
+    if any(pflag[s] for s in m.senses):
+        sentence = _right_sentence(text, m)
+        for verb in lang.verbs:
+            verb_index = sentence.find(verb)
+            if verb_index != -1:
+                break
     if verb_index != -1:
         professions: list[str] = []
         for s in m.senses:
             if pflag[s]:
-                if sentence is not None:
-                    cand = [p for p in kb.get_multival(s, "JOBS")
-                            if sentence.find(" " + p + " ", verb_index) != -1]
-                else:  # identical search windowed into the original text
-                    base = m.end + verb_index
-                    cand = [p for p in kb.get_multival(s, "JOBS")
-                            if text.find(" " + p + " ", base, send) != -1]
+                cand = [p for p in kb.get_multival(s, "JOBS")
+                        if sentence.find(" " + p + " ", verb_index) != -1]
                 if cand:
                     professions = cand
                     break
@@ -741,84 +658,6 @@ def disambiguate_with_context(m: Mention, kb: KBBundle, ctx: Context, register: 
         ctx._person_total[par] = ctx._person_total.get(par, 0) + 1
 
 
-def disambiguate_all_with_context(entities: list[Mention], kb: KBBundle,
-                                  ctx: Context, register: Register) -> None:
-    """Batched form of the main context-disambiguation sweep
-    (``for e in entities: disambiguate_with_context(e, ...)``,
-    ner.py:665-666) — observably identical by construction:
-
-      * entities arrive in ascending start order (automaton emission
-        order), so ``recompute_paragraph_offset``'s forward-only walk
-        lands on the exact paragraph for every mention regardless of
-        which mentions advance it — skipping the call for mentions that
-        never read paragraph state (single candidate of context kind
-        GEO/NONE, whose context score is identically 0) cannot change
-        any observable;
-      * single-candidate mentions never take the explicit person-bucket
-        write (entity.py:253-262 requires ``len(cands) != 1``), so their
-        scores depend only on bucket state produced by PRECEDING
-        multi-candidate mentions — preserved by keeping one in-order
-        walk;
-      * their preferred sense is already ``candidates[0]`` (set by
-        disambiguate_without_context), so re-registering is the
-        Register's documented no-op and is skipped.
-
-    The numpy pre-pass gathers the static score and context-dispatch
-    kind for every single-candidate mention in two fancy-indexed reads
-    (the judge-requested batch scoring); multi-candidate and coreference
-    mentions take the scalar path unchanged.
-    """
-    idxs: list[int] = []
-    cands: list[int] = []
-    for i, m in enumerate(entities):
-        if not m.is_coreference and len(m.candidates) == 1:
-            idxs.append(i)
-            cands.append(m.candidates[0])
-    if len(idxs) < 16 or np is None:  # batch overhead not worth it
-        for e in entities:
-            disambiguate_with_context(e, kb, ctx, register)
-        return
-    c_np = np.asarray(cands, dtype=np.int64)
-    static_l = kb.score_np()[c_np].tolist()
-    kind_l = kb.ctx_kind_np()[c_np].tolist()
-
-    K_PERSON, K_ORG, K_EVENT, K_CHAR = (KBBundle.CTX_PERSON, KBBundle.CTX_ORG,
-                                        KBBundle.CTX_EVENT, KBBundle.CTX_CHAR)
-    kchars = ctx._kchars
-    j = 0
-    nb = len(idxs)
-    nxt = idxs[0]
-    for i, m in enumerate(entities):
-        if i != nxt:
-            disambiguate_with_context(m, kb, ctx, register)
-            continue
-        c = cands[j]
-        static = static_l[j]
-        k = kind_l[j]
-        j += 1
-        nxt = idxs[j] if j < nb else -1
-        context_score = 0.0
-        if k == K_PERSON:
-            ctx.recompute_paragraph_offset(m.start)
-            context_score = ctx.person_percentile(c)
-        elif k == K_ORG:
-            ctx.recompute_paragraph_offset(m.start)
-            context_score = ctx.org_event_percentile(c, "organization")
-        elif k == K_EVENT:
-            ctx.recompute_paragraph_offset(m.start)
-            context_score = ctx.org_event_percentile(c, "event")
-        elif k == K_CHAR:
-            ctx.recompute_paragraph_offset(m.start)
-            context_score = ctx.common_percentile(c, kchars[c])
-        if context_score > 0:
-            m.poorly_disambiguated = False
-        m.static_score = [static]
-        m.context_score = [context_score]
-        m.score = [static + context_score]
-        if m.preferred_sense != c:  # normally a no-op (set by dwoc)
-            m.set_preferred_sense(c, register)
-
-
 # ---------------------------------------------------------------------------
 # coreference (ner.py:333-375, entity.py:269-352)
 # ---------------------------------------------------------------------------
@@ -903,14 +742,11 @@ def fix_poor_disambiguation(entities: list[Mention], kb: KBBundle,
 def resolve_coreferences(entities: list[Mention], kb: KBBundle, ctx: Context,
                          register: Register, text: str,
                          lang: LangModule = EN,
-                         print_all: bool = False, sidx=None) -> None:
+                         print_all: bool = False) -> None:
     """ner.py:333-375.  ``print_all`` (-a) skips the whole resolution body
     — partial-match senses stay unfiltered and corefs stay unresolved
     (ner.py:350 ``if not print_all``); the people_in_text fill and the
-    ``ctx.update`` register pass still run in every mode.  ``sidx``:
-    the document's pre-built sentence index, threaded through to the
-    demoted-coref re-disambiguation calls (without it each such call
-    would rebuild the O(doc) index from scratch)."""
+    ``ctx.update`` register pass still run in every mode."""
     psub = kb.person_sub_flag_arr()
     sarr = kb.score_arr()
     people_in_text = ctx.people_in_text
@@ -938,15 +774,13 @@ def resolve_coreferences(entities: list[Mention], kb: KBBundle, ctx: Context,
                 elif e.senses:
                     e.is_coreference = False
                     e.partial_match_senses = frozenset()
-                    disambiguate_without_context(e, kb, text, register, lang,
-                                                 sidx)
+                    disambiguate_without_context(e, kb, text, register, lang)
                     disambiguate_with_context(e, kb, ctx, register)
             elif e.source_lower in lang.pronouns:
                 resolve_pronoun_coreference(e, kb, ctx, register, text, lang)
             elif e.senses:
                 e.is_coreference = False
-                disambiguate_without_context(e, kb, text, register, lang,
-                                             sidx)
+                disambiguate_without_context(e, kb, text, register, lang)
                 disambiguate_with_context(e, kb, ctx, register)
         if e.preferred_sense:
             ctx.update(e)
@@ -1002,51 +836,6 @@ def remove_shorter_entities(mentions: list[Mention]) -> list[Mention]:
     return out
 
 
-def _overlap_filter_np(entities: list[Mention], clean: str,
-                       proper: list[tuple[int, int]]) -> list[Mention]:
-    """Vectorized form of the ner.py:499-547 drop rule (ASCII texts).
-
-    Same set algebra as the scalar path below, as prefix sums:
-      * entity/pn coverage masks via bincount-diff + cumsum;
-      * ``spaces_in_diff`` = space & pn-covered & ~entity-covered
-        (the union over pn gaps, exactly the scalar set);
-      * solitary = that mask minus positions with a masked neighbour;
-      * per-pn verdict via windowed prefix-sum counts of non-solitary
-        spaces / apostrophes over the pn's uncovered part;
-      * per-entity verdict via searchsorted interval-overlap counting
-        over the sorted, non-overlapping pn spans.
-    Equivalence with the scalar path is pinned by the differential
-    property test in tests/test_resolve.py."""
-    n = len(clean)
-    b = np.frombuffer(clean.encode("ascii"), dtype=np.uint8)
-    es = np.fromiter((e.start for e in entities), np.int64, len(entities))
-    ee = np.fromiter((e.end for e in entities), np.int64, len(entities))
-    ps = np.fromiter((s for s, _ in proper), np.int64, len(proper))
-    pe = np.fromiter((e for _, e in proper), np.int64, len(proper))
-    ent_cov = np.cumsum(np.bincount(es, minlength=n + 1)
-                        - np.bincount(ee, minlength=n + 1))[:n] > 0
-    pn_cov = np.cumsum(np.bincount(ps, minlength=n + 1)
-                       - np.bincount(pe, minlength=n + 1))[:n] > 0
-    uncov = pn_cov & ~ent_cov
-    sid = (b == 32) & uncov          # spaces_in_diff
-    left = np.empty_like(sid); left[0] = False; left[1:] = sid[:-1]
-    right = np.empty_like(sid); right[-1] = False; right[:-1] = sid[1:]
-    bad_space = sid & (left | right)  # non-solitary masked spaces
-    apos = (b == 39) & uncov
-    csp = np.concatenate(([0], np.cumsum(bad_space)))
-    cap = np.concatenate(([0], np.cumsum(apos)))
-    pn_keep = (csp[pe] - csp[ps] == 0) | (cap[pe] - cap[ps] > 0)
-    # entities sorted? not guaranteed here — pns are (finditer order).
-    # overlapping-pn count per entity: pn.start < e.end and pn.end > e.start
-    hi = np.searchsorted(ps, ee, side="left")
-    lo = np.searchsorted(pe, es, side="right")
-    ck = np.concatenate(([0], np.cumsum(pn_keep)))
-    overlapped = hi > lo
-    has_keep = (ck[hi] - ck[lo]) > 0
-    keep_mask = (~overlapped) | has_keep
-    return [e for e, k in zip(entities, keep_mask.tolist()) if k]
-
-
 def resolve_overlapping_proper_nouns(entities: list[Mention], text: str,
                                      list_titles: set[str] = frozenset(),
                                      lang: LangModule = EN) -> list[Mention]:
@@ -1058,13 +847,6 @@ def resolve_overlapping_proper_nouns(entities: list[Mention], text: str,
     proper = find_proper_nouns(clean, list_titles, lang.proper_nouns_preps)
     if not proper:
         return list(entities)
-    # numpy pays only above per-op overhead: ~20 vector ops vs Python
-    # loops over (pns + entities) — crossover measured around a few
-    # hundred spans / multi-KB docs (tools/bench_kernel.py)
-    if np is not None and clean.isascii() \
-            and len(entities) + len(proper) > 384:
-        return _overlap_filter_np(entities, clean, proper)
-
     # Interval reformulation of the reference's char-offset set algebra
     # (O(pn chars) scans instead of per-char set builds over the document):
     # entity spans are disjoint, so "pn chars not covered by an entity" is
@@ -1447,7 +1229,7 @@ def resolve_document(
     register = Register()
     global_senses: set[int] = set()
     figa_entities: list[Mention] = []
-    named_get = kb.name_dict.get  # people_named inlined (hot loop)
+    named_get = kb.name_dict.get  # subname lookup (ner_knowledge_base:346-351)
     _EMPTY = frozenset()
     nationality_forms = kb.nationality_forms
     for ids, start, end, fragment in matches:
@@ -1500,15 +1282,15 @@ def resolve_document(
     else:
         entities_and_dates = list(entities)
 
-    sidx = _doc_sentence_index(text, lang.verbs) if entities else None
     for e in entities:
-        disambiguate_without_context(e, kb, text, register, lang, sidx)
+        disambiguate_without_context(e, kb, text, register, lang)
     if trace:
         trace("disambiguate_without_context", entities)
 
     paragraphs = offsets_of_paragraphs(text)
     ctx = Context(entities_and_dates, kb, paragraphs, nationalities, text)
-    disambiguate_all_with_context(entities, kb, ctx, register)
+    for e in entities:  # ner.py:665-666
+        disambiguate_with_context(e, kb, ctx, register)
     if trace:
         trace("disambiguate_with_context", entities)
     fix_poor_disambiguation(entities, kb, register)
@@ -1521,9 +1303,9 @@ def resolve_document(
                    and not e.source_lower.startswith("the ")]
     print_all = mode == "all"
     resolve_coreferences(name_corefs, kb, ctx, register, text, lang,
-                         print_all=print_all, sidx=sidx)
+                         print_all=print_all)
     resolve_coreferences(entities, kb, ctx, register, text, lang,
-                         print_all=print_all, sidx=sidx)
+                         print_all=print_all)
     if trace:
         trace("resolve_coreferences", entities)
 

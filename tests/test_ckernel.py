@@ -61,6 +61,15 @@ def test_fixture_corpus_parity(env):
     for page in gen_pages(kb_rows, n_pages=120, seed=7):
         py, ck = both(bundle, atm, lang, page["text"])
         assert py == ck
+    # long docs: 40 pages joined, hundreds of entity and proper-noun spans
+    # each, so the kernel's sentence index and overlap filter meet the
+    # scalar Python rules at scale
+    pages = [p["text"] for p in gen_pages(kb_rows, n_pages=320, seed=8)]
+    for i in range(8):
+        text = "\n\n".join(pages[i * 40:(i + 1) * 40])
+        assert len(atm.scan(text)) > 384
+        py, ck = both(bundle, atm, lang, text)
+        assert py == ck, f"long doc {i}"
 
 
 def test_dense_corpus_parity_both_forms(env):

@@ -476,12 +476,14 @@ def test_as_tuples_matches_dict_rows(kb_rows, pages_rows):
         resolve_document("x", [], bundle, mode="all", as_tuples=True)
 
 
-# -- verb+JOBS sentence-index fast path (entity.py:151-185) ----------------
-# The bisect-based sentence probe must agree with a direct transcription of
-# the reference's per-mention string scan across dot/paren/verb layouts.
+# -- verb+JOBS rule (entity.py:151-185) ------------------------------------
+# disambiguate_without_context must agree with a direct transcription of
+# the reference's per-mention string scan across dot/paren/verb layouts
+# (the C kernel's sentence index is held to the same rule by
+# tests/test_ckernel.py).
 
 def _ref_verb_jobs(kb, m, text, lang):
-    """Direct transcription of entity.py:151-185 (the slow scalar form)."""
+    """Direct transcription of entity.py:151-185."""
     from ner_spark.semantics.resolve import _right_sentence
 
     pflag = kb.person_flag_arr()
@@ -526,48 +528,6 @@ def test_verb_jobs_fast_path_matches_reference_scan(akb, text):
     # professions found → only person senses whose JOBS intersect them
     # survive (the geo sense 2 drops); otherwise senses are untouched
     assert m.candidates == ([1] if ref else [1, 2]), (text, ref)
-
-
-def test_overlap_filter_np_matches_scalar():
-    """_overlap_filter_np must agree with the scalar interval path on
-    randomized entity/proper-noun layouts (same texts, same spans)."""
-    import random
-
-    import ner_spark.semantics.resolve as R
-
-    rng = random.Random(11)
-    words = ["Atlas", "institute", "George", "Washington", "won", "the",
-             "battle", "O'Neil", "A", "B.", "x"]
-    for trial in range(60):
-        n_words = rng.randrange(3, 40)
-        text = " ".join(rng.choice(words) for _ in range(n_words))
-        # synthetic disjoint entity spans over word boundaries
-        ents = []
-        pos = 0
-        while pos < len(text) - 3:
-            if rng.random() < 0.4:
-                ln = rng.randrange(2, 12)
-                e = min(pos + ln, len(text))
-                ents.append(R.Mention(pos, e, text[pos:e], [1]))
-                pos = e + rng.randrange(1, 5)
-            else:
-                pos += rng.randrange(1, 6)
-        if not ents:
-            continue
-        proper = R.find_proper_nouns(text)
-        if not proper:
-            continue
-        got_np = R._overlap_filter_np(ents, text, proper)  # direct: the
-        # size gate in resolve_overlapping_proper_nouns would route these
-        # small docs to the scalar path
-        np_save = R.np
-        R.np = None
-        try:
-            got_sc = R.resolve_overlapping_proper_nouns(ents, text)
-        finally:
-            R.np = np_save
-        assert [id(e) for e in got_np] == [id(e) for e in got_sc], (
-            trial, text, [(e.start, e.end) for e in ents])
 
 
 def test_stage_diff_tracer(kb_rows, pages_rows):
