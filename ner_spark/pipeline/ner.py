@@ -150,7 +150,7 @@ def resolved_docs(urls, texts, image_bc, bundle_bc,
     for url, text in zip(urls, texts):
         text, scan_text = apply_scan_modes(text, lowercase, deaccent)
         rows = None if image is None else ckernel.scan_resolve(
-            image, text, scan_text, lang=lang_mod, as_tuples=True)
+            image, text, scan_text, as_tuples=True)
         if rows is None:
             rows = resolve_in_python(
                 bundle_bc.value, ckernel.image_automaton(image_bc.value),

@@ -14,16 +14,14 @@
  *
  * Division of labor (ckernel.py wrapper):
  *   Python supplies everything that needs re/dateutil/unicodedata — date
- *     matches with pre-rendered ISO strings, paragraph offsets, and two
- *     callbacks: frag_cb (source/deaccent-lower/pronoun flags of a
- *     non-ASCII or NCR fragment, cached per KB image) and lazy_cb (the
- *     deaccented "clean" text and proper-noun regex spans, called only when
- *     the overlap filter needs them) — plus the KB image (ckernel.kb_image):
- *     the KB columns, lookup tables and word-id trie as one flat buffer,
- *     built once on the driver, bounds-checked once by wrap_image and read
- *     in place.
+ *     matches with pre-rendered ISO strings, paragraph offsets, and one
+ *     callback, frag_cb (source/deaccent-lower/pronoun flags of a non-ASCII
+ *     or NCR fragment, cached per KB image, so called once per distinct
+ *     fragment) — plus the KB image (ckernel.kb_image): the KB columns,
+ *     lookup tables and word-id trie as one flat buffer, built once on the
+ *     driver, bounds-checked once by wrap_image and read in place.
  *   C owns the scan and the sequential state machine: Mention/Register/
- *     Context, disambiguation, coreference, overlap/nearby filters, output
+ *     Context, disambiguation, coreference, the nearby filter, output
  *     rows.
  *
  * Anything this file cannot faithfully reproduce raises _resolve_ck.Fallback
@@ -532,7 +530,7 @@ struct DateM {  // pre-rendered DateMatch (ckernel.py supplies the strings)
 
 static const int64_t SENSE_NONE = INT64_MIN;  // register key for None
 
-// EntityRegister (resolve.py:155-214): forward map eager, per-sense buckets
+// EntityRegister (resolve.py Register): forward map eager, per-sense buckets
 // lazy-then-incremental.  Bucket order is unobservable (see resolve.py
 // docstring) but we mirror the dict-order behavior anyway: erase on
 // re-point, append on (re)register.
@@ -578,7 +576,7 @@ struct Register {
 };
 
 // ---------------------------------------------------------------------------
-// Context (resolve.py:217-478)
+// Context (resolve.py Context)
 // ---------------------------------------------------------------------------
 
 // bucket field keys: single type-string chars by codepoint; the probe-only
@@ -635,7 +633,7 @@ struct Context {
 // Doc: one resolve_document call's state
 // ---------------------------------------------------------------------------
 
-struct SIdx {  // _doc_sentence_index (resolve.py:531-554)
+struct SIdx {  // sentences for the verb + JOBS rule (build_sidx)
     vector<int64_t> dots, opens, closes;
     vector<vector<int64_t>> verb_occ;  // per pack verb
     bool has_verbs = false;
@@ -644,20 +642,14 @@ struct SIdx {  // _doc_sentence_index (resolve.py:531-554)
 
 struct Doc {
     const KBImage *kb;
-    U32 text, clean;
+    U32 text;
     vector<Mention> men;
     vector<DateM> dates;
     vector<int64_t> paragraphs;
-    vector<std::pair<int64_t, int64_t>> pnouns;  // proper-noun spans (clean)
-    bool pnouns_ready = false;    // filled lazily via lazy_cb
-    PyObject *lazy_cb = nullptr;  // () -> (clean|None, pnoun list|None)
     SIdx sidx;
     bool fallback = false;   // set → wrapper re-runs pure Python
 
     void fail() { fallback = true; }
-
-    // resolve.py:106-128 source accessors by flag
-    bool is_pron(const Mention &m) const { return m.flags & FL_PRON_ANY; }
 };
 
 static void find_all(const U32 &text, Py_UCS4 c, vector<int64_t> &out) {
@@ -667,7 +659,7 @@ static void find_all(const U32 &text, Py_UCS4 c, vector<int64_t> &out) {
 
 static void find_all_str(const U32 &text, const Str &needle,
                          vector<int64_t> &out) {
-    // resolve.py:522-528 _find_all: find(needle, i+1) — overlapping allowed
+    // find(needle, i+1) — overlapping allowed
     Py_ssize_t i = u32_find(text, needle, 0, (Py_ssize_t)text.size());
     while (i != -1) {
         out.push_back(i);
@@ -688,7 +680,7 @@ static void build_sidx(Doc &d) {
     d.sidx.built = true;
 }
 
-// _right_sentence (resolve.py:493-512): paren-skipping sentence tail
+// resolve.py _right_sentence: paren-skipping sentence tail
 static U32 right_sentence(const Doc &d, const Mention &m) {
     Py_ssize_t n = (Py_ssize_t)d.text.size();
     Py_ssize_t dot = -1;
@@ -719,7 +711,7 @@ static U32 right_sentence(const Doc &d, const Mention &m) {
 }
 
 // ---------------------------------------------------------------------------
-// Context implementation (resolve.py:217-478)
+// Context implementation (resolve.py Context)
 // ---------------------------------------------------------------------------
 
 bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
@@ -752,9 +744,10 @@ bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
         int64_t par_off = paragraphs[pi];
         int64_t par_end = nxt < ((int64_t)1 << 62) ? nxt : (int64_t)d.text.size();
         // tseen: last-char bucket shared per type string — key by the
-        // type's LAST char (resolve.py:283-300; empty char buckets that the
-        // reference's char loop would setdefault are observably inert —
-        // mentioned_in_par treats empty == missing — and are not created)
+        // type's LAST char (resolve.py Context.__init__; empty char buckets
+        // that the reference's char loop would setdefault are observably
+        // inert — mentioned_in_par treats empty == missing — and are not
+        // created)
         std::unordered_set<int64_t> probed;
         while (ent_index < n_ed && ed[ent_index].start < nxt) {
             const ED &e = ed[ent_index];
@@ -764,7 +757,7 @@ bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
                 if (!m.poorly_disambiguated) {
                     Pref p = m.pref;
                     if (p.tag == P_MEN) p = d.men[(size_t)p.v].pref;
-                    // "pref is a KB line id >= 1 here" (resolve.py:294);
+                    // "pref is a KB line id >= 1 here" (Context.__init__);
                     // anything else would crash the Python twin → bail out
                     if (p.tag != P_INT || p.v < 1 || p.v > kb->n) {
                         d.fail();
@@ -814,7 +807,8 @@ bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
     return true;
 }
 
-// resolve.py:328-336 — forward-only paragraph walk (quirk preserved)
+// resolve.py Context.recompute_paragraph_offset — forward-only paragraph
+// walk (quirk preserved)
 void Context::recompute_paragraph_offset(int64_t start) {
     if ((size_t)(paragraph_index + 1) >= paragraphs.size()) return;
     if (paragraphs[(size_t)paragraph_index] <= start &&
@@ -827,7 +821,7 @@ void Context::recompute_paragraph_offset(int64_t start) {
     paragraph_index = pi;
 }
 
-// resolve.py:340-366
+// resolve.py Context.update
 void Context::update(Doc &d, int32_t mi) {
     Mention &m = d.men[(size_t)mi];
     Pref p = m.pref;
@@ -840,7 +834,7 @@ void Context::update(Doc &d, int32_t mi) {
         is_person = kb->person_sub[(size_t)line];
         is_loc = !is_person && kb->loc_sub[(size_t)line];
     }
-    // (None / <1 → get_ent_type == "" → neither flag; resolve.py:347-350)
+    // (None / <1 → get_ent_type == "" → neither flag; Context.update)
     if (is_person) {
         before_last_person = last_person;
         last_person = mi;
@@ -855,7 +849,7 @@ void Context::update(Doc &d, int32_t mi) {
     }
 }
 
-// resolve.py:369-380
+// resolve.py Context.mentioned_in_par
 double Context::mentioned_in_par(const int32_t *cands, size_t ncands,
                                  uint32_t field) {
     ParStats &ps = par[(size_t)paragraph_index];
@@ -871,7 +865,8 @@ double Context::mentioned_in_par(const int32_t *cands, size_t ncands,
     return score;
 }
 
-// resolve.py:383-432 (people_max_scores is write-only state → omitted)
+// resolve.py Context.person_percentile (people_max_scores is write-only
+// state → omitted)
 double Context::person_percentile(Doc &d, int64_t candidate) {
     ParStats &ps = par[(size_t)paragraph_index];
     int64_t ci = kb_index(kb, candidate);
@@ -917,7 +912,7 @@ double Context::person_percentile(Doc &d, int64_t candidate) {
     return (stat + mention_score) / 4.0;
 }
 
-// resolve.py:439-448 (single-char bucket probe)
+// resolve.py Context.common_percentile (single-char bucket probe)
 double Context::common_percentile(int64_t candidate, uint32_t ch) {
     int64_t ci = kb_index(kb, candidate);
     if (ci < 0) { doc->fail(); return 0.0; }
@@ -925,7 +920,7 @@ double Context::common_percentile(int64_t candidate, uint32_t ch) {
     return mentioned_in_par(probe, 1, ch);
 }
 
-// resolve.py:451-478
+// resolve.py Context.org_event_percentile
 double Context::org_event_percentile(Doc &d, int64_t candidate,
                                      bool organisation) {
     // callers pass "organization"(z) / "event" → both take the else branch
@@ -953,7 +948,7 @@ double Context::org_event_percentile(Doc &d, int64_t candidate,
 }
 
 // ---------------------------------------------------------------------------
-// Disambiguation (resolve.py:557-739)
+// Disambiguation (resolve.py disambiguate_without/with_context)
 // ---------------------------------------------------------------------------
 
 static void set_preferred(Doc &d, Register &reg, int32_t mi, Pref p) {
@@ -996,7 +991,7 @@ static bool en_sense_rules(Doc &d, Mention &m) {
     return true;
 }
 
-// resolve.py:557-659 disambiguate_without_context
+// resolve.py disambiguate_without_context
 static bool dwoc(Doc &d, Register &reg, int32_t mi) {
     const KBImage *kb = d.kb;
     Mention &m = d.men[(size_t)mi];
@@ -1022,7 +1017,7 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
         }
     }
 
-    // verb + JOBS elimination (resolve.py:583-642)
+    // verb + JOBS elimination (disambiguate_without_context)
     int64_t verb_index = -1;
     bool has_person = false;
     for (int64_t s : m.senses) {
@@ -1142,7 +1137,7 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
     } else if (m.score.empty()) {
         set_preferred(d, reg, mi, Pref{P_INT, m.candidates[0]});
     }
-    if (!pref_truthy(m.pref)) {  // dead in practice (resolve.py:654-659)
+    if (!pref_truthy(m.pref)) {  // dead in practice
         // Python APPENDS to the existing lists here; reachable only with
         // empty ones (see resolve.py comment) — anything else → fallback
         if (!m.score.empty() || !m.static_score.empty()) {
@@ -1163,9 +1158,7 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
     return true;
 }
 
-// resolve.py:662-739 disambiguate_with_context (scalar form; the numpy
-// batch pre-pass in resolve.py:741-817 is observably identical — its own
-// docstring carries the proof)
+// resolve.py disambiguate_with_context
 static bool dwc(Doc &d, Context &ctx, Register &reg, int32_t mi) {
     const KBImage *kb = d.kb;
     Mention &m = d.men[(size_t)mi];
@@ -1220,7 +1213,7 @@ static bool dwc(Doc &d, Context &ctx, Register &reg, int32_t mi) {
     int64_t pref = m.candidates[best];
     set_preferred(d, reg, mi, Pref{P_INT, pref});
 
-    // explicit per-paragraph person bump (resolve.py:731-738)
+    // explicit per-paragraph person bump (disambiguate_with_context)
     int64_t pi = kb_index(kb, pref);
     if (pi < 0) { d.fail(); return false; }
     if (kb->person_sub[(size_t)pi] && m.candidates.size() != 1) {
@@ -1232,7 +1225,7 @@ static bool dwc(Doc &d, Context &ctx, Register &reg, int32_t mi) {
 }
 
 // ---------------------------------------------------------------------------
-// Coreference (resolve.py:823-949)
+// Coreference (resolve.py resolve_pronoun_coreference..resolve_coreferences)
 // ---------------------------------------------------------------------------
 
 // en location-coref: source == "There" and a copula right-context
@@ -1249,7 +1242,7 @@ static bool is_location_coreference(Doc &d, const Mention &m) {
     return false;
 }
 
-// resolve.py:830-854 resolve_pronoun_coreference
+// resolve.py resolve_pronoun_coreference
 static void pronoun_coref(Doc &d, Context &ctx, Register &reg, int32_t mi) {
     Mention &m = d.men[(size_t)mi];
     if (is_location_coreference(d, m)) return;
@@ -1286,7 +1279,8 @@ static void pronoun_coref(Doc &d, Context &ctx, Register &reg, int32_t mi) {
     }
 }
 
-// resolve.py:857-862 — smallest positive start distance, or -1
+// resolve.py _get_nearest_predecessor — smallest positive start distance,
+// or -1
 static int32_t nearest_predecessor(Doc &d, const Mention &m,
                                    const vector<int32_t> &cands) {
     int32_t best = -1;
@@ -1301,7 +1295,8 @@ static int32_t nearest_predecessor(Doc &d, const Mention &m,
     return best;
 }
 
-// resolve.py:865-868 — min (|Δstart|, start), stable (first minimal)
+// resolve.py _get_nearest_entity_sense — min (|Δstart|, start), stable
+// (first minimal)
 static Pref nearest_entity_sense(Doc &d, const Mention &m,
                                  const vector<int32_t> &cands) {
     int32_t best = cands[0];
@@ -1316,7 +1311,7 @@ static Pref nearest_entity_sense(Doc &d, const Mention &m,
     return d.men[(size_t)best].pref;
 }
 
-// resolve.py:871-897 fix_poor_disambiguation
+// resolve.py fix_poor_disambiguation
 static bool fix_poor(Doc &d, Register &reg, const vector<int32_t> &entities) {
     // strong keyed by source content (== source_id) / by raw sense
     std::unordered_map<int32_t, vector<int32_t>> strong;       // srcid → ents
@@ -1367,7 +1362,7 @@ static bool fix_poor(Doc &d, Register &reg, const vector<int32_t> &entities) {
     return true;
 }
 
-// resolve.py:900-949 resolve_coreferences (print_all always False here —
+// resolve.py resolve_coreferences (print_all always False here —
 // the C kernel serves mode="default" only)
 static bool resolve_corefs(Doc &d, Context &ctx, Register &reg,
                            const vector<int32_t> &entities) {
@@ -1435,10 +1430,11 @@ static bool resolve_corefs(Doc &d, Context &ctx, Register &reg,
 }
 
 // ---------------------------------------------------------------------------
-// Relational filters (resolve.py:980-1155)
+// Relational filters (resolve.py remove_shorter/remove_nearby_entities)
 // ---------------------------------------------------------------------------
 
-// resolve.py:980-999 — first-come occupancy over inclusive [start, end]
+// resolve.py remove_shorter_entities — first-come occupancy over inclusive
+// [start, end]
 static void remove_shorter(Doc &d, vector<int32_t> &order) {
     vector<int64_t> kept_starts, kept_ends;
     vector<int32_t> out;
@@ -1454,112 +1450,7 @@ static void remove_shorter(Doc &d, vector<int32_t> &order) {
     order.swap(out);
 }
 
-// clean text + proper-noun regex spans come from a Python callback,
-// invoked only when the overlap filter actually needs them (mirrors
-// resolve.py:1052-1057's early outs — same regex cost profile)
-static bool ensure_pnouns(Doc &d) {
-    if (d.pnouns_ready) return true;
-    d.pnouns_ready = true;
-    PyObject *res = PyObject_CallNoArgs(d.lazy_cb);
-    if (!res) return false;  // Python error propagates
-    PyObject *clean_o = PyTuple_GET_ITEM(res, 0);  // None: clean == text
-    d.clean = clean_o != Py_None ? to_u32(clean_o) : d.text;
-    PyObject *pl = PyTuple_GET_ITEM(res, 1);
-    if (pl != Py_None) {
-        Py_ssize_t np = PyList_GET_SIZE(pl);
-        d.pnouns.resize((size_t)np);
-        for (Py_ssize_t i = 0; i < np; i++) {
-            PyObject *t = PyList_GET_ITEM(pl, i);
-            d.pnouns[(size_t)i] = {
-                PyLong_AsLongLong(PyTuple_GET_ITEM(t, 0)),
-                PyLong_AsLongLong(PyTuple_GET_ITEM(t, 1))};
-        }
-    }
-    Py_DECREF(res);
-    return !PyErr_Occurred();
-}
-
-// resolve.py:1047-1133 scalar path (the numpy variant is pinned equivalent
-// by resolve.py's own differential property test)
-static bool overlap_filter(Doc &d, vector<int32_t> &entities) {
-    if (entities.empty()) return true;
-    if (!ensure_pnouns(d)) return false;
-    const auto &proper = d.pnouns;
-    if (proper.empty()) return true;
-    const U32 &clean = d.clean;
-    // sorted disjoint entity spans
-    vector<std::pair<int64_t, int64_t>> iv;
-    iv.reserve(entities.size());
-    for (int32_t mi : entities)
-        iv.emplace_back(d.men[(size_t)mi].start, d.men[(size_t)mi].end);
-    std::sort(iv.begin(), iv.end());
-    Py_ssize_t n_iv = (Py_ssize_t)iv.size();
-
-    auto gaps_of = [&](int64_t s, int64_t e,
-                       vector<std::pair<int64_t, int64_t>> &res) {
-        res.clear();
-        Py_ssize_t i = std::lower_bound(iv.begin(), iv.end(),
-                                        std::make_pair(s, (int64_t)-1)) -
-                       iv.begin();
-        if (i > 0 && iv[(size_t)i - 1].second > s) i--;
-        int64_t cur = s;
-        while (cur < e) {
-            if (i >= n_iv || iv[(size_t)i].first >= e) {
-                res.emplace_back(cur, e);
-                break;
-            }
-            int64_t es = iv[(size_t)i].first, ee = iv[(size_t)i].second;
-            if (es > cur) res.emplace_back(cur, std::min(es, e));
-            if (ee >= e) break;
-            cur = std::max(cur, ee);
-            i++;
-        }
-    };
-
-    vector<vector<std::pair<int64_t, int64_t>>> pn_gaps(proper.size());
-    std::unordered_set<int64_t> spaces_in_diff;
-    for (size_t p = 0; p < proper.size(); p++) {
-        gaps_of(proper[p].first, proper[p].second, pn_gaps[p]);
-        for (auto &g : pn_gaps[p])
-            for (int64_t o = g.first; o < g.second; o++)
-                if (clean[(size_t)o] == ' ') spaces_in_diff.insert(o);
-    }
-    std::unordered_set<int64_t> solitary;
-    for (int64_t o : spaces_in_diff)
-        if (!spaces_in_diff.count(o - 1) && !spaces_in_diff.count(o + 1))
-            solitary.insert(o);
-    vector<uint8_t> pn_keep(proper.size());
-    for (size_t p = 0; p < proper.size(); p++) {
-        bool has_space = false, has_apos = false;
-        for (auto &g : pn_gaps[p])
-            for (int64_t o = g.first; o < g.second; o++) {
-                Py_UCS4 c = clean[(size_t)o];
-                if (c == ' ' && !solitary.count(o)) has_space = true;
-                else if (c == '\'') has_apos = true;
-            }
-        pn_keep[p] = (!has_space) || has_apos;
-    }
-    vector<int64_t> pn_starts;
-    pn_starts.reserve(proper.size());
-    for (auto &pr : proper) pn_starts.push_back(pr.first);
-    vector<int32_t> out;
-    for (int32_t mi : entities) {
-        const Mention &e = d.men[(size_t)mi];
-        Py_ssize_t i = bisect_right(pn_starts, e.start);
-        if (i > 0 && proper[(size_t)i - 1].second > e.start) i--;
-        bool overlapped = false, keep = false;
-        while (i < (Py_ssize_t)proper.size() && proper[(size_t)i].first < e.end) {
-            overlapped = true;
-            if (pn_keep[(size_t)i]) { keep = true; break; }
-            i++;
-        }
-        if (!overlapped || keep) out.push_back(mi);
-    }
-    entities.swap(out);
-    return true;
-}
-
-// resolve.py:1136-1155 remove_nearby_entities
+// resolve.py remove_nearby_entities
 static void remove_nearby(Doc &d, vector<int32_t> &entities) {
     const KBImage *kb = d.kb;
     for (size_t i = 1; i < entities.size(); i++) {
@@ -1603,7 +1494,7 @@ static void remove_nearby(Doc &d, vector<int32_t> &entities) {
 }
 
 // ---------------------------------------------------------------------------
-// run_stages: the per-document driver (resolve.py:1356-1507, mode=default)
+// run_stages: the per-document driver (resolve.py resolve_document, default)
 // ---------------------------------------------------------------------------
 
 static PyObject *s_kb, *s_coref, *s_date, *s_interval;  // interned kinds
@@ -1637,7 +1528,7 @@ static PyObject *run_stages(Doc &d) {
     (void)kb;
     Register reg(d.men.size());
 
-    // stage 1: global senses + pms intersection (resolve.py:1385-1401)
+    // stage 1: global senses + pms intersection (resolve_document)
     std::unordered_set<int64_t> global_senses;
     for (const Mention &m : d.men)
         for (int64_t s : m.senses) global_senses.insert(s);
@@ -1649,7 +1540,7 @@ static PyObject *run_stages(Doc &d) {
         m.pms.swap(kept);
     }
 
-    // stage 2: remove_shorter + nationality/entity split (resolve.py:1403-1411)
+    // stage 2: remove_shorter + nationality/entity split (resolve_document)
     vector<int32_t> figa;
     figa.reserve(d.men.size());
     for (int32_t i = 0; i < (int32_t)d.men.size(); i++) figa.push_back(i);
@@ -1663,7 +1554,7 @@ static PyObject *run_stages(Doc &d) {
             entities.push_back(mi);
     }
 
-    // stage 3: date-entity overlap filter (resolve.py:1413-1425)
+    // stage 3: date-entity overlap filter (resolve_document)
     vector<std::pair<int64_t, int64_t>> iv;
     iv.reserve(entities.size());
     for (int32_t mi : entities)
@@ -1680,7 +1571,7 @@ static PyObject *run_stages(Doc &d) {
     }
 
     // stage 4: merge entities_and_dates, dates-first on start ties
-    // (resolve.py:1427-1434 — [dates] + [entities] through a stable sort)
+    // (resolve_document: [dates] + [entities] through a stable sort)
     vector<ED> ed;
     ed.reserve(kept_dates.size() + entities.size());
     for (int32_t di : kept_dates)
@@ -1690,7 +1581,7 @@ static PyObject *run_stages(Doc &d) {
     std::stable_sort(ed.begin(), ed.end(),
                      [](const ED &a, const ED &b) { return a.start < b.start; });
 
-    // stage 5: disambiguate without context (resolve.py:1436-1438)
+    // stage 5: disambiguate without context (resolve_document)
     for (int32_t mi : entities)
         if (!dwoc(d, reg, mi)) goto fallback;
 
@@ -1702,7 +1593,7 @@ static PyObject *run_stages(Doc &d) {
             if (!dwc(d, ctx1, reg, mi)) goto fallback;
         if (!fix_poor(d, reg, entities)) goto fallback;
 
-        // stage 7: fresh context + two coref passes (resolve.py:1444-1453)
+        // stage 7: fresh context + two coref passes (resolve_document)
         Context ctx2;
         if (!ctx2.init(d, ed, nationalities)) goto fallback;
         vector<int32_t> name_corefs;
@@ -1715,8 +1606,8 @@ static PyObject *run_stages(Doc &d) {
         if (!resolve_corefs(d, ctx2, reg, entities)) goto fallback;
     }
 
-    // stage 8: overlap + nearby filters (resolve.py:1455-1460)
-    if (!overlap_filter(d, entities)) return NULL;
+    // stage 8: resolve.py remove_nearby_entities (the proper-noun overlap
+    // stage before it is the identity; see resolve_document)
     remove_nearby(d, entities);
     if (d.fallback) goto fallback;
 
@@ -1724,7 +1615,7 @@ static PyObject *run_stages(Doc &d) {
         vector<uint8_t> kept(d.men.size(), 0);
         for (int32_t mi : entities) kept[(size_t)mi] = 1;
 
-        // stage 9: final default-mode filter + output (resolve.py:1470-1507)
+        // stage 9: final default-mode filter + output (resolve_document)
         PyObject *out = PyList_New(0);
         if (!out) return NULL;
         for (const ED &e : ed) {
@@ -1898,12 +1789,12 @@ static const FragInfo *frag_info(KBImage *kb, const Py_UCS4 *frag,
 }
 
 // scan_resolve_doc(image, text, scan_text|None, dates, paragraphs,
-//                  lazy_cb, frag_cb) -> list[tuple]
+//                  frag_cb) -> list[tuple]
 static PyObject *scan_resolve_doc(PyObject *self, PyObject *args) {
-    PyObject *icap, *text_o, *scan_o, *dates, *paragraphs, *lazy_cb, *frag_cb;
-    if (!PyArg_ParseTuple(args, "OO!OO!O!OO", &icap, &PyUnicode_Type,
+    PyObject *icap, *text_o, *scan_o, *dates, *paragraphs, *frag_cb;
+    if (!PyArg_ParseTuple(args, "OO!OO!O!O", &icap, &PyUnicode_Type,
                           &text_o, &scan_o, &PyList_Type, &dates,
-                          &PyList_Type, &paragraphs, &lazy_cb, &frag_cb))
+                          &PyList_Type, &paragraphs, &frag_cb))
         return NULL;
     KBImage *kb = (KBImage *)PyCapsule_GetPointer(icap, "ner_spark.kbimage");
     if (!kb) return NULL;
@@ -1913,7 +1804,6 @@ static PyObject *scan_resolve_doc(PyObject *self, PyObject *args) {
 
     Doc d;
     d.kb = kb;
-    d.lazy_cb = lazy_cb;
     d.text = to_u32(text_o);
     U32 scan_buf;
     const U32 *stp = &d.text;
@@ -1985,7 +1875,7 @@ static PyObject *scan_resolve_doc(PyObject *self, PyObject *args) {
             m.end = (int32_t)end;
             m.srcp = &fi->source;
             m.dlp = &fi->dl;
-            // senses: ordered dedup of nonzero ids (resolve.py:111-116)
+            // senses: ordered dedup of nonzero ids (resolve.py Mention)
             Span<int64_t> ids{kb->term_ids.p + kb->term_off.p[best_term],
                               kb->term_off.p[best_term + 1] -
                                   kb->term_off.p[best_term]};
@@ -2026,8 +1916,8 @@ static PyMethodDef Methods[] = {
      "wrap_image(buffer) -> capsule — check a ckernel.kb_image buffer once "
      "and read it in place; ValueError on a bad image"},
     {"scan_resolve_doc", scan_resolve_doc, METH_VARARGS,
-     "scan_resolve_doc(image, text, scan_text, dates, paragraphs, lazy_cb,"
-     " frag_cb) -> list[tuple]"},
+     "scan_resolve_doc(image, text, scan_text, dates, paragraphs, frag_cb)"
+     " -> list[tuple]"},
     {NULL, NULL, 0, NULL}};
 
 static struct PyModuleDef moduledef = {

@@ -32,10 +32,10 @@ fuzz test (tests/test_ckernel.py) and the byte-identical reference goldens.
 
 Division of labor: Python keeps everything that needs re / dateutil /
 unicodedata — date detection with pre-rendered ISO strings, paragraph
-offsets, the pre-pass of non-ASCII / NCR match fragments (NCR decode,
-deaccent+lower, pronoun class; ``_frag_helper``) and the proper-noun regex
-spans (a lazy callback) — and C owns the scan, Mention/Register/Context and
-all sequential mutation.
+offsets, and the kernel's one callback, ``_frag_helper`` (``frag_cb``: NCR
+decode, deaccent+lower and pronoun class of a non-ASCII / NCR match
+fragment, cached per image) — and C owns the scan, Mention/Register/Context
+and all sequential mutation.
 
 Env:
   NER_SPARK_CKERNEL=0   disable (pure Python everywhere)
@@ -57,8 +57,10 @@ import tempfile
 
 from .automaton import GazetteerAutomaton
 from .dates import find_dates
-from .resolve import offsets_of_paragraphs, find_proper_nouns, _deaccent_lower
-from .textnorm import ncr2unicode, remove_accent_unicode
+from .resolve import offsets_of_paragraphs, _deaccent_lower
+# kgbench's per-layer tracer times find_proper_nouns through this module
+from .resolve import find_proper_nouns  # noqa: F401
+from .textnorm import ncr2unicode
 
 _SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                     "_resolve_kernel.cpp")
@@ -454,8 +456,8 @@ def covers(lang, find_names=False, mode="default") -> bool:
             and getattr(lang, "code", None) == "en" and available())
 
 
-def scan_resolve(image, text, scan_text=None, list_titles=frozenset(),
-                 lang=None, split_interval=True, as_tuples=False):
+def scan_resolve(image, text, scan_text=None, split_interval=True,
+                 as_tuples=False):
     """Fused scan+resolve in C over a wrapped image (:func:`wrap_image`)
     for a configuration :func:`covers` admits.  Returns rows, or None when
     this document raises ``Fallback`` (the caller runs
@@ -463,19 +465,11 @@ def scan_resolve(image, text, scan_text=None, list_titles=frozenset(),
     ck = _load()
     dates = _dates_for(text, split_interval)
     paragraphs = offsets_of_paragraphs(text)
-
-    def lazy():
-        # clean text + proper-noun spans, only when the overlap filter runs
-        clean = remove_accent_unicode(text)
-        pnouns = find_proper_nouns(clean, list_titles,
-                                   lang.proper_nouns_preps)
-        return (None if clean is text else clean, pnouns)
-
     try:
         rows = ck.scan_resolve_doc(
             image, text,
             None if scan_text is None or scan_text is text else scan_text,
-            dates, paragraphs, lazy, _frag_helper)
+            dates, paragraphs, _frag_helper)
     except ck.Fallback:
         return None
     if as_tuples:
@@ -485,8 +479,7 @@ def scan_resolve(image, text, scan_text=None, list_titles=frozenset(),
             for s, e, p, k, t, sn, iso, c in rows]
 
 
-def try_scan_resolve(kb, atm, text, scan_text=None,
-                     list_titles=frozenset(), find_names=False,
+def try_scan_resolve(kb, atm, text, scan_text=None, find_names=False,
                      mode="default", lang=None, split_interval=True,
                      as_tuples=False):
     """:func:`scan_resolve` for object callers: the image of ``kb`` +
@@ -499,5 +492,5 @@ def try_scan_resolve(kb, atm, text, scan_text=None,
     if cached is None or cached[0] is not atm:
         handle = _load().wrap_image(kb_image(kb, atm))
         cached = kb.__dict__["_ck_image"] = (atm, handle)
-    return scan_resolve(cached[1], text, scan_text, list_titles, lang,
-                        split_interval, as_tuples)
+    return scan_resolve(cached[1], text, scan_text, split_interval,
+                        as_tuples)

@@ -27,7 +27,6 @@ def scan_and_resolve(
     automaton: GazetteerAutomaton,
     text: str,
     scan_text: "str | None" = None,
-    list_titles: frozenset[str] = frozenset(),
     find_names: bool = False,
     mode: str = "default",
     lang: LangModule = EN,
@@ -43,13 +42,14 @@ def scan_and_resolve(
     from . import ckernel
 
     rows = ckernel.try_scan_resolve(
-        kb, automaton, text, scan_text, list_titles, find_names, mode,
-        lang, split_interval, as_tuples)
+        kb, automaton, text, scan_text, find_names=find_names, mode=mode,
+        lang=lang, split_interval=split_interval, as_tuples=as_tuples)
     if rows is not None:
         return rows
-    return resolve_in_python(kb, automaton, text, scan_text, list_titles,
-                             find_names, mode, lang, split_interval,
-                             as_tuples, names_strict)
+    return resolve_in_python(
+        kb, automaton, text, scan_text, find_names=find_names, mode=mode,
+        lang=lang, split_interval=split_interval, as_tuples=as_tuples,
+        names_strict=names_strict)
 
 
 def resolve_in_python(
@@ -57,7 +57,6 @@ def resolve_in_python(
     automaton: GazetteerAutomaton,
     text: str,
     scan_text: "str | None" = None,
-    list_titles: frozenset[str] = frozenset(),
     find_names: bool = False,
     mode: str = "default",
     lang: LangModule = EN,
@@ -70,7 +69,7 @@ def resolve_in_python(
     matches = automaton.scan(scan_text if scan_text is not None else text)
     return resolve_document(
         text, [(m.ids, m.start, m.end, m.fragment) for m in matches], kb,
-        list_titles, find_names=find_names, mode=mode, lang=lang,
+        find_names=find_names, mode=mode, lang=lang,
         split_interval=split_interval, as_tuples=as_tuples,
         names_strict=names_strict,
     )
@@ -80,7 +79,6 @@ def recognize(
     kb: KBBundle,
     automaton: GazetteerAutomaton,
     raw_text: str,
-    list_titles: frozenset[str] = frozenset(),
     lowercase: bool = False,
     deaccent: bool = False,
     find_names: bool = False,
@@ -93,8 +91,8 @@ def recognize(
     text, scan_text = apply_scan_modes(sanitize(raw_text), lowercase,
                                        deaccent)
     return scan_and_resolve(
-        kb, automaton, text, scan_text, list_titles, find_names=find_names,
-        mode=mode, lang=lang, names_strict=names_strict,
+        kb, automaton, text, scan_text, find_names=find_names, mode=mode,
+        lang=lang, names_strict=names_strict,
     )
 
 

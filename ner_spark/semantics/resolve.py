@@ -35,12 +35,16 @@ Deliberately reproduced reference quirks (they change outputs):
     shipped reference (str & set); we implement the intended semantics
     (drop candidates whose type contains 'group' when any candidate is an
     artist), as the OrderedSet variant of the same code does.
+
+The reference's proper-noun overlap filter (ner.py:499-547) has no stage
+here: with single-spaced proper-noun spans it never drops an entity, which
+tests/test_properties.py::test_proper_noun_spans_single_spaced guards.
 """
 
 from __future__ import annotations
 
 import re
-from bisect import bisect_left, bisect_right
+from bisect import bisect_right
 from functools import lru_cache
 from typing import Sequence
 
@@ -798,20 +802,13 @@ def _proper_noun_rx(preps_set: frozenset) -> "re.Pattern":
         + preps + r")* [A-Z][A-Za-z'\-]*")
 
 
-def find_proper_nouns(text: str, list_titles: set[str] = frozenset(),
+def find_proper_nouns(text: str,
                       preps_set: frozenset = None) -> list[tuple[int, int]]:
-    """ner.py:161-174."""
+    """ner.py:161-174, with an empty title list (no caller sets one)."""
     if preps_set is None:
         preps_set = EN.proper_nouns_preps
-    rx = _proper_noun_rx(preps_set)
-    if not list_titles:  # the first-word title probe can never fire
-        return [pn.span() for pn in rx.finditer(text) if pn.start() != 0]
-    out = []
-    for pn in rx.finditer(text):
-        fields = pn.group(0).split()
-        if fields[0] not in list_titles and pn.start() != 0:
-            out.append((pn.start(), pn.end()))
-    return out
+    return [pn.span() for pn in _proper_noun_rx(preps_set).finditer(text)
+            if pn.start() != 0]
 
 
 def remove_shorter_entities(mentions: list[Mention]) -> list[Mention]:
@@ -833,88 +830,6 @@ def remove_shorter_entities(mentions: list[Mention]) -> list[Mention]:
         kept_starts.insert(idx, s)
         kept_ends.insert(idx, t)
         out.append(e)
-    return out
-
-
-def resolve_overlapping_proper_nouns(entities: list[Mention], text: str,
-                                     list_titles: set[str] = frozenset(),
-                                     lang: LangModule = EN) -> list[Mention]:
-    """ner.py:499-547 — drop entities partially overlapping a proper noun
-    unless the uncovered part has no spaces or has apostrophes."""
-    if not entities:  # nothing can be dropped; skip the scan entirely
-        return []
-    clean = remove_accent_unicode(text)
-    proper = find_proper_nouns(clean, list_titles, lang.proper_nouns_preps)
-    if not proper:
-        return list(entities)
-    # Interval reformulation of the reference's char-offset set algebra
-    # (O(pn chars) scans instead of per-char set builds over the document):
-    # entity spans are disjoint, so "pn chars not covered by an entity" is
-    # a list of gap subintervals found by walking the sorted entity spans.
-    iv = sorted((e.start, e.end) for e in entities)  # half-open, disjoint
-    n_iv = len(iv)
-
-    def gaps_of(s: int, e: int) -> list[tuple[int, int]]:
-        res: list[tuple[int, int]] = []
-        # bisect to the first entity that can intersect [s, e)
-        i = bisect_left(iv, (s, -1))
-        if i > 0 and iv[i - 1][1] > s:
-            i -= 1
-        cur = s
-        while cur < e:
-            if i >= n_iv or iv[i][0] >= e:
-                res.append((cur, e))
-                break
-            es, ee = iv[i]
-            if es > cur:
-                res.append((cur, min(es, e)))
-            if ee >= e:
-                break
-            cur = max(cur, ee)
-            i += 1
-        return res
-
-    pn_gaps = [gaps_of(s, e) for s, e in proper]
-    spaces_in_diff: set[int] = set()
-    for gaps in pn_gaps:
-        for gs, ge in gaps:
-            for o in range(gs, ge):
-                if clean[o] == " ":
-                    spaces_in_diff.add(o)
-    solitary = {o for o in spaces_in_diff
-                if o - 1 not in spaces_in_diff and o + 1 not in spaces_in_diff}
-    # per-pn keep verdict: keep an overlapped entity iff the pn's uncovered
-    # part has no (non-solitary) spaces, or has an apostrophe
-    pn_keep: list[bool] = []
-    for gaps in pn_gaps:
-        has_space = False
-        has_apos = False
-        for gs, ge in gaps:
-            for o in range(gs, ge):
-                c = clean[o]
-                if c == " " and o not in solitary:
-                    has_space = True
-                elif c == "'":
-                    has_apos = True
-        pn_keep.append((not has_space) or has_apos)
-
-    pn_starts = [s for s, _ in proper]
-    out = []
-    for e in entities:
-        # pns overlapping [e.start, e.end): pn.start < e.end and pn.end > e.start
-        i = bisect_right(pn_starts, e.start)
-        if i > 0 and proper[i - 1][1] > e.start:
-            i -= 1
-        overlapped = False
-        keep = False
-        while i < len(proper) and proper[i][0] < e.end:
-            overlapped = True
-            if pn_keep[i]:
-                keep = True
-                break
-            i += 1
-        if not overlapped or keep:
-            out.append(e)
     return out
 
 
@@ -991,11 +906,10 @@ def _gazetteer_name_spans(text: str, name_dict: dict) -> list[tuple[int, int]]:
     return spans
 
 
-def _name_candidates(text: str, list_titles: set[str],
-                     kb: KBBundle | None = None,
+def _name_candidates(text: str, kb: KBBundle | None = None,
                      strict: bool = False) -> list[Mention]:
     deacc = remove_accent_unicode(text)
-    spans = find_proper_nouns(deacc, list_titles)
+    spans = find_proper_nouns(deacc)
     if kb is not None and kb.name_dict:
         # gazetteer spans contained in a (maximal) regex span add nothing;
         # the rest join the candidate list in start order so pseudo-sense
@@ -1022,7 +936,6 @@ def _name_candidates(text: str, list_titles: set[str],
 
 
 def add_unknown_names(entities_and_dates: list, text: str,
-                      list_titles: set[str] = frozenset(),
                       kb: KBBundle | None = None,
                       strict: bool = False) -> list[Mention]:
     """ner.py:211-283 merge semantics: same-surface names share a pseudo
@@ -1032,7 +945,7 @@ def add_unknown_names(entities_and_dates: list, text: str,
     With ``kb`` the candidate set also draws on the KB-derived name
     gazetteer (_gazetteer_name_spans); the merge semantics above apply
     to both sources identically."""
-    name_entities = _name_candidates(text, list_titles, kb, strict=strict)
+    name_entities = _name_candidates(text, kb, strict=strict)
     for i, ne in enumerate(name_entities):
         assigned = None
         for j in range(i):
@@ -1193,7 +1106,6 @@ def resolve_document(
     text: str,
     matches: Sequence[tuple[Sequence[int], int, int, str]],
     kb: KBBundle,
-    list_titles: set[str] = frozenset(),
     find_names: bool = False,
     mode: str = "default",
     lang: LangModule = EN,
@@ -1309,10 +1221,10 @@ def resolve_document(
     if trace:
         trace("resolve_coreferences", entities)
 
-    entities = resolve_overlapping_proper_nouns(entities, text, list_titles,
-                                                lang)
-    if trace:
-        trace("resolve_overlapping_proper_nouns", entities)
+    # ner.py:499-547 drops an entity partly overlapping a proper noun whose
+    # uncovered part has a non-solitary space and no apostrophe.  A span of
+    # find_proper_nouns joins words by single spaces, so that stage keeps
+    # every entity here (test_properties::test_proper_noun_spans_single_spaced)
     kept = set(map(id, remove_nearby_entities(entities, kb, text, lang)))
     entities_and_dates = [
         e for e in entities_and_dates
@@ -1321,8 +1233,7 @@ def resolve_document(
         trace("remove_nearby_entities", entities_and_dates)
 
     if find_names:  # -n mode (ner.py:696-697)
-        new_names = add_unknown_names(entities_and_dates, text,
-                                       list_titles, kb,
+        new_names = add_unknown_names(entities_and_dates, text, kb,
                                        strict=names_strict)
         adjust_coreferences(entities_and_dates, new_names, kb, register, lang)
         if trace:

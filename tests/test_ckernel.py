@@ -231,10 +231,9 @@ def test_bad_image_raises_value_error(env):
     assert ck.IMAGE_VERSION == ckernel.IMAGE_VERSION
     # the intact image wraps, also from a misaligned buffer (copied once)
     text = "Marie Krause met Hugo Wagner. He was here."
-    rows = ckernel.scan_resolve(ck.wrap_image(image), text, lang=lang)
+    rows = ckernel.scan_resolve(ck.wrap_image(image), text)
     shifted = memoryview(b"x" + image)[1:]
-    assert ckernel.scan_resolve(ck.wrap_image(shifted), text,
-                                lang=lang) == rows and rows
+    assert ckernel.scan_resolve(ck.wrap_image(shifted), text) == rows and rows
 
     def bad(mutate):
         b = bytearray(image)
@@ -291,7 +290,7 @@ def test_corrupted_image_never_crashes(env):
         except ValueError:
             continue
         n_ok += 1
-        ckernel.scan_resolve(handle, text, lang=lang, as_tuples=True)
+        ckernel.scan_resolve(handle, text, as_tuples=True)
     assert n_ok > 0
 
 

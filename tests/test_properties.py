@@ -11,6 +11,8 @@ from ner_spark.pipeline.ner import (MENTION_SCHEMA, SCAN_SCHEMA, arrow_batch,
                                     arrow_schema)
 from ner_spark.semantics.automaton import (GazetteerAutomaton, is_delimiter,
                                            tokenize)
+from ner_spark.semantics.lang import _REGISTRY
+from ner_spark.semantics.resolve import find_proper_nouns
 from ner_spark.semantics.textnorm import sanitize
 from ner_spark.streaming.comention import PAIR_SCHEMA
 
@@ -224,6 +226,31 @@ def test_resolve_document_never_raises_on_junk(text):
             finally:
                 ckernel.FORCE_DISABLE = False
     recognize(bundle, atm, text, find_names=True)
+
+
+_LANGS = sorted(_REGISTRY.values(), key=lambda m: m.code)
+_PN_WORDS = (["Alice", "O'Neil", "Jean-Paul", "X", "USA", "bob", "of", "is"]
+             + sorted(set().union(*(m.proper_nouns_preps for m in _LANGS))))
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(st.tuples(st.sampled_from(_PN_WORDS + [".", ",", "?", "'"]),
+                          st.sampled_from([" ", " ", "  ", "", "\n", ": "])),
+                max_size=40))
+def test_proper_noun_spans_single_spaced(parts):
+    """The reference's proper-noun overlap filter (ner.py:499-547) drops an
+    entity only when a proper noun's uncovered part holds a space next to
+    another space.  resolve_document omits the filter because no
+    find_proper_nouns span can hold one: every prep is one non-empty
+    word, and a span neither starts nor ends with a space nor holds two in
+    a row.  A prep that breaks this makes the filter live again."""
+    text = "".join(w + sep for w, sep in parts)
+    for lang in _LANGS:
+        for prep in lang.proper_nouns_preps:
+            assert prep and not any(c.isspace() for c in prep), (lang, prep)
+        for s, e in find_proper_nouns(text, lang.proper_nouns_preps):
+            span = text[s:e]
+            assert span.strip(" ") == span and "  " not in span, (lang, span)
 
 
 def _arrow_values(typ):
