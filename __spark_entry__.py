@@ -813,8 +813,9 @@ def q_dedup_lsh_realistic(spark, sf_dir):
     """dedup_jaccard's exact LSH-candidates-then-verify device on the
     REALISTIC near-dup fixture (the driver documents table is
     pathologically self-similar, so candidate pruning cannot show its win
-    there — tools/bench_dedup.py records the crossover; this row pins
-    result-exactness on the fixture where LSH matters)."""
+    there — BASELINE.md "Dedup crossover — round 5" records the
+    crossover; this row pins result-exactness on the fixture where LSH
+    matters)."""
     return lsh_jaccard_pairs(spark.read.parquet(_realistic_docs_path()),
                              block_col="source", threshold=0.5)
 

@@ -11,7 +11,9 @@
     form) and broadcasts the two — the replacement for the reference's
     shared-memory KB daemon (ner/kb_daemon.py:30-61) and ``.dct`` file.
     A worker reads the image; only a Python fallback unpickles the bundle
-    and decodes the automaton (``ckernel.image_automaton``);
+    and decodes the automaton (``ckernel.image_automaton``).  The scored
+    KB is one driver-local Arrow table; a KB of millions of rows is
+    served from the file-backed artifact instead;
   * :func:`save_kb_artifact` / :func:`load_kb_artifact` persist that
     compile as the one reusable, versioned KB artifact.
 
@@ -27,6 +29,7 @@ import os
 from dataclasses import dataclass
 from hashlib import sha256
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -38,35 +41,30 @@ from ner_spark.semantics.kb import (KB_COLUMNS, KBBundle,
                                     build_namelist, build_uri_namelist,
                                     filter_namelist_to_wiki, wiki_url_lines)
 
-_STR_COLS = [c for c in KB_COLUMNS if c not in
-             ("id", "wiki_backlinks", "wiki_hits", "wiki_ps")]
+_WIKI_COLS = ("wiki_backlinks", "wiki_hits", "wiki_ps")
+_STR_COLS = [c for c in KB_COLUMNS if c not in ("id", *_WIKI_COLS)]
+_SCORE_COLS = ("score_wiki", "score_metrics", "confidence")
+
+
+def kb_table(rows: list[dict]) -> pa.Table:
+    """Flat KB rows → one Arrow table: int64 1-based ``id``, the string
+    columns (``None`` → ``""``) and the wiki stats as nullable int64
+    (``None`` or ``""`` → null).  Typed Arrow columns convert the same way
+    whether or not the session enables Arrow for ``createDataFrame``."""
+    cols = {"id": pa.array([int(r["id"]) for r in rows], pa.int64())}
+    for c in _STR_COLS:
+        cols[c] = pa.array([str(r[c]) if r.get(c) is not None else ""
+                            for r in rows], pa.string())
+    for c in _WIKI_COLS:
+        cols[c] = pa.array(
+            [int(r[c]) if r.get(c) is not None and str(r[c]) != "" else None
+             for r in rows], pa.int64())
+    return pa.table(cols)
 
 
 def kb_rows_to_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
-    """Flat KB rows → DataFrame (strings + int wiki stats, 1-based id).
-    Built through a pandas frame so the transfer is one Arrow batch, not
-    row-at-a-time Row conversion (matters once the KB has millions of
-    rows — and cuts ~2 s off every driver-side compile even at test size).
-
-    The nullable wiki columns are object-dtype with real ``None``s, NOT
-    pandas ``Int64``: the session config decides whether createDataFrame
-    takes the Arrow path or the row-at-a-time ``_createFromLocal``
-    fallback, and under the fallback ``pd.NA`` degrades to float NaN which
-    LongType rejects.  Object+None converts identically under both paths,
-    so this function is Arrow-config-independent (round-1 driver failure:
-    FIELD_DATA_TYPE_UNACCEPTABLE_WITH_NAME on wiki_backlinks)."""
-    import pandas as pd
-
-    data = {"id": pd.array([int(r["id"]) for r in rows], dtype="int64")}
-    for c in _STR_COLS:
-        data[c] = [str(r[c]) if r.get(c) is not None else "" for r in rows]
-    for c in ("wiki_backlinks", "wiki_hits", "wiki_ps"):
-        data[c] = pd.Series(
-            [int(r[c]) if r.get(c) is not None and str(r[c]) != "" else None
-             for r in rows], dtype=object)
-    schema = "id long, " + ", ".join(f"`{c}` string" for c in _STR_COLS) \
-        + ", wiki_backlinks long, wiki_hits long, wiki_ps long"
-    return spark.createDataFrame(pd.DataFrame(data), schema=schema)
+    """Flat KB rows → DataFrame of :func:`kb_table`."""
+    return spark.createDataFrame(kb_table(rows))
 
 
 def with_static_scores(kb_df: DataFrame) -> DataFrame:
@@ -291,30 +289,25 @@ def compile_kb(spark: SparkSession, rows: list[dict],
     """Driver-side KB compile + broadcast (rebuilt when the KB snapshot
     changes, the analogue of the ETag/version handshake ner.py:756-810):
     :func:`compile_gazetteer` (same options), plus the scored relational
-    KB and the broadcasts.  The artifact records ``lowercase``,
-    ``deaccent`` and ``lang``, and every scan of it (extract_mentions,
-    scan_mentions, the streaming pairs) applies the matching text
-    transform."""
+    KB (one Arrow table, cached and counted) and the broadcasts.  The
+    artifact records ``lowercase``, ``deaccent`` and ``lang``, and every
+    scan of it (extract_mentions, scan_mentions, the streaming pairs)
+    applies the matching text transform."""
     bundle, automaton = compile_gazetteer(
         rows, lowercase=lowercase, deaccent=deaccent, lang=lang,
         **compile_kw)
-    # scored KB DataFrame: the bundle's scores (computed once by
-    # KBBundle.from_rows; with_static_scores is the DataFrame-job oracle
-    # they are tested against in tests/test_kb.py)
-    import pandas as pd
-
-    ids = [int(r["id"]) for r in rows]
-    scores = spark.createDataFrame(pd.DataFrame({
-        "id": pd.array(ids, dtype="int64"),
-        "score_wiki": [bundle.cols["score_wiki"][i] for i in ids],
-        "score_metrics": [bundle.cols["score_metrics"][i] for i in ids],
-        "confidence": [bundle.cols["confidence"][i] for i in ids],
-    }), schema="id long, score_wiki double, score_metrics double, "
-               "confidence double")
-    kb_df = kb_rows_to_df(spark, rows).join(F.broadcast(scores), "id")
-    # cache + eager materialization: the triple builder reads the scored KB
-    # from several branches (types, attributes, redirects)
-    kb_df = kb_df.cache()
+    # scored KB: the bundle's scores (computed once by KBBundle.from_rows;
+    # with_static_scores is the DataFrame-job oracle they are tested
+    # against in tests/test_kb.py) appended to the KB table
+    table = kb_table(rows)
+    ids = table.column("id").to_pylist()
+    for c in _SCORE_COLS:
+        table = table.append_column(
+            c, pa.array([bundle.cols[c][i] for i in ids], pa.float64()))
+    # cache + eager count: without them the session's first joins and
+    # aggregations run inside the next job, which kgbench measured ~20%
+    # slower (BASELINE.md "Scored KB as one Arrow table")
+    kb_df = spark.createDataFrame(table).cache()
     kb_df.count()
     sc = spark.sparkContext
     return KBArtifacts(

@@ -205,8 +205,8 @@ def lsh_jaccard_pairs(df: DataFrame, block_col: str | None = None,
                       threshold: float = 0.5, num_hashes: int = 128,
                       bands: int | None = None, shingle: int = 1,
                       seed: int = 42,
-                      id_col: str = "doc_id", text_col: str = "text",
-                      candidates_only: bool = False) -> DataFrame:
+                      id_col: str = "doc_id", text_col: str = "text"
+                      ) -> DataFrame:
     """Exact distinct-shingle Jaccard pairs (``shingle=1`` → token sets,
     n>1 → word n-grams), with MinHash-LSH candidate generation instead of
     an all-pairs cross product — the scale-correct composition of
@@ -264,8 +264,6 @@ def lsh_jaccard_pairs(df: DataFrame, block_col: str | None = None,
                 F.col(f"b.{id_col}").alias("id2"))
         .dropDuplicates(["id1", "id2"])
     )
-    if candidates_only:  # plan-shape statistic (tools/bench_dedup.py)
-        return cand
     t1 = toks.select(F.col(id_col).alias("id1"), F.col("toks").alias("toks1"))
     t2 = toks.select(F.col(id_col).alias("id2"), F.col("toks").alias("toks2"))
     verified = (

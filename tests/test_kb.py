@@ -261,6 +261,53 @@ def test_compile_kb_wiki_filter_flag(spark):
     assert all(i in (0, 1) for i in nk_filt["Alice"])
 
 
+ARROW_KEY = "spark.sql.execution.arrow.pyspark.enabled"
+KB_DF_DDL = (
+    "id BIGINT, type STRING, name STRING, aliases STRING, redirects STRING, "
+    "gender STRING, date_of_birth STRING, date_of_death STRING, "
+    "nationalities STRING, country STRING, jobs STRING, roles STRING, "
+    "location STRING, founded STRING, cancelled STRING, start STRING, "
+    "end STRING, fictional STRING, description STRING, wikipedia_url STRING, "
+    "wiki_backlinks BIGINT, wiki_hits BIGINT, wiki_ps BIGINT, "
+    "score_wiki DOUBLE, score_metrics DOUBLE, confidence DOUBLE")
+
+
+@pytest.fixture(params=["true", "false"], ids=["arrow", "no_arrow"])
+def arrow_spark(spark, request):
+    prev = spark.conf.get(ARROW_KEY)
+    spark.conf.set(ARROW_KEY, request.param)
+    try:
+        yield spark
+    finally:
+        spark.conf.set(ARROW_KEY, prev)
+
+
+def test_compile_kb_scored_kb_matches_dataframe_scores(arrow_spark, kb_rows):
+    """compile_kb's scored KB has the pinned schema and, column by column,
+    the rows of the with_static_scores DataFrame job.  Scores agree to
+    test_static_scores_python_vs_dataframe's 0.011: a tie such as 78.125
+    rounds to 78.12 in Python's round() and to 78.13 in Spark's HALF_UP
+    round()."""
+    from pyspark.sql.types import StructType
+
+    from ner_spark.kb.build import compile_kb, kb_rows_to_df, \
+        with_static_scores
+
+    kb_df = compile_kb(arrow_spark, kb_rows).kb_df
+    assert kb_df.schema == StructType.fromDDL(KB_DF_DDL)
+    got = {r.id: r.asDict() for r in kb_df.collect()}
+    want = {r.id: r.asDict() for r in
+            with_static_scores(kb_rows_to_df(arrow_spark, kb_rows)).collect()}
+    assert got.keys() == want.keys() and len(got) == len(kb_rows)
+    scores = ("score_wiki", "score_metrics", "confidence")
+    for i, row in got.items():
+        for c, v in row.items():
+            if c in scores:
+                assert v == pytest.approx(want[i][c], abs=0.011), (i, c)
+            else:
+                assert v == want[i][c], (i, c)
+
+
 # -- the compiled KB image: hash-seed independent, decodes to its trie -----
 
 # compile variants: default, -d -r, -u, -Q and no pronoun keys, over the
