@@ -15,20 +15,29 @@ Iceberg-shaped:
     per completed bucket — the resume set and the metrics table in one
     (SURVEY A15).  The row is computed from the committed files, not from
     the rows handed to the writer, and a bucket with no rows records
-    ``(b, 0, 0)``.
+    ``(b, 0, 0)``.  The rows of a wave are a few dozen bytes, so the
+    driver writes them as one Parquet file through the Hadoop FileSystem
+    of the table path (any scheme Spark writes to), under a hidden
+    ``.part-<uuid>.parquet`` name that readers skip, then renames the file
+    into place: a kill leaves either the whole file or nothing visible.
 
 Resume contract: :func:`commit_buckets` — the one commit path, under both
 :func:`resumable_write` and the mentions checkpoint — commits only the
 buckets of ``range(N)`` missing from the lineage sidecar, and builds
 nothing when none are; re-running after a kill converges to the same
-table (tests/test_lineage.py kills between buckets and re-runs).
+table (tests/test_lineage.py kills between buckets and re-runs).  A
+sidecar that lists a bucket ``>= N`` belongs to a table of another bucket
+count and is refused.
 """
 
 from __future__ import annotations
 
 import os
+import uuid
 from typing import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -53,12 +62,18 @@ def _lineage_of(df: DataFrame) -> DataFrame:
     )
 
 
+def _lineage_fs(spark: SparkSession, path: str):
+    """(Hadoop Path of the lineage sidecar, its FileSystem)."""
+    lpath = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(path, LINEAGE_DIR))
+    return lpath, lpath.getFileSystem(spark._jsc.hadoopConfiguration())
+
+
 def completed_buckets(spark: SparkSession, path: str) -> list[int]:
     """Buckets recorded in the lineage sidecar; ``[]`` when it does not
     exist yet.  A sidecar that exists but cannot be read raises rather
     than silently triggering a full recompute."""
-    lpath = spark._jvm.org.apache.hadoop.fs.Path(os.path.join(path, LINEAGE_DIR))
-    if not lpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(lpath):
+    lpath, fs = _lineage_fs(spark, path)
+    if not fs.exists(lpath):
         return []
     return [r.bucket for r in read_lineage(spark, path).select("bucket").collect()]
 
@@ -68,24 +83,58 @@ def read_lineage(spark: SparkSession, path: str) -> DataFrame:
         os.path.join(path, LINEAGE_DIR))
 
 
+def _append_lineage(spark: SparkSession, path: str, rows: list[tuple]) -> None:
+    """Add ``rows`` to the lineage sidecar as one Parquet file, written by
+    the driver through the Hadoop FileSystem of ``path`` under a hidden
+    name and then renamed into place."""
+    bucket, n_rows, fingerprint = zip(*rows)
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.table({"bucket": pa.array(bucket, pa.int32()),
+                             "n_rows": pa.array(n_rows, pa.int64()),
+                             "fingerprint": pa.array(fingerprint, pa.int64())}),
+                   buf)
+    lpath, fs = _lineage_fs(spark, path)
+    name = f"part-{uuid.uuid4().hex}.parquet"
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    tmp, final = Path(lpath, "." + name), Path(lpath, name)
+    out = fs.create(tmp, False)
+    try:
+        out.write(bytearray(buf.getvalue().to_pybytes()))
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        raise OSError(f"could not rename {tmp.toString()} to {final.toString()}")
+
+
 def commit_buckets(spark: SparkSession, path: str, n_buckets: int,
                    bucketed: Callable[[list[int]], DataFrame], waves: int = 1,
                    fail_after_buckets: int | None = None) -> list[int]:
     """Commit the buckets of ``range(n_buckets)`` that the lineage sidecar
     does not list yet; returns them.  ``bucketed(todo)`` gives the rows of
     the buckets in ``todo``, with an int ``bucket`` column; it is not
-    called at all when every bucket is done.
+    called at all when every bucket is done.  A sidecar that lists a
+    bucket ``>= n_buckets`` belongs to a table of another bucket count:
+    it raises, naming the path and both counts.
 
     The todo buckets are committed in ``waves`` sequential groups.  Each
     wave is written once, co-located so each bucket directory gets one
     file, then its lineage is computed from a partition-pruned readback of
     the committed files (a bucket with no rows records ``(b, 0, 0)``) and
-    appended after the data — a kill between the two re-commits the wave.
+    appended after the data by the driver (:func:`_append_lineage`) — a
+    kill between the two re-commits the wave.
 
     ``fail_after_buckets`` is a test hook: raise after committing that
     many buckets to simulate a mid-job kill.
     """
     done = set(completed_buckets(spark, path))
+    if done and max(done) >= n_buckets:
+        # a kill or a waved write may have left only part of the old
+        # buckets, so max(done) + 1 is a lower bound on the old count
+        raise ValueError(
+            f"{path} was written with at least {max(done) + 1} buckets "
+            f"(its lineage lists bucket {max(done)}), this job writes "
+            f"{n_buckets}: delete the output, or rerun with the bucket "
+            f"count it was written with")
     todo = [b for b in range(n_buckets) if b not in done]
     wave_size = -(-len(todo) // max(1, int(waves))) or 1  # ceil; 1 if no todo
     committed = 0
@@ -106,9 +155,7 @@ def commit_buckets(spark: SparkSession, path: str, n_buckets: int,
             written = spark.read.schema(df.schema).parquet(path) \
                 .filter(F.col("bucket").isin(wave))
             have = {r.bucket: tuple(r) for r in _lineage_of(written).collect()}
-            spark.createDataFrame([have.get(b, (b, 0, 0)) for b in wave],
-                                  LINEAGE_SCHEMA) \
-                .write.mode("append").parquet(os.path.join(path, LINEAGE_DIR))
+            _append_lineage(spark, path, [have.get(b, (b, 0, 0)) for b in wave])
             committed += len(wave)
         if kill:
             raise RuntimeError(

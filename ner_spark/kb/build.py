@@ -5,8 +5,9 @@
     CLI (``api.LocalRecognizer``), the golden/kernel tools and
     :func:`compile_kb` all call it;
   * :func:`compile_kb` adds the relational ``kb`` DataFrame (with the
-    bundle's A10/A11 static scores; used by the triple/attribute stages
-    and as the small side of broadcast joins), serializes the bundle and
+    bundle's A10/A11 static scores and each entity's sameAs ``component``;
+    used by the triple/attribute stages and as the small side of
+    broadcast joins), serializes the bundle and
     the automaton's trie as the C kernel's KB image (its only serialized
     form) and broadcasts the two — the replacement for the reference's
     shared-memory KB daemon (ner/kb_daemon.py:30-61) and ``.dct`` file.
@@ -20,7 +21,9 @@
 :func:`with_static_scores` is the same scoring as a pure DataFrame job
 (groupBy type → max, broadcast join back, column arithmetic —
 metrics_knowledge_base.py:330-387); tests/test_kb.py holds it equal to
-the bundle's scores, so either is the oracle of the other.
+the bundle's scores, so either is the oracle of the other.  Likewise
+``pipeline.triples.sameas_mapping`` (redirect edges → connected
+components as a DataFrame job) is the oracle of :func:`kb_components`.
 """
 
 from __future__ import annotations
@@ -33,6 +36,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ner_spark.pipeline.cc import union_find
 from ner_spark.semantics.automaton import GazetteerAutomaton
 from ner_spark.semantics.ckernel import IMAGE_VERSION, image_automaton, \
     kb_image
@@ -60,6 +64,24 @@ def kb_table(rows: list[dict]) -> pa.Table:
             [int(r[c]) if r.get(c) is not None and str(r[c]) != "" else None
              for r in rows], pa.int64())
     return pa.table(cols)
+
+
+def kb_components(table: pa.Table) -> pa.Array:
+    """The sameAs ``component`` of every row of a :func:`kb_table`: the
+    minimum id connected to it by redirect links (its own id when it has
+    none).  The edges follow ``pipeline.triples.redirect_edges`` exactly:
+    ``redirects`` split on ``|``, empty names dropped, an edge to every
+    row whose ``name`` matches the redirect name exactly."""
+    ids = table.column("id").to_pylist()
+    by_name: dict[str, list[int]] = {}
+    for i, name in zip(ids, table.column("name").to_pylist()):
+        by_name.setdefault(name, []).append(i)
+    comp = union_find(
+        (src, dst)
+        for src, redirects in zip(ids, table.column("redirects").to_pylist())
+        for rname in redirects.split("|") if rname
+        for dst in by_name.get(rname, ()))
+    return pa.array([comp.get(i, i) for i in ids], pa.int64())
 
 
 def kb_rows_to_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
@@ -109,6 +131,8 @@ def with_static_scores(kb_df: DataFrame) -> DataFrame:
 
 
 SCAN_KEYS = ("lowercase", "deaccent", "lang")
+# artifact layout version: 2 added kb.parquet's sameAs ``component``
+MANIFEST_FORMAT = 2
 
 
 @dataclass
@@ -117,7 +141,7 @@ class KBArtifacts:
     and the scan modes the automaton was compiled for (applied by every
     scan of it)."""
 
-    kb_df: DataFrame          # with static scores
+    kb_df: DataFrame          # with static scores and sameAs component
     bundle_bc: "object"       # Broadcast[KBBundle]
     image_bc: "object"        # Broadcast[bytes]: ckernel.kb_image
     n_entities: int
@@ -289,7 +313,8 @@ def compile_kb(spark: SparkSession, rows: list[dict],
     """Driver-side KB compile + broadcast (rebuilt when the KB snapshot
     changes, the analogue of the ETag/version handshake ner.py:756-810):
     :func:`compile_gazetteer` (same options), plus the scored relational
-    KB (one Arrow table, cached and counted) and the broadcasts.  The
+    KB with its sameAs components (one Arrow table, cached and counted)
+    and the broadcasts.  The
     artifact records ``lowercase``, ``deaccent`` and ``lang``, and every
     scan of it (extract_mentions, scan_mentions, the streaming pairs)
     applies the matching text transform."""
@@ -304,6 +329,7 @@ def compile_kb(spark: SparkSession, rows: list[dict],
     for c in _SCORE_COLS:
         table = table.append_column(
             c, pa.array([bundle.cols[c][i] for i in ids], pa.float64()))
+    table = table.append_column("component", kb_components(table))
     # cache + eager count: without them the session's first joins and
     # aggregations run inside the next job, which kgbench measured ~20%
     # slower (BASELINE.md "Scored KB as one Arrow table")
@@ -332,12 +358,14 @@ def save_kb_artifact(art: KBArtifacts, path: str,
     figa/SharedKB load them (ner.py:432-443, ner/kb_daemon.py:30-61).
     Layout::
 
-        <path>/kb.parquet/       scored relational KB (kb_df)
+        <path>/kb.parquet/       scored relational KB with its sameAs
+                                 components (kb_df)
         <path>/bundle.pkl        KBBundle (columnar broadcast payload)
         <path>/kb_image.bin      the C kernel's KB image (ckernel.kb_image),
                                  also the automaton's only serialized form
-        <path>/MANIFEST.json     counts, scan config, image format and
-                                 sha256, version handshake key
+        <path>/MANIFEST.json     layout format, counts, scan config,
+                                 image format and sha256, version
+                                 handshake key
 
     ``path`` is a driver-local or NFS directory: all four files go
     through the local filesystem (``kb.parquet`` as a ``file://`` URI,
@@ -358,7 +386,8 @@ def save_kb_artifact(art: KBArtifacts, path: str,
     with open(os.path.join(path, "kb_image.bin"), "wb") as fh:
         fh.write(art.image_bc.value)
     with open(os.path.join(path, "MANIFEST.json"), "w") as fh:
-        _json.dump({"n_entities": art.n_entities, "n_keys": art.n_keys,
+        _json.dump({"manifest_format": MANIFEST_FORMAT,
+                    "n_entities": art.n_entities, "n_keys": art.n_keys,
                     "kb_version": kb_version, "image_format": IMAGE_VERSION,
                     "image_sha256": sha256(art.image_bc.value).hexdigest(),
                     **art.scan_config}, fh)
@@ -372,8 +401,9 @@ def load_kb_artifact(spark: SparkSession, path: str,
     of a resumable job) starts from it; the KB compile happens once per KB
     snapshot, not once per job.  ``path`` is a driver-local or NFS
     directory, read through the local filesystem like
-    :func:`save_kb_artifact` writes it.  A MANIFEST without the scan
-    config, with another KB image format or with an ``image_sha256``
+    :func:`save_kb_artifact` writes it.  A MANIFEST of another layout
+    format (one saved before ``kb.parquet`` carried ``component``), without
+    the scan config, with another KB image format or with an ``image_sha256``
     that is missing or not the image's (``wrap_image`` checks bounds, not
     content) raises: recompile.  The image is broadcast as is."""
     import json as _json
@@ -381,6 +411,12 @@ def load_kb_artifact(spark: SparkSession, path: str,
 
     with open(os.path.join(path, "MANIFEST.json")) as fh:
         manifest = _json.load(fh)
+    if manifest.get("manifest_format") != MANIFEST_FORMAT:
+        raise ValueError(
+            f"KB artifact {path} has MANIFEST format "
+            f"{manifest.get('manifest_format')!r}, this version reads "
+            f"{MANIFEST_FORMAT} (kb.parquet with the sameAs component) "
+            f"— recompile it")
     if not all(k in manifest for k in SCAN_KEYS):
         raise ValueError(f"KB artifact {path} does not record its scan "
                          f"config {SCAN_KEYS} — recompile it")

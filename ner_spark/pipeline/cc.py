@@ -20,8 +20,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _driver_union_find(spark, pairs) -> DataFrame:
-    """Exact same result as the distributed loop, for small edge sets."""
+def union_find(pairs) -> dict[int, int]:
+    """node → minimum node id of its component, over every node of
+    ``pairs``: the driver-side solver of :func:`connected_components` and
+    of the KB compile's sameAs components (``kb.build.kb_components``)."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:
@@ -34,8 +36,7 @@ def _driver_union_find(spark, pairs) -> DataFrame:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    rows = [(int(n), int(find(n))) for n in parent]
-    return spark.createDataFrame(rows or [], "node long, component long")
+    return {int(n): int(find(n)) for n in parent}
 
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -66,9 +67,10 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
         if n_edges <= driver_threshold:
             pdf = e.toPandas()
             e.unpersist()
-            return _driver_union_find(
-                edges.sparkSession,
-                zip(pdf["src"].to_list(), pdf["dst"].to_list()))
+            return edges.sparkSession.createDataFrame(
+                list(union_find(zip(pdf["src"].to_list(),
+                                    pdf["dst"].to_list())).items()),
+                "node long, component long")
     sym = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
     sym = sym.localCheckpoint()
     if driver_threshold:

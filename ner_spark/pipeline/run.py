@@ -4,16 +4,22 @@ Stage graph (SURVEY §4 target plan):
 
   pages ──filter todo url-buckets──(narrow mapInArrow, broadcast
         KB image + KB bundle; Arrow batches in and out)──► mentions
-  mentions ──checkpoint──┬─► mention triples  (narrow)
-                         └─► co-mention edges (shuffle url,par → agg)
-  kb ──────────────────────► type/attribute triples (narrow)
-  kb.redirects ──CC loop──► sameAs mapping ──broadcast──► canonical remap
+  mentions ──checkpoint──┬─► sense → component ──► mention triples
+                         │   (broadcast join on longs, narrow)
+                         └─► co-mention counts (shuffle url,par → agg)
+                             ──► s1, s2 → component (broadcast joins)
+  kb (id, component) ─────► type/attribute triples, sameAs triples (narrow)
   all ──► resumable bucketed write + per-partition lineage
 
+The sameAs components come compiled in the KB table
+(``kb.build.compile_kb``), so building the triples runs no Spark action.
 Both bucketed writes (the mentions checkpoint and the triple table) go
 through ``io.catalog.commit_buckets``: per wave, one shuffle on the bucket
 column and one dynamic-overwrite write, then lineage from a
-partition-pruned readback of the committed files.
+partition-pruned readback of the committed files (one ``collect``),
+which the driver appends to the sidecar.  A fresh job thus runs five
+Spark actions: per table a write and a lineage collect, then the
+readback count.
 
 ``mentions`` is consumed by two branches, so :func:`run_kg_job` always
 writes it to parquet and re-reads it: the expensive scan is checkpointed,

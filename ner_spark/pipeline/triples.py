@@ -9,12 +9,28 @@ Triple kinds produced from the final mentions table and the KB:
   * sameAs edges      (alias entity, "sameAs", canonical entity) via
     connected components over redirect links, J10
 
+Canonicalization: every entity of :func:`build_triples` is its sameAs
+``component`` (the minimum id of its redirect cluster).  The KB compile
+(``kb.build.compile_kb``) puts that column into the KB table, so the job
+runs no connected-components step: mention senses and co-mention ends
+go through a broadcast left join on the long ``(id, component)`` pairs
+of the KB rows with ``id != component`` (every other id maps to itself),
+type and attribute subjects read ``component`` directly, and sameAs
+triples are the KB rows with ``id != component``.  Only entity ids are
+remapped; a literal or URL that happens to read ``e:<id>`` stays as it
+is.  :func:`build_triples` runs no Spark action.  :func:`sameas_mapping`
+derives the same components as a DataFrame job (redirect edges →
+``cc.connected_components``); the contract queries use it, and it is the
+oracle of the compiled column (tests/test_kb.py).
+
 Scale notes: the co-mention self-join shuffles on (url, par) — a
 fine-grained, naturally unskewed key; entity-popularity skew only appears
 in the following count aggregation where map-side partial aggregation
-absorbs it.  The canonical remap joins triples against the (tiny) component
-mapping with an explicit ``broadcast`` so no shuffle of the big triple
-table is needed.  Entities are rendered as "e:<id>" URIs.
+absorbs it.  The component lookups broadcast only the KB rows of
+redirect clusters that are not their cluster's minimum (the rows with
+``id != component``), so no shuffle of the mentions or the pairs is
+needed.  Entities are
+rendered as "e:<id>" URIs.
 """
 
 from __future__ import annotations
@@ -51,15 +67,29 @@ def mention_triples(mentions: DataFrame) -> DataFrame:
     return ents.unionByName(dates)
 
 
+def _to_component(df: DataFrame, col: str, aliases: DataFrame) -> DataFrame:
+    """``col``, an entity id, replaced by its sameAs component through a
+    broadcast left join on longs against ``aliases``, the ``(_id,
+    _component)`` pairs of the KB rows whose id is not their own
+    component; every other id stays as it is."""
+    return (
+        df.join(F.broadcast(aliases), F.col(col).cast("long") == F.col("_id"),
+                "left")
+        .withColumn(col, F.coalesce("_component", F.col(col).cast("long")))
+        .drop("_id", "_component")
+    )
+
+
 def type_triples(kb_df: DataFrame) -> DataFrame:
-    return kb_df.select(_e(F.col("id")).alias("subj"),
+    """(component, rdf:type, type) per KB row."""
+    return kb_df.select(_e(F.col("component")).alias("subj"),
                         F.lit("rdf:type").alias("pred"),
                         F.col("type").alias("obj"))
 
 
 def attribute_triples(kb_df: DataFrame) -> DataFrame:
-    """KB attribute predicates; multivalue columns exploded on '|'
-    (KB_MULTIVALUE_DELIM, ner/configs.py:14).
+    """KB attribute predicates of each row's component; multivalue columns
+    exploded on '|' (KB_MULTIVALUE_DELIM, ner/configs.py:14).
 
     Single-pass: one (pred, objs) struct array per row, exploded twice —
     ONE scan of the KB instead of a 16-branch union that re-reads (and at
@@ -72,7 +102,7 @@ def attribute_triples(kb_df: DataFrame) -> DataFrame:
         for a in _MULTI_ATTRS
     ]
     return (
-        kb_df.select(_e(F.col("id")).alias("subj"),
+        kb_df.select(_e(F.col("component")).alias("subj"),
                      F.explode(F.array(*po)).alias("po"))
         .select("subj", F.col("po.pred").alias("pred"),
                 F.explode("po.objs").alias("obj"))
@@ -80,8 +110,9 @@ def attribute_triples(kb_df: DataFrame) -> DataFrame:
     )
 
 
-def comention_edges(mentions: DataFrame) -> DataFrame:
-    """(e1, coMentionedWith, e2) with e1 < e2, weighted by pair count (J9)."""
+def _comention_counts(mentions: DataFrame) -> DataFrame:
+    """(s1, s2, weight): sense pairs with s1 < s2 and the number of
+    (url, par) they share."""
     ents = (
         mentions.filter(F.col("sense").isNotNull())
         .select("url", "par", "sense").distinct()
@@ -92,13 +123,18 @@ def comention_edges(mentions: DataFrame) -> DataFrame:
         .filter(F.col("a.sense") < F.col("b.sense"))
         .select(F.col("a.sense").alias("s1"), F.col("b.sense").alias("s2"))
     )
-    return (
-        pairs.groupBy("s1", "s2").agg(F.count(F.lit(1)).alias("weight"))
-        .select(_e(F.col("s1")).alias("subj"),
-                F.lit("coMentionedWith").alias("pred"),
-                _e(F.col("s2")).alias("obj"),
-                "weight")
-    )
+    return pairs.groupBy("s1", "s2").agg(F.count(F.lit(1)).alias("weight"))
+
+
+def _comention_triples(counts: DataFrame) -> DataFrame:
+    return counts.select(_e(F.col("s1")).alias("subj"),
+                         F.lit("coMentionedWith").alias("pred"),
+                         _e(F.col("s2")).alias("obj"), "weight")
+
+
+def comention_edges(mentions: DataFrame) -> DataFrame:
+    """(e1, coMentionedWith, e2) with e1 < e2, weighted by pair count (J9)."""
+    return _comention_triples(_comention_counts(mentions))
 
 
 def entity_date_edges(mentions: DataFrame) -> DataFrame:
@@ -177,42 +213,28 @@ def sameas_triples(mapping: DataFrame) -> DataFrame:
     )
 
 
-def canonicalize(triples: DataFrame, mapping: DataFrame) -> DataFrame:
-    """Remap e:<id> subjects/objects to their canonical component via a
-    broadcast join (mapping ≪ triples; no shuffle of the triple table)."""
-    m = mapping.select(
-        _e(F.col("node")).alias("from_uri"), _e(F.col("component")).alias("to_uri"))
-    t = (
-        triples.join(F.broadcast(m).withColumnRenamed("from_uri", "subj")
-                     .withColumnRenamed("to_uri", "subj_canon"),
-                     on="subj", how="left")
-        .join(F.broadcast(m).withColumnRenamed("from_uri", "obj")
-              .withColumnRenamed("to_uri", "obj_canon"),
-              on="obj", how="left")
-    )
-    return t.select(
-        F.coalesce("subj_canon", "subj").alias("subj"),
-        F.col("pred"),
-        F.coalesce("obj_canon", "obj").alias("obj"),
-        *[c for c in triples.columns if c not in ("subj", "pred", "obj")],
-    )
-
-
 def build_triples(mentions: DataFrame, kb_df: DataFrame,
                   include_comentions: bool = True) -> DataFrame:
-    """Full triple table (canonicalized); weight column only on co-mentions."""
-    base = (
-        mention_triples(mentions)
+    """Full triple table, canonicalized on the KB's compiled sameAs
+    ``component``; weight column only on co-mentions.  Co-mentions are
+    counted on the raw senses, then both ends are canonicalized."""
+    null_weight = F.lit(None).cast("long")
+    aliases = kb_df.filter(F.col("id") != F.col("component")).select(
+        F.col("id").alias("_id"), F.col("component").alias("_component"))
+    out = (
+        mention_triples(_to_component(mentions, "sense", aliases))
         .unionByName(type_triples(kb_df))
         .unionByName(attribute_triples(kb_df))
-        .withColumn("weight", F.lit(None).cast("long"))
+        .withColumn("weight", null_weight)
     )
     if include_comentions:
-        base = base.unionByName(comention_edges(mentions))
-    mapping = sameas_mapping(kb_df)
-    out = canonicalize(base, mapping)
+        counts = _to_component(_to_component(
+            _comention_counts(mentions), "s1", aliases), "s2", aliases)
+        out = out.unionByName(_comention_triples(counts))
+    mapping = aliases.select(F.col("_id").alias("node"),
+                             F.col("_component").alias("component"))
     return out.unionByName(
-        sameas_triples(mapping).withColumn("weight", F.lit(None).cast("long")))
+        sameas_triples(mapping).withColumn("weight", null_weight))
 
 
 def triple_delta(old: DataFrame, new: DataFrame) -> DataFrame:

@@ -269,7 +269,8 @@ KB_DF_DDL = (
     "location STRING, founded STRING, cancelled STRING, start STRING, "
     "end STRING, fictional STRING, description STRING, wikipedia_url STRING, "
     "wiki_backlinks BIGINT, wiki_hits BIGINT, wiki_ps BIGINT, "
-    "score_wiki DOUBLE, score_metrics DOUBLE, confidence DOUBLE")
+    "score_wiki DOUBLE, score_metrics DOUBLE, confidence DOUBLE, "
+    "component BIGINT")
 
 
 @pytest.fixture(params=["true", "false"], ids=["arrow", "no_arrow"])
@@ -284,7 +285,8 @@ def arrow_spark(spark, request):
 
 def test_compile_kb_scored_kb_matches_dataframe_scores(arrow_spark, kb_rows):
     """compile_kb's scored KB has the pinned schema and, column by column,
-    the rows of the with_static_scores DataFrame job.  Scores agree to
+    the rows of the with_static_scores DataFrame job (``component`` is
+    held to its own oracle below).  Scores agree to
     test_static_scores_python_vs_dataframe's 0.011: a tie such as 78.125
     rounds to 78.12 in Python's round() and to 78.13 in Spark's HALF_UP
     round()."""
@@ -295,7 +297,7 @@ def test_compile_kb_scored_kb_matches_dataframe_scores(arrow_spark, kb_rows):
 
     kb_df = compile_kb(arrow_spark, kb_rows).kb_df
     assert kb_df.schema == StructType.fromDDL(KB_DF_DDL)
-    got = {r.id: r.asDict() for r in kb_df.collect()}
+    got = {r.id: r.asDict() for r in kb_df.drop("component").collect()}
     want = {r.id: r.asDict() for r in
             with_static_scores(kb_rows_to_df(arrow_spark, kb_rows)).collect()}
     assert got.keys() == want.keys() and len(got) == len(kb_rows)
@@ -306,6 +308,36 @@ def test_compile_kb_scored_kb_matches_dataframe_scores(arrow_spark, kb_rows):
                 assert v == pytest.approx(want[i][c], abs=0.011), (i, c)
             else:
                 assert v == want[i][c], (i, c)
+
+
+def _component_kbs():
+    from kgbench.kbgen import gen_big_kb_rows
+    from ner_spark.fixtures.gen import gen_kb_rows
+    from ner_spark.fixtures.redirects import redirect_rows, typed_rows
+
+    return {"redirects": redirect_rows, "typed": typed_rows,
+            "fixture": gen_kb_rows,
+            "kbgen_10k": lambda: gen_big_kb_rows(10_000, 0)}
+
+
+@pytest.mark.parametrize("name", list(_component_kbs()))
+def test_compiled_components_match_sameas_mapping(spark, name):
+    """compile_kb's ``component`` is the sameAs component of every row:
+    the DataFrame job redirect_edges → connected_components gives the
+    same node → component map, with every node that has no redirect edge
+    mapped to itself."""
+    from ner_spark.kb.build import compile_kb
+    from ner_spark.pipeline.triples import sameas_mapping
+
+    rows = _component_kbs()[name]()
+    kb_df = compile_kb(spark, rows).kb_df
+    got = {r.id: r.component for r in kb_df.select("id", "component").collect()}
+    mapping = {r.node: r.component for r in sameas_mapping(kb_df).collect()}
+    assert len(got) == len(rows)
+    assert got == {i: mapping.get(i, i) for i in got}
+    # the fixtures do exercise the redirect clusters
+    assert sum(i != c for i, c in got.items()) >= 3
+    kb_df.unpersist()
 
 
 # -- the compiled KB image: hash-seed independent, decodes to its trie -----

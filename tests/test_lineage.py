@@ -7,8 +7,9 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from ner_spark.io.catalog import (_lineage_of, completed_buckets,
-                                  read_lineage, resumable_write)
+from ner_spark.io.catalog import (_lineage_of, commit_buckets,
+                                  completed_buckets, read_lineage,
+                                  resumable_write, with_bucket)
 
 
 @pytest.fixture()
@@ -112,6 +113,49 @@ def test_resume_does_not_evaluate_input(spark, triple_df, tmp_path):
         poisoned.collect()
     m = resumable_write(poisoned, path, n_buckets=4)
     assert m["skipped_resume"] == [0, 1, 2, 3]
+
+
+def test_changed_bucket_count_raises(spark, triple_df, tmp_path):
+    """A table committed with 8 buckets is not resumed as a 4-bucket one:
+    the sidecar lists buckets 4-7, so the rerun raises naming the path and
+    both counts instead of returning the 8-bucket table.  The old count is
+    only a lower bound: an 8-bucket waved write killed after buckets 0-5
+    lists only those, and a 6-bucket rerun would find every bucket listed
+    (the job key of ROADMAP item 6 closes that), so the message names no
+    count to rerun with."""
+    path = str(tmp_path / "t")
+    resumable_write(triple_df, path, n_buckets=8)
+    with pytest.raises(ValueError, match=r"t was written with at least 8 "
+                                         r"buckets.*this job writes 4"):
+        resumable_write(triple_df, path, n_buckets=4)
+    assert resumable_write(triple_df, path, n_buckets=8)["skipped_resume"] \
+        == list(range(8))
+
+    killed = str(tmp_path / "killed")
+    bdf = with_bucket(triple_df, "subj", 8)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        commit_buckets(spark, killed, 8, lambda todo: bdf.filter(
+            F.col("bucket").isin(todo)), waves=4, fail_after_buckets=6)
+    assert sorted(completed_buckets(spark, killed)) == list(range(6))
+    with pytest.raises(ValueError, match=r"at least 6 buckets.*this job "
+                       r"writes 4.*rerun with the bucket count it was "
+                       r"written with$"):
+        resumable_write(triple_df, killed, n_buckets=4)
+
+
+def test_lineage_written_by_driver(spark, triple_df, tmp_path):
+    """Each wave's lineage is one Parquet file, renamed into place from a
+    hidden temp name: no temp file is left behind, and Spark reads the
+    sidecar with its schema."""
+    path = tmp_path / "t"
+    resumable_write(triple_df, str(path), n_buckets=8)
+    names = os.listdir(path / "_lineage")
+    parts = [n for n in names if n.endswith(".parquet")]
+    assert len(parts) == 1 and parts[0].startswith("part-")
+    assert not [n for n in names if n.startswith(".part-")
+                and n.endswith(".parquet")]
+    assert read_lineage(spark, str(path)).schema.simpleString() == \
+        "struct<bucket:int,n_rows:bigint,fingerprint:bigint>"
 
 
 def test_unreadable_lineage_raises(spark, triple_df, tmp_path):

@@ -76,6 +76,25 @@ def test_triples_schema_and_canonicalization(spark, pages_df, artifacts):
     triples.unpersist()
 
 
+def test_build_triples_is_lazy(spark, pages_df, artifacts):
+    """Building the triple table runs no Spark job: the sameAs components
+    come compiled in ``kb_df``, so a rerun whose buckets are all committed
+    never evaluates it (resumable_write's promise)."""
+    from ner_spark.pipeline.ner import extract_mentions
+    from ner_spark.pipeline.triples import build_triples
+
+    mentions = extract_mentions(pages_df, artifacts)
+    sc = spark.sparkContext
+    group = "build-triples-lazy"
+    sc.setJobGroup(group, "triple build must be lazy")
+    try:
+        _ = build_triples(mentions, artifacts.kb_df).schema
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(jobs) == []
+
+
 def test_comention_edges_symmetric_ordering(spark, pages_df, artifacts):
     from ner_spark.pipeline.ner import extract_mentions
     from ner_spark.pipeline.triples import comention_edges
@@ -117,6 +136,30 @@ def test_run_kg_job_end_to_end(spark, pages_df, artifacts, tmp_path):
     res = run_kg_job(spark, pages_df, artifacts, waved, n_buckets=8, waves=2)
     assert res == first
     assert lineage(f"{waved}/triples") == tables["triples"]
+
+def test_run_kg_job_action_count(spark, pages_df, artifacts, tmp_path):
+    """A fresh KG job runs five Spark actions (per table a bucketed write
+    and a lineage collect, then the readback count); a rerun on the
+    completed output runs only the two lineage reads and the count."""
+    from ner_spark.pipeline.run import run_kg_job
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def root_executions():
+        # the status store is fed by the listener bus: drain it first
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        ex = store.executionsList()
+        return {ex.apply(i).executionId() for i in range(ex.size())
+                if ex.apply(i).rootExecutionId() == ex.apply(i).executionId()}
+
+    out = str(tmp_path / "out")
+    before = root_executions()
+    run_kg_job(spark, pages_df, artifacts, out, n_buckets=4)
+    fresh = root_executions() - before
+    run_kg_job(spark, pages_df, artifacts, out, n_buckets=4)
+    rerun = root_executions() - before - fresh
+    assert (len(fresh), len(rerun)) == (5, 3)
+
 
 def test_null_and_empty_text_safe(spark, artifacts):
     """Crawl tables contain null/empty text; the pipeline must pass them
@@ -229,6 +272,29 @@ def test_apply_delta_roundtrip(spark):
     want = sorted((r.subj, r.pred, r.obj, r.weight)
                   for r in new.collect())
     assert roundtrip == want
+
+
+def test_kb_artifact_without_components_refused(spark, artifacts,
+                                                 tmp_path):
+    """An artifact saved before kb.parquet carried the sameAs ``component``
+    (its MANIFEST has no ``manifest_format``) is refused: recompile."""
+    import json
+    import os
+
+    from ner_spark.kb.build import load_kb_artifact, save_kb_artifact
+
+    path = str(tmp_path / "kb_art")
+    save_kb_artifact(artifacts, path)
+    loaded = load_kb_artifact(spark, path)
+    assert "component" in loaded.kb_df.columns
+    manifest = os.path.join(path, "MANIFEST.json")
+    with open(manifest) as fh:
+        old = {k: v for k, v in json.load(fh).items()
+               if k != "manifest_format"}
+    with open(manifest, "w") as fh:
+        json.dump(old, fh)
+    with pytest.raises(ValueError, match="MANIFEST format None.*recompile"):
+        load_kb_artifact(spark, path)
 
 
 def test_kb_artifact_save_load_roundtrip(spark, kb_rows, pages_df,

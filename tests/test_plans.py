@@ -73,15 +73,22 @@ def test_sanitize_is_whole_stage_codegen(spark, parquet_pages):
     assert plan.lstrip().startswith("*(")
 
 
-def test_canonicalize_broadcasts_mapping(spark):
-    from ner_spark.pipeline.triples import canonicalize
+def test_build_triples_broadcasts_components(spark, artifacts):
+    """The canonical remap is three broadcast left joins on the KB's
+    (id, component) pairs — mention sense, co-mention s1 and s2 — and no
+    join of the triple build shuffles both sides."""
+    from ner_spark.pipeline.triples import build_triples
 
-    triples = spark.range(0, 1000).select(
-        F.concat(F.lit("e:"), F.col("id").cast("string")).alias("subj"),
-        F.lit("p").alias("pred"), F.lit("x").alias("obj"))
-    mapping = spark.createDataFrame([(5, 1), (7, 1)], "node long, component long")
-    plan = _plan(canonicalize(triples, mapping))
-    assert "BroadcastHashJoin" in plan
+    mentions = spark.range(0, 1000).select(
+        (F.col("id") % 40).cast("string").alias("url"),
+        (F.col("id") % 3).cast("int").alias("par"),
+        F.lit("kb").alias("kind"),
+        (F.col("id") % 145 + 1).cast("int").alias("sense"),
+        F.lit(None).cast("string").alias("iso"))
+    plan = _plan(build_triples(mentions, artifacts.kb_df))
+    lookups = [ln for ln in plan.splitlines()
+               if "BroadcastHashJoin" in ln and "LeftOuter" in ln]
+    assert len(lookups) == 3, lookups
     assert "SortMergeJoin" not in plan
 
 
