@@ -20,6 +20,8 @@ Iceberg-shaped:
     of the table path (any scheme Spark writes to), under a hidden
     ``.part-<uuid>.parquet`` name that readers skip, then renames the file
     into place: a kill leaves either the whole file or nothing visible.
+    The driver reads the sidecar back through the same FileSystem
+    (:func:`lineage_table`), with no Spark job.
 
 Resume contract: :func:`commit_buckets` — the one commit path, under both
 :func:`resumable_write` and the mentions checkpoint — commits only the
@@ -43,7 +45,8 @@ from pyspark.sql import functions as F
 
 
 LINEAGE_DIR = "_lineage"
-LINEAGE_SCHEMA = "bucket int, n_rows long, fingerprint long"
+LINEAGE_SCHEMA = pa.schema([("bucket", pa.int32()), ("n_rows", pa.int64()),
+                            ("fingerprint", pa.int64())])
 
 
 def with_bucket(df: DataFrame, key: str = "subj", n_buckets: int = 64) -> DataFrame:
@@ -68,19 +71,36 @@ def _lineage_fs(spark: SparkSession, path: str):
     return lpath, lpath.getFileSystem(spark._jsc.hadoopConfiguration())
 
 
-def completed_buckets(spark: SparkSession, path: str) -> list[int]:
-    """Buckets recorded in the lineage sidecar; ``[]`` when it does not
-    exist yet.  A sidecar that exists but cannot be read raises rather
-    than silently triggering a full recompute."""
+def lineage_table(spark: SparkSession, path: str) -> pa.Table:
+    """The lineage sidecar of ``path``, read by the driver through the
+    Hadoop FileSystem that :func:`_append_lineage` writes through; hidden
+    (``.``) and ``_`` names are skipped.  Empty when the sidecar does not
+    exist yet.  A sidecar file that cannot be read raises rather than
+    silently triggering a full recompute."""
     lpath, fs = _lineage_fs(spark, path)
-    if not fs.exists(lpath):
-        return []
-    return [r.bucket for r in read_lineage(spark, path).select("bucket").collect()]
+    tables = [LINEAGE_SCHEMA.empty_table()]
+    if fs.exists(lpath):
+        to_bytes = spark._jvm.org.apache.commons.io.IOUtils.toByteArray
+        for status in fs.listStatus(lpath):
+            if status.getPath().getName()[:1] in "._":
+                continue
+            inp = fs.open(status.getPath())
+            try:
+                data = to_bytes(inp)
+            finally:
+                inp.close()
+            tables.append(pq.read_table(pa.BufferReader(data))
+                          .cast(LINEAGE_SCHEMA))
+    return pa.concat_tables(tables)
+
+
+def completed_buckets(spark: SparkSession, path: str) -> list[int]:
+    """Buckets recorded in the lineage sidecar (:func:`lineage_table`)."""
+    return lineage_table(spark, path).column("bucket").to_pylist()
 
 
 def read_lineage(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.schema(LINEAGE_SCHEMA).parquet(
-        os.path.join(path, LINEAGE_DIR))
+    return spark.createDataFrame(lineage_table(spark, path))
 
 
 def _append_lineage(spark: SparkSession, path: str, rows: list[tuple]) -> None:
@@ -89,10 +109,8 @@ def _append_lineage(spark: SparkSession, path: str, rows: list[tuple]) -> None:
     name and then renamed into place."""
     bucket, n_rows, fingerprint = zip(*rows)
     buf = pa.BufferOutputStream()
-    pq.write_table(pa.table({"bucket": pa.array(bucket, pa.int32()),
-                             "n_rows": pa.array(n_rows, pa.int64()),
-                             "fingerprint": pa.array(fingerprint, pa.int64())}),
-                   buf)
+    pq.write_table(pa.table([bucket, n_rows, fingerprint],
+                            schema=LINEAGE_SCHEMA), buf)
     lpath, fs = _lineage_fs(spark, path)
     name = f"part-{uuid.uuid4().hex}.parquet"
     Path = spark._jvm.org.apache.hadoop.fs.Path

@@ -8,9 +8,8 @@ by name through the HEAD dict.
 
 This module round-trips our flat KB rows through that format so (a) a user
 of the reference can bring an actual KB.tsv, (b) the HEAD-driven
-column-by-name addressing is tested.  The Spark read path loads data rows
-distributed (``spark.read.csv`` with tab separator, skipping the header
-block driver-side) — at real KB sizes (GBs) the data part is the bulk.
+column-by-name addressing is tested.  The KB is read on the driver only
+(:func:`load_kb_rows`): ``compile_gazetteer`` needs every row there.
 """
 
 from __future__ import annotations
@@ -136,76 +135,3 @@ def load_kb_rows(path: str | None = None) -> list[dict]:
         return gen_kb_rows()
     with open(path) as fh:
         return read_kb_tsv(fh)[2]
-
-
-def read_kb_tsv_spark(spark, path: str):
-    """Distributed read of the data part: driver parses the tiny header,
-    executors scan the TSV rows (the GB-scale part at real KB sizes).
-    Header lines are dropped by a narrow filter (data rows have a numeric
-    ID in column 0; the VERSION/HEAD lines never do) — no global ordering
-    or driver collect.  Wikidata-keyed KBs (Q-prefixed IDs) go through the
-    driver reader ``read_kb_tsv``: their internal 1-based id is the data
-    LINE NUMBER, which a distributed unordered scan cannot assign."""
-    from pyspark.sql import functions as F
-
-    with open(path) as fh:
-        version, head_kb, _ = read_kb_tsv_header_only(fh)
-        first_data = fh.readline()
-        if first_data[:1] == "Q":
-            # friendly early error for the all-Q case: the numeric-ID row
-            # filter below would silently drop EVERY row of a
-            # Wikidata-keyed KB → 0-row DataFrame → a mention-less
-            # pipeline with no error anywhere downstream
-            raise ValueError(
-                f"{path} is Wikidata-keyed (Q-prefixed IDs); its internal "
-                "ids are data-line numbers, which a distributed unordered "
-                "scan cannot assign — use the driver reader read_kb_tsv")
-    colmap = next(iter(head_kb.values()))
-    names = [n for n, _ in sorted(colmap.items(), key=lambda kv: kv[1])]
-    schema = ", ".join(f"_c{i} string" for i in range(len(names)))
-    # row filter with a distributed fail-fast: numeric IDs are data,
-    # header shapes (VERSION=/HEAD '<type>' line/blank) drop silently,
-    # and ANYTHING ELSE (a Q-keyed row in a mixed file, corruption)
-    # raises at scan time via assert_true — the driver sniff above only
-    # sees line 1, and a partial silent drop is the same loss class as
-    # the all-Q case.  The assert lives INSIDE the filter expression so
-    # the optimizer cannot prune it; CASE short-circuits per row, so
-    # clean rows never evaluate it.
-    is_num = F.col("_c0").rlike("^[0-9]+$")
-    is_hdr = (F.col("_c0").isNull() | (F.col("_c0") == "")
-              | F.col("_c0").rlike("^(VERSION=|<)"))
-    keep = (F.when(is_num, F.lit(True))
-            .when(is_hdr, F.lit(False))
-            .otherwise(F.assert_true(
-                F.lit(False),
-                F.lit(f"{path}: non-numeric ID in a data row (Wikidata-"
-                      "keyed or corrupt KB.tsv) — use the driver reader "
-                      "read_kb_tsv")).isNull()))
-    df = (
-        spark.read.option("sep", "\t").option("header", "false")
-        .schema(schema)
-        .csv(path)
-        .filter(keep)
-    )
-    rev = {v: k for k, v in _HEAD_NAMES.items()}
-    cols = []
-    for i, name in enumerate(names):
-        flat = "id" if name == "ID" else rev.get(name)
-        if flat:
-            c = F.col(f"_c{i}")
-            if flat in ("id", "wiki_backlinks", "wiki_hits", "wiki_ps"):
-                c = c.cast("long")
-            cols.append(c.alias(flat))
-    return version, df.select(*cols)
-
-
-def read_kb_tsv_header_only(fh: TextIO) -> tuple[int, dict, None]:
-    version_line = fh.readline().strip()
-    version = int(version_line.split("=", 1)[1])
-    head_lines = []
-    for line in fh:
-        if line == "\n":
-            break
-        head_lines.append(line.rstrip("\n").split("\t"))
-    head_kb, _ = parse_head_kb(head_lines)
-    return version, head_kb, None

@@ -91,8 +91,10 @@ def kb_rows_to_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
 
 def with_static_scores(kb_df: DataFrame) -> DataFrame:
     """A10/A11 as a DataFrame job: per-type maxima (0.25 cap for
-    backlinks/hits), weighted averages 5:5:1 and 5:1, 2-decimal rounding
-    (metrics_knowledge_base.py:330-387)."""
+    backlinks/hits), weighted averages 5:5:1 and 5:1
+    (metrics_knowledge_base.py:330-387).  The scores are left unrounded:
+    Spark's HALF_UP ``round`` differs from the reference's "%.2f" on ties
+    such as 78.125, so callers round in Python."""
     nonempty = sum(
         (F.when(F.coalesce(F.col(c).cast("string"), F.lit("")) != "", 1).otherwise(0)
          for c in KB_COLUMNS if c != "id"),
@@ -123,9 +125,9 @@ def with_static_scores(kb_df: DataFrame) -> DataFrame:
     score_metrics = 100.0 * (norm(F.col("desc_len"), F.col("mx_desc"))
                              + norm(F.col("ncols"), F.col("mx_ncols"))) / 2.0
     return (
-        df.withColumn("score_wiki", F.round(score_wiki, 2))
-          .withColumn("score_metrics", F.round(score_metrics, 2))
-          .withColumn("confidence", F.round((5 * score_wiki + 1 * score_metrics) / 6.0, 2))
+        df.withColumn("score_wiki", score_wiki)
+          .withColumn("score_metrics", score_metrics)
+          .withColumn("confidence", (5 * score_wiki + 1 * score_metrics) / 6.0)
           .drop("desc_len", "ncols", "mx_desc", "mx_ncols", "mx_bl", "mx_ht", "mx_ps")
     )
 

@@ -6,7 +6,7 @@ import io
 
 import pytest
 
-from ner_spark.io.kbtsv import read_kb_tsv, read_kb_tsv_spark, write_kb_tsv
+from ner_spark.io.kbtsv import read_kb_tsv, write_kb_tsv
 from ner_spark.semantics.automaton import GazetteerAutomaton
 from ner_spark.semantics.kb import KBBundle, build_namelist
 from ner_spark.semantics.recognize import recognize
@@ -35,18 +35,6 @@ def test_kb_tsv_roundtrip(kb_rows):
     assert b1.cols["confidence"] == b2.cols["confidence"]
 
 
-def test_kb_tsv_spark_read(spark, kb_rows, tmp_path):
-    p = str(tmp_path / "KB.tsv")
-    with open(p, "w") as fh:
-        write_kb_tsv(kb_rows, fh)
-    version, df = read_kb_tsv_spark(spark, p)
-    assert version == 1
-    assert df.count() == len(kb_rows)
-    row = df.filter("id = 1").collect()[0]
-    assert row.name == str(kb_rows[0]["name"])
-    assert row.wiki_backlinks == kb_rows[0]["wiki_backlinks"]
-
-
 def test_kb_tsv_rejects_garbage():
     with pytest.raises(ValueError, match="not a KB.tsv"):
         read_kb_tsv(io.StringIO("no version line\n"))
@@ -65,29 +53,6 @@ def test_kb_tsv_wikidata_qids_roundtrip(kb_rows):
     assert [r["qid"] for r in rows] == [f"Q{100 + i}"
                                         for i in range(1, len(kb_rows) + 1)]
     assert rows[0]["name"] == str(kb_rows[0]["name"])
-
-
-def test_kb_tsv_spark_rejects_qkeyed(spark, kb_rows, tmp_path):
-    """The distributed reader must FAIL FAST on a Q-keyed KB.tsv: its
-    numeric-ID row filter would otherwise silently drop every data row
-    (0-row KB → mention-less pipeline with no error anywhere)."""
-    qrows = [dict(r, qid=f"Q{100 + r['id']}") for r in kb_rows]
-    p = str(tmp_path / "KBQ.tsv")
-    with open(p, "w") as fh:
-        write_kb_tsv(qrows, fh)
-    with pytest.raises(ValueError, match="Wikidata-keyed"):
-        read_kb_tsv_spark(spark, p)
-    # MIXED file (numeric first row, Q-keyed later — our own writer can
-    # produce this): the driver sniff passes, so the distributed
-    # assert_true guard must raise at scan time instead of silently
-    # dropping the Q rows
-    mixed = [dict(kb_rows[0])] + qrows[1:]
-    p2 = str(tmp_path / "KBmixed.tsv")
-    with open(p2, "w") as fh:
-        write_kb_tsv(mixed, fh)
-    _, df = read_kb_tsv_spark(spark, p2)
-    with pytest.raises(Exception, match="non-numeric ID"):
-        df.count()
 
 
 def test_compile_kb_qid_mode(spark, kb_rows):

@@ -19,18 +19,18 @@ def bundle(kb_rows):
 # -- static scores ---------------------------------------------------------
 
 def test_static_scores_python_vs_dataframe(spark, kb_rows, bundle):
-    """The DataFrame score job and the pure-Python oracle must agree —
-    each validates the other."""
+    """The DataFrame score job, rounded in Python, and the pure-Python
+    oracle must agree exactly — each validates the other."""
     from ner_spark.kb.build import kb_rows_to_df, with_static_scores
 
     df = with_static_scores(kb_rows_to_df(spark, kb_rows))
-    got = {r.id: (r.score_wiki, r.score_metrics, r.confidence)
+    got = {r.id: tuple(round(v, 2) for v in r[1:])
            for r in df.select("id", "score_wiki", "score_metrics",
                               "confidence").collect()}
     for i in range(1, bundle.n_rows() + 1):
         exp = (bundle.cols["score_wiki"][i], bundle.cols["score_metrics"][i],
                bundle.cols["confidence"][i])
-        assert got[i] == pytest.approx(exp, abs=0.011), i
+        assert got[i] == exp, i
 
 
 def test_score_formula_weights():
@@ -286,10 +286,8 @@ def arrow_spark(spark, request):
 def test_compile_kb_scored_kb_matches_dataframe_scores(arrow_spark, kb_rows):
     """compile_kb's scored KB has the pinned schema and, column by column,
     the rows of the with_static_scores DataFrame job (``component`` is
-    held to its own oracle below).  Scores agree to
-    test_static_scores_python_vs_dataframe's 0.011: a tie such as 78.125
-    rounds to 78.12 in Python's round() and to 78.13 in Spark's HALF_UP
-    round()."""
+    held to its own oracle below); the DataFrame job's scores, rounded to
+    2 decimals in Python, equal the bundle's exactly."""
     from pyspark.sql.types import StructType
 
     from ner_spark.kb.build import compile_kb, kb_rows_to_df, \
@@ -305,7 +303,7 @@ def test_compile_kb_scored_kb_matches_dataframe_scores(arrow_spark, kb_rows):
     for i, row in got.items():
         for c, v in row.items():
             if c in scores:
-                assert v == pytest.approx(want[i][c], abs=0.011), (i, c)
+                assert v == round(want[i][c], 2), (i, c)
             else:
                 assert v == want[i][c], (i, c)
 

@@ -145,8 +145,8 @@ def test_changed_bucket_count_raises(spark, triple_df, tmp_path):
 
 def test_lineage_written_by_driver(spark, triple_df, tmp_path):
     """Each wave's lineage is one Parquet file, renamed into place from a
-    hidden temp name: no temp file is left behind, and Spark reads the
-    sidecar with its schema."""
+    hidden temp name: no temp file is left behind, and read_lineage gives
+    the sidecar's schema."""
     path = tmp_path / "t"
     resumable_write(triple_df, str(path), n_buckets=8)
     names = os.listdir(path / "_lineage")
@@ -159,16 +159,21 @@ def test_lineage_written_by_driver(spark, triple_df, tmp_path):
 
 
 def test_unreadable_lineage_raises(spark, triple_df, tmp_path):
-    """A missing sidecar means nothing is done; one that exists but cannot
-    be read must raise, not silently trigger a full recompute."""
-    from py4j.protocol import Py4JJavaError
+    """A missing sidecar means nothing is done; hidden and ``_`` names in
+    it (temp files, a Spark ``_SUCCESS``) are skipped; a file that exists
+    but cannot be read must raise, not silently trigger a full
+    recompute."""
+    import pyarrow as pa
 
     assert completed_buckets(spark, str(tmp_path / "fresh")) == []
     path = str(tmp_path / "t")
     resumable_write(triple_df, path, n_buckets=4)
+    for name in ("_SUCCESS", ".part-killed.parquet"):
+        (tmp_path / "t" / "_lineage" / name).write_bytes(b"")
+    assert sorted(completed_buckets(spark, path)) == [0, 1, 2, 3]
     (tmp_path / "t" / "_lineage" / "part-garbage.parquet").write_bytes(
         b"not a parquet file")
-    with pytest.raises(Py4JJavaError, match="not a Parquet file"):
+    with pytest.raises(pa.ArrowInvalid, match="not a parquet file"):
         completed_buckets(spark, path)
 
 

@@ -111,15 +111,22 @@ def test_comention_edges_symmetric_ordering(spark, pages_df, artifacts):
 def test_run_kg_job_end_to_end(spark, pages_df, artifacts, tmp_path):
     """The one KG job: a first run commits every bucket of both tables, a
     rerun on the same ``out`` resumes all of them with the same count, and
-    waves only change how the mentions checkpoint is committed."""
+    waves only change how the mentions checkpoint is committed.  Every
+    run reports the wall of both phases."""
     from ner_spark.io.catalog import read_lineage
     from ner_spark.pipeline.run import run_kg_job
 
     def lineage(path):
         return sorted(tuple(r) for r in read_lineage(spark, path).collect())
 
+    def counts(res):
+        phases = res.pop("phases")
+        assert set(phases) == {"mentions_s", "triples_s"}
+        assert min(phases.values()) >= 0
+        return res
+
     out = str(tmp_path / "one")
-    first = run_kg_job(spark, pages_df, artifacts, out, n_buckets=8)
+    first = counts(run_kg_job(spark, pages_df, artifacts, out, n_buckets=8))
     assert first["n_triples"] > 0
     assert (first["buckets_completed"], first["buckets_resumed"]) == (8, 0)
     tables = {t: lineage(f"{out}/{t}") for t in ("mentions", "triples")}
@@ -127,20 +134,22 @@ def test_run_kg_job_end_to_end(spark, pages_df, artifacts, tmp_path):
         assert [r[0] for r in rows] == list(range(8))
     assert sum(r[1] for r in tables["triples"]) == first["n_triples"]
 
-    again = run_kg_job(spark, pages_df, artifacts, out, n_buckets=8)
+    again = counts(run_kg_job(spark, pages_df, artifacts, out, n_buckets=8))
     assert again == dict(first, buckets_resumed=8)
     # nothing re-committed: the lineage of both tables is unchanged
     assert {t: lineage(f"{out}/{t}") for t in tables} == tables
 
     waved = str(tmp_path / "waves")
-    res = run_kg_job(spark, pages_df, artifacts, waved, n_buckets=8, waves=2)
+    res = counts(run_kg_job(spark, pages_df, artifacts, waved, n_buckets=8,
+                            waves=2))
     assert res == first
     assert lineage(f"{waved}/triples") == tables["triples"]
 
 def test_run_kg_job_action_count(spark, pages_df, artifacts, tmp_path):
-    """A fresh KG job runs five Spark actions (per table a bucketed write
-    and a lineage collect, then the readback count); a rerun on the
-    completed output runs only the two lineage reads and the count."""
+    """A fresh KG job runs four Spark actions (per table a bucketed write
+    and a lineage collect); a rerun on the completed output runs none:
+    the driver reads the lineage sidecars, and the triple count is their
+    ``n_rows`` sum."""
     from ner_spark.pipeline.run import run_kg_job
 
     store = spark._jsparkSession.sharedState().statusStore()
@@ -158,7 +167,7 @@ def test_run_kg_job_action_count(spark, pages_df, artifacts, tmp_path):
     fresh = root_executions() - before
     run_kg_job(spark, pages_df, artifacts, out, n_buckets=4)
     rerun = root_executions() - before - fresh
-    assert (len(fresh), len(rerun)) == (5, 3)
+    assert (len(fresh), len(rerun)) == (4, 0)
 
 
 def test_null_and_empty_text_safe(spark, artifacts):

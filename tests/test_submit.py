@@ -67,6 +67,7 @@ def test_spark_submit_packaged_zip(tmp_path, sf_dir, spark):
     assert summary["buckets_completed"] == 4
     assert summary["buckets_resumed"] == 0
     assert summary["kb"] == "compiled"      # first run compiles + saves
+    assert set(summary["phases"]) == {"kb_s", "mentions_s", "triples_s"}
 
     # resume contract: same --out skips every completed bucket
     proc2 = subprocess.run(cmd, capture_output=True, text=True, timeout=420,

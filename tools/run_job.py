@@ -12,10 +12,12 @@ With no --kb the synthetic fixture KB is compiled (useful for smoke runs).
 ``pipeline.run.run_kg_job`` checkpoints the mentions and writes the
 canonicalized triple table, both with per-bucket lineage (re-running with
 the same --out skips completed buckets); a one-line JSON summary is
-printed.  A loaded --kb-artifact must match --lowercase/--deaccent/--lang
-and the KB inputs: its version key is the sha256 of the --kb and
---tagged-inflections bytes ("synthetic" for the fixture KB), so an
-artifact compiled from another KB is refused.
+printed, with the wall seconds of each phase in ``phases`` (``kb_s``: the
+KB compile or artifact load; ``mentions_s``, ``triples_s``: the two steps
+of ``run_kg_job``).  A loaded --kb-artifact must match
+--lowercase/--deaccent/--lang and the KB inputs: its version key is the
+sha256 of the --kb and --tagged-inflections bytes ("synthetic" for the
+fixture KB), so an artifact compiled from another KB is refused.
 """
 
 from __future__ import annotations
@@ -100,7 +102,7 @@ def main() -> None:
             with open(args.tagged_inflections) as fh:
                 tagged = fh.read().splitlines()
 
-    t0 = time.time()
+    t0 = time.perf_counter()
     if have_artifact:
         try:
             art = load_kb_artifact(spark, art_dir, kb_version=version)
@@ -117,13 +119,16 @@ def main() -> None:
         art = compile_kb(spark, kb_rows, tagged_inflections=tagged, **scan)
         if art_dir:
             save_kb_artifact(art, art_dir, kb_version=version)
+    kb_s = time.perf_counter() - t0
     res = run_kg_job(spark, spark.read.parquet(args.pages), art, args.out,
                      n_buckets=args.buckets, waves=args.resume_waves,
                      url_col=args.url_col, text_col=args.text_col,
                      find_names=args.find_names)
-    dt = time.time() - t0
+    dt = time.perf_counter() - t0
+    phases = {"kb_s": kb_s, **res["phases"]}
     print(json.dumps({
-        **res, "sec": round(dt, 2),
+        **res, "phases": {k: round(v, 2) for k, v in phases.items()},
+        "sec": round(dt, 2),
         "triples_per_sec": round(res["n_triples"] / dt, 1),
         "kb": "artifact" if have_artifact else "compiled",
         "out": args.out,
