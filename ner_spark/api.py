@@ -3,10 +3,10 @@
 :class:`LocalRecognizer` — the reference's single-node CLI semantics
 (`./ner.py [-f file] [-d] [-a|-s] [-n] [-l] [-r]`, ner.py:723-751) without
 a SparkSession: compile the KB driver-side, recognize one document at a
-time, print reference-format lines.  :class:`Engine` — the Spark scale
-path: the same KB compile (``kb.build.compile_gazetteer``, under
-``compile_kb``) broadcast to executors, pages DataFrame → mentions
-(the KG job itself is ``pipeline.run.run_kg_job``).
+time, print reference-format lines.  The Spark scale path is the same KB
+compile under ``kb.build.compile_kb``, then
+``pipeline.ner.extract_mentions`` (the KG job itself is
+``pipeline.run.run_kg_job``).
 """
 
 from __future__ import annotations
@@ -49,20 +49,3 @@ class LocalRecognizer:
 
     def autocomplete(self, prefix: str, m: int = 5):
         return self.automaton.autocomplete(prefix, m)
-
-
-class Engine:
-    """Spark scale path; the compile's scan modes ride on the artifacts."""
-
-    def __init__(self, spark, kb_rows: list[dict] | None = None,
-                 kb_tsv: str | None = None, **compile_kw):
-        from ner_spark.kb.build import compile_kb
-
-        if kb_rows is None:
-            kb_rows = load_kb_rows(kb_tsv)
-        self.spark = spark
-        self.artifacts = compile_kb(spark, kb_rows, **compile_kw)
-
-    def mentions(self, pages, **kw):
-        from ner_spark.pipeline.ner import extract_mentions
-        return extract_mentions(pages, self.artifacts, **kw)

@@ -24,7 +24,7 @@ figa binary loads and queries (tests/test_ctdict.py compiles the
 reference's figa from source when a toolchain is present and checks
 lookups byte-for-byte).  This is MIGRATION tooling for existing binary
 automata, driver-sized by design; the engine's runtime artifact remains
-the broadcast pickle (kb/artifacts.py), which SURVEY §2 S7/S11 cover.
+the KB image of kb/build.py's KB artifact, which SURVEY §2 S7/S11 cover.
 """
 
 from __future__ import annotations

@@ -7,14 +7,14 @@
   * :func:`compile_kb` adds the relational ``kb`` DataFrame (with the
     bundle's A10/A11 static scores and each entity's sameAs ``component``;
     used by the triple/attribute stages and as the small side of
-    broadcast joins), serializes the bundle and
-    the automaton's trie as the C kernel's KB image (its only serialized
-    form) and broadcasts the two — the replacement for the reference's
-    shared-memory KB daemon (ner/kb_daemon.py:30-61) and ``.dct`` file.
-    A worker reads the image; only a Python fallback unpickles the bundle
-    and decodes the automaton (``ckernel.image_automaton``).  The scored
-    KB is one driver-local Arrow table; a KB of millions of rows is
-    served from the file-backed artifact instead;
+    broadcast joins), serializes the bundle and the automaton's trie as
+    the C kernel's KB image, the only serialized form of either, and
+    broadcasts it — the replacement for the reference's shared-memory KB
+    daemon (ner/kb_daemon.py:30-61) and ``.dct`` file.  A worker reads
+    the image; only a Python fallback decodes the bundle and the
+    automaton from it (``ckernel.image_bundle``/``image_automaton``).
+    The scored KB is one driver-local Arrow table; a KB of millions of
+    rows is served from the file-backed artifact instead;
   * :func:`save_kb_artifact` / :func:`load_kb_artifact` persist that
     compile as the one reusable, versioned KB artifact.
 
@@ -28,6 +28,7 @@ components as a DataFrame job) is the oracle of :func:`kb_components`.
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass
 from hashlib import sha256
@@ -39,7 +40,7 @@ from pyspark.sql import functions as F
 from ner_spark.pipeline.cc import union_find
 from ner_spark.semantics.automaton import GazetteerAutomaton
 from ner_spark.semantics.ckernel import IMAGE_VERSION, image_automaton, \
-    kb_image
+    image_bundle, kb_image
 from ner_spark.semantics.kb import (KB_COLUMNS, KBBundle,
                                     build_autocomplete_namelists,
                                     build_namelist, build_uri_namelist,
@@ -133,19 +134,19 @@ def with_static_scores(kb_df: DataFrame) -> DataFrame:
 
 
 SCAN_KEYS = ("lowercase", "deaccent", "lang")
-# artifact layout version: 2 added kb.parquet's sameAs ``component``
-MANIFEST_FORMAT = 2
+# artifact layout: 2 added kb.parquet's ``component``, 3 keeps no bundle
+MANIFEST_FORMAT = 3
 
 
 @dataclass
 class KBArtifacts:
-    """Everything the pipeline needs: relational KB + broadcast payloads,
-    and the scan modes the automaton was compiled for (applied by every
-    scan of it)."""
+    """Everything the pipeline needs: relational KB, the KB image's
+    broadcast, the driver's bundle (compiled, or decoded from a loaded
+    image) and the scan modes every scan of the automaton applies."""
 
     kb_df: DataFrame          # with static scores and sameAs component
-    bundle_bc: "object"       # Broadcast[KBBundle]
     image_bc: "object"        # Broadcast[bytes]: ckernel.kb_image
+    bundle: KBBundle
     n_entities: int
     n_keys: int
     lowercase: bool = False   # -d: keys lowered, scan text lowered
@@ -155,10 +156,6 @@ class KBArtifacts:
     @property
     def scan_config(self) -> dict:
         return {k: getattr(self, k) for k in SCAN_KEYS}
-
-    @property
-    def bundle(self) -> KBBundle:
-        return self.bundle_bc.value
 
     @property
     def automaton(self) -> GazetteerAutomaton:
@@ -316,7 +313,7 @@ def compile_kb(spark: SparkSession, rows: list[dict],
     changes, the analogue of the ETag/version handshake ner.py:756-810):
     :func:`compile_gazetteer` (same options), plus the scored relational
     KB with its sameAs components (one Arrow table, cached and counted)
-    and the broadcasts.  The
+    and the KB image's broadcast.  The
     artifact records ``lowercase``, ``deaccent`` and ``lang``, and every
     scan of it (extract_mentions, scan_mentions, the streaming pairs)
     applies the matching text transform."""
@@ -337,11 +334,10 @@ def compile_kb(spark: SparkSession, rows: list[dict],
     # slower (BASELINE.md "Scored KB as one Arrow table")
     kb_df = spark.createDataFrame(table).cache()
     kb_df.count()
-    sc = spark.sparkContext
     return KBArtifacts(
         kb_df=kb_df,
-        bundle_bc=sc.broadcast(bundle),
-        image_bc=sc.broadcast(kb_image(bundle, automaton)),
+        image_bc=spark.sparkContext.broadcast(kb_image(bundle, automaton)),
+        bundle=bundle,
         n_entities=bundle.n_rows(),
         n_keys=automaton.n_keys,
         lowercase=lowercase, deaccent=deaccent, lang=lang,
@@ -362,14 +358,13 @@ def save_kb_artifact(art: KBArtifacts, path: str,
 
         <path>/kb.parquet/       scored relational KB with its sameAs
                                  components (kb_df)
-        <path>/bundle.pkl        KBBundle (columnar broadcast payload)
         <path>/kb_image.bin      the C kernel's KB image (ckernel.kb_image),
-                                 also the automaton's only serialized form
+                                 the only serialized bundle and automaton
         <path>/MANIFEST.json     layout format, counts, scan config,
                                  image format and sha256, version
                                  handshake key
 
-    ``path`` is a driver-local or NFS directory: all four files go
+    ``path`` is a driver-local or NFS directory: all three entries go
     through the local filesystem (``kb.parquet`` as a ``file://`` URI,
     whatever the Hadoop default FS is), so the artifact is never split
     across two filesystems.
@@ -378,21 +373,16 @@ def save_kb_artifact(art: KBArtifacts, path: str,
     handshake (ner.py:756-810): ``load_kb_artifact(..., kb_version=...)``
     fails fast on a stale artifact instead of silently serving old links.
     """
-    import json as _json
-    import pickle
-
     os.makedirs(path, exist_ok=True)
     art.kb_df.write.mode("overwrite").parquet(_local_uri(path, "kb.parquet"))
-    with open(os.path.join(path, "bundle.pkl"), "wb") as fh:
-        pickle.dump(art.bundle, fh, protocol=pickle.HIGHEST_PROTOCOL)
     with open(os.path.join(path, "kb_image.bin"), "wb") as fh:
         fh.write(art.image_bc.value)
     with open(os.path.join(path, "MANIFEST.json"), "w") as fh:
-        _json.dump({"manifest_format": MANIFEST_FORMAT,
-                    "n_entities": art.n_entities, "n_keys": art.n_keys,
-                    "kb_version": kb_version, "image_format": IMAGE_VERSION,
-                    "image_sha256": sha256(art.image_bc.value).hexdigest(),
-                    **art.scan_config}, fh)
+        json.dump({"manifest_format": MANIFEST_FORMAT,
+                   "n_entities": art.n_entities, "n_keys": art.n_keys,
+                   "kb_version": kb_version, "image_format": IMAGE_VERSION,
+                   "image_sha256": sha256(art.image_bc.value).hexdigest(),
+                   **art.scan_config}, fh)
 
 
 def load_kb_artifact(spark: SparkSession, path: str,
@@ -404,21 +394,19 @@ def load_kb_artifact(spark: SparkSession, path: str,
     snapshot, not once per job.  ``path`` is a driver-local or NFS
     directory, read through the local filesystem like
     :func:`save_kb_artifact` writes it.  A MANIFEST of another layout
-    format (one saved before ``kb.parquet`` carried ``component``), without
-    the scan config, with another KB image format or with an ``image_sha256``
-    that is missing or not the image's (``wrap_image`` checks bounds, not
-    content) raises: recompile.  The image is broadcast as is."""
-    import json as _json
-    import pickle
-
+    format (one that keeps a bundle file), without the scan config, with
+    another KB image format or with an ``image_sha256`` that is missing or
+    not the image's (``wrap_image`` checks bounds, not content) raises:
+    recompile.  The image is broadcast as is; the driver's bundle is
+    decoded from it."""
     with open(os.path.join(path, "MANIFEST.json")) as fh:
-        manifest = _json.load(fh)
-    if manifest.get("manifest_format") != MANIFEST_FORMAT:
-        raise ValueError(
-            f"KB artifact {path} has MANIFEST format "
-            f"{manifest.get('manifest_format')!r}, this version reads "
-            f"{MANIFEST_FORMAT} (kb.parquet with the sameAs component) "
-            f"— recompile it")
+        manifest = json.load(fh)
+    for key, what, want in (("manifest_format", "MANIFEST", MANIFEST_FORMAT),
+                            ("image_format", "KB image", IMAGE_VERSION)):
+        if manifest.get(key) != want:
+            raise ValueError(f"KB artifact {path} has {what} format "
+                             f"{manifest.get(key)!r}, this version reads "
+                             f"{want} — recompile it")
     if not all(k in manifest for k in SCAN_KEYS):
         raise ValueError(f"KB artifact {path} does not record its scan "
                          f"config {SCAN_KEYS} — recompile it")
@@ -427,25 +415,17 @@ def load_kb_artifact(spark: SparkSession, path: str,
             f"KB artifact version mismatch: artifact "
             f"{manifest.get('kb_version')!r} != requested {kb_version!r} "
             f"(stale artifact — recompile; ner.py:756-810 handshake)")
-    if manifest.get("image_format") != IMAGE_VERSION:
-        raise ValueError(
-            f"KB artifact {path} has KB image format "
-            f"{manifest.get('image_format')!r}, this kernel reads "
-            f"{IMAGE_VERSION} — recompile it")
     with open(os.path.join(path, "kb_image.bin"), "rb") as fh:
         image = fh.read()
     if manifest.get("image_sha256") != sha256(image).hexdigest():
         raise ValueError(f"KB artifact {path}: kb_image.bin does not match "
                          f"the image_sha256 of its MANIFEST — recompile it")
-    with open(os.path.join(path, "bundle.pkl"), "rb") as fh:
-        bundle = pickle.load(fh)
     kb_df = spark.read.parquet(_local_uri(path, "kb.parquet")).cache()
     kb_df.count()
-    sc = spark.sparkContext
     return KBArtifacts(
         kb_df=kb_df,
-        bundle_bc=sc.broadcast(bundle),
-        image_bc=sc.broadcast(image),
+        image_bc=spark.sparkContext.broadcast(image),
+        bundle=image_bundle(image),
         n_entities=manifest["n_entities"],
         n_keys=manifest["n_keys"],
         **{k: manifest[k] for k in SCAN_KEYS},

@@ -6,7 +6,7 @@ over the pages table.  The reference has no cross-document state
 (ner.py:837-856 resets per doc), so this stage needs **zero shuffles**: one
 Arrow batch in, one Arrow batch of mention rows out, the C kernel reading
 the broadcast KB image in place (a document that falls back to Python
-unpickles the bundle and decodes the automaton from the image).  Everything
+decodes the bundle and the automaton from the same image).  Everything
 relational (dedup, co-mention join, canonicalization) happens downstream on
 the much smaller mentions/triples tables.
 
@@ -125,27 +125,26 @@ def sanitized_pages(pages: DataFrame, url_col: str = "url",
     )
 
 
-def resolved_docs(urls, texts, image_bc, bundle_bc,
-                  lang: str = "en", lowercase: bool = False,
-                  deaccent: bool = False, find_names: bool = False,
-                  names_strict: bool = False):
+def resolved_docs(urls, texts, image_bc, lang: str = "en",
+                  lowercase: bool = False, deaccent: bool = False,
+                  find_names: bool = False, names_strict: bool = False):
     """The one per-document loop, shared by :func:`extract_mentions` and the
     streaming co-mention pairs: yields ``(url, rows)`` per sanitized page,
     rows as ``(start, end, par, kind, text, sense, iso, confidence)``
     tuples.  It runs on executors, so the scan modes come as plain values
     (the artifact's ``scan_config``); see :func:`extract_mentions`.
 
-    ``image_bc`` and ``bundle_bc`` are the artifact's broadcasts (anything
-    with a ``.value``).  The C kernel gets only the KB image; the bundle
-    is read, and the automaton decoded from the image, the first time a
-    document falls back to Python."""
+    ``image_bc`` is the artifact's one broadcast, the KB image (anything
+    with a ``.value``).  The C kernel reads it in place; the first time a
+    document falls back to Python, the bundle and the automaton are
+    decoded from it (``ckernel.image_bundle``/``image_automaton``)."""
     from ner_spark.semantics import ckernel
     from ner_spark.semantics.lang import get_lang
     from ner_spark.semantics.recognize import resolve_in_python
     from ner_spark.semantics.textnorm import apply_scan_modes
 
-    lang_mod = get_lang(lang)
-    image = (ckernel.wrap_image(image_bc.value)
+    lang_mod, img = get_lang(lang), image_bc.value
+    image = (ckernel.wrap_image(img)
              if ckernel.covers(lang_mod, find_names) else None)
     for url, text in zip(urls, texts):
         text, scan_text = apply_scan_modes(text, lowercase, deaccent)
@@ -153,8 +152,8 @@ def resolved_docs(urls, texts, image_bc, bundle_bc,
             image, text, scan_text, as_tuples=True)
         if rows is None:
             rows = resolve_in_python(
-                bundle_bc.value, ckernel.image_automaton(image_bc.value),
-                text, scan_text, find_names=find_names, lang=lang_mod,
+                ckernel.image_bundle(img), ckernel.image_automaton(img), text,
+                scan_text, find_names=find_names, lang=lang_mod,
                 as_tuples=True, names_strict=names_strict)
         yield url, rows
 
@@ -195,7 +194,7 @@ def scan_mentions(pages: DataFrame, artifacts: KBArtifacts,
     return src.mapInArrow(fn, SCAN_SCHEMA)
 
 
-def mention_batches(batches: Iterator[pa.RecordBatch], image_bc, bundle_bc,
+def mention_batches(batches: Iterator[pa.RecordBatch], image_bc,
                     schema: pa.Schema, **kw) -> Iterator[pa.RecordBatch]:
     """The extraction UDF: sanitized (url, text) page batches → batches of
     ``schema``, the Arrow form of :data:`MENTION_SCHEMA`."""
@@ -203,7 +202,7 @@ def mention_batches(batches: Iterator[pa.RecordBatch], image_bc, bundle_bc,
         urls, rows = [], []
         for url, doc in resolved_docs(batch.column(0).to_pylist(),
                                       batch.column(1).to_pylist(),
-                                      image_bc, bundle_bc, **kw):
+                                      image_bc, **kw):
             urls += [url] * len(doc)
             rows += doc
         yield arrow_batch([urls, *zip(*rows)] if rows else None, schema)
@@ -227,7 +226,6 @@ def extract_mentions(pages: DataFrame, artifacts: KBArtifacts,
     caveat (bug-for-bug parity).  ``find_names`` enables unknown-name
     discovery (``-n``, ner.py:696-697)."""
     fn = partial(mention_batches, image_bc=artifacts.image_bc,
-                 bundle_bc=artifacts.bundle_bc,
                  schema=arrow_schema(MENTION_SCHEMA), find_names=find_names,
                  names_strict=names_strict, **artifacts.scan_config)
     return sanitized_pages(pages, url_col, text_col).mapInArrow(

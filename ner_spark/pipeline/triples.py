@@ -213,8 +213,7 @@ def sameas_triples(mapping: DataFrame) -> DataFrame:
     )
 
 
-def build_triples(mentions: DataFrame, kb_df: DataFrame,
-                  include_comentions: bool = True) -> DataFrame:
+def build_triples(mentions: DataFrame, kb_df: DataFrame) -> DataFrame:
     """Full triple table, canonicalized on the KB's compiled sameAs
     ``component``; weight column only on co-mentions.  Co-mentions are
     counted on the raw senses, then both ends are canonicalized."""
@@ -227,13 +226,11 @@ def build_triples(mentions: DataFrame, kb_df: DataFrame,
         .unionByName(attribute_triples(kb_df))
         .withColumn("weight", null_weight)
     )
-    if include_comentions:
-        counts = _to_component(_to_component(
-            _comention_counts(mentions), "s1", aliases), "s2", aliases)
-        out = out.unionByName(_comention_triples(counts))
+    counts = _to_component(_to_component(
+        _comention_counts(mentions), "s1", aliases), "s2", aliases)
     mapping = aliases.select(F.col("_id").alias("node"),
                              F.col("_component").alias("component"))
-    return out.unionByName(
+    return out.unionByName(_comention_triples(counts)).unionByName(
         sameas_triples(mapping).withColumn("weight", null_weight))
 
 

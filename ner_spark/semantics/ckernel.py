@@ -10,16 +10,17 @@ and exposes:
 
     kb_image(bundle, automaton) -> bytes    driver side, numpy only
     image_automaton(image) -> automaton     the trie back, numpy only
+    image_bundle(image) -> bundle           the KB bundle back, numpy only
     wrap_image(image) -> handle             checks the image once
     scan_resolve(handle, text, ...) -> rows | None
     try_scan_resolve(bundle, automaton, text, ...) -> rows | None
 
 The KB image is the kernel's whole KB: the bundle's columns, the subname,
 nationality-form and pronoun tables, and the automaton as a word-id trie,
-in one flat, position-independent buffer, the automaton's only serialized
-form.  ``compile_kb`` builds it once and broadcasts it; a worker wraps it
-zero-copy and unpickles the bundle and decodes the automaton only when a
-document falls back to Python.
+in one flat, position-independent buffer, the only serialized form of
+the bundle and the automaton.  ``compile_kb`` builds it once and
+broadcasts it; a worker wraps it zero-copy and decodes the bundle and the
+automaton from it only when a document falls back to Python.
 ``try_scan_resolve`` serves direct object callers: it builds the image
 lazily and caches it on the bundle (``_ck_image``, never pickled).
 
@@ -57,6 +58,7 @@ import tempfile
 
 from .automaton import GazetteerAutomaton
 from .dates import find_dates
+from .kb import KBBundle
 from .resolve import offsets_of_paragraphs, _deaccent_lower
 # kgbench's per-layer tracer times find_proper_nouns through this module
 from .resolve import find_proper_nouns  # noqa: F401
@@ -378,6 +380,18 @@ def kb_image(kb, automaton) -> bytes:
                      np.asarray(table, "<u8").tobytes(), *chunks])
 
 
+def _image_sections(image):
+    """An image's sections as numpy views, and strtab ids → strings."""
+    import numpy as np
+
+    tab = np.frombuffer(image, "<u8", 2 * len(_SECTIONS), 16).tolist()
+    sec = {name: np.frombuffer(image, dt, n // np.dtype(dt).itemsize, pos)
+           for (name, dt), pos, n in zip(_SECTIONS, tab[::2], tab[1::2])}
+    off = sec["str_off"].tolist()
+    strtab = sec["str_blob"].tobytes().decode("utf-32-le", "surrogatepass")
+    return sec, lambda ids: [strtab[off[s]:off[s + 1]] for s in ids.tolist()]
+
+
 @functools.lru_cache(maxsize=1)
 def image_automaton(image) -> GazetteerAutomaton:
     """The automaton a KB image serializes, read back in :func:`kb_image`'s
@@ -386,14 +400,10 @@ def image_automaton(image) -> GazetteerAutomaton:
     last image, like :func:`wrap_image`: a worker decodes it once."""
     import numpy as np
 
-    tab = np.frombuffer(image, "<u8", 2 * len(_SECTIONS), 16).tolist()
-    sec = {name: np.frombuffer(image, dt, n // np.dtype(dt).itemsize, pos)
-           for (name, dt), pos, n in zip(_SECTIONS, tab[::2], tab[1::2])}
-    off, nxt, s_term = sec["str_off"].tolist(), sec["t_next"], sec["s_term"]
-    strtab = sec["str_blob"].tobytes().decode("utf-32-le", "surrogatepass")
+    sec, strs = _image_sections(image)
+    nxt, s_term = sec["t_next"], sec["s_term"]
     atm = GazetteerAutomaton()
-    atm.words = {strtab[off[s]:off[s + 1]]: i
-                 for i, s in enumerate(sec["w_key"].tolist())}
+    atm.words = {w: i for i, w in enumerate(strs(sec["w_key"]))}
     used = np.argsort(nxt)[np.count_nonzero(nxt < 0):]
     atm.trans = dict(zip(sec["t_keys"][used].tolist(), nxt[used].tolist()))
     final = np.argsort(s_term)[np.count_nonzero(s_term < 0):].tolist()
@@ -401,6 +411,42 @@ def image_automaton(image) -> GazetteerAutomaton:
     atm.term = {s: tuple(ids[toff[k]:toff[k + 1]])
                 for k, s in enumerate(final)}
     return atm
+
+
+@functools.lru_cache(maxsize=1)
+def image_bundle(image) -> KBBundle:
+    """The bundle a KB image serializes, as the raw columns its accessors
+    read (jobs/roles ``|``-joined, person dates as birth/death, each row's
+    nationality set in the cell ``get_nationalities`` reads, gender M/F/"";
+    columns the image lacks, such as ``founded``, raise KeyError):
+    ``kb_image(image_bundle(image), image_automaton(image)) == image``.
+    Memoized like :func:`image_automaton`."""
+    sec, strs = _image_sections(image)
+
+    def lists(name):
+        off, vals = sec[name + "_off"].tolist(), strs(sec[name])
+        return [vals[a:b] for a, b in zip(off, off[1:])]
+
+    cols = {c: strs(sec[s + "_sid"]) for c, s in (
+        ("name", "name"), ("type", "type"), ("country", "country"),
+        ("location", "loc"), ("start", "start"), ("end", "end"))}
+    n, pdates = len(cols["name"]), [d + ["", ""] for d in lists("pdates")]
+    cols.update(confidence=sec["score"].tolist(),
+                gender=[("", "M", "F")[g] for g in sec["gender"].tolist()],
+                **{c: [*map("|".join, lists(c))] for c in ("jobs", "roles")},
+                date_of_birth=[d[0] for d in pdates],
+                date_of_death=[d[1] for d in pdates],
+                aliases=[""] * n, nationalities=[""] * n)
+    for i, nats in enumerate(lists("nats")):
+        if "nationality" in cols["type"][i]:  # + its own name and country
+            own = (cols["name"][i].lower(), cols["country"][i].lower())
+            cols["aliases"][i] = "|".join(x for x in nats if x not in own)
+        else:  # a person's, or empty
+            cols["nationalities"][i] = "|".join(nats)
+    off, ids = sec["nd_off"].tolist(), sec["nd_ids"].tolist()
+    return KBBundle(cols, {k: frozenset(ids[a:b]) for k, a, b in
+                           zip(strs(sec["nd_key"]), off, off[1:])},
+                    frozenset(strs(sec["natf_key"])))
 
 
 @functools.lru_cache(maxsize=1)

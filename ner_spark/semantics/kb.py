@@ -22,11 +22,11 @@ Brand-new code reproducing the reference's KB semantics:
     ``derived_names`` branch of the unresolved merge conflict (SURVEY §1.4.5).
 
 The bundle is a plain picklable object.  The Spark pipeline broadcasts it
-with the C kernel's flat KB image, which holds the automaton (semantics/
-ckernel.py ``kb_image``); a Python worker reads the image and unpickles
-the bundle only when a document falls back to Python — the replacement
-for the reference's POSIX shared-memory KB daemon (ner/kb_daemon.py:30-61,
-SURVEY S5); SCALE.md "Memory and spill" has the per-worker bytes.
+inside the C kernel's flat KB image, with the automaton (ckernel.py
+``kb_image``); a Python worker decodes it from the image only when a
+document falls back to Python — the replacement for the reference's POSIX
+shared-memory KB daemon (ner/kb_daemon.py:30-61, SURVEY S5); SCALE.md
+"Memory and spill" has the per-worker bytes.
 """
 
 from __future__ import annotations
@@ -46,8 +46,6 @@ PRONOUNS = {
     "who": "MF", "whom": "MF", "whose": "MF",
     "here": "L", "there": "L", "where": "L",
 }
-PROPER_NOUNS_PREPS = {"the", "upon"}
-VERBS = {" was ", " were ", " is "}
 
 # Columns of the flat synthetic KB (SURVEY §1.3 minimal schema).  Multivalue
 # columns hold '|'-joined strings exactly like KB.tsv.
@@ -206,9 +204,9 @@ class KBBundle:
     _country_arr: list = field(default_factory=list, repr=False)
 
     def __getstate__(self):
-        # only the source state rides a pickle (broadcast or KB artifact):
-        # the derived caches above and the kernel's image handle (_ck_*,
-        # semantics/ckernel.py) are per-process and refill lazily
+        # only the source state rides a pickle (compiled or image_bundle's;
+        # jobs ship the KB image): the derived caches above and the
+        # kernel's image handle (_ck_*, ckernel.py) refill per process
         return {"cols": self.cols, "name_dict": self.name_dict,
                 "nationality_forms": self.nationality_forms}
 

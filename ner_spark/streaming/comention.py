@@ -36,7 +36,7 @@ from ner_spark.pipeline.ner import (arrow_batch, arrow_schema, resolved_docs,
 PAIR_SCHEMA = "url string, par int, s1 int, s2 int"
 
 
-def pair_batches(batches: Iterator[pa.RecordBatch], image_bc, bundle_bc,
+def pair_batches(batches: Iterator[pa.RecordBatch], image_bc,
                  schema: pa.Schema, **kw) -> Iterator[pa.RecordBatch]:
     """The pair UDF: sanitized (url, text) page batches → batches of
     ``schema``, the Arrow form of :data:`PAIR_SCHEMA`."""
@@ -44,7 +44,7 @@ def pair_batches(batches: Iterator[pa.RecordBatch], image_bc, bundle_bc,
         rows = []
         for url, doc in resolved_docs(batch.column(0).to_pylist(),
                                       batch.column(1).to_pylist(),
-                                      image_bc, bundle_bc, **kw):
+                                      image_bc, **kw):
             per_par: dict[int, set[int]] = {}
             for _, _, par, _, _, sense, _, _ in doc:
                 if sense is not None:
@@ -70,7 +70,6 @@ def comention_pair_stream(pages: DataFrame, artifacts: KBArtifacts,
     batch KG runs a non-default mode gets a streaming KG built from the
     SAME mention set."""
     fn = partial(pair_batches, image_bc=artifacts.image_bc,
-                 bundle_bc=artifacts.bundle_bc,
                  schema=arrow_schema(PAIR_SCHEMA), find_names=find_names,
                  **artifacts.scan_config)
     return sanitized_pages(pages, url_col, text_col).mapInArrow(

@@ -4,9 +4,10 @@
 ``mapInArrow`` stages of ``extract_mentions`` and
 ``comention_pair_stream``.  Here they run in a subprocess where
 ``import pandas`` fails, fed one Arrow batch of sanitized fixture pages and
-stand-in broadcasts holding the fixture artifact's image and bundle, once
-on the C kernel and once on the Python fallback.  Their rows must equal
-``scan_and_resolve`` per page.
+one stand-in broadcast holding the fixture artifact's KB image, once on
+the C kernel and once on the Python fallback (which decodes the bundle
+from the image).  Their rows must equal ``scan_and_resolve`` per page on
+the compiled bundle.
 """
 
 from __future__ import annotations
@@ -40,11 +41,11 @@ class Broadcast:  # what the UDF reads of a Spark broadcast
 with open(sys.argv[1], "rb") as fh:
     inp = pickle.load(fh)
 ckernel.FORCE_DISABLE = sys.argv[2] == "1"
-image, bundle = Broadcast(inp["image"]), Broadcast(inp["bundle"])
+image = Broadcast(inp["image"])
 out = {"c_path": ckernel.available()
        and ckernel.covers(get_lang(inp["scan"]["lang"]))}
 for name, fn in (("mentions", mention_batches), ("pairs", pair_batches)):
-    out[name] = [row for b in fn(iter([inp["pages"]]), image, bundle,
+    out[name] = [row for b in fn(iter([inp["pages"]]), image,
                                  inp[name + "_schema"], **inp["scan"])
                  for row in b.to_pylist()]
 pickle.dump(out, sys.stdout.buffer)
@@ -61,7 +62,6 @@ def worker_input(spark, artifacts, pages_rows, tmp_path_factory):
     inp = {"pages": pa.RecordBatch.from_pydict(
                {"url": [u for u, _ in pages], "text": [t for _, t in pages]}),
            "image": artifacts.image_bc.value,
-           "bundle": artifacts.bundle,
            "scan": artifacts.scan_config,
            "mentions_schema": arrow_schema(MENTION_SCHEMA),
            "pairs_schema": arrow_schema(PAIR_SCHEMA)}

@@ -25,11 +25,11 @@ def test_namelist_tsv_roundtrip(kb_rows):
 
 def test_kb_artifact_stays_on_the_local_filesystem(spark, artifacts,
                                                    tmp_path):
-    """All four artifact files go through the local filesystem: with the
-    Hadoop default FS pointing at a scheme no filesystem serves, the
+    """All three artifact entries go through the local filesystem: with
+    the Hadoop default FS pointing at a scheme no filesystem serves, the
     artifact still saves and loads (a bare ``kb.parquet`` path would
-    resolve against the default FS while the bundle pickle, the KB image and
-    MANIFEST go through ``open()``)."""
+    resolve against the default FS while the KB image and MANIFEST go
+    through ``open()``)."""
     from ner_spark.kb.build import load_kb_artifact, save_kb_artifact
 
     path = str(tmp_path / "kb_art")

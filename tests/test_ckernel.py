@@ -295,45 +295,41 @@ def test_corrupted_image_never_crashes(env):
 
 
 def test_extraction_reads_only_the_image(env, monkeypatch):
-    """resolved_docs hands the kernel only the KB image: when the kernel
-    covers every document, the bundle broadcast is never read; a document
-    that falls back reads the bundle and takes its automaton from the
-    image, and the rows equal the pure-Python path's."""
+    """resolved_docs reads one broadcast, the KB image: when the kernel
+    covers every document, no bundle is decoded; a document that falls
+    back decodes the bundle and the automaton from the image, and its
+    rows equal the pure-Python path's on the compiled bundle."""
+    from types import SimpleNamespace
+
     from ner_spark.pipeline.ner import resolved_docs
 
     bundle, atm, lang, kb_rows = env
-
-    class Value:
-        def __init__(self, value):
-            self._value = value
-
-        @property
-        def value(self):
-            if isinstance(self._value, Exception):
-                raise self._value
-            return self._value
-
     pages = gen_pages(kb_rows, n_pages=20, seed=13)
     urls = [p["url"] for p in pages]
     texts = [p["text"] for p in pages]
-    image = Value(ckernel.kb_image(bundle, atm))
-    unread = Value(AssertionError("broadcast read on the C path"))
-    got = list(resolved_docs(urls, texts, image, unread))
+    image = SimpleNamespace(value=ckernel.kb_image(bundle, atm))
+    decoded = []
+    decode = ckernel.image_bundle
+    monkeypatch.setattr(ckernel, "image_bundle",
+                        lambda img: decoded.append(img) or decode(img))
+    got = list(resolved_docs(urls, texts, image))
+    assert decoded == []
 
     ckernel.FORCE_DISABLE = True
     try:
-        want = list(resolved_docs(urls, texts, image, Value(bundle)))
+        want = list(resolved_docs(urls, texts, image))
     finally:
         ckernel.FORCE_DISABLE = False
+    assert len(decoded) == len(texts)
     assert got == want and sum(len(r) for _, r in got) > 50
     assert [r for _, r in want] == [
         resolve_in_python(bundle, atm, t, lang=lang, as_tuples=True)
         for t in texts]
 
-    # one document falls back: the bundle loads, rows still equal
+    # one document falls back: only it decodes, rows still equal
+    decoded.clear()
     real = ckernel.scan_resolve
     monkeypatch.setattr(ckernel, "scan_resolve", lambda img, text, *a, **k: (
         None if text == texts[3] else real(img, text, *a, **k)))
-    with pytest.raises(AssertionError, match="broadcast read"):
-        list(resolved_docs(urls, texts, image, unread))
-    assert list(resolved_docs(urls, texts, image, Value(bundle))) == want
+    assert list(resolved_docs(urls, texts, image)) == want
+    assert decoded == [image.value]

@@ -102,17 +102,21 @@ def test_cli_score_mode(kb_tsv):
 
 
 def test_engine_propagates_lang(spark):
-    from ner_spark.api import Engine
+    """A cs compile reaches the extraction UDF: every document takes the
+    Python path on the worker, which decodes the bundle from the image."""
+    from ner_spark.kb.build import compile_kb
+    from ner_spark.pipeline.ner import extract_mentions
 
     rows = [dict(id=1, type="person", name="Karel Novák", gender="M",
                  description="Skladatel." * 3, jobs="skladatel",
                  roles="skladatel", wiki_backlinks=50, wiki_hits=50,
                  wiki_ps=1)]
-    eng = Engine(spark, kb_rows=rows, lang="cs")
+    art = compile_kb(spark, rows, lang="cs")
     df = spark.createDataFrame(
         [("d1", "Karel Novák přijel . Potom on promluvil .")],
         "url string, text string")
-    got = {(r.kind, r.text, r.sense) for r in eng.mentions(df).collect()}
+    got = {(r.kind, r.text, r.sense)
+           for r in extract_mentions(df, art).collect()}
     assert ("coref", "on", 1) in got  # cs pronoun resolved in the UDF
 
 

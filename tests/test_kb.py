@@ -391,6 +391,81 @@ def test_kb_image_decodes_to_its_automaton(kb_rows, variant):
     assert decoded.n_keys == atm.n_keys > 0
 
 
+# the bundle's side of the image: every compile variant above, a cs
+# compile with tagged inflections, and the 10k-entity generated KB
+_TAGGED = ["Antonín Dvořák\tcs\tP:::M\t"
+           "Antonínu[k1gMnSc3]#jG/Antonínovi[k1gMnSc3]#jG "
+           "Dvořáku[k1gMnSc3]#jS/Dvořákovi[k1gMnSc3]#jS\t"]
+
+
+def _bundle_compiles():
+    from kgbench.kbgen import gen_big_kb_rows
+    from ner_spark.fixtures.gen import gen_kb_rows
+
+    def fixture():
+        return [dict(r, qid=f"Q{1000 + r['id']}") for r in gen_kb_rows()]
+
+    def cs_tagged():
+        rows = gen_kb_rows()
+        return rows + [dict(id=len(rows) + 1, type="person",
+                            name="Antonín Dvořák", gender="M",
+                            nationalities="Czech", jobs="composer",
+                            date_of_birth="1841-09-08")], dict(
+            lang="cs", tagged_inflections=_TAGGED)
+
+    out = {k: (lambda kw=kw: (fixture(), kw)) for k, kw in VARIANTS.items()}
+    out["cs_tagged"] = cs_tagged
+    out["kbgen_10k"] = lambda: (gen_big_kb_rows(10_000, 0), {})
+    return out
+
+
+@pytest.mark.parametrize("name", list(_bundle_compiles()))
+def test_kb_image_decodes_to_its_bundle(name):
+    """image_bundle inverts kb_image on the bundle's side: the decoded
+    bundle and automaton serialize to the same bytes."""
+    from ner_spark.kb.build import compile_gazetteer
+    from ner_spark.semantics.ckernel import (image_automaton, image_bundle,
+                                             kb_image)
+
+    rows, kw = _bundle_compiles()[name]()
+    image = kb_image(*compile_gazetteer(rows, **kw))
+    decoded = image_bundle(image)
+    assert decoded.n_rows() == len(rows)
+    assert kb_image(decoded, image_automaton(image)) == image
+
+
+@pytest.mark.parametrize("lang", ["en", "cs"])
+def test_decoded_bundle_resolves_like_the_compiled_one(kb_rows, lang):
+    """The Python resolver reads the same values from the bundle decoded
+    from the image as from the compiled bundle — default tuple rows and
+    find_names dict rows — and so does a pickled copy of it.  What the
+    image does not carry raises KeyError."""
+    import pickle
+
+    from ner_spark.fixtures.gen import gen_pages
+    from ner_spark.kb.build import compile_gazetteer
+    from ner_spark.semantics.ckernel import image_bundle, kb_image
+    from ner_spark.semantics.lang import get_lang
+    from ner_spark.semantics.recognize import resolve_in_python
+
+    bundle, atm = compile_gazetteer(kb_rows, lang=lang)
+    decoded = image_bundle(kb_image(bundle, atm))
+    copies = (decoded, pickle.loads(pickle.dumps(decoded)))
+    texts = [p["text"] for p in gen_pages(kb_rows, n_pages=40, seed=21)]
+    n = 0
+    for text in texts:
+        for kw in (dict(as_tuples=True), dict(find_names=True)):
+            want = resolve_in_python(bundle, atm, text, lang=get_lang(lang),
+                                     **kw)
+            n += len(want)
+            for kb in copies:
+                assert resolve_in_python(kb, atm, text, lang=get_lang(lang),
+                                         **kw) == want
+    assert n > 500
+    with pytest.raises(KeyError):
+        decoded.get_data_for(1, "FOUNDED")
+
+
 def test_unsuitable_key_person_list_of():
     """EN person keys starting 'List of ' are dropped
     (namelist.py:990-994 + en/namelist.py:14)."""

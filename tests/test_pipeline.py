@@ -323,10 +323,15 @@ def test_kb_artifact_save_load_roundtrip(spark, kb_rows, pages_df,
 
     path = str(tmp_path / "kb_art")
     save_kb_artifact(artifacts, path, kb_version="v1")
-    # the image is the artifact's only serialized automaton
-    assert sorted(os.listdir(path)) == ["MANIFEST.json", "bundle.pkl",
-                                        "kb.parquet", "kb_image.bin"]
+    # the image is the artifact's only serialized bundle and automaton
+    assert sorted(os.listdir(path)) == ["MANIFEST.json", "kb.parquet",
+                                        "kb_image.bin"]
     loaded = load_kb_artifact(spark, path, kb_version="v1")
+    # the driver's bundle is the one the image decodes to
+    from ner_spark.semantics.ckernel import kb_image
+
+    assert kb_image(loaded.bundle, loaded.automaton) == \
+        artifacts.image_bc.value
 
     assert loaded.n_entities == artifacts.n_entities
     assert loaded.n_keys == artifacts.n_keys
@@ -362,6 +367,17 @@ def test_kb_artifact_save_load_roundtrip(spark, kb_rows, pages_df,
     m_want = sorted(map(key, extract_mentions(shouted, dr).collect()))
     m_got = sorted(map(key, extract_mentions(shouted, dr_loaded).collect()))
     assert m_got == m_want and len(m_got) > 200
+
+    # a format-2 MANIFEST (saved beside a bundle.pkl) is refused
+    manifest = os.path.join(dr_path, "MANIFEST.json")
+    with open(manifest) as fh:
+        saved = json.load(fh)
+    with open(manifest, "w") as fh:
+        json.dump(dict(saved, manifest_format=2), fh)
+    with _pytest.raises(ValueError, match="MANIFEST format 2.*recompile"):
+        load_kb_artifact(spark, dr_path)
+    with open(manifest, "w") as fh:
+        json.dump(saved, fh)
 
     # a MANIFEST that predates the recorded scan config is refused
     manifest = os.path.join(dr_path, "MANIFEST.json")

@@ -8,8 +8,9 @@ Two fixtures:
 
 Prints ONE JSON line with MB-chars/s for scan-only and scan+resolve, plus
 the KB image's size, build seconds and wrap seconds (what one worker pays
-before its first document) and decode seconds (its first Python fallback),
-and ``arrow_build_s``: the extraction UDF's output step (transpose, then
+before its first document), the seconds to decode the automaton
+(``image_decode_s``) and the bundle (``bundle_decode_s``) from it (what a
+worker's first Python fallback pays), and ``arrow_build_s``: the extraction UDF's output step (transpose, then
 ``pipeline.ner.arrow_batch``) over the web fixture's ``arrow_rows`` rows.
 Usage: python tools/bench_kernel.py [n_mb] [--profile]
 """
@@ -111,8 +112,9 @@ def main() -> None:
     image = ckernel.kb_image(bundle, atm)
     out["image_bytes"] = len(image)
     out["image_build_s"] = round(time.perf_counter() - t0, 4)
-    out["image_decode_s"] = min(_unmemoized_s(ckernel.image_automaton, image)
-                                for _ in range(trials))
+    for key, decode in (("image_decode_s", ckernel.image_automaton),
+                        ("bundle_decode_s", ckernel.image_bundle)):
+        out[key] = min(_unmemoized_s(decode, image) for _ in range(trials))
     if ckernel.available():
         out["image_wrap_s"] = min(_unmemoized_s(ckernel.wrap_image, image)
                                   for _ in range(trials))

@@ -12,8 +12,8 @@ With no --kb the synthetic fixture KB is compiled (useful for smoke runs).
 ``pipeline.run.run_kg_job`` checkpoints the mentions and writes the
 canonicalized triple table, both with per-bucket lineage (re-running with
 the same --out skips completed buckets); a one-line JSON summary is
-printed, with the wall seconds of each phase in ``phases`` (``kb_s``: the
-KB compile or artifact load; ``mentions_s``, ``triples_s``: the two steps
+printed, with the wall seconds of each phase in ``phases`` (``kb_s``:
+reading the KB inputs and the KB compile or artifact load; ``mentions_s``, ``triples_s``: the two steps
 of ``run_kg_job``).  A loaded --kb-artifact must match
 --lowercase/--deaccent/--lang and the KB inputs: its version key is the
 sha256 of the --kb and --tagged-inflections bytes ("synthetic" for the
@@ -93,16 +93,8 @@ def main() -> None:
         os.path.join(art_dir, "MANIFEST.json"))
     scan = dict(lowercase=args.lowercase, deaccent=args.deaccent,
                 lang=args.lang)
-    version = kb_version(args.kb, args.tagged_inflections)
-
-    kb_rows = tagged = None
-    if not have_artifact:
-        kb_rows = load_kb_rows(args.kb)
-        if args.tagged_inflections:
-            with open(args.tagged_inflections) as fh:
-                tagged = fh.read().splitlines()
-
     t0 = time.perf_counter()
+    version = kb_version(args.kb, args.tagged_inflections)
     if have_artifact:
         try:
             art = load_kb_artifact(spark, art_dir, kb_version=version)
@@ -116,7 +108,12 @@ def main() -> None:
             spark.stop()
             sys.exit(str(e))
     else:
-        art = compile_kb(spark, kb_rows, tagged_inflections=tagged, **scan)
+        tagged = None
+        if args.tagged_inflections:
+            with open(args.tagged_inflections) as fh:
+                tagged = fh.read().splitlines()
+        art = compile_kb(spark, load_kb_rows(args.kb),
+                         tagged_inflections=tagged, **scan)
         if art_dir:
             save_kb_artifact(art, art_dir, kb_version=version)
     kb_s = time.perf_counter() - t0
