@@ -50,8 +50,12 @@ LINEAGE_SCHEMA = pa.schema([("bucket", pa.int32()), ("n_rows", pa.int64()),
 
 
 def with_bucket(df: DataFrame, key: str = "subj", n_buckets: int = 64) -> DataFrame:
+    """``df`` + ``bucket = pmod(xxhash64(key as string), N)``: the key is
+    hashed as a string, so a long url and its string form land in the
+    same bucket (``xxhash64`` of a long differs from that of its string)."""
     return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int"))
+        "bucket", F.pmod(F.xxhash64(F.col(key).cast("string")),
+                         F.lit(n_buckets)).cast("int"))
 
 
 def _lineage_of(df: DataFrame) -> DataFrame:

@@ -17,20 +17,10 @@ from __future__ import annotations
 import re
 from typing import TextIO
 
-from ner_spark.semantics.kb import KB_COLUMNS
+from ner_spark.semantics.kb import HEAD_COLUMNS, KB_COLUMNS
 
 # our flat columns → reference-style HEAD column names (SURVEY §1.3)
-_HEAD_NAMES = {
-    "type": "TYPE", "name": "NAME", "aliases": "ALIASES",
-    "redirects": "REDIRECTS", "gender": "GENDER",
-    "date_of_birth": "DATE OF BIRTH", "date_of_death": "DATE OF DEATH",
-    "nationalities": "NATIONALITIES", "country": "COUNTRY", "jobs": "JOBS",
-    "roles": "ROLES", "location": "LOCATION", "founded": "FOUNDED",
-    "cancelled": "CANCELLED", "start": "START", "end": "END",
-    "fictional": "FICTIONAL", "description": "DESCRIPTION",
-    "wikipedia_url": "WIKIPEDIA URL", "wiki_backlinks": "WIKI BACKLINKS",
-    "wiki_hits": "WIKI HITS", "wiki_ps": "WIKI PRIMARY SENSE",
-}
+_HEAD_NAMES = {v: k for k, v in HEAD_COLUMNS.items()}
 _DATA_COLS = [c for c in KB_COLUMNS if c != "id"]
 
 # HEAD-KB column declaration: optional {flags[prefix]} then NAME
@@ -99,7 +89,6 @@ def read_kb_tsv(fh: TextIO) -> tuple[int, dict, list[dict]]:
         raise ValueError(f"expected one HEAD type block, got {list(head_kb)}")
     colmap = next(iter(head_kb.values()))
     by_name = {name: idx for name, idx in colmap.items()}
-    rev = {v: k for k, v in _HEAD_NAMES.items()}
     rows = []
     for line in fh:
         if not line.strip():
@@ -116,7 +105,7 @@ def read_kb_tsv(fh: TextIO) -> tuple[int, dict, list[dict]]:
         for head_name, idx in by_name.items():
             if head_name == "ID" or idx >= len(cells):
                 continue
-            flat = rev.get(head_name)
+            flat = HEAD_COLUMNS.get(head_name)
             if flat:
                 v = cells[idx]
                 if flat in ("wiki_backlinks", "wiki_hits", "wiki_ps"):

@@ -159,22 +159,18 @@ def resolved_docs(urls, texts, image_bc, lang: str = "en",
 
 
 def scan_mentions(pages: DataFrame, artifacts: KBArtifacts,
-                  url_col: str = "url", text_col: str = "text",
-                  byte_offsets: bool = False) -> DataFrame:
+                  url_col: str = "url", text_col: str = "text") -> DataFrame:
     """Raw gazetteer matches only (stage M2) — no resolution.  Useful for
     debugging and for relational-filter queries; the production path is
     :func:`extract_mentions` which fuses scan+resolve in one pass.  Scans
     the same text as :func:`resolved_docs`: deaccented and/or lowered as
-    the artifact was compiled.  ``byte_offsets`` mirrors figa ``-b``
-    (figa/src/main.cpp:53,108-110): start/end become offsets into the
-    UTF-8 byte stream of that scanned text."""
+    the artifact was compiled."""
     src = sanitized_pages(pages, url_col, text_col)
     image_bc = artifacts.image_bc
     lowercase, deaccent = artifacts.lowercase, artifacts.deaccent
     schema = arrow_schema(SCAN_SCHEMA)
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from ner_spark.semantics.automaton import byte_offset_matches
         from ner_spark.semantics.ckernel import image_automaton
         from ner_spark.semantics.textnorm import apply_scan_modes
 
@@ -185,10 +181,8 @@ def scan_mentions(pages: DataFrame, artifacts: KBArtifacts,
                                  batch.column(1).to_pylist()):
                 text, scan_text = apply_scan_modes(text, lowercase, deaccent)
                 text = scan_text if scan_text is not None else text
-                ms = atm.scan(text)
-                if byte_offsets:
-                    ms = byte_offset_matches(text, ms)
-                rows += [(url, m.start, m.end, m.fragment, m.ids) for m in ms]
+                rows += [(url, m.start, m.end, m.fragment, m.ids)
+                         for m in atm.scan(text)]
             yield arrow_batch(list(zip(*rows)), schema)
 
     return src.mapInArrow(fn, SCAN_SCHEMA)

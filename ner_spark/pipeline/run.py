@@ -55,11 +55,12 @@ def extract_mentions_resumable(
     **extract_kw,
 ) -> DataFrame:
     """Checkpoint-resumable mention extraction: pages are bucketed by
-    ``pmod(xxhash64(url), N)`` *before* the expensive UDF, and only pages
-    of the buckets :func:`commit_buckets` has left to do reach it, so a
-    resumed run re-reads only unprocessed pages — compute-level resume,
-    not just write-level (SCALE.md "Resume story").  Returns the full
-    mentions table read back from ``path``.
+    ``with_bucket`` of the url, the rule that buckets their mentions,
+    *before* the expensive UDF, and only pages of the buckets
+    :func:`commit_buckets` has left to do reach it, so a resumed run
+    re-reads only unprocessed pages — compute-level resume, not just
+    write-level (SCALE.md "Resume story").  Returns the full mentions
+    table read back from ``path``.
 
     ``waves`` (>1) splits the todo buckets into that many groups processed
     and committed sequentially — INCREMENTAL checkpointing within a run: a
@@ -70,14 +71,10 @@ def extract_mentions_resumable(
     scan by >10×, so single-digit wave counts bound the loss window to
     1/waves of the phase for a few percent of extra scan — the knob a
     multi-day 100 TB run sets to taste."""
-    # cast to string FIRST: the mention-side bucket hashes the string url,
-    # and xxhash64(long) != xxhash64(string) for the same value
-    pages_b = pages.withColumn(
-        "_bucket", F.pmod(F.xxhash64(F.col(url_col).cast("string")),
-                          F.lit(n_buckets)).cast("int"))
+    pages_b = with_bucket(pages, url_col, n_buckets)
 
     def bucketed(todo: list[int]) -> DataFrame:
-        mentions = extract_mentions(pages_b.filter(F.col("_bucket").isin(todo)),
+        mentions = extract_mentions(pages_b.filter(F.col("bucket").isin(todo)),
                                     artifacts, url_col=url_col,
                                     text_col=text_col, **extract_kw)
         return with_bucket(mentions, "url", n_buckets)

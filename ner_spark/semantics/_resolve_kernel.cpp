@@ -142,7 +142,7 @@ enum {
     S_META, S_STR_OFF, S_STR_BLOB, S_SCORE,
     S_NAME_SID, S_COUNTRY_SID, S_LOC_SID, S_START_SID, S_END_SID, S_TYPE_SID,
     S_CTX_CHAR,
-    S_GENDER, S_PERSON_EXACT, S_ARTIST, S_GROUP, S_PERSON_SUB, S_LOC_SUB,
+    S_GENDER, S_PERSON_FLAG, S_ARTIST, S_GROUP, S_PERSON_SUB, S_LOC_SUB,
     S_GEO_SUB, S_TYPE_EXACT, S_CTX_KIND,
     S_JOBS_OFF, S_JOBS, S_ROLES_OFF, S_ROLES, S_NATS_OFF, S_NATS,
     S_PDATES_OFF, S_PDATES,
@@ -220,7 +220,7 @@ struct KBImage {
         *type_sid;
     const uint32_t *ctx_char;     // codepoint (0 when none)
     const uint8_t *gender;        // 0 none / 1 M / 2 F
-    const uint8_t *person_exact;  // person_flag_arr (exact-type tuple)
+    const uint8_t *person_flag;   // person_flag_arr (exact-type tuple)
     const uint8_t *artist, *group, *person_sub, *loc_sub, *geo_sub;
     const uint8_t *type_exact;    // 0 none / 1 == "person" / 2 == "location"
     const uint8_t *ctx_kind;
@@ -373,7 +373,7 @@ static const char *load_image(KBImage *img, const uint8_t *buf, size_t size) {
     img->type_sid = (const int32_t *)sec[S_TYPE_SID];
     img->ctx_char = (const uint32_t *)sec[S_CTX_CHAR];
     img->gender = (const uint8_t *)sec[S_GENDER];
-    img->person_exact = (const uint8_t *)sec[S_PERSON_EXACT];
+    img->person_flag = (const uint8_t *)sec[S_PERSON_FLAG];
     img->artist = (const uint8_t *)sec[S_ARTIST];
     img->group = (const uint8_t *)sec[S_GROUP];
     img->person_sub = (const uint8_t *)sec[S_PERSON_SUB];
@@ -521,11 +521,9 @@ struct Mention {
 struct DateM {  // pre-rendered DateMatch (ckernel.py supplies the strings)
     int32_t start, end;
     PyObject *source;   // borrowed
-    PyObject *iso_out;  // borrowed; iso() or "a -- b"
+    PyObject *iso_out;  // borrowed; iso()
     int32_t conf;
-    int8_t is_interval; // → kind "interval"
-    U32 swz, swz_to;    // show_without_zeros strings ("" = absent)
-    bool has_swz_to;
+    U32 swz;            // show_without_zeros()
 };
 
 static const int64_t SENSE_NONE = INT64_MIN;  // register key for None
@@ -799,7 +797,6 @@ bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
             } else {
                 const DateM &dm = d.dates[(size_t)e.idx];
                 ps.dates.push_back(&dm.swz);
-                if (dm.has_swz_to) ps.dates.push_back(&dm.swz_to);
             }
             ent_index++;
         }
@@ -1023,7 +1020,7 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
     for (int64_t s : m.senses) {
         int64_t si = kb_index(kb, s);
         if (si < 0) { d.fail(); return false; }
-        if (kb->person_exact[(size_t)si]) { has_person = true; break; }
+        if (kb->person_flag[(size_t)si]) { has_person = true; break; }
     }
     U32 sentence;
     bool have_sentence = false;
@@ -1070,7 +1067,7 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
         for (int64_t s : m.senses) {
             int64_t si = kb_index(kb, s);
             if (si < 0) { d.fail(); return false; }
-            if (!kb->person_exact[(size_t)si]) continue;
+            if (!kb->person_flag[(size_t)si]) continue;
             vector<int32_t> cand;
             for (int32_t jsid : kb->jobs[(size_t)si]) {
                 Str job = kb->str(jsid);
@@ -1112,7 +1109,7 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
             for (int64_t s : m.senses) {
                 int64_t si = kb_index(kb, s);
                 if (si < 0) { d.fail(); return false; }
-                if (!kb->person_exact[(size_t)si]) continue;
+                if (!kb->person_flag[(size_t)si]) continue;
                 Span<int32_t> jb = kb->jobs[(size_t)si];
                 const int32_t empty_probe[1] = {kb->empty_sid};
                 const int32_t *probe = jb.empty() ? empty_probe : jb.data();
@@ -1497,15 +1494,15 @@ static void remove_nearby(Doc &d, vector<int32_t> &entities) {
 // run_stages: the per-document driver (resolve.py resolve_document, default)
 // ---------------------------------------------------------------------------
 
-static PyObject *s_kb, *s_coref, *s_date, *s_interval;  // interned kinds
+static PyObject *s_kb, *s_coref, *s_date;  // interned kinds
 
 static bool parse_dates(Doc &d, PyObject *dates) {
     Py_ssize_t n = PyList_GET_SIZE(dates);
     d.dates.resize((size_t)n);
     for (Py_ssize_t i = 0; i < n; i++) {
         PyObject *t = PyList_GET_ITEM(dates, i);
-        if (!PyTuple_Check(t) || PyTuple_GET_SIZE(t) != 8) {
-            PyErr_SetString(PyExc_ValueError, "date tuple arity != 8");
+        if (!PyTuple_Check(t) || PyTuple_GET_SIZE(t) != 6) {
+            PyErr_SetString(PyExc_ValueError, "date tuple arity != 6");
             return false;
         }
         DateM &dm = d.dates[(size_t)i];
@@ -1514,11 +1511,7 @@ static bool parse_dates(Doc &d, PyObject *dates) {
         dm.source = PyTuple_GET_ITEM(t, 2);
         dm.iso_out = PyTuple_GET_ITEM(t, 3);
         dm.conf = (int32_t)PyLong_AsLong(PyTuple_GET_ITEM(t, 4));
-        dm.is_interval = (int8_t)PyLong_AsLong(PyTuple_GET_ITEM(t, 5));
-        dm.swz = to_u32(PyTuple_GET_ITEM(t, 6));
-        PyObject *swz_to = PyTuple_GET_ITEM(t, 7);
-        dm.has_swz_to = swz_to != Py_None;
-        if (dm.has_swz_to) dm.swz_to = to_u32(swz_to);
+        dm.swz = to_u32(PyTuple_GET_ITEM(t, 5));
     }
     return !PyErr_Occurred();
 }
@@ -1629,7 +1622,7 @@ static PyObject *run_stages(Doc &d) {
                 row = Py_BuildValue(
                     "(llLOOOOi)", (long)start, (long)end,
                     (long long)d.paragraphs[(size_t)pi],
-                    dm.is_interval ? s_interval : s_date, dm.source, Py_None,
+                    s_date, dm.source, Py_None,
                     dm.iso_out, (int)dm.conf);
             } else {
                 if (!kept[(size_t)e.idx]) continue;
@@ -1935,6 +1928,5 @@ PyMODINIT_FUNC PyInit__resolve_ck(void) {
     s_kb = PyUnicode_InternFromString("kb");
     s_coref = PyUnicode_InternFromString("coref");
     s_date = PyUnicode_InternFromString("date");
-    s_interval = PyUnicode_InternFromString("interval");
     return m;
 }

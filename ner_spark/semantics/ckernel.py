@@ -59,7 +59,8 @@ import tempfile
 from .automaton import GazetteerAutomaton
 from .dates import find_dates
 from .kb import KBBundle
-from .resolve import offsets_of_paragraphs, _deaccent_lower
+from .lang import EN, EN_THERE_CONTEXTS
+from .resolve import ROW_FIELDS, offsets_of_paragraphs, _deaccent_lower
 # kgbench's per-layer tracer times find_proper_nouns through this module
 from .resolve import find_proper_nouns  # noqa: F401
 from .textnorm import ncr2unicode
@@ -177,7 +178,7 @@ _SECTIONS = (
     ("name_sid", "<i4"), ("country_sid", "<i4"), ("loc_sid", "<i4"),
     ("start_sid", "<i4"), ("end_sid", "<i4"), ("type_sid", "<i4"),
     ("ctx_char", "<u4"),
-    ("gender", "u1"), ("person_exact", "u1"), ("artist", "u1"),
+    ("gender", "u1"), ("person_flag", "u1"), ("artist", "u1"),
     ("group", "u1"), ("person_sub", "u1"), ("loc_sub", "u1"),
     ("geo_sub", "u1"), ("type_exact", "u1"), ("ctx_kind", "u1"),
     ("jobs_off", "<u4"), ("jobs", "<i4"),
@@ -194,16 +195,9 @@ _SECTIONS = (
     ("s_term", "<i4"), ("term_off", "<u4"), ("term_ids", "<i8"),
 )
 
-# EN tables mirrored into the image (en location-coref contexts)
-_EN_THERE_CTX = [" is ", " are ", " was ", " were ", " has ", " have ",
-                 " had "]
-_PRON_MASK = {  # lang.py EN.pronouns → C flag bits (M=1, F=2, L=4)
-    "he": 1, "him": 1, "himself": 1, "his": 1,
-    "she": 2, "her": 2, "hers": 2, "herself": 2,
-    "who": 3, "whom": 3, "whose": 3,
-    "here": 4, "there": 4, "where": 4,
-}
-_PERSON_EXACT = ("person", "person:artist", "person:fictional")
+# EN pronoun classes as the kernel's flag bits (M=1, F=2, L=4)
+_PRON_MASK = {p: {"M": 1, "F": 2, "MF": 3, "L": 4}[g]
+              for p, g in EN.pronouns.items()}
 
 
 def _ucs4(strings):
@@ -294,8 +288,6 @@ def kb_image(kb, automaton) -> bytes:
 
     import numpy as np
 
-    from .lang import EN
-
     intern: dict[str, int] = defaultdict(lambda: len(intern))
     sid = intern.__getitem__  # str → strtab id, interning on first use
 
@@ -309,7 +301,7 @@ def kb_image(kb, automaton) -> bytes:
         "ctx_char": [ord(c) if c else 0 for c in kb.ctx_char_arr()],
         "gender": [1 if g == "M" else 2 if g == "F" else 0
                    for g in kb.gender_arr()],
-        "person_exact": [t in _PERSON_EXACT for t in tarr],
+        "person_flag": kb.person_flag_arr(),
         "artist": kb.artist_flag_arr(),
         "group": kb.group_flag_arr(),
         "person_sub": kb.person_sub_flag_arr(),
@@ -319,7 +311,7 @@ def kb_image(kb, automaton) -> bytes:
                        for t in tarr],
         "ctx_kind": kb.ctx_kind_arr(),
         "verbs": [sid(v) for v in EN.verbs],
-        "there_ctx": [sid(v) for v in _EN_THERE_CTX],
+        "there_ctx": [sid(v) for v in EN_THERE_CONTEXTS],
     }
     rows = range(1, n + 1)
     for name, col in (("loc_sid", "LOCATION"), ("start_sid", "START"),
@@ -479,20 +471,11 @@ def _frag_helper(fragment):
     return (source, dl, flags)
 
 
-def _dates_for(text, split_interval):
-    dates = []
-    for dm in find_dates(text, split_interval=split_interval):
-        if dm.iso_to is not None:
-            iso_out = f"{dm.iso.iso()} -- {dm.iso_to.iso()}"
-            swz_to = dm.iso_to.show_without_zeros()
-            is_interval = 1
-        else:
-            iso_out = dm.iso.iso()
-            swz_to = None
-            is_interval = 0
-        dates.append((dm.start, dm.end, dm.source, iso_out, dm.confidence,
-                      is_interval, dm.iso.show_without_zeros(), swz_to))
-    return dates
+def _dates_for(text):
+    """The kernel's dates: ``(start, end, source, iso, confidence,
+    show_without_zeros)`` per :func:`find_dates` match."""
+    return [(dm.start, dm.end, dm.source, dm.iso.iso(), dm.confidence,
+             dm.iso.show_without_zeros()) for dm in find_dates(text)]
 
 
 def covers(lang, find_names=False, mode="default") -> bool:
@@ -502,14 +485,13 @@ def covers(lang, find_names=False, mode="default") -> bool:
             and getattr(lang, "code", None) == "en" and available())
 
 
-def scan_resolve(image, text, scan_text=None, split_interval=True,
-                 as_tuples=False):
+def scan_resolve(image, text, scan_text=None, as_tuples=False):
     """Fused scan+resolve in C over a wrapped image (:func:`wrap_image`)
     for a configuration :func:`covers` admits.  Returns rows, or None when
     this document raises ``Fallback`` (the caller runs
     ``recognize.resolve_in_python``)."""
     ck = _load()
-    dates = _dates_for(text, split_interval)
+    dates = _dates_for(text)
     paragraphs = offsets_of_paragraphs(text)
     try:
         rows = ck.scan_resolve_doc(
@@ -520,14 +502,11 @@ def scan_resolve(image, text, scan_text=None, split_interval=True,
         return None
     if as_tuples:
         return rows
-    return [{"start": s, "end": e, "par": p, "kind": k, "text": t,
-             "sense": sn, "iso": iso, "confidence": c}
-            for s, e, p, k, t, sn, iso, c in rows]
+    return [dict(zip(ROW_FIELDS, r)) for r in rows]
 
 
 def try_scan_resolve(kb, atm, text, scan_text=None, find_names=False,
-                     mode="default", lang=None, split_interval=True,
-                     as_tuples=False):
+                     mode="default", lang=None, as_tuples=False):
     """:func:`scan_resolve` for object callers: the image of ``kb`` +
     ``atm`` is built on first use and cached on the bundle (``_ck_*``
     never rides a pickle).  Returns None when the kernel does not cover
@@ -538,5 +517,4 @@ def try_scan_resolve(kb, atm, text, scan_text=None, find_names=False,
     if cached is None or cached[0] is not atm:
         handle = _load().wrap_image(kb_image(kb, atm))
         cached = kb.__dict__["_ck_image"] = (atm, handle)
-    return scan_resolve(cached[1], text, scan_text, split_interval,
-                        as_tuples)
+    return scan_resolve(cached[1], text, scan_text, as_tuples)

@@ -7,7 +7,9 @@ Brand-new code reproducing the observable behavior of
     (dates.py:199-232; English month words only match via numeric
     patterns) — kept as-is for output parity (SURVEY §1.4.6);
   - sure patterns get confidence 100, "unsure" shapes 80 (dates.py:386-389);
-  - intervals split into two Date results by default (dates.py:160-183);
+  - an interval yields its two halves as two dates, the split form every
+    caller of the reference's ``find_dates`` asks for (dates.py:160-183);
+    the unsplit INTERVAL form is not reproduced;
   - a string with >1 dash is NOT an interval (dates.py:365-367);
   - ISO rendering pads to yyyy-mm-dd; ``show_without_zeros`` drops zero
     day/month (dates.py:40-65).
@@ -114,13 +116,13 @@ class ISODate(NamedTuple):
 
 
 class DateMatch(NamedTuple):
+    """One date, or one half of an interval (rendered as a DATE line:
+    ``start \\t end \\t date \\t text \\t iso``, dates.py:167-183)."""
     start: int            # 0-based char offset
     end: int              # exclusive
     source: str
-    iso: ISODate          # the date (interval halves are pre-split)
+    iso: ISODate
     confidence: int       # 100 sure / 80 unsure (dates.py:386-389)
-    is_interval_part: bool = False
-    iso_to: ISODate | None = None  # set only for unsplit intervals
 
 
 def _czech_month_number(mword: str) -> str | None:
@@ -200,8 +202,10 @@ def _scan_candidates(text: str):
             pos = m.end()
 
 
-def find_dates(text: str, split_interval: bool = True) -> list[DateMatch]:
-    """Reference ``find_dates`` semantics (dates.py:343-402)."""
+def find_dates(text: str) -> list[DateMatch]:
+    """Reference ``find_dates`` semantics (dates.py:343-402), intervals
+    split: an interval ``a - b`` yields the two dates ``a`` and ``b``,
+    each with its own span."""
     out: list[DateMatch] = []
     if not _ANY_DIGIT_RE.search(text):
         return out  # every date pattern requires a digit; skip the big scan
@@ -219,17 +223,12 @@ def find_dates(text: str, split_interval: bool = True) -> list[DateMatch]:
             iso_to = _parse_one(halves[1])
             if not iso_from or not iso_to:
                 continue
-            if split_interval:
-                sep = _IVAL_RE.search(s)
-                left = s[: sep.start()]
-                right = s[sep.end():]
-                out.append(DateMatch(start, start + len(left), left, iso_from, conf, True))
-                r0 = start + sep.end()
-                out.append(DateMatch(r0, r0 + len(right), right, iso_to, conf, True))
-            else:
-                # interval kept whole (Date.Type.INTERVAL, dates.py:155-165)
-                out.append(DateMatch(start, start + len(s), s, iso_from, conf,
-                                     True, iso_to))
+            sep = _IVAL_RE.search(s)
+            left = s[: sep.start()]
+            right = s[sep.end():]
+            out.append(DateMatch(start, start + len(left), left, iso_from, conf))
+            r0 = start + sep.end()
+            out.append(DateMatch(r0, r0 + len(right), right, iso_to, conf))
         else:
             iso = _parse_one(s)
             if not iso:

@@ -214,7 +214,7 @@ def _subnames_from(names_with_flags: set[str]) -> set[str]:
                 run = []
         if run:
             raw.add(" ".join(run))
-    return get_normalized_subnames(raw, separate_to_names=True)
+    return get_normalized_subnames(raw)
 
 
 def process_name_inflections(line: str, strip_nameflags: bool = True
@@ -262,7 +262,7 @@ def process_name_inflections(line: str, strip_nameflags: bool = True
             name_inflections |= names
     if not infl_list and ent_flag in ("F", "M"):
         from .kb import get_normalized_subnames
-        subnames |= get_normalized_subnames([name], separate_to_names=True)
+        subnames |= get_normalized_subnames([name])
     return name, lang, flags, name_inflections, uri, subnames, surnames
 
 

@@ -35,17 +35,10 @@ import re
 from dataclasses import dataclass, field
 from typing import Iterable, Sequence
 
+from .lang import EN, LangModule
 from .textnorm import remove_accent
 
 MULTIVAL = "|"  # KB_MULTIVALUE_DELIM (ner/configs.py:14)
-
-# EN pronoun table (libs/lang_modules/en/word_types.py:10-26)
-PRONOUNS = {
-    "he": "M", "him": "M", "himself": "M", "his": "M",
-    "she": "F", "her": "F", "hers": "F", "herself": "F",
-    "who": "MF", "whom": "MF", "whose": "MF",
-    "here": "L", "there": "L", "where": "L",
-}
 
 # Columns of the flat synthetic KB (SURVEY §1.3 minimal schema).  Multivalue
 # columns hold '|'-joined strings exactly like KB.tsv.
@@ -56,10 +49,12 @@ KB_COLUMNS = [
     "fictional", "description", "wikipedia_url",
     "wiki_backlinks", "wiki_hits", "wiki_ps",
 ]
-# reference column names → our flat columns (get_data_for aliasing)
-_COLMAP = {
-    "NAME": "name", "ALIASES": "aliases", "REDIRECTS": "redirects",
-    "GENDER": "gender", "DATE OF BIRTH": "date_of_birth",
+# reference (KB.tsv HEAD) column names → our flat columns: get_data_for
+# aliasing, and io/kbtsv's header in both directions
+HEAD_COLUMNS = {
+    "TYPE": "type", "NAME": "name", "ALIASES": "aliases",
+    "REDIRECTS": "redirects", "GENDER": "gender",
+    "DATE OF BIRTH": "date_of_birth",
     "DATE OF DEATH": "date_of_death", "NATIONALITIES": "nationalities",
     "COUNTRY": "country", "JOBS": "jobs", "ROLES": "roles",
     "LOCATION": "location", "FOUNDED": "founded", "CANCELLED": "cancelled",
@@ -109,7 +104,7 @@ _RE_NICE_NAME = re.compile(
 )
 
 
-def get_normalized_subnames(src_names: Iterable[str], separate_to_names: bool = True) -> set[str]:
+def get_normalized_subnames(src_names: Iterable[str]) -> set[str]:
     """EN subset of persons.get_normalized_subnames (persons.py:53-198):
     split names into parts (prepositions removed), keep location-suffixed
     part, capitalize, validate against the "nice name" regex, expand
@@ -125,20 +120,16 @@ def get_normalized_subnames(src_names: Iterable[str], separate_to_names: bool = 
         sub_loc = sub_loc.group() if sub_loc else None
         name = _RE_LOC_REMOVE.sub("", name)
 
-        if separate_to_names:
-            subnames = set(_RE_PREP_REMOVE.sub(" ", name).split())
-            if sub_loc and sub_loc != name_with_location:
-                subnames.add(sub_loc)
-        else:  # pragma: no cover - pipeline always separates
-            subnames = {name, name_with_location}
+        subnames = set(_RE_PREP_REMOVE.sub(" ", name).split())
+        if sub_loc and sub_loc != name_with_location:
+            subnames.add(sub_loc)
 
         for subname in subnames:
             if len(subname) <= 1:
                 continue
             if subname.endswith(","):
                 subname = subname[:-1]
-            if separate_to_names or len(subname.split(" ")) == 1:
-                subname = subname[0].upper() + subname[1:]
+            subname = subname[0].upper() + subname[1:]
             if _RE_NICE_NAME.match(subname):
                 names.add(subname)
                 if _RE_PREFIX_CHECK.match(subname):
@@ -346,7 +337,7 @@ class KBBundle:
             return ""
 
     def get_data_for(self, line: int, col_name: str, separator: str | None = None):
-        col = _COLMAP.get(col_name)
+        col = HEAD_COLUMNS.get(col_name)
         data = "" if col is None else str(self.cols[col][line] or "")
         if separator:
             return data.split(separator) if data else []
@@ -483,7 +474,7 @@ def build_name_dict(kb: KBBundle) -> dict[str, frozenset[int]]:
             continue
         whole = kb.get_data_for(i, "ALIASES", separator=MULTIVAL)
         whole.append(kb.get_data_for(i, "NAME"))
-        for nm in get_normalized_subnames(whole, separate_to_names=True):
+        for nm in get_normalized_subnames(whole):
             key = remove_accent(nm).lower()
             out.setdefault(key, set()).add(i)
     return {k: frozenset(v) for k, v in out.items()}
@@ -509,7 +500,8 @@ _UNSUITABLE_CHARS = ';?!()[]{}<>/~@#$%^&*_=+|"\\'
 
 
 def is_unsuitable_key(key: str, type_str: str,
-                      person_unwanted_starts: tuple = ("List of ",)) -> bool:
+                      person_unwanted_starts: tuple = EN.person_unwanted_starts
+                      ) -> bool:
     """namelist.py:968-1015 (derived_names branch, SURVEY §1.4.5).
     ``person_unwanted_starts`` is language-specific (EN default; pass the
     lang module's table from build_namelist — cs 'Seznam ', sk 'Zoznam ')."""
@@ -583,7 +575,7 @@ def build_autocomplete_namelists(
     kb: KBBundle,
     stop_list: "set[str] | None" = None,
     filter_keys: bool = True,
-    lang: "object" = None,
+    lang: LangModule = EN,
 ) -> dict[str, dict[str, list[int]]]:
     """Per-type autocomplete namelists (``-a`` + create_cedar.sh:521-546).
 
@@ -645,7 +637,7 @@ def build_namelist(
     filter_keys: bool = True,
     add_pronouns: bool = True,
     add_subname_fragments: bool = True,
-    lang: "object" = None,
+    lang: LangModule = EN,
     tagged_expanded: "dict | None" = None,
 ) -> dict[str, list[int]]:
     """Key → ordered KB ids (+ trailing 0 for the 'N' fragment marker);
@@ -664,13 +656,8 @@ def build_namelist(
     """
     from .variants import all_person_variants, geographical_variants
 
-    # language tables for the build-time filters (EN when no module given)
-    from .lang import EN as _EN
-    lang_mod = lang if lang is not None else _EN
-    person_unwanted = getattr(lang_mod, "person_unwanted_starts", ("List of ",))
-    unwanted_re = _unwanted_match_re(
-        getattr(lang_mod, "unwanted_match_words",
-                frozenset({"Saint", "Holy", "from", "Prince"})))
+    person_unwanted = lang.person_unwanted_starts
+    unwanted_re = _unwanted_match_re(lang.unwanted_match_words)
 
     # stoplist morphological expansion (create_cedar.sh:421-437): each stop
     # word also blocks its word-wise-capitalized (sed 's/\b\(.\)/\u\1/g'),
@@ -713,7 +700,7 @@ def build_namelist(
                 # KB2namelist.py:531-534); nicknames (#ntype=nick) excluded
                 # (namelist.py:541)
                 whole = [a for a, nt in aliases.items() if nt not in ("nick", "pseudo")]
-                for sub in get_normalized_subnames(whole, separate_to_names=True):
+                for sub in get_normalized_subnames(whole):
                     frag.add(re.sub(r"\s+", " ", sub).strip())
         elif "nationality" in t:
             # nationality surfaces are fragment-only keys: the reference's
@@ -774,8 +761,7 @@ def build_namelist(
         else:
             out[f] = [0]
     if add_pronouns:
-        pronouns = PRONOUNS if lang is None else lang.pronouns
-        for p in pronouns:
+        for p in lang.pronouns:
             out.setdefault(p, [0])
             out.setdefault(p.capitalize(), [0])
     return dict(sorted(out.items()))

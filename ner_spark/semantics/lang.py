@@ -61,13 +61,17 @@ def _en_sense_rules(m, kb, text) -> None:
     m.senses = out
 
 
+# right contexts after which "There" is not a location coreference
+# (en/entity.py:12-25); the C kernel carries them in the KB image
+EN_THERE_CONTEXTS = (" is ", " are ", " was ", " were ", " has ", " have ",
+                     " had ")
+
+
 def _en_location_coref(m, text) -> bool:
     from ner_spark.semantics.resolve import _right_context
 
     return m.source == "There" and any(
-        _right_context(text, m, s)
-        for s in (" is ", " are ", " was ", " were ", " has ", " have ",
-                  " had "))
+        _right_context(text, m, s) for s in EN_THERE_CONTEXTS)
 
 
 EN = LangModule(

@@ -30,7 +30,6 @@ def scan_and_resolve(
     find_names: bool = False,
     mode: str = "default",
     lang: LangModule = EN,
-    split_interval: bool = True,
     as_tuples: bool = False,
     names_strict: bool = False,
 ) -> list:
@@ -43,13 +42,12 @@ def scan_and_resolve(
 
     rows = ckernel.try_scan_resolve(
         kb, automaton, text, scan_text, find_names=find_names, mode=mode,
-        lang=lang, split_interval=split_interval, as_tuples=as_tuples)
+        lang=lang, as_tuples=as_tuples)
     if rows is not None:
         return rows
     return resolve_in_python(
         kb, automaton, text, scan_text, find_names=find_names, mode=mode,
-        lang=lang, split_interval=split_interval, as_tuples=as_tuples,
-        names_strict=names_strict)
+        lang=lang, as_tuples=as_tuples, names_strict=names_strict)
 
 
 def resolve_in_python(
@@ -60,7 +58,6 @@ def resolve_in_python(
     find_names: bool = False,
     mode: str = "default",
     lang: LangModule = EN,
-    split_interval: bool = True,
     as_tuples: bool = False,
     names_strict: bool = False,
 ) -> list:
@@ -69,8 +66,7 @@ def resolve_in_python(
     matches = automaton.scan(scan_text if scan_text is not None else text)
     return resolve_document(
         text, [(m.ids, m.start, m.end, m.fragment) for m in matches], kb,
-        find_names=find_names, mode=mode, lang=lang,
-        split_interval=split_interval, as_tuples=as_tuples,
+        find_names=find_names, mode=mode, lang=lang, as_tuples=as_tuples,
         names_strict=names_strict,
     )
 
@@ -100,13 +96,13 @@ def render_reference_lines(rows: list[dict]) -> list[str]:
     """Render mention rows in the reference's stdout line format:
     ``start \\t end \\t kind \\t text \\t sense-or-iso``
     (Entity.__str__ ner/entity.py:357-388; Date.__str__ libs/dates.py:
-    167-183 — our dates are pre-split so the DATE branch applies).
+    167-183 — interval halves are separate dates, so its DATE branch).
     Useful for byte-level diffing against a reference run.  Score-mode rows
     (``cands``/``cand_scores`` present) render the candidate list with
     scores exactly like Entity.__str__'s display_score branch."""
     out = []
     for r in rows:
-        if r["kind"] in ("date", "interval"):
+        if r["kind"] == "date":
             tail = r["iso"]
         elif r.get("cands"):
             parts = []

@@ -55,6 +55,9 @@ from .textnorm import ncr2unicode, remove_accent_unicode
 
 _PAR_RE = re.compile(r"(\r?\n|\r)\1+")  # ner.py:156
 _ALL_SPACES_RE = re.compile(r"^[ ]+$")  # ner.py:556 adjacency gap test
+# the fields of a mention row, in the order of its tuple form
+ROW_FIELDS = ("start", "end", "par", "kind", "text", "sense", "iso",
+              "confidence")
 
 
 def offsets_of_paragraphs(text: str) -> list[int]:
@@ -321,9 +324,6 @@ class Context:
                                         par_profs.append(p)
                 elif type(ent) is DateMatch:
                     par_dates.append(ent.iso.show_without_zeros())
-                    if ent.iso_to is not None:  # unsplit INTERVAL: both
-                        par_dates.append(ent.iso_to.show_without_zeros())
-                        # ends join the paragraph dates (context.py:156-158)
                 ent_index += 1
 
     # context.py:165-183 — forward-only walk (quirk, see module docstring)
@@ -1109,7 +1109,6 @@ def resolve_document(
     find_names: bool = False,
     mode: str = "default",
     lang: LangModule = EN,
-    split_interval: bool = True,
     as_tuples: bool = False,
     names_strict: bool = False,
     trace=None,
@@ -1122,12 +1121,12 @@ def resolve_document(
     mirroring the reference's output line (entity.py:357-388, dates:
     Date.__str__).
 
-    ``as_tuples=True`` returns the same rows as positional 8-tuples
-    ``(start, end, par, kind, text, sense, iso, confidence)`` instead of
-    dicts — the shape the Spark UDF flattens to anyway (pipeline/ner.py);
-    only ``mode='default'`` supports it (score/-a carry extra cand
-    fields).  Field-for-field equality with the dict form is pinned in
-    tests/test_resolve.py.
+    ``as_tuples=True`` returns the same rows as positional 8-tuples in
+    :data:`ROW_FIELDS` order instead of dicts — the shape the Spark UDF
+    flattens to anyway (pipeline/ner.py); only ``mode='default'``
+    supports it (score/-a carry extra cand fields).  A dict row is
+    ``dict(zip(ROW_FIELDS, row))`` plus those extras; field-for-field
+    equality of the two forms is pinned in tests/test_resolve.py.
 
     ``trace``: optional ``trace(stage_name, entities)`` callback invoked
     after each resolution stage with the live mention list — the
@@ -1171,7 +1170,7 @@ def resolve_document(
         elif e.senses or e.partial_match_senses or e.source_lower in lang.pronouns:
             entities.append(e)
 
-    dates_found = find_dates(text, split_interval=split_interval)
+    dates_found = find_dates(text)
     # date–entity overlap (ner.py:648-651) via interval bisect: entity
     # spans are disjoint after remove_shorter_entities, so a date overlaps
     # iff the rightmost entity starting at or before its end reaches back
@@ -1260,61 +1259,37 @@ def resolve_document(
         trace("final_sense_filter", entities_and_dates)
 
     out = []
-    if as_tuples:  # hot path (mode == 'default' guaranteed above)
-        for e in entities_and_dates:
-            par = paragraphs[bisect_right(paragraphs, e.start) - 1]
-            if type(e) is DateMatch:
-                if e.iso_to is not None:
-                    out.append((e.start, e.end, par, "interval", e.source,
-                                None, f"{e.iso.iso()} -- {e.iso_to.iso()}",
-                                e.confidence))
-                else:
-                    out.append((e.start, e.end, par, "date", e.source,
-                                None, e.iso.iso(), e.confidence))
-            else:
-                kind = "coref" if e.is_coreference else (
-                    "name" if e.is_name else "kb")
-                sense = e.get_preferred_sense()
-                if e.is_name and sense is None and e.senses:
-                    sense = e.senses[0]
-                out.append((e.start, e.end, par, kind,
-                            text[e.start:e.end].replace("\n", " ")
-                                               .replace("\r", ""),
-                            sense, None, None))
-        return out
     for e in entities_and_dates:
         par = paragraphs[bisect_right(paragraphs, e.start) - 1]
-        if isinstance(e, DateMatch):
-            if e.iso_to is not None:  # unsplit interval (Date.__str__:177-179)
-                kind, iso = "interval", f"{e.iso.iso()} -- {e.iso_to.iso()}"
-            else:
-                kind, iso = "date", e.iso.iso()
-            out.append({
-                "start": e.start, "end": e.end, "par": par, "kind": kind,
-                "text": e.source, "sense": None,
-                "iso": iso, "confidence": e.confidence,
-            })
+        is_date = type(e) is DateMatch
+        if is_date:
+            row = (e.start, e.end, par, "date", e.source, None, e.iso.iso(),
+                   e.confidence)
         else:
-            kind = "coref" if e.is_coreference else ("name" if e.is_name else "kb")
+            kind = "coref" if e.is_coreference else (
+                "name" if e.is_name else "kb")
             sense = e.get_preferred_sense()
             if e.is_name and sense is None and e.senses:
                 sense = e.senses[0]  # pseudo id (<0) or absorbed KB sense
-            row = {
-                "start": e.start, "end": e.end, "par": par, "kind": kind,
-                "text": text[e.start:e.end].replace("\n", " ").replace("\r", ""),
-                "sense": sense, "iso": None,
-                "confidence": None,
-            }
-            if mode == "score":  # -s: carry candidates + scores (entity.py:369-377)
-                row["cands"] = list(e.candidates)
-                row["cand_scores"] = list(e.score)
-            elif not e.preferred_sense:  # has_preferred_sense() == False
-                # no preferred sense (incl. -a nulling): the reference
-                # prints the SORTED senses ';'-joined — partial-match
-                # senses for corefs, raw senses otherwise
-                # (entity.py:380-387); carried as score-less cands
-                row["cands"] = sorted(
-                    e.partial_match_senses if e.is_coreference else e.senses)
-                row["cand_scores"] = []
+            row = (e.start, e.end, par, kind,
+                   text[e.start:e.end].replace("\n", " ").replace("\r", ""),
+                   sense, None, None)
+        if as_tuples:
             out.append(row)
+            continue
+        row = dict(zip(ROW_FIELDS, row))
+        if is_date:
+            pass  # a date carries no candidates
+        elif mode == "score":  # -s: carry candidates + scores (entity.py:369-377)
+            row["cands"] = list(e.candidates)
+            row["cand_scores"] = list(e.score)
+        elif not e.preferred_sense:  # has_preferred_sense() == False
+            # no preferred sense (incl. -a nulling): the reference
+            # prints the SORTED senses ';'-joined — partial-match
+            # senses for corefs, raw senses otherwise
+            # (entity.py:380-387); carried as score-less cands
+            row["cands"] = sorted(
+                e.partial_match_senses if e.is_coreference else e.senses)
+            row["cand_scores"] = []
+        out.append(row)
     return out

@@ -41,18 +41,17 @@ def env():
     return bundle, atm, lang, kb_rows
 
 
-def both(bundle, atm, lang, text, as_tuples=True, split_interval=True):
+def both(bundle, atm, lang, text, as_tuples=True):
     """(python, C-fused) — callers assert equal.  The fused call must not
     fall back: a ``None`` from try_scan_resolve would compare Python with
     itself."""
     matches = [(m.ids, m.start, m.end, m.fragment) for m in atm.scan(text)]
     py = resolve_document(text, matches, bundle, lang=lang,
-                          as_tuples=as_tuples, split_interval=split_interval)
+                          as_tuples=as_tuples)
     assert ckernel.try_scan_resolve(
-        bundle, atm, text, lang=lang, as_tuples=as_tuples,
-        split_interval=split_interval) is not None, "kernel fell back"
-    ck = scan_and_resolve(bundle, atm, text, lang=lang, as_tuples=as_tuples,
-                          split_interval=split_interval)
+        bundle, atm, text, lang=lang, as_tuples=as_tuples) is not None, \
+        "kernel fell back"
+    ck = scan_and_resolve(bundle, atm, text, lang=lang, as_tuples=as_tuples)
     return py, ck
 
 
@@ -118,9 +117,8 @@ def test_adversarial_docs_parity(env):
                     .replace("{NAME}", names[i % len(names)])
                     .replace("{GEO}", geos[i % len(geos)])
                     .replace("{NAT}", nats[i % len(nats)]))
-        for split in (True, False):
-            py, ck = both(bundle, atm, lang, text, split_interval=split)
-            assert py == ck, f"adversarial doc {i}: {text[:60]!r}"
+        py, ck = both(bundle, atm, lang, text)
+        assert py == ck, f"adversarial doc {i}: {text[:60]!r}"
 
 
 def test_random_fuzz_parity(env):

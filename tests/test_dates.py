@@ -42,7 +42,7 @@ def test_year_interval_splits():
     assert len(ds) == 2
     (a, b) = ds
     assert a.iso == ISODate(1693) and b.iso == ISODate(1734)
-    assert a.is_interval_part and b.is_interval_part
+    assert (a.source, b.source) == ("1693", "1734")
     assert (a.start, a.end) == (8, 12) and (b.start, b.end) == (13, 17)
 
 
@@ -73,31 +73,6 @@ def test_month_year_only():
     assert d.iso == ISODate(2003, 11, 0)
     assert d.iso.show_without_zeros() == "2003-11"
     assert d.iso.iso() == "2003-11-00"
-
-
-def test_unsplit_interval_kept_whole():
-    ds = find_dates("reigned 1693-1734 well", split_interval=False)
-    assert len(ds) == 1
-    d = ds[0]
-    assert (d.start, d.end, d.source) == (8, 17, "1693-1734")
-    assert d.iso == ISODate(1693) and d.iso_to == ISODate(1734)
-    assert d.is_interval_part
-
-
-def test_resolve_interval_row():
-    from ner_spark.semantics.kb import KBBundle
-    from ner_spark.semantics.resolve import resolve_document
-    from ner_spark.semantics.recognize import render_reference_lines
-
-    kb = KBBundle.from_rows([dict(id=1, type="thing", name="X",
-                                  description="d")])
-    rows = resolve_document("reigned 1693-1734 well", [], kb,
-                            split_interval=False)
-    assert len(rows) == 1
-    assert rows[0]["kind"] == "interval"
-    assert rows[0]["iso"] == "1693-00-00 -- 1734-00-00"
-    lines = render_reference_lines(rows)
-    assert lines == ["8\t17\tinterval\t1693-1734\t1693-00-00 -- 1734-00-00"]
 
 
 def test_anchored_scan_equals_plain_finditer():

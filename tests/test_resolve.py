@@ -2,6 +2,8 @@
 coreference, relational filters (reference: /root/reference/ner.py:576-714,
 ner/entity.py, ner/context.py)."""
 
+import shutil
+
 import pytest
 
 from ner_spark.semantics.kb import KBBundle
@@ -567,3 +569,102 @@ def test_stage_diff_tracer(kb_rows, pages_rows):
             assert "--- before" in body and "+++ after" in body
             traced_any = True
     assert traced_any
+
+
+# -- context reads that decide a sense (context.py:227-328) ----------------
+# Two candidates share a name; the second wins on static score alone (its
+# description is longer), the first carries what the document mentions.
+# Each case asserts the first wins on the Python path (over the compiled
+# bundle and over the bundle decoded from the KB image) and on the C path,
+# and that blanking the one KB value its rule reads hands the sense back.
+
+needs_kernel = pytest.mark.skipif(shutil.which("g++") is None,
+                                  reason="no C++ toolchain")
+
+
+def _kb_senses(rows, text, blank_forms=False):
+    """The kb-row senses of ``text``; the C kernel must cover the document,
+    and it and the Python resolver over the image's bundle must agree with
+    the Python resolver over the compiled bundle row for row."""
+    from ner_spark.semantics import ckernel
+    from ner_spark.semantics.lang import EN
+    from ner_spark.semantics.recognize import resolve_in_python
+
+    kb = mk_kb(rows)
+    if blank_forms:
+        kb.nationality_forms = frozenset()
+    atm = mk(kb)
+    py = resolve_in_python(kb, atm, text, as_tuples=True)
+    decoded = ckernel.image_bundle(ckernel.kb_image(kb, atm))
+    assert resolve_in_python(decoded, atm, text, as_tuples=True) == py
+    assert ckernel.try_scan_resolve(kb, atm, text, lang=EN,
+                                    as_tuples=True) == py
+    return [r[5] for r in py if r[3] == "kb"]
+
+
+def _people(**first):
+    """Two persons named John Smith (the first overridden by ``first``)
+    and a nationality whose lowercase alias can match a person's
+    nationalities: those are lowercased, the paragraph's nationality
+    mentions are not."""
+    a = dict(id=1, type="person", name="John Smith", gender="M",
+             nationalities="Czech", roles="composer", description="x" * 90,
+             wiki_backlinks=10, wiki_hits=10, wiki_ps=0)
+    b = dict(a, id=2, nationalities="Polish", roles="painter",
+             description="x" * 100)
+    nat = dict(id=3, type="nationality", name="Czech", aliases="czech",
+               country="Czechia", description="People of Czechia.")
+    return [dict(a, **first), b, nat]
+
+
+@needs_kernel
+def test_context_nationality_decides_sense():
+    text = "John Smith was a czech writer ."
+    assert _kb_senses(_people(), "John Smith was a writer .") == [2]
+    assert _kb_senses(_people(), text) == [1]
+    assert _kb_senses(_people(nationalities=""), text) == [2]
+
+
+@needs_kernel
+def test_context_nationality_form_decides_sense():
+    """A senseless mention counts as the paragraph's nationality only
+    when its surface is one of the KB's nationality forms."""
+    text = "John Smith was a czech writer ."
+    assert _kb_senses(_people(), text) == [1]
+    assert _kb_senses(_people(), text, blank_forms=True) == [2]
+
+
+@needs_kernel
+def test_context_roles_decide_sense():
+    """A candidate's ROLES found in its paragraph become the paragraph's
+    professions, which score every candidate holding them."""
+    text = "John Smith was a composer ."
+    assert _kb_senses(_people(), "John Smith was a writer .") == [2]
+    assert _kb_senses(_people(), text) == [1]
+    assert _kb_senses(_people(roles=""), text) == [2]
+
+
+def _orgs(**first):
+    a = dict(id=1, type="organization", name="Atlas Institute",
+             location="Prague", start="1900", description="x" * 90,
+             wiki_backlinks=10, wiki_hits=10, wiki_ps=0)
+    b = dict(a, id=2, location="Brno", start="1800", description="x" * 100)
+    towns = [dict(id=i, type="geographical:settlement", name=n,
+                  country="Czechia", description="A town.")
+             for i, n in ((3, "Prague"), (4, "Brno"))]
+    return [dict(a, **first), b] + towns
+
+
+@needs_kernel
+def test_context_location_never_decides_sense():
+    """LOCATION is read only by org_event_percentile's place score, which
+    probes the paragraph's 'settlement' mention bucket.  Mentions are
+    bucketed under single chars of their type string (the char-iteration
+    quirk) and under 'person', so that bucket never exists: the first
+    organization's LOCATION, mentioned in its paragraph, does not win it
+    the sense.  Its START date, read by the same percentile, does."""
+    text = "Atlas Institute opened in Prague ."
+    assert _kb_senses(_orgs(), text) == [2, 3]
+    dated = "Atlas Institute opened in Prague in 1900 ."
+    assert _kb_senses(_orgs(), dated) == [1, 3]
+    assert _kb_senses(_orgs(start=""), dated) == [2, 3]
