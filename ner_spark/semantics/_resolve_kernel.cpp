@@ -130,17 +130,16 @@ static Py_ssize_t bisect_right(const vector<int64_t> &a, int64_t x) {
 // on the driver, checked once here and then read in place
 // ---------------------------------------------------------------------------
 
-// context-dispatch kinds — MUST match KBBundle.CTX_* (kb.py:253)
-enum { CTX_GEO = 0, CTX_PERSON = 1, CTX_ORG = 2, CTX_EVENT = 3,
-       CTX_CHAR = 4, CTX_NONE = 5 };
+// context-dispatch kinds — MUST match KBBundle.CTX_* (kb.py)
+enum { CTX_ZERO = 0, CTX_PERSON = 1, CTX_DATED = 2, CTX_CHAR = 3 };
 
-#define IMAGE_VERSION 1  // ckernel.IMAGE_VERSION
+#define IMAGE_VERSION 2  // ckernel.IMAGE_VERSION
 static const char IMAGE_MAGIC[8] = {'N', 'E', 'R', 'K', 'B', 'I', 'M', 'G'};
 
 // section order — MUST match ckernel._SECTIONS
 enum {
     S_META, S_STR_OFF, S_STR_BLOB, S_SCORE,
-    S_NAME_SID, S_COUNTRY_SID, S_LOC_SID, S_START_SID, S_END_SID, S_TYPE_SID,
+    S_NAME_SID, S_COUNTRY_SID, S_START_SID, S_END_SID, S_TYPE_SID,
     S_CTX_CHAR,
     S_GENDER, S_PERSON_FLAG, S_ARTIST, S_GROUP, S_PERSON_SUB, S_LOC_SUB,
     S_GEO_SUB, S_TYPE_EXACT, S_CTX_KIND,
@@ -157,7 +156,7 @@ enum {
 };
 static const uint8_t SECTION_ELEM[S_COUNT] = {
     8, 4, 4, 8,
-    4, 4, 4, 4, 4, 4,
+    4, 4, 4, 4, 4,
     4,
     1, 1, 1, 1, 1, 1, 1, 1, 1,
     4, 4, 4, 4, 4, 4,
@@ -216,8 +215,7 @@ struct KBImage {
     Span<uint32_t> str_off;
     Span<Py_UCS4> str_blob;
     const double *score;
-    const int32_t *name_sid, *country_sid, *loc_sid, *start_sid, *end_sid,
-        *type_sid;
+    const int32_t *name_sid, *country_sid, *start_sid, *end_sid, *type_sid;
     const uint32_t *ctx_char;     // codepoint (0 when none)
     const uint8_t *gender;        // 0 none / 1 M / 2 F
     const uint8_t *person_flag;   // person_flag_arr (exact-type tuple)
@@ -352,8 +350,8 @@ static const char *load_image(KBImage *img, const uint8_t *buf, size_t size) {
     img->empty_sid = (int32_t)meta.p[META_EMPTY_SID];
     if (meta.p[META_EMPTY_SID] < 0 || meta.p[META_EMPTY_SID] >= n_str)
         return "empty sid";
-    static const int row_sid[] = {S_NAME_SID, S_COUNTRY_SID, S_LOC_SID,
-                                  S_START_SID, S_END_SID, S_TYPE_SID};
+    static const int row_sid[] = {S_NAME_SID, S_COUNTRY_SID, S_START_SID,
+                                  S_END_SID, S_TYPE_SID};
     for (int s : row_sid)
         if (cnt[s] != rows || !all_in(SPAN(int32_t, s), 0, n_str))
             return "row string ids";
@@ -362,12 +360,11 @@ static const char *load_image(KBImage *img, const uint8_t *buf, size_t size) {
     if (cnt[S_SCORE] != rows || cnt[S_CTX_CHAR] != rows) return "row arrays";
     if (!all_in(SPAN(uint8_t, S_GENDER), 0, 3) ||
         !all_in(SPAN(uint8_t, S_TYPE_EXACT), 0, 3) ||
-        !all_in(SPAN(uint8_t, S_CTX_KIND), 0, CTX_NONE + 1))
+        !all_in(SPAN(uint8_t, S_CTX_KIND), 0, CTX_CHAR + 1))
         return "row enums";
     img->score = (const double *)sec[S_SCORE];
     img->name_sid = (const int32_t *)sec[S_NAME_SID];
     img->country_sid = (const int32_t *)sec[S_COUNTRY_SID];
-    img->loc_sid = (const int32_t *)sec[S_LOC_SID];
     img->start_sid = (const int32_t *)sec[S_START_SID];
     img->end_sid = (const int32_t *)sec[S_END_SID];
     img->type_sid = (const int32_t *)sec[S_TYPE_SID];
@@ -577,13 +574,10 @@ struct Register {
 // Context (resolve.py Context)
 // ---------------------------------------------------------------------------
 
-// bucket field keys: single type-string chars by codepoint; the probe-only
-// multi-char fields get sentinels that are never inserted (resolve.py's
-// dict would likewise never hold them — single-char keys + "person" only)
-static const uint32_t FK_PERSON = 0xFFFFFFFFu;       // inserted + probed
-static const uint32_t FK_ORGANIZATION = 0xFFFFFFFEu; // probe-only
-static const uint32_t FK_EVENT = 0xFFFFFFFDu;        // probe-only
-static const uint32_t FK_SETTLEMENT = 0xFFFFFFFCu;   // probe-only
+// bucket field keys: single type-string chars by codepoint, and "person"
+// (the 'organization'/'event'/'settlement' keys context.py probes are
+// never made — char quirk — so their probes are gone)
+static const uint32_t FK_PERSON = 0xFFFFFFFFu;
 
 struct Bucket {
     std::unordered_map<int32_t, int64_t> cnt;  // interned sid -> count
@@ -613,18 +607,17 @@ struct Context {
     vector<ParStats> par;            // by paragraph index
     vector<uint8_t> people_in_text;  // bitset over KB lines (n+1)
     Py_ssize_t paragraph_index = 0;
-    // pronoun registers (mention idx, -1 == None)
-    int32_t before_last_person = -1, last_person = -1, last_male = -1,
-            last_female = -1, last_unknown_gender = -1, last_thing = -1,
-            last_location = -1, before_last_male = -1, before_last_female = -1;
+    // pronoun registers (mention idx, -1 == None): only the gender ones
+    // are ever read (context.py:331-342)
+    int32_t last_male = -1, last_female = -1, last_unknown_gender = -1;
 
     bool init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats);
     void recompute_paragraph_offset(int64_t start);
     void update(Doc &d, int32_t mi);
-    double mentioned_in_par(const int32_t *cands, size_t ncands, uint32_t field);
+    double mentioned_in_par(int32_t name_sid, uint32_t field);
     double person_percentile(Doc &d, int64_t candidate);
     double common_percentile(int64_t candidate, uint32_t ch);
-    double org_event_percentile(Doc &d, int64_t candidate, bool organisation);
+    double dated_percentile(Doc &d, int64_t candidate);
 };
 
 // ---------------------------------------------------------------------------
@@ -818,52 +811,33 @@ void Context::recompute_paragraph_offset(int64_t start) {
     paragraph_index = pi;
 }
 
-// resolve.py Context.update
+// resolve.py Context.update (only the person branch writes a read register)
 void Context::update(Doc &d, int32_t mi) {
     Mention &m = d.men[(size_t)mi];
     Pref p = m.pref;
     if (p.tag == P_MEN) p = d.men[(size_t)p.v].pref;
-    bool is_person = false, is_loc = false;
-    int64_t line = -1;
-    if (p.tag == P_INT && p.v >= 1) {
-        line = kb_index(kb, p.v);
-        if (line < 0) { d.fail(); return; }
-        is_person = kb->person_sub[(size_t)line];
-        is_loc = !is_person && kb->loc_sub[(size_t)line];
-    }
-    // (None / <1 → get_ent_type == "" → neither flag; Context.update)
-    if (is_person) {
-        before_last_person = last_person;
-        last_person = mi;
-        uint8_t g = kb->gender[(size_t)line];
-        if (g == 1) { last_male = mi; last_unknown_gender = -1; }
-        else if (g == 2) { last_female = mi; last_unknown_gender = -1; }
-        else last_unknown_gender = mi;
-    } else if (is_loc) {
-        last_location = mi;
-    } else {
-        last_thing = mi;
-    }
+    // (None / <1 → get_ent_type == "" → not a person; Context.update)
+    if (p.tag != P_INT || p.v < 1) return;
+    int64_t line = kb_index(kb, p.v);
+    if (line < 0) { d.fail(); return; }
+    if (!kb->person_sub[(size_t)line]) return;
+    uint8_t g = kb->gender[(size_t)line];
+    if (g == 1) { last_male = mi; last_unknown_gender = -1; }
+    else if (g == 2) { last_female = mi; last_unknown_gender = -1; }
+    else last_unknown_gender = mi;
 }
 
 // resolve.py Context.mentioned_in_par
-double Context::mentioned_in_par(const int32_t *cands, size_t ncands,
-                                 uint32_t field) {
+double Context::mentioned_in_par(int32_t name_sid, uint32_t field) {
     ParStats &ps = par[(size_t)paragraph_index];
     auto it = ps.fields.find(field);
     if (it == ps.fields.end() || it->second.total == 0) return 0.0;
-    Bucket &b = it->second;
-    double score = 0.0;
-    for (size_t i = 0; i < ncands; i++) {
-        auto ct = b.cnt.find(cands[i]);
-        if (ct != b.cnt.end()) { score = (double)ct->second; break; }
-    }
-    if (score != 0.0) score = score * 100.0 / (double)b.total;
-    return score;
+    auto ct = it->second.cnt.find(name_sid);
+    if (ct == it->second.cnt.end() || ct->second == 0) return 0.0;
+    return (double)ct->second * 100.0 / (double)it->second.total;
 }
 
-// resolve.py Context.person_percentile (people_max_scores is write-only
-// state → omitted)
+// resolve.py Context.person_percentile
 double Context::person_percentile(Doc &d, int64_t candidate) {
     ParStats &ps = par[(size_t)paragraph_index];
     int64_t ci = kb_index(kb, candidate);
@@ -898,37 +872,22 @@ double Context::person_percentile(Doc &d, int64_t candidate) {
     if (!ps.profs.empty())
         prof_score = prof_score * 100.0 / (double)ps.profs.size();
     double stat = nat_score + date_score + prof_score;
-    double mention_score = 0.0;
-    auto it = ps.fields.find(FK_PERSON);
-    if (it != ps.fields.end() && it->second.total != 0) {
-        auto ct = it->second.cnt.find(kb->name_sid[(size_t)ci]);
-        if (ct != it->second.cnt.end() && ct->second != 0)
-            mention_score =
-                (double)ct->second * 100.0 / (double)it->second.total;
-    }
-    return (stat + mention_score) / 4.0;
+    double mention = mentioned_in_par(kb->name_sid[(size_t)ci], FK_PERSON);
+    return (stat + mention) / 4.0;
 }
 
 // resolve.py Context.common_percentile (single-char bucket probe)
 double Context::common_percentile(int64_t candidate, uint32_t ch) {
     int64_t ci = kb_index(kb, candidate);
     if (ci < 0) { doc->fail(); return 0.0; }
-    int32_t probe[1] = {kb->name_sid[(size_t)ci]};
-    return mentioned_in_par(probe, 1, ch);
+    return mentioned_in_par(kb->name_sid[(size_t)ci], ch);
 }
 
-// resolve.py Context.org_event_percentile
-double Context::org_event_percentile(Doc &d, int64_t candidate,
-                                     bool organisation) {
-    // callers pass "organization"(z) / "event" → both take the else branch
-    // of the 'organisation' spelling test (START/END columns)
+// resolve.py Context.dated_percentile (the reference's org/event score less
+// its name and LOCATION probes, which read buckets that are never made)
+double Context::dated_percentile(Doc &d, int64_t candidate) {
     int64_t ci = kb_index(kb, candidate);
     if (ci < 0) { d.fail(); return 0.0; }
-    int32_t name_probe[1] = {kb->name_sid[(size_t)ci]};
-    double mention_score = mentioned_in_par(
-        name_probe, 1, organisation ? FK_ORGANIZATION : FK_EVENT);
-    int32_t loc_probe[1] = {kb->loc_sid[(size_t)ci]};
-    double place_score = mentioned_in_par(loc_probe, 1, FK_SETTLEMENT);
     int32_t ds[2] = {kb->start_sid[(size_t)ci], kb->end_sid[(size_t)ci]};
     ParStats &ps = par[(size_t)paragraph_index];
     double date_score = 0.0;
@@ -941,7 +900,7 @@ double Context::org_event_percentile(Doc &d, int64_t candidate,
         }
     if (!ps.dates.empty())
         date_score = date_score * 100.0 / (double)ps.dates.size();
-    return (mention_score + place_score + date_score) / 3.0;
+    return date_score / 3.0;
 }
 
 // ---------------------------------------------------------------------------
@@ -1168,8 +1127,7 @@ static bool dwc(Doc &d, Context &ctx, Register &reg, int32_t mi) {
         double context_score = 0.0;
         uint8_t k = kb->ctx_kind[(size_t)ci];
         if (k == CTX_PERSON) context_score = ctx.person_percentile(d, c);
-        else if (k == CTX_ORG) context_score = ctx.org_event_percentile(d, c, true);
-        else if (k == CTX_EVENT) context_score = ctx.org_event_percentile(d, c, false);
+        else if (k == CTX_DATED) context_score = ctx.dated_percentile(d, c);
         else if (k == CTX_CHAR)
             context_score = ctx.common_percentile(c, kb->ctx_char[(size_t)ci]);
         if (d.fallback) return false;
@@ -1190,8 +1148,7 @@ static bool dwc(Doc &d, Context &ctx, Register &reg, int32_t mi) {
         double context_score = 0.0;
         uint8_t k = kb->ctx_kind[(size_t)ci];
         if (k == CTX_PERSON) context_score = ctx.person_percentile(d, c);
-        else if (k == CTX_ORG) context_score = ctx.org_event_percentile(d, c, true);
-        else if (k == CTX_EVENT) context_score = ctx.org_event_percentile(d, c, false);
+        else if (k == CTX_DATED) context_score = ctx.dated_percentile(d, c);
         else if (k == CTX_CHAR)
             context_score = ctx.common_percentile(c, kb->ctx_char[(size_t)ci]);
         if (d.fallback) return false;
@@ -1246,9 +1203,7 @@ static void pronoun_coref(Doc &d, Context &ctx, Register &reg, int32_t mi) {
     int64_t bop = m.begin_of_paragraph >= 0 ? m.begin_of_paragraph : 0;
     if (m.flags & FL_PRON_M) {
         if (ctx.last_unknown_gender >= 0) {
-            ctx.before_last_male = ctx.last_male;
             ctx.last_male = ctx.last_unknown_gender;
-            ctx.last_person = ctx.last_unknown_gender;
             ctx.last_unknown_gender = -1;
         }
         if (ctx.last_male >= 0 &&
@@ -1261,9 +1216,7 @@ static void pronoun_coref(Doc &d, Context &ctx, Register &reg, int32_t mi) {
         }
     } else if (m.flags & FL_PRON_F) {
         if (ctx.last_unknown_gender >= 0) {
-            ctx.before_last_female = ctx.last_female;
             ctx.last_female = ctx.last_unknown_gender;
-            ctx.last_person = ctx.last_unknown_gender;
             ctx.last_unknown_gender = -1;
         }
         if (ctx.last_female >= 0 &&

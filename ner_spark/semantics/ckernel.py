@@ -168,15 +168,15 @@ def available() -> bool:
 # KB image
 # ---------------------------------------------------------------------------
 
-IMAGE_VERSION = 1  # _resolve_kernel.cpp IMAGE_VERSION; bump on any change
+IMAGE_VERSION = 2  # _resolve_kernel.cpp IMAGE_VERSION; bump on any change
 _MAGIC = b"NERKBIMG"
 # the section table, in order (the kernel's S_* enum mirrors it)
 _SECTIONS = (
     ("meta", "<i8"),  # n_rows, empty_sid, n_states
     ("str_off", "<u4"), ("str_blob", "<u4"),  # UCS-4 strtab
     ("score", "<f8"),
-    ("name_sid", "<i4"), ("country_sid", "<i4"), ("loc_sid", "<i4"),
-    ("start_sid", "<i4"), ("end_sid", "<i4"), ("type_sid", "<i4"),
+    ("name_sid", "<i4"), ("country_sid", "<i4"), ("start_sid", "<i4"),
+    ("end_sid", "<i4"), ("type_sid", "<i4"),
     ("ctx_char", "<u4"),
     ("gender", "u1"), ("person_flag", "u1"), ("artist", "u1"),
     ("group", "u1"), ("person_sub", "u1"), ("loc_sub", "u1"),
@@ -314,8 +314,9 @@ def kb_image(kb, automaton) -> bytes:
         "there_ctx": [sid(v) for v in EN_THERE_CONTEXTS],
     }
     rows = range(1, n + 1)
-    for name, col in (("loc_sid", "LOCATION"), ("start_sid", "START"),
-                      ("end_sid", "END")):
+    # no LOCATION: only the reference's org/event place probe reads it,
+    # and that probe's bucket is never made (char quirk)
+    for name, col in (("start_sid", "START"), ("end_sid", "END")):
         sec[name] = [sid("")] + [sid(kb.get_data_for(i, col)) for i in rows]
     lists = {
         "jobs": lambda i: kb.get_multival(i, "JOBS"),
@@ -410,7 +411,8 @@ def image_bundle(image) -> KBBundle:
     """The bundle a KB image serializes, as the raw columns its accessors
     read (jobs/roles ``|``-joined, person dates as birth/death, each row's
     nationality set in the cell ``get_nationalities`` reads, gender M/F/"";
-    columns the image lacks, such as ``founded``, raise KeyError):
+    columns the image lacks, such as ``founded`` or ``location``, raise
+    KeyError):
     ``kb_image(image_bundle(image), image_automaton(image)) == image``.
     Memoized like :func:`image_automaton`."""
     sec, strs = _image_sections(image)
@@ -421,7 +423,7 @@ def image_bundle(image) -> KBBundle:
 
     cols = {c: strs(sec[s + "_sid"]) for c, s in (
         ("name", "name"), ("type", "type"), ("country", "country"),
-        ("location", "loc"), ("start", "start"), ("end", "end"))}
+        ("start", "start"), ("end", "end"))}
     n, pdates = len(cols["name"]), [d + ["", ""] for d in lists("pdates")]
     cols.update(confidence=sec["score"].tolist(),
                 gender=[("", "M", "F")[g] for g in sec["gender"].tolist()],

@@ -250,8 +250,11 @@ class KBBundle:
     # context-dispatch precomputation for disambiguate_with_context
     # (entity.py:227-245): the per-candidate branch tests only substrings
     # of the frozen type string, so the branch taken is a pure function of
-    # the KB line — fold it into one int code + the quirk char.
-    CTX_GEO, CTX_PERSON, CTX_ORG, CTX_EVENT, CTX_CHAR, CTX_NONE = range(6)
+    # the KB line — fold it into one int code + the quirk char.  A geo
+    # candidate scores 0 like an empty type (countries{} is never filled,
+    # context.py:285-293); organizations and events score alike (the
+    # 'organisation' spelling test never passes, context.py:307-310).
+    CTX_ZERO, CTX_PERSON, CTX_DATED, CTX_CHAR = range(4)
 
     def ctx_kind_arr(self) -> list:
         """kind[line]: which context-percentile branch entity.py:227-245
@@ -259,21 +262,17 @@ class KBBundle:
         if not self._ctx_kind:
             kinds, chars = [], []
             for t in self.type_arr():
-                if "geo" in t:
-                    k, c = self.CTX_GEO, ""
+                if "geo" in t or not t:
+                    k, c = self.CTX_ZERO, ""
                 elif "person" in t:
                     k, c = self.CTX_PERSON, ""
-                elif "organization" in t:
-                    k, c = self.CTX_ORG, ""
-                elif "event" in t:
-                    k, c = self.CTX_EVENT, ""
-                elif t:
+                elif "organization" in t or "event" in t:
+                    k, c = self.CTX_DATED, ""
+                else:
                     # the reference iterates chars and breaks on the first
                     # one passing ch[:2] != "__" and ch != "__" — for a
                     # 1-char ch both are always true, so it's t[0]
                     k, c = self.CTX_CHAR, t[0]
-                else:
-                    k, c = self.CTX_NONE, ""
                 kinds.append(k)
                 chars.append(c)
             self._ctx_kind = kinds
@@ -319,8 +318,8 @@ class KBBundle:
         return self._country_arr
 
     def loc_sub_flag_arr(self) -> list:
-        """flag[line] == 'location' in type string (context.py:185-207's
-        pronoun-register branch test)."""
+        """flag[line] == 'location' in type string (the kernel's twin of
+        lang.py's EN sense rules)."""
         if not self._loc_sub:
             self._loc_sub = ["location" in t for t in self.type_arr()]
         return self._loc_sub

@@ -17,9 +17,10 @@ Deliberately reproduced reference quirks (they change outputs):
     (ner_knowledge_base.py:289-294, SURVEY §1.4.1);
   * ``Context`` iterates the type string CHAR BY CHAR when creating
     per-paragraph mention-count buckets (context.py:103-140 ``for ent_type
-    in ent_type_set`` over a str) — so those buckets are keyed by single
-    characters and the only effective 'person' counts are the explicit
-    updates in entity.py:253-262;
+    in ent_type_set`` over a str) — so counts land under the type's last
+    character and the only effective 'person' counts are the explicit
+    updates in entity.py:253-262; the 'organization', 'event' and
+    'settlement' buckets that context.py:301-328 probes never exist;
   * ``Context.countries`` is initialized but never populated
     (context.py:56-58,88), so geo candidates always get context score 0;
   * org/event scoring: entity.py:236-239 passes 'organization' (z) but
@@ -75,13 +76,6 @@ def _deaccent_lower(s: str) -> str:
     """Memoized ``remove_accent_unicode(s).lower()`` — mention surfaces
     repeat heavily (Zipf), and this pair is on the per-mention hot path."""
     return remove_accent_unicode(s).lower()
-
-
-@lru_cache(maxsize=8192)
-def _uniq_chars(t: str) -> tuple[str, ...]:
-    """First-seen-order unique chars of a type string — setdefault over
-    this tuple builds the same buckets as the reference's full char loop."""
-    return tuple(dict.fromkeys(t))
 
 
 def _ordered_dedup(items) -> list:
@@ -231,23 +225,18 @@ class Context:
         self.people_nationalities: dict[int, list[str]] = {}
         self.people_dates: dict[int, list[str]] = {}
         self.people_professions: dict[int, list[str]] = {}
-        self.people_max_scores: dict[int, float] = {}
+        # context.py:280-282's per-candidate max-score map is write-only
         self.paragraph_index = 0
-        # pronoun registers (context.py:331-342)
-        self.before_last_person = None
-        self.last_person = None
+        # pronoun registers (context.py:331-342): only the gender ones are
+        # ever read, so the other six are not kept
         self.last_male = None
         self.last_female = None
         self.last_unknown_gender = None
-        self.last_thing = None
-        self.last_location = None
-        self.before_last_male = None
-        self.before_last_female = None
         # static-percentile memo caches: everything the percentile fns read
         # except the 'person' mention bucket is frozen once __init__ ends,
         # so per-(paragraph, candidate) results/partials are exact to reuse
         self._pp_static: dict = {}
-        self._oe_cache: dict = {}
+        self._dated_cache: dict = {}
         self._cp_cache: dict = {}
         # running per-paragraph total of the 'person' mention bucket — the
         # bucket has exactly one writer (disambiguate_with_context's tail),
@@ -261,7 +250,6 @@ class Context:
         self._kinds = kb.ctx_kind_arr()
         self._kchars = kb.ctx_char_arr()
         self._psub = kb.person_sub_flag_arr()
-        self._locsub = kb.loc_sub_flag_arr()
         self._names = kb.name_arr()
 
         bounds = self.paragraphs + [2**62]
@@ -299,8 +287,9 @@ class Context:
                         t = tarr[pref]  # pref is a KB line id ≥ 1 here
                         bucket = tseen.get(t)
                         if bucket is None:
-                            for ch in _uniq_chars(t):  # char quirk (context.py:109-111)
-                                buckets.setdefault(ch, {})
+                            # char quirk (context.py:109-111): the counts go
+                            # under the last char; the other chars' buckets
+                            # stay empty, which scores as a missing one
                             bucket = buckets.setdefault(t[-1] if t else "", {})
                             tseen[t] = bucket
                         name = names[pref]
@@ -337,49 +326,33 @@ class Context:
             pi += 1
         self.paragraph_index = pi
 
-    # context.py:185-207 — substring branch tests folded into the
-    # precomputed per-line flag arrays for KB senses (identical values)
+    # context.py:185-207 — only the person branch writes a register that
+    # is read (the gender ones); the substring test is folded into the
+    # precomputed per-line flag array (None and the names' pseudo ids < 1
+    # have type "", get_ent_type)
     def update(self, entity: Mention) -> None:
         pref = entity.preferred_sense
         if type(pref) is Mention:
             pref = pref.preferred_sense
-        if type(pref) is int and pref >= 1:
-            is_person = self._psub[pref]
-            is_loc = (not is_person) and self._locsub[pref]
+        if type(pref) is not int or pref < 1 or not self._psub[pref]:
+            return
+        gender = self._garr[pref]
+        if gender == "M":
+            self.last_male = entity
+            self.last_unknown_gender = None
+        elif gender == "F":
+            self.last_female = entity
+            self.last_unknown_gender = None
         else:
-            t = self.kb.get_ent_type(pref)
-            is_person = "person" in t
-            is_loc = (not is_person) and "location" in t
-        if is_person:
-            self.before_last_person = self.last_person
-            self.last_person = entity
-            gender = self._garr[pref]
-            if gender == "M":
-                self.last_male = entity
-                self.last_unknown_gender = None
-            elif gender == "F":
-                self.last_female = entity
-                self.last_unknown_gender = None
-            else:
-                self.last_unknown_gender = entity
-        elif is_loc:
-            self.last_location = entity
-        else:
-            self.last_thing = entity
+            self.last_unknown_gender = entity
 
-    # context.py:209-224
-    def mentioned_in_par(self, candidates: list[str], field: str) -> float:
+    # context.py:209-224 — every caller left probes one name
+    def mentioned_in_par(self, name: str, field: str) -> float:
         par = self.paragraphs[self.paragraph_index]
-        score = 0.0
         bucket = self.mentions[par].get(field)
-        if bucket:
-            for c in candidates:
-                if c in bucket:
-                    score = bucket[c]
-                    break
-            if score:
-                score = score * 100.0 / sum(bucket.values())
-        return score
+        if bucket and bucket.get(name):
+            return bucket[name] * 100.0 / sum(bucket.values())
+        return 0.0
 
     # context.py:227-283
     def person_percentile(self, candidate: int) -> float:
@@ -427,15 +400,10 @@ class Context:
             cnt = bucket.get(self._names[candidate])
             if cnt:
                 mention_score = cnt * 100.0 / self._person_total[par]
-        result = (static + mention_score) / 4.0
-        prev = self.people_max_scores.get(candidate)
-        if prev is None or result > prev:
-            self.people_max_scores[candidate] = result
-        return result
+        return (static + mention_score) / 4.0
 
-    # context.py:285-293 — self.countries is never populated (quirk) → 0
-    def country_percentile(self, country: str) -> float:
-        return 0.0
+    # context.py:285-293: the country score reads countries{}, which is
+    # never populated (quirk) — constant 0, so geo candidates are CTX_ZERO
 
     # context.py:294-299
     def common_percentile(self, candidate: int, ent_type: str) -> float:
@@ -444,30 +412,23 @@ class Context:
         key = (self.paragraphs[self.paragraph_index], candidate, ent_type)
         r = self._cp_cache.get(key)
         if r is None:
-            r = self.mentioned_in_par(
-                [self.kb.name_arr()[candidate]], ent_type)
+            r = self.mentioned_in_par(self._names[candidate], ent_type)
             self._cp_cache[key] = r
         return r
 
-    # context.py:301-328
-    def org_event_percentile(self, candidate: int, ent_type: str) -> float:
+    # context.py:301-328: the org/event score's name and place probes read
+    # 'organization'/'event'/'settlement' buckets that are never made (char
+    # quirk) and its FOUNDED/CANCELLED branch needs the 'organisation'
+    # spelling no caller passes — the date score over START/END is left
+    def dated_percentile(self, candidate: int) -> float:
         par = self.paragraphs[self.paragraph_index]
-        # reads only 'organization'/'event'/'settlement' buckets + frozen
-        # paragraph dates — fully cacheable per (par, candidate, ent_type)
-        key = (par, candidate, ent_type)
-        r = self._oe_cache.get(key)
+        # reads only frozen paragraph dates — cacheable per (par, candidate)
+        key = (par, candidate)
+        r = self._dated_cache.get(key)
         if r is not None:
             return r
-        mention_score = self.mentioned_in_par(
-            [self.kb.name_arr()[candidate]], ent_type)
-        place_score = self.mentioned_in_par(
-            [self.kb.get_data_for(candidate, "LOCATION")], "settlement")
-        if ent_type == "organisation":  # 'organization' callers take the else!
-            ds = [self.kb.get_data_for(candidate, "FOUNDED"),
-                  self.kb.get_data_for(candidate, "CANCELLED")]
-        else:
-            ds = [self.kb.get_data_for(candidate, "START"),
-                  self.kb.get_data_for(candidate, "END")]
+        ds = [self.kb.get_data_for(candidate, "START"),
+              self.kb.get_data_for(candidate, "END")]
         date_score = 0.0
         for cd in self.people_dates[par]:
             for od in ds:
@@ -475,8 +436,8 @@ class Context:
                     date_score += 1
         if self.people_dates[par]:
             date_score = date_score * 100.0 / len(self.people_dates[par])
-        r = (mention_score + place_score + date_score) / 3.0
-        self._oe_cache[key] = r
+        r = date_score / 3.0
+        self._dated_cache[key] = r
         return r
 
 
@@ -595,8 +556,8 @@ def disambiguate_with_context(m: Mention, kb: KBBundle, ctx: Context, register: 
     sarr = ctx._sarr
     kinds = ctx._kinds
     kchars = ctx._kchars
-    K_PERSON, K_ORG, K_EVENT, K_CHAR = (KBBundle.CTX_PERSON, KBBundle.CTX_ORG,
-                                        KBBundle.CTX_EVENT, KBBundle.CTX_CHAR)
+    K_PERSON, K_DATED, K_CHAR = (KBBundle.CTX_PERSON, KBBundle.CTX_DATED,
+                                 KBBundle.CTX_CHAR)
     if len(cands) == 1:
         # dominant case (99% of dense-corpus mentions): one candidate.
         # Same arithmetic and same observable state as the general loop
@@ -607,10 +568,8 @@ def disambiguate_with_context(m: Mention, kb: KBBundle, ctx: Context, register: 
         k = kinds[c]
         if k == K_PERSON:
             context_score = ctx.person_percentile(c)
-        elif k == K_ORG:
-            context_score = ctx.org_event_percentile(c, "organization")
-        elif k == K_EVENT:
-            context_score = ctx.org_event_percentile(c, "event")
+        elif k == K_DATED:
+            context_score = ctx.dated_percentile(c)
         elif k == K_CHAR:
             context_score = ctx.common_percentile(c, kchars[c])
         if context_score > 0:
@@ -629,15 +588,11 @@ def disambiguate_with_context(m: Mention, kb: KBBundle, ctx: Context, register: 
         static = sarr[c]
         context_score = 0.0
         k = kinds[c]
-        # CTX_GEO: country_percentile(COUNTRY) is constant 0.0 (the
-        # reference's never-populated countries{} quirk, context.py:285-293)
-        # — the COUNTRY fetch it would consume is dead, so neither runs
+        # CTX_ZERO (geo or empty type) scores 0, so nothing runs for it
         if k == K_PERSON:
             context_score = ctx.person_percentile(c)
-        elif k == K_ORG:
-            context_score = ctx.org_event_percentile(c, "organization")
-        elif k == K_EVENT:
-            context_score = ctx.org_event_percentile(c, "event")
+        elif k == K_DATED:
+            context_score = ctx.dated_percentile(c)
         elif k == K_CHAR:  # char iteration quirk (entity.py:241-245)
             context_score = ctx.common_percentile(c, kchars[c])
         if context_score > 0:
@@ -684,17 +639,13 @@ def resolve_pronoun_coreference(m: Mention, kb: KBBundle, ctx: Context,
     bop = m.begin_of_paragraph if m.begin_of_paragraph is not None else 0
     if "M" in ptype:
         if ctx.last_unknown_gender:
-            ctx.before_last_male = ctx.last_male
             ctx.last_male = ctx.last_unknown_gender
-            ctx.last_person = ctx.last_unknown_gender
             ctx.last_unknown_gender = None
         if ctx.last_male and ctx.last_male.start >= bop:
             m.set_preferred_sense(ctx.last_male.get_preferred_entity(), register)
     elif "F" in ptype:
         if ctx.last_unknown_gender:
-            ctx.before_last_female = ctx.last_female
             ctx.last_female = ctx.last_unknown_gender
-            ctx.last_person = ctx.last_unknown_gender
             ctx.last_unknown_gender = None
         if ctx.last_female and ctx.last_female.start >= bop:
             m.set_preferred_sense(ctx.last_female.get_preferred_entity(), register)

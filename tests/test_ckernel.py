@@ -241,6 +241,7 @@ def test_bad_image_raises_value_error(env):
     name_off, _ = _section(image, "name_sid")
     slots_off, _ = _section(image, "w_slots")
     next_off, _ = _section(image, "t_next")
+    kind_off, _ = _section(image, "ctx_kind")
     cases = {
         "truncated header": image[:40],
         "truncated sections": image[:len(image) // 2],
@@ -259,6 +260,7 @@ def test_bad_image_raises_value_error(env):
             "<i", b, slots_off, 1 << 30)),
         "trie state": bad(lambda b: struct.pack_into(
             "<i", b, next_off, 1 << 30)),
+        "ctx kind": bad(lambda b: b.__setitem__(kind_off + 1, 4)),
     }
     for case, img in cases.items():
         with pytest.raises(ValueError, match="bad KB image"):

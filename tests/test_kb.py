@@ -462,8 +462,9 @@ def test_decoded_bundle_resolves_like_the_compiled_one(kb_rows, lang):
                 assert resolve_in_python(kb, atm, text, lang=get_lang(lang),
                                          **kw) == want
     assert n > 500
-    with pytest.raises(KeyError):
-        decoded.get_data_for(1, "FOUNDED")
+    for col in ("FOUNDED", "LOCATION"):
+        with pytest.raises(KeyError):
+            decoded.get_data_for(1, col)
 
 
 def test_unsuitable_key_person_list_of():
@@ -510,17 +511,15 @@ def test_ctx_dispatch_arrays_match_substring_semantics(bundle):
     for line in range(len(bundle.type_arr())):
         t = bundle.type_arr()[line]
         if "geo" in t:
-            want, wch = K.CTX_GEO, ""
+            want, wch = K.CTX_ZERO, ""  # country_percentile is always 0
         elif "person" in t:
             want, wch = K.CTX_PERSON, ""
-        elif "organization" in t:
-            want, wch = K.CTX_ORG, ""
-        elif "event" in t:
-            want, wch = K.CTX_EVENT, ""
+        elif "organization" in t or "event" in t:
+            want, wch = K.CTX_DATED, ""
         else:
             # reference char loop: first ch with ch[:2] != "__" and
             # ch != "__" — always the first char for non-empty t
-            want, wch = (K.CTX_CHAR, t[0]) if t else (K.CTX_NONE, "")
+            want, wch = (K.CTX_CHAR, t[0]) if t else (K.CTX_ZERO, "")
         assert kinds[line] == want and chars[line] == wch, (line, t)
         assert aflag[line] == ("artist" in t)
         assert gflag[line] == ("group" in t)
@@ -529,7 +528,8 @@ def test_ctx_dispatch_arrays_match_substring_semantics(bundle):
 
 def test_ctx_dispatch_synthetic_edge_types():
     """Edge type strings: empty, both geo+person (geo wins, but the
-    person-bucket tail still sees 'person' via person_sub_flag_arr)."""
+    person-bucket tail still sees 'person' via person_sub_flag_arr), and
+    organization and event sharing one kind."""
     from ner_spark.semantics.kb import KBBundle
 
     rows = [
@@ -539,10 +539,15 @@ def test_ctx_dispatch_synthetic_edge_types():
              description="d" * 60, wiki_backlinks=1, wiki_hits=1, wiki_ps=1),
         dict(id=3, type="museum", name="C",
              description="d" * 60, wiki_backlinks=1, wiki_hits=1, wiki_ps=1),
+        dict(id=4, type="organization", name="D",
+             description="d" * 60, wiki_backlinks=1, wiki_hits=1, wiki_ps=1),
+        dict(id=5, type="event", name="E",
+             description="d" * 60, wiki_backlinks=1, wiki_hits=1, wiki_ps=1),
     ]
     kb = KBBundle.from_rows(rows)
-    assert kb.ctx_kind_arr()[1] == KBBundle.CTX_GEO
+    assert kb.ctx_kind_arr()[1] == KBBundle.CTX_ZERO
     assert kb.person_sub_flag_arr()[1] is True   # tail check still fires
-    assert kb.ctx_kind_arr()[2] == KBBundle.CTX_NONE
+    assert kb.ctx_kind_arr()[2] == KBBundle.CTX_ZERO
     assert kb.ctx_kind_arr()[3] == KBBundle.CTX_CHAR
     assert kb.ctx_char_arr()[3] == "m"
+    assert kb.ctx_kind_arr()[4] == kb.ctx_kind_arr()[5] == KBBundle.CTX_DATED

@@ -200,41 +200,25 @@ def test_output_text_matches_offsets(akb, aatm, pages_rows):
 
 # -- reference quirk guards (SURVEY §1.4) — these protect parity against
 # future refactors; each mirrors a specific reference behavior
-def test_quirk_geo_context_score_zero(akb, aatm):
+def test_quirk_geo_context_score_zero(akb):
     """Context.countries is never populated (context.py:56-58,88) so geo
-    candidates always get context score 0 — the city can only win on
-    static score."""
-    from ner_spark.semantics.resolve import Context, Mention, Register
-    from ner_spark.semantics.resolve import offsets_of_paragraphs
+    candidates always get context score 0 — even when the paragraph
+    already counts the city's name, it can only win on static score."""
+    from ner_spark.semantics.resolve import (Context, Mention, Register,
+                                             disambiguate_with_context)
 
-    text = "Washington Washington Washington"
-    ctx = Context([], akb, offsets_of_paragraphs(text), [], text)
-    assert ctx.country_percentile("United States") == 0.0
-
-
-def test_quirk_org_scored_with_event_columns():
-    """entity.py:236-239 passes 'organization' (z) but context.py:307-310
-    compares 'organisation' (s) — organizations take the event START/END
-    date columns, not FOUNDED/CANCELLED."""
-    from ner_spark.semantics.kb import KBBundle
-    from ner_spark.semantics.resolve import Context, offsets_of_paragraphs
-    from ner_spark.semantics.dates import DateMatch, ISODate
-
-    rows = [dict(id=1, type="organization", name="Atlas Institute",
-                 founded="1900", cancelled="1950", start="1800", end="1810",
-                 description="org")]
-    kb = KBBundle.from_rows(rows)
-    text = "In 1900 the Atlas Institute hired ."
-    d1900 = DateMatch(3, 7, "1900", ISODate(1900), 80)
-    ctx = Context([d1900], kb, offsets_of_paragraphs(text), [], text)
-    # 'organization' goes through the else branch → START/END columns:
-    # paragraph date 1900 matches neither 1800 nor 1810 → date_score 0
-    score_z = ctx.org_event_percentile(1, "organization")
-    assert score_z == 0.0
-    # the (never-reached-by-entities) 'organisation' spelling would use
-    # FOUNDED=1900 and score the date
-    score_s = ctx.org_event_percentile(1, "organisation")
-    assert score_s > 0.0
+    text = "Washington is big . Washington again ."
+    m1 = Mention(0, 10, "Washington", [2])
+    m1.candidates = [2]
+    m1.preferred_sense = 2
+    m1.poorly_disambiguated = False
+    m2 = Mention(19, 29, "Washington", [2])
+    m2.candidates = [2]
+    ctx = Context([m1, m2], akb, offsets_of_paragraphs(text), [], text)
+    assert any(b.get("Washington") for b in ctx.mentions[0].values())
+    disambiguate_with_context(m2, akb, ctx, Register())
+    assert m2.context_score == [0.0]
+    assert m2.score == m2.static_score == [akb.get_score(2)]
 
 
 def test_quirk_char_iteration_buckets(akb):
@@ -253,9 +237,6 @@ def test_quirk_char_iteration_buckets(akb):
     t = akb.get_ent_type(3)  # 'geographical'
     bucket = ctx.mentions[0].get(t[-1])
     assert bucket and bucket.get("Prague") == 1
-    # every char of the type string exists as a (mostly empty) bucket
-    for ch in t:
-        assert ch in ctx.mentions[0]
 
 
 def test_quirk_first_candidate_order_is_namelist_order():
@@ -657,14 +638,56 @@ def _orgs(**first):
 
 @needs_kernel
 def test_context_location_never_decides_sense():
-    """LOCATION is read only by org_event_percentile's place score, which
-    probes the paragraph's 'settlement' mention bucket.  Mentions are
-    bucketed under single chars of their type string (the char-iteration
-    quirk) and under 'person', so that bucket never exists: the first
-    organization's LOCATION, mentioned in its paragraph, does not win it
-    the sense.  Its START date, read by the same percentile, does."""
+    """The reference reads LOCATION only in org_event_percentile's place
+    score, which probes the paragraph's 'settlement' mention bucket.
+    Mentions are bucketed under single chars of their type string (the
+    char-iteration quirk) and under 'person', so that bucket never exists:
+    the first organization's LOCATION, mentioned in its paragraph, does not
+    win it the sense.  Its START date, read by the same percentile, does."""
     text = "Atlas Institute opened in Prague ."
     assert _kb_senses(_orgs(), text) == [2, 3]
     dated = "Atlas Institute opened in Prague in 1900 ."
     assert _kb_senses(_orgs(), dated) == [1, 3]
     assert _kb_senses(_orgs(start=""), dated) == [2, 3]
+
+
+@needs_kernel
+def test_quirk_org_scored_with_event_columns():
+    """entity.py:236-239 passes 'organization' (z) but context.py:307-310
+    compares 'organisation' (s) — organizations take the event START/END
+    date columns, not FOUNDED/CANCELLED."""
+    dated = "Atlas Institute opened in 1900 ."
+    assert _kb_senses(_orgs(start="", founded="1900"), dated) == [2]
+    assert _kb_senses(_orgs(start="1900"), dated) == [1]
+
+
+def _org_and_event(org, event):
+    """An organization (id 1) and an event (id 2) named alike, each with a
+    peer of its own type (ids 3, 4) that sets the type's percentiles: the
+    event wins on static score alone."""
+    a = dict(id=1, type="organization", name="Atlas Festival",
+             description="x" * 90, wiki_backlinks=10, wiki_hits=10, wiki_ps=0)
+    b = dict(a, id=2, type="event", description="x" * 100)
+    peers = [dict(a, id=3, name="Brno Club", description="x" * 100),
+             dict(b, id=4, name="Brno Fair")]
+    return [dict(a, **org), dict(b, **event)] + peers
+
+
+@needs_kernel
+def test_context_dates_decide_org_and_event_alike():
+    """Organizations and events share one context rule: a paragraph date
+    found in the candidate's START or END scores it, whichever kind it
+    is."""
+    text = "Atlas Festival began in 1900 ."
+    assert _kb_senses(_org_and_event({}, {}), text) == [2]
+    assert _kb_senses(_org_and_event(dict(start="1900"),
+                                     dict(start="1800")), text) == [1]
+    assert _kb_senses(_org_and_event(dict(end="1900"), {}), text) == [1]
+    # the organization leads on static score; the dated event overtakes it
+    lead = dict(description="x" * 100)
+    swap = dict(description="x" * 90)
+    assert _kb_senses(_org_and_event(lead, swap), text) == [1]
+    assert _kb_senses(_org_and_event(lead, dict(swap, end="1900")),
+                      text) == [2]
+    assert _kb_senses(_org_and_event(lead, dict(swap, start="1900")),
+                      text) == [2]
