@@ -18,8 +18,9 @@
  *     callback, frag_cb (source/deaccent-lower/pronoun flags of a non-ASCII
  *     or NCR fragment, cached per KB image, so called once per distinct
  *     fragment) — plus the KB image (ckernel.kb_image): the KB columns,
- *     lookup tables and word-id trie as one flat buffer, built once on the
- *     driver, bounds-checked once by wrap_image and read in place.
+ *     lookup-table keys and word-id trie as one flat buffer, built once on
+ *     the driver, checked once by wrap_image and read in place.
+ *   C builds the probe tables over the image's key lists when it wraps it.
  *   C owns the scan and the sequential state machine: Mention/Register/
  *     Context, disambiguation, coreference, the nearby filter, output
  *     rows.
@@ -127,13 +128,14 @@ static Py_ssize_t bisect_right(const vector<int64_t> &a, int64_t x) {
 
 // ---------------------------------------------------------------------------
 // KB image (ckernel.kb_image): one flat, position-independent buffer built
-// on the driver, checked once here and then read in place
+// on the driver, checked once here and then read in place; the probe tables
+// over its key lists are built here, the one place that hashes a key
 // ---------------------------------------------------------------------------
 
 // context-dispatch kinds — MUST match KBBundle.CTX_* (kb.py)
 enum { CTX_ZERO = 0, CTX_PERSON = 1, CTX_DATED = 2, CTX_CHAR = 3 };
 
-#define IMAGE_VERSION 2  // ckernel.IMAGE_VERSION
+#define IMAGE_VERSION 3  // ckernel.IMAGE_VERSION
 static const char IMAGE_MAGIC[8] = {'N', 'E', 'R', 'K', 'B', 'I', 'M', 'G'};
 
 // section order — MUST match ckernel._SECTIONS
@@ -146,12 +148,12 @@ enum {
     S_JOBS_OFF, S_JOBS, S_ROLES_OFF, S_ROLES, S_NATS_OFF, S_NATS,
     S_PDATES_OFF, S_PDATES,
     S_VERBS, S_THERE_CTX,
-    S_ND_SLOTS, S_ND_KEY, S_ND_OFF, S_ND_IDS,
-    S_NATF_SLOTS, S_NATF_KEY,
-    S_PRON_SLOTS, S_PRON_KEY, S_PRON_MASK,
-    S_W_SLOTS, S_W_KEY,
+    S_ND_KEY, S_ND_OFF, S_ND_IDS,
+    S_NATF_KEY,
+    S_PRON_KEY, S_PRON_MASK,
+    S_W_KEY,
     S_T_KEYS, S_T_NEXT,
-    S_S_TERM, S_TERM_OFF, S_TERM_IDS,
+    S_TERM_STATE, S_TERM_OFF, S_TERM_IDS,
     S_COUNT
 };
 static const uint8_t SECTION_ELEM[S_COUNT] = {
@@ -162,17 +164,17 @@ static const uint8_t SECTION_ELEM[S_COUNT] = {
     4, 4, 4, 4, 4, 4,
     4, 4,
     4, 4,
-    4, 4, 4, 8,
+    4, 4, 8,
+    4,
     4, 4,
-    4, 4, 4,
-    4, 4,
+    4,
     8, 4,
     4, 4, 8,
 };
-enum { META_N_ROWS, META_EMPTY_SID, META_N_STATES, META_COUNT };
+enum { META_N_ROWS, META_EMPTY_SID, META_COUNT };
 
-// the hashes ckernel.kb_image places keys with: FNV-1a over code points,
-// folded, for strings; the splitmix64 finalizer for trie transitions
+// the probe tables' hashes: FNV-1a over code points, folded, for strings;
+// the splitmix64 finalizer for trie transitions
 static inline uint64_t str_hash(const Py_UCS4 *s, size_t n) {
     uint64_t h = 0xcbf29ce484222325ULL;
     for (size_t i = 0; i < n; i++) {
@@ -193,12 +195,19 @@ static inline uint64_t mix64(uint64_t x) {
 
 static const uint64_t T_EMPTY = ~(uint64_t)0;
 
-// open-addressing string table: slots hold an entry index (-1 = empty),
-// an entry's key is a strtab id
+// open-addressing string table, built by load_image: slots hold an entry
+// index (-1 = empty), an entry's key is a strtab id
 struct StrTable {
-    Span<int32_t> slots;  // power-of-two capacity
+    vector<int32_t> slots;  // power-of-two capacity, load < 0.5
     Span<int32_t> key;
 };
+
+// a linear-probing table's capacity for n keys: a power of two, load < 0.5
+static size_t probe_capacity(size_t n) {
+    size_t cap = 8;
+    while (cap <= 2 * n) cap <<= 1;
+    return cap;
+}
 
 struct FragInfo {
     U32 source, dl;
@@ -232,7 +241,7 @@ struct KBImage {
     // EN language tables (lang.py EN)
     vector<Str> verbs;            // " was ", " were ", " is "
     vector<Str> there_ctx;        // location-coref right contexts
-    // fused-scan tables (ckernel.try_scan_resolve)
+    // fragment tables (the scan's name_dict, nationality and pronoun reads)
     StrTable name_dict;           // dl → ids (nd_off/nd_ids)
     Span<uint32_t> nd_off;
     Span<int64_t> nd_ids;
@@ -240,11 +249,12 @@ struct KBImage {
     StrTable pron;                // source_lower → mask
     Span<int32_t> pron_mask;
     // word-id trie: words → wid, (state, sep, wid) → next state,
-    // final states → their id lists
+    // final states → their id lists; the probe table and s_term are built
+    // from the image's dense steps and final states by load_image
     StrTable words;
-    Span<uint64_t> t_keys;        // (state << 32 | sep << 31 | wid)
-    Span<int32_t> t_next;
-    Span<int32_t> s_term;         // state → term index (-1: not final)
+    vector<uint64_t> t_keys;      // (state << 32 | sep << 31 | wid), probed
+    vector<int32_t> t_next;
+    vector<int32_t> s_term;       // state → term index (-1: not final)
     Span<uint32_t> term_off;
     Span<int64_t> term_ids;
     // fragment pre-pass cache (fragments repeat Zipf-heavily); mutable at
@@ -257,10 +267,10 @@ struct KBImage {
     }
     // entry index of s in t, or -1
     int32_t find(const StrTable &t, const Py_UCS4 *s, size_t len) const {
-        size_t mask = t.slots.n - 1;
+        size_t mask = t.slots.size() - 1;
         size_t pos = (size_t)str_hash(s, len) & mask;
-        for (size_t i = 0; i < t.slots.n; i++, pos = (pos + 1) & mask) {
-            int32_t e = t.slots.p[pos];
+        for (size_t i = 0; i < t.slots.size(); i++, pos = (pos + 1) & mask) {
+            int32_t e = t.slots[pos];
             if (e < 0) return -1;
             Str k = str(t.key.p[e]);
             if (u32_eq(k.p, (Py_ssize_t)k.n, s, (Py_ssize_t)len)) return e;
@@ -271,11 +281,11 @@ struct KBImage {
     int32_t step(int32_t state, int sep, int32_t wid) const {
         uint64_t key = (uint64_t)(uint32_t)state << 32 |
                        (uint64_t)sep << 31 | (uint64_t)(uint32_t)wid;
-        size_t mask = t_keys.n - 1;
+        size_t mask = t_keys.size() - 1;
         size_t pos = (size_t)mix64(key) & mask;
-        for (size_t i = 0; i < t_keys.n; i++, pos = (pos + 1) & mask) {
-            uint64_t k = t_keys.p[pos];
-            if (k == key) return t_next.p[pos];
+        for (size_t i = 0; i < t_keys.size(); i++, pos = (pos + 1) & mask) {
+            uint64_t k = t_keys[pos];
+            if (k == key) return t_next[pos];
             if (k == T_EMPTY) return -1;
         }
         return -1;
@@ -306,12 +316,22 @@ static bool offsets_ok(Span<uint32_t> off, size_t nval) {
     return true;
 }
 
-static bool pow2(size_t n) { return n && !(n & (n - 1)); }
-
-static const char *check_table(const StrTable &t, int64_t n_str) {
-    if (!pow2(t.slots.n)) return "hash table capacity";
-    if (!all_in(t.slots, -1, (int64_t)t.key.n)) return "hash slot";
+// place every key of a string table in its probe slots, in order
+static const char *build_table(const KBImage *img, StrTable &t,
+                               int64_t n_str) {
     if (!all_in(t.key, 0, n_str)) return "hash key";
+    t.slots.assign(probe_capacity(t.key.n), -1);
+    size_t mask = t.slots.size() - 1;
+    for (size_t e = 0; e < t.key.n; e++) {
+        Str k = img->str(t.key.p[e]);
+        size_t pos = (size_t)str_hash(k.p, k.n) & mask;
+        for (; t.slots[pos] >= 0; pos = (pos + 1) & mask) {
+            Str o = img->str(t.key.p[t.slots[pos]]);
+            if (u32_eq(o.p, (Py_ssize_t)o.n, k.p, (Py_ssize_t)k.n))
+                return "duplicate key";
+        }
+        t.slots[pos] = (int32_t)e;
+    }
     return nullptr;
 }
 
@@ -393,37 +413,53 @@ static const char *load_image(KBImage *img, const uint8_t *buf, size_t size) {
         vector<Str> &out = s == S_VERBS ? img->verbs : img->there_ctx;
         for (int32_t sid : sids) out.push_back(img->str(sid));
     }
-    img->name_dict = StrTable{SPAN(int32_t, S_ND_SLOTS), SPAN(int32_t, S_ND_KEY)};
+    img->name_dict.key = SPAN(int32_t, S_ND_KEY);
     img->nd_off = SPAN(uint32_t, S_ND_OFF);
     img->nd_ids = SPAN(int64_t, S_ND_IDS);
-    img->nat_forms = StrTable{SPAN(int32_t, S_NATF_SLOTS),
-                              SPAN(int32_t, S_NATF_KEY)};
-    img->pron = StrTable{SPAN(int32_t, S_PRON_SLOTS), SPAN(int32_t, S_PRON_KEY)};
+    img->nat_forms.key = SPAN(int32_t, S_NATF_KEY);
+    img->pron.key = SPAN(int32_t, S_PRON_KEY);
     img->pron_mask = SPAN(int32_t, S_PRON_MASK);
-    img->words = StrTable{SPAN(int32_t, S_W_SLOTS), SPAN(int32_t, S_W_KEY)};
-    for (const StrTable *t : {&img->name_dict, &img->nat_forms, &img->pron,
-                              &img->words}) {
-        const char *err = check_table(*t, n_str);
+    img->words.key = SPAN(int32_t, S_W_KEY);
+    for (StrTable *t : {&img->name_dict, &img->nat_forms, &img->pron,
+                        &img->words}) {
+        const char *err = build_table(img, *t, n_str);
         if (err) return err;
     }
     if (img->nd_off.n != img->name_dict.key.n + 1 ||
         !offsets_ok(img->nd_off, img->nd_ids.n))
         return "name_dict ids";
     if (img->pron_mask.n != img->pron.key.n) return "pronoun masks";
-    img->t_keys = SPAN(uint64_t, S_T_KEYS);
-    img->t_next = SPAN(int32_t, S_T_NEXT);
-    img->s_term = SPAN(int32_t, S_S_TERM);
+    // the trie: its steps into the probe table, its final states into s_term
+    Span<uint64_t> keys = SPAN(uint64_t, S_T_KEYS);
+    Span<int32_t> next = SPAN(int32_t, S_T_NEXT);
+    Span<int32_t> term_state = SPAN(int32_t, S_TERM_STATE);
     img->term_off = SPAN(uint32_t, S_TERM_OFF);
     img->term_ids = SPAN(int64_t, S_TERM_IDS);
-    int64_t n_states = meta.p[META_N_STATES];
-    if (n_states < 1 || (size_t)n_states != img->s_term.n) return "trie states";
-    if (!pow2(img->t_keys.n) || img->t_next.n != img->t_keys.n ||
-        !all_in(img->t_next, -1, n_states))
+    const int64_t n_states = (int64_t)keys.n + 1;  // each step makes one
+    if (next.n != keys.n || !all_in(next, 0, n_states))
         return "trie transitions";
-    if (img->term_off.n == 0 ||
-        !all_in(img->s_term, -1, (int64_t)img->term_off.n - 1) ||
-        !offsets_ok(img->term_off, img->term_ids.n))
+    img->t_keys.assign(probe_capacity(keys.n), T_EMPTY);
+    img->t_next.assign(img->t_keys.size(), -1);
+    size_t mask = img->t_keys.size() - 1;
+    for (size_t e = 0; e < keys.n; e++) {
+        uint64_t key = keys.p[e];
+        if ((int64_t)(key >> 32) >= n_states) return "trie transitions";
+        size_t pos = (size_t)mix64(key) & mask;
+        for (; img->t_keys[pos] != T_EMPTY; pos = (pos + 1) & mask)
+            if (img->t_keys[pos] == key) return "duplicate trie step";
+        img->t_keys[pos] = key;
+        img->t_next[pos] = next.p[e];
+    }
+    if (img->term_off.n != term_state.n + 1 ||
+        !offsets_ok(img->term_off, img->term_ids.n) ||
+        !all_in(term_state, 0, n_states))
         return "trie ids";
+    img->s_term.assign((size_t)n_states, -1);
+    for (size_t k = 0; k < term_state.n; k++) {
+        if (img->s_term[(size_t)term_state.p[k]] >= 0)
+            return "duplicate final state";
+        img->s_term[(size_t)term_state.p[k]] = (int32_t)k;
+    }
 #undef SPAN
     return nullptr;
 }
@@ -482,7 +518,7 @@ static inline bool pref_truthy(const Pref &p) {  // Python bool(preferred_sense)
     return p.tag == P_MEN || (p.tag == P_INT && p.v != 0);
 }
 
-// per-match pre-pass flags (ckernel.py _prepass)
+// per-match pre-pass flags (ckernel.py _frag_helper)
 enum {
     FL_PRON_M = 1, FL_PRON_F = 2, FL_PRON_L = 4,   // pronoun class of source_lower
     FL_THE_LOWER = 8,    // source_lower.startswith("the ")
@@ -1787,7 +1823,7 @@ static PyObject *scan_resolve_doc(PyObject *self, PyObject *args) {
         Py_ssize_t best_j = -1;
         int32_t best_term = -1;
         for (;;) {
-            int32_t term = kb->s_term.p[state];
+            int32_t term = kb->s_term[(size_t)state];
             if (term >= 0) {
                 best_j = j;
                 best_term = term;

@@ -11,7 +11,7 @@ and exposes:
     kb_image(bundle, automaton) -> bytes    driver side, numpy only
     image_automaton(image) -> automaton     the trie back, numpy only
     image_bundle(image) -> bundle           the KB bundle back, numpy only
-    wrap_image(image) -> handle             checks the image once
+    wrap_image(image) -> handle             checks the image, builds probes
     scan_resolve(handle, text, ...) -> rows | None
     try_scan_resolve(bundle, automaton, text, ...) -> rows | None
 
@@ -40,8 +40,7 @@ and all sequential mutation.
 
 Env:
   NER_SPARK_CKERNEL=0   disable (pure Python everywhere)
-  NER_SPARK_CKERNEL=1   require (ImportError if the build fails)
-  unset / auto          try to build; fall back silently
+  any other value       require (ImportError if the build fails)
 """
 
 from __future__ import annotations
@@ -84,10 +83,6 @@ def _src_bytes() -> bytes:
 _ck = None          # the loaded extension module (or None)
 _load_attempted = False
 FORCE_DISABLE = False  # test/bench hook: flip to exercise the Python path
-
-
-def _mode() -> str:
-    return os.environ.get("NER_SPARK_CKERNEL", "auto")
 
 
 def _so_path() -> str:
@@ -138,25 +133,20 @@ def _load():
     global _ck, _load_attempted
     if _load_attempted:
         return _ck
-    _load_attempted = True
-    if _mode() == "0":
-        return None
-    try:
-        so = _so_path()
-        if not os.path.exists(so):
-            _compile(so)
-        spec = importlib.util.spec_from_file_location("_resolve_ck", so)
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
+    if os.environ.get("NER_SPARK_CKERNEL") != "0":
+        try:
+            so = _so_path()
+            if not os.path.exists(so):
+                _compile(so)
+            spec = importlib.util.spec_from_file_location("_resolve_ck", so)
+            mod = importlib.util.module_from_spec(spec)
+            spec.loader.exec_module(mod)
+        except Exception as exc:  # noqa: BLE001 — any failure is fatal
+            raise ImportError(
+                f"resolve C kernel build failed ({exc}); set "
+                "NER_SPARK_CKERNEL=0 for the pure-Python path") from exc
         _ck = mod
-    except Exception as exc:  # noqa: BLE001 — any failure → Python path
-        if _mode() == "1":
-            raise ImportError(f"NER_SPARK_CKERNEL=1 but build failed: {exc}")
-        import warnings
-
-        warnings.warn(f"resolve C kernel unavailable ({exc}); "
-                      "using the pure-Python path", RuntimeWarning)
-        _ck = None
+    _load_attempted = True
     return _ck
 
 
@@ -168,11 +158,11 @@ def available() -> bool:
 # KB image
 # ---------------------------------------------------------------------------
 
-IMAGE_VERSION = 2  # _resolve_kernel.cpp IMAGE_VERSION; bump on any change
+IMAGE_VERSION = 3  # _resolve_kernel.cpp IMAGE_VERSION; bump on any change
 _MAGIC = b"NERKBIMG"
 # the section table, in order (the kernel's S_* enum mirrors it)
 _SECTIONS = (
-    ("meta", "<i8"),  # n_rows, empty_sid, n_states
+    ("meta", "<i8"),  # n_rows, empty_sid
     ("str_off", "<u4"), ("str_blob", "<u4"),  # UCS-4 strtab
     ("score", "<f8"),
     ("name_sid", "<i4"), ("country_sid", "<i4"), ("start_sid", "<i4"),
@@ -186,13 +176,12 @@ _SECTIONS = (
     ("nats_off", "<u4"), ("nats", "<i4"),
     ("pdates_off", "<u4"), ("pdates", "<i4"),
     ("verbs", "<i4"), ("there_ctx", "<i4"),
-    ("nd_slots", "<i4"), ("nd_key", "<i4"), ("nd_off", "<u4"),
-    ("nd_ids", "<i8"),
-    ("natf_slots", "<i4"), ("natf_key", "<i4"),
-    ("pron_slots", "<i4"), ("pron_key", "<i4"), ("pron_mask", "<i4"),
-    ("w_slots", "<i4"), ("w_key", "<i4"),
+    ("nd_key", "<i4"), ("nd_off", "<u4"), ("nd_ids", "<i8"),
+    ("natf_key", "<i4"),
+    ("pron_key", "<i4"), ("pron_mask", "<i4"),
+    ("w_key", "<i4"),
     ("t_keys", "<u8"), ("t_next", "<i4"),
-    ("s_term", "<i4"), ("term_off", "<u4"), ("term_ids", "<i8"),
+    ("term_state", "<i4"), ("term_off", "<u4"), ("term_ids", "<i8"),
 )
 
 # EN pronoun classes as the kernel's flag bits (M=1, F=2, L=4)
@@ -211,60 +200,6 @@ def _ucs4(strings):
     return blob, off
 
 
-def _str_hashes(strings):
-    """The kernel's ``str_hash``: FNV-1a over code points, folded — one
-    numpy pass per character position, longest strings first."""
-    import numpy as np
-
-    blob, off = _ucs4(strings)
-    lens = np.diff(off).astype(np.int64)
-    order = np.argsort(-lens, kind="stable")
-    starts, lens = off[:-1].astype(np.int64)[order], lens[order]
-    cps = blob.astype(np.uint64)
-    h = np.full(len(strings), 0xcbf29ce484222325, np.uint64)
-    for j in range(int(lens[0]) if len(lens) else 0):
-        k = int(np.searchsorted(-lens, -j))  # strings longer than j
-        h[:k] = (h[:k] ^ cps[starts[:k] + j]) * np.uint64(0x100000001b3)
-    out = np.empty_like(h)
-    out[order] = h
-    return out ^ (out >> np.uint64(32))
-
-
-def _mix64(x):
-    """The kernel's ``mix64`` (the splitmix64 finalizer)."""
-    import numpy as np
-
-    x = x ^ (x >> np.uint64(30))
-    x = x * np.uint64(0xbf58476d1ce4e5b9)
-    x = x ^ (x >> np.uint64(27))
-    x = x * np.uint64(0x94d049bb133111eb)
-    return x ^ (x >> np.uint64(31))
-
-
-def _place(hashes):
-    """Linear-probing slots (entry index, -1 empty) at load < 0.5, filled
-    in rounds: each round every unplaced entry tries its current slot, the
-    lowest entry wins a free one, the rest probe on — so every slot a
-    lookup passes before its key is occupied, as sequential insertion
-    guarantees."""
-    import numpy as np
-
-    cap = 1 << max(3, (2 * len(hashes)).bit_length())
-    mask = cap - 1
-    slots = np.full(cap, -1, np.int32)
-    pos = (hashes & np.uint64(mask)).astype(np.int64)
-    todo = np.arange(len(hashes))
-    while todo.size:
-        p = pos[todo]
-        free = np.flatnonzero(slots[p] == -1)
-        won_slots, first = np.unique(p[free], return_index=True)
-        won = free[first]
-        slots[won_slots] = todo[won]
-        todo = np.delete(todo, won)
-        pos[todo] = (pos[todo] + 1) & mask
-    return slots
-
-
 def _csr(lists):
     import numpy as np
 
@@ -276,14 +211,16 @@ def _csr(lists):
 def kb_image(kb, automaton) -> bytes:
     """The kernel's KB as one flat, position-independent image: a header
     (magic, version, a table of 8-byte-aligned sections), the interned
-    UCS-4 strtab, the fixed-width per-row arrays, CSR id lists, linear-
-    probing tables for the subname dict, the nationality forms and the
-    pronouns, and the automaton's word-id trie.  The trie sections only
-    serialize :class:`GazetteerAutomaton`'s own fields: ``words`` is the
-    word table, ``trans`` (packed ``(state, sep ∈ {"", " "}, word id)``
-    step → next state) the hashed step table, ``term`` the final states'
-    CSR ids; :func:`image_automaton` reads them back.  Built once per KB
-    on the driver; numpy only, no compiled code."""
+    UCS-4 strtab, the fixed-width per-row arrays, CSR id lists, the key
+    lists of the subname dict, the nationality forms and the pronouns,
+    and the automaton's word-id trie.  The trie sections only serialize
+    :class:`GazetteerAutomaton`'s own fields, in insertion order:
+    ``words`` the word keys, ``trans`` (packed ``(state, sep ∈ {"", " "},
+    word id)`` step → next state) as ``t_keys``/``t_next``, ``term`` as
+    the final states and their CSR ids; :func:`image_automaton` reads them
+    back.  Every table holds each key once; the kernel builds its probe
+    tables when it wraps the image.  Built once per KB on the driver;
+    numpy only, no compiled code."""
     from collections import defaultdict
 
     import numpy as np
@@ -329,35 +266,20 @@ def kb_image(kb, automaton) -> bytes:
         sec[name + "_off"], sec[name] = _csr(
             [()] + [[sid(v) for v in values(i)] for i in rows])
 
-    tables = {}  # name → keys, placed below once every string is interned
     nd = sorted(kb.name_dict.items())
-    tables["nd"] = [k for k, _ in nd]
+    sec["nd_key"] = [sid(k) for k, _ in nd]
     sec["nd_off"], sec["nd_ids"] = _csr([sorted(v) for _, v in nd])
-    tables["natf"] = sorted(kb.nationality_forms)
-    tables["pron"] = list(_PRON_MASK)
+    sec["natf_key"] = [sid(k) for k in sorted(kb.nationality_forms)]
+    sec["pron_key"] = [sid(k) for k in _PRON_MASK]
     sec["pron_mask"] = list(_PRON_MASK.values())
 
     # the automaton's word-id trie, as GazetteerAutomaton.add built it
     trans, term = automaton.trans, automaton.term
-    tables["w"] = list(automaton.words)
-    n_states = len(trans) + 1
-    tkey = np.fromiter(trans, np.uint64, len(trans))
-    slots = _place(_mix64(tkey))
-    sec["t_keys"] = np.full(len(slots), 2**64 - 1, np.uint64)
-    sec["t_next"] = np.full(len(slots), -1, np.int32)
-    used = slots >= 0
-    sec["t_keys"][used] = tkey[slots[used]]
-    sec["t_next"][used] = np.fromiter(trans.values(), np.int32,
-                                      len(trans))[slots[used]]
-    s_term = np.full(n_states, -1, np.int32)
-    s_term[list(term)] = np.arange(len(term))
-    sec["s_term"] = s_term
+    sec["w_key"] = [sid(w) for w in automaton.words]
+    sec["t_keys"], sec["t_next"] = list(trans), list(trans.values())
+    sec["term_state"] = list(term)
     sec["term_off"], sec["term_ids"] = _csr(list(term.values()))
-
-    for name, keys in tables.items():
-        sec[name + "_key"] = [sid(k) for k in keys]
-        sec[name + "_slots"] = _place(_str_hashes(keys))
-    sec["meta"] = [n, sid(""), n_states]
+    sec["meta"] = [n, sid("")]
     sec["str_blob"], sec["str_off"] = _ucs4(list(intern))  # every sid taken
 
     head = 16 + 16 * len(_SECTIONS)
@@ -388,21 +310,16 @@ def _image_sections(image):
 @functools.lru_cache(maxsize=1)
 def image_automaton(image) -> GazetteerAutomaton:
     """The automaton a KB image serializes, read back in :func:`kb_image`'s
-    insertion order (steps by ``t_next``, final states by ``s_term``):
-    ``kb_image(kb, image_automaton(image)) == image``.  Memoized for the
-    last image, like :func:`wrap_image`: a worker decodes it once."""
-    import numpy as np
-
+    insertion order: ``kb_image(kb, image_automaton(image)) == image``.
+    Memoized for the last image, like :func:`wrap_image`: a worker decodes
+    it once."""
     sec, strs = _image_sections(image)
-    nxt, s_term = sec["t_next"], sec["s_term"]
     atm = GazetteerAutomaton()
     atm.words = {w: i for i, w in enumerate(strs(sec["w_key"]))}
-    used = np.argsort(nxt)[np.count_nonzero(nxt < 0):]
-    atm.trans = dict(zip(sec["t_keys"][used].tolist(), nxt[used].tolist()))
-    final = np.argsort(s_term)[np.count_nonzero(s_term < 0):].tolist()
-    toff, ids = sec["term_off"].tolist(), sec["term_ids"].tolist()
-    atm.term = {s: tuple(ids[toff[k]:toff[k + 1]])
-                for k, s in enumerate(final)}
+    atm.trans = dict(zip(sec["t_keys"].tolist(), sec["t_next"].tolist()))
+    off, ids = sec["term_off"].tolist(), sec["term_ids"].tolist()
+    atm.term = {s: tuple(ids[a:b]) for s, a, b in
+                zip(sec["term_state"].tolist(), off, off[1:])}
     return atm
 
 
@@ -446,10 +363,11 @@ def image_bundle(image) -> KBBundle:
 @functools.lru_cache(maxsize=1)
 def wrap_image(image):
     """The kernel's handle on an image, checked once — magic, version,
-    every section bound and index — and then read in place; ValueError on
-    a bad image.  The handle of the last image wrapped is memoized, so a
-    worker that reads the same broadcast value for every batch wraps it
-    once and keeps its fragment cache."""
+    every section bound and index, no duplicate key, step or final state —
+    and then read in place, with the probe tables built from its key
+    lists; ValueError on a bad image.  The handle of the last image
+    wrapped is memoized, so a worker that reads the same broadcast value
+    for every batch wraps it once and keeps its fragment cache."""
     return _load().wrap_image(image)
 
 

@@ -5,8 +5,8 @@ per-document pipeline (/root/reference/ner.py:576-714 ``recognize`` stages
 f-j, /root/reference/ner/entity.py, /root/reference/ner/context.py), for
 English.  This module is pure Python over plain data and never dispatches
 to native code.  The Spark pipeline resolves each document (the reference's
-only inherently sequential stage, SURVEY §2.5 W2) through
-``recognize.scan_and_resolve``, which runs the compiled twin
+only inherently sequential stage, SURVEY §2.5 W2) in
+``pipeline.ner.resolved_docs``, which runs the compiled twin
 (``_resolve_kernel.cpp`` via ``ckernel``) where it covers the configuration
 and falls back to :func:`resolve_document` otherwise; :func:`resolve_document`
 is also the oracle the kernel's differential fuzz compares against.

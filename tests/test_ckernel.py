@@ -219,7 +219,8 @@ def _section(image, name):
 
 
 def test_bad_image_raises_value_error(env):
-    """A truncated, corrupted or old-version image fails when it is
+    """A truncated, corrupted or old-version image, or one whose tables
+    hold a key, a trie step or a final state twice, fails when it is
     wrapped, with ValueError, before the kernel reads any of it."""
     import struct
 
@@ -239,9 +240,12 @@ def test_bad_image_raises_value_error(env):
         return bytes(b)
 
     name_off, _ = _section(image, "name_sid")
-    slots_off, _ = _section(image, "w_slots")
+    wkey_off, _ = _section(image, "w_key")
+    keys_off, keys_len = _section(image, "t_keys")
     next_off, _ = _section(image, "t_next")
+    final_off, _ = _section(image, "term_state")
     kind_off, _ = _section(image, "ctx_kind")
+    n_states = keys_len // 8 + 1  # the root, and one state per step
     cases = {
         "truncated header": image[:40],
         "truncated sections": image[:len(image) // 2],
@@ -256,16 +260,39 @@ def test_bad_image_raises_value_error(env):
             "<Q", b, 16 + 16 * 4, name_off + 4)),
         "string id": bad(lambda b: struct.pack_into(
             "<i", b, name_off + 4, 1 << 30)),
-        "hash slot": bad(lambda b: struct.pack_into(
-            "<i", b, slots_off, 1 << 30)),
+        "duplicate word": bad(lambda b: b.__setitem__(
+            slice(wkey_off + 4, wkey_off + 8), b[wkey_off:wkey_off + 4])),
         "trie state": bad(lambda b: struct.pack_into(
             "<i", b, next_off, 1 << 30)),
+        "duplicate trie step": bad(lambda b: b.__setitem__(
+            slice(keys_off + 8, keys_off + 16), b[keys_off:keys_off + 8])),
+        "final state": bad(lambda b: struct.pack_into(
+            "<i", b, final_off, n_states)),
+        "duplicate final state": bad(lambda b: b.__setitem__(
+            slice(final_off + 4, final_off + 8), b[final_off:final_off + 4])),
         "ctx kind": bad(lambda b: b.__setitem__(kind_off + 1, 4)),
     }
     for case, img in cases.items():
         with pytest.raises(ValueError, match="bad KB image"):
             ck.wrap_image(img)
         assert img != image, case
+
+
+def test_missing_kernel_raises_unless_disabled(monkeypatch, tmp_path):
+    """A kernel that fails to build is an error that names the switch, not
+    a silent Python path; only NER_SPARK_CKERNEL=0 selects pure Python."""
+    def fail(so):
+        raise OSError("no compiler")
+
+    monkeypatch.setattr(ckernel, "_compile", fail)
+    monkeypatch.setattr(ckernel, "_ck", None)
+    monkeypatch.setattr(ckernel, "_load_attempted", False)
+    monkeypatch.setenv("NER_SPARK_CKERNEL_DIR", str(tmp_path))
+    monkeypatch.delenv("NER_SPARK_CKERNEL", raising=False)
+    with pytest.raises(ImportError, match="NER_SPARK_CKERNEL=0"):
+        ckernel._load()
+    monkeypatch.setenv("NER_SPARK_CKERNEL", "0")
+    assert ckernel._load() is None
 
 
 def test_corrupted_image_never_crashes(env):
