@@ -27,6 +27,10 @@
  *
  * Anything this file cannot faithfully reproduce raises _resolve_ck.Fallback
  * and the wrapper re-runs the pure-Python path for that document.
+ * Fallback means an unsupported state, never a bad id: wrap_image bounds
+ * every row id in the image (term_ids in [0, n], nd_ids in [1, n]), so
+ * every sense, candidate and partial-match id a stage reads is a KB row
+ * and the stages index the row arrays with it directly.
  */
 
 #define PY_SSIZE_T_CLEAN
@@ -135,7 +139,7 @@ static Py_ssize_t bisect_right(const vector<int64_t> &a, int64_t x) {
 // context-dispatch kinds — MUST match KBBundle.CTX_* (kb.py)
 enum { CTX_ZERO = 0, CTX_PERSON = 1, CTX_DATED = 2, CTX_CHAR = 3 };
 
-#define IMAGE_VERSION 3  // ckernel.IMAGE_VERSION
+#define IMAGE_VERSION 4  // ckernel.IMAGE_VERSION
 static const char IMAGE_MAGIC[8] = {'N', 'E', 'R', 'K', 'B', 'I', 'M', 'G'};
 
 // section order — MUST match ckernel._SECTIONS
@@ -152,7 +156,7 @@ enum {
     S_NATF_KEY,
     S_PRON_KEY, S_PRON_MASK,
     S_W_KEY,
-    S_T_KEYS, S_T_NEXT,
+    S_T_KEYS,
     S_TERM_STATE, S_TERM_OFF, S_TERM_IDS,
     S_COUNT
 };
@@ -168,7 +172,7 @@ static const uint8_t SECTION_ELEM[S_COUNT] = {
     4,
     4, 4,
     4,
-    8, 4,
+    8,
     4, 4, 8,
 };
 enum { META_N_ROWS, META_EMPTY_SID, META_COUNT };
@@ -250,10 +254,12 @@ struct KBImage {
     Span<int32_t> pron_mask;
     // word-id trie: words → wid, (state, sep, wid) → next state,
     // final states → their id lists; the probe table and s_term are built
-    // from the image's dense steps and final states by load_image
+    // from the image's dense steps and final states by load_image.  Step
+    // e of t_keys makes state e + 1 (GazetteerAutomaton.add), so the image
+    // stores no next states
     StrTable words;
     vector<uint64_t> t_keys;      // (state << 32 | sep << 31 | wid), probed
-    vector<int32_t> t_next;
+    vector<int32_t> t_next;       // e + 1 for the step in the same slot
     vector<int32_t> s_term;       // state → term index (-1: not final)
     Span<uint32_t> term_off;
     Span<int64_t> term_ids;
@@ -298,9 +304,9 @@ static void image_destructor(PyObject *cap) {
     delete img;
 }
 
-// ---- one-time bounds check: every offset, index and enum the scan and
-// the stages read is in range afterwards, so a bad image raises here and
-// never reaches them
+// ---- one-time bounds check: every offset, index, enum and row id the
+// scan and the stages read is in range afterwards, so a bad image raises
+// here and never reaches them
 
 template <typename T>
 static bool all_in(Span<T> s, int64_t lo, int64_t hi) {  // lo <= v < hi
@@ -426,18 +432,17 @@ static const char *load_image(KBImage *img, const uint8_t *buf, size_t size) {
         if (err) return err;
     }
     if (img->nd_off.n != img->name_dict.key.n + 1 ||
-        !offsets_ok(img->nd_off, img->nd_ids.n))
+        !offsets_ok(img->nd_off, img->nd_ids.n) ||
+        !all_in(img->nd_ids, 1, n + 1))
         return "name_dict ids";
     if (img->pron_mask.n != img->pron.key.n) return "pronoun masks";
     // the trie: its steps into the probe table, its final states into s_term
     Span<uint64_t> keys = SPAN(uint64_t, S_T_KEYS);
-    Span<int32_t> next = SPAN(int32_t, S_T_NEXT);
     Span<int32_t> term_state = SPAN(int32_t, S_TERM_STATE);
     img->term_off = SPAN(uint32_t, S_TERM_OFF);
     img->term_ids = SPAN(int64_t, S_TERM_IDS);
     const int64_t n_states = (int64_t)keys.n + 1;  // each step makes one
-    if (next.n != keys.n || !all_in(next, 0, n_states))
-        return "trie transitions";
+    if (n_states >= INT32_MAX) return "trie transitions";
     img->t_keys.assign(probe_capacity(keys.n), T_EMPTY);
     img->t_next.assign(img->t_keys.size(), -1);
     size_t mask = img->t_keys.size() - 1;
@@ -448,11 +453,11 @@ static const char *load_image(KBImage *img, const uint8_t *buf, size_t size) {
         for (; img->t_keys[pos] != T_EMPTY; pos = (pos + 1) & mask)
             if (img->t_keys[pos] == key) return "duplicate trie step";
         img->t_keys[pos] = key;
-        img->t_next[pos] = next.p[e];
+        img->t_next[pos] = (int32_t)(e + 1);
     }
     if (img->term_off.n != term_state.n + 1 ||
         !offsets_ok(img->term_off, img->term_ids.n) ||
-        !all_in(term_state, 0, n_states))
+        !all_in(term_state, 0, n_states) || !all_in(img->term_ids, 0, n + 1))
         return "trie ids";
     img->s_term.assign((size_t)n_states, -1);
     for (size_t k = 0; k < term_state.n; k++) {
@@ -492,15 +497,6 @@ static PyObject *wrap_image(PyObject *self, PyObject *arg) {
         delete img;
     }
     return cap;
-}
-
-// Python-list indexing semantics for the KB hot arrays (resolve.py indexes
-// plain lists, so a negative line id silently wraps — bug-for-bug parity).
-// Returns -1 when Python would raise IndexError (caller raises Fallback).
-static inline int64_t kb_index(const KBImage *p, int64_t line) {
-    if (line >= 0) return line <= p->n ? line : -1;
-    int64_t i = p->n + 1 + line;
-    return i >= 0 ? i : -1;
 }
 
 // ---------------------------------------------------------------------------
@@ -638,10 +634,9 @@ struct Doc;  // fwd
 
 struct Context {
     const KBImage *kb;
-    Doc *doc;
     vector<int64_t> paragraphs;
     vector<ParStats> par;            // by paragraph index
-    vector<uint8_t> people_in_text;  // bitset over KB lines (n+1)
+    std::unordered_set<int64_t> people_in_text;  // person lines seen
     Py_ssize_t paragraph_index = 0;
     // pronoun registers (mention idx, -1 == None): only the gender ones
     // are ever read (context.py:331-342)
@@ -651,9 +646,9 @@ struct Context {
     void recompute_paragraph_offset(int64_t start);
     void update(Doc &d, int32_t mi);
     double mentioned_in_par(int32_t name_sid, uint32_t field);
-    double person_percentile(Doc &d, int64_t candidate);
+    double person_percentile(const Doc &d, int64_t candidate);
     double common_percentile(int64_t candidate, uint32_t ch);
-    double dated_percentile(Doc &d, int64_t candidate);
+    double dated_percentile(int64_t candidate);
 };
 
 // ---------------------------------------------------------------------------
@@ -674,9 +669,6 @@ struct Doc {
     vector<DateM> dates;
     vector<int64_t> paragraphs;
     SIdx sidx;
-    bool fallback = false;   // set → wrapper re-runs pure Python
-
-    void fail() { fallback = true; }
 };
 
 static void find_all(const U32 &text, Py_UCS4 c, vector<int64_t> &out) {
@@ -743,11 +735,9 @@ static U32 right_sentence(const Doc &d, const Mention &m) {
 
 bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
     kb = d.kb;
-    doc = &d;
     paragraphs = d.paragraphs;
     par.clear();
     par.resize(paragraphs.size());
-    people_in_text.assign((size_t)kb->n + 1, 0);
 
     size_t ent_index = 0, nat_index = 0;
     const size_t n_ed = ed.size(), n_nat = nats.size();
@@ -784,12 +774,9 @@ bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
                 if (!m.poorly_disambiguated) {
                     Pref p = m.pref;
                     if (p.tag == P_MEN) p = d.men[(size_t)p.v].pref;
-                    // "pref is a KB line id >= 1 here" (Context.__init__);
-                    // anything else would crash the Python twin → bail out
-                    if (p.tag != P_INT || p.v < 1 || p.v > kb->n) {
-                        d.fail();
-                        return false;
-                    }
+                    // "pref is a KB line id here" (Context.__init__); a
+                    // None or a Mention would crash the Python twin
+                    if (p.tag != P_INT) return false;
                     int64_t line = p.v;
                     Str t = kb->str(kb->type_sid[(size_t)line]);
                     uint32_t fk = t.empty() ? 0 : (uint32_t)t.back();
@@ -808,10 +795,8 @@ bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
                     for (int64_t c : m.candidates) {
                         if (probed.count(c)) continue;
                         probed.insert(c);
-                        int64_t ci = kb_index(kb, c);
-                        if (ci < 0) { d.fail(); return false; }
-                        if (kb->person_sub[(size_t)ci]) {
-                            for (int32_t rsid : kb->roles[(size_t)ci]) {
+                        if (kb->person_sub[(size_t)c]) {
+                            for (int32_t rsid : kb->roles[(size_t)c]) {
                                 Str role = kb->str(rsid);
                                 if (u32_find(d.text, role, par_off, par_end) != -1) {
                                     bool have = false;
@@ -852,12 +837,9 @@ void Context::update(Doc &d, int32_t mi) {
     Mention &m = d.men[(size_t)mi];
     Pref p = m.pref;
     if (p.tag == P_MEN) p = d.men[(size_t)p.v].pref;
-    // (None / <1 → get_ent_type == "" → not a person; Context.update)
-    if (p.tag != P_INT || p.v < 1) return;
-    int64_t line = kb_index(kb, p.v);
-    if (line < 0) { d.fail(); return; }
-    if (!kb->person_sub[(size_t)line]) return;
-    uint8_t g = kb->gender[(size_t)line];
+    // (None → get_ent_type == "" → not a person; Context.update)
+    if (p.tag != P_INT || !kb->person_sub[(size_t)p.v]) return;
+    uint8_t g = kb->gender[(size_t)p.v];
     if (g == 1) { last_male = mi; last_unknown_gender = -1; }
     else if (g == 2) { last_female = mi; last_unknown_gender = -1; }
     else last_unknown_gender = mi;
@@ -874,12 +856,11 @@ double Context::mentioned_in_par(int32_t name_sid, uint32_t field) {
 }
 
 // resolve.py Context.person_percentile
-double Context::person_percentile(Doc &d, int64_t candidate) {
+double Context::person_percentile(const Doc &d, int64_t candidate) {
     ParStats &ps = par[(size_t)paragraph_index];
-    int64_t ci = kb_index(kb, candidate);
-    if (ci < 0) { d.fail(); return 0.0; }
+    const size_t ci = (size_t)candidate;
     double nat_score = 0.0;
-    Span<int32_t> person_nats = kb->nats[(size_t)ci];
+    Span<int32_t> person_nats = kb->nats[ci];
     for (int32_t nm_idx : ps.nat_mentions) {
         const U32 &nat = d.men[(size_t)nm_idx].src_text();
         for (int32_t psid : person_nats)
@@ -888,7 +869,7 @@ double Context::person_percentile(Doc &d, int64_t candidate) {
     if (!ps.nat_mentions.empty())
         nat_score = nat_score * 100.0 / (double)ps.nat_mentions.size();
     double date_score = 0.0;
-    Span<int32_t> person_dates = kb->pdates[(size_t)ci];
+    Span<int32_t> person_dates = kb->pdates[ci];
     for (const U32 *cd : ps.dates)
         for (int32_t dsid : person_dates) {
             Str pd = kb->str(dsid);
@@ -897,7 +878,7 @@ double Context::person_percentile(Doc &d, int64_t candidate) {
     if (!ps.dates.empty())
         date_score = date_score * 100.0 / (double)ps.dates.size();
     double prof_score = 0.0;
-    Span<int32_t> roles = kb->roles[(size_t)ci];
+    Span<int32_t> roles = kb->roles[ci];
     const int32_t empty_probe[1] = {kb->empty_sid};
     const int32_t *probe = roles.empty() ? empty_probe : roles.data();
     size_t nprobe = roles.empty() ? 1 : roles.size();
@@ -908,23 +889,20 @@ double Context::person_percentile(Doc &d, int64_t candidate) {
     if (!ps.profs.empty())
         prof_score = prof_score * 100.0 / (double)ps.profs.size();
     double stat = nat_score + date_score + prof_score;
-    double mention = mentioned_in_par(kb->name_sid[(size_t)ci], FK_PERSON);
+    double mention = mentioned_in_par(kb->name_sid[ci], FK_PERSON);
     return (stat + mention) / 4.0;
 }
 
 // resolve.py Context.common_percentile (single-char bucket probe)
 double Context::common_percentile(int64_t candidate, uint32_t ch) {
-    int64_t ci = kb_index(kb, candidate);
-    if (ci < 0) { doc->fail(); return 0.0; }
-    return mentioned_in_par(kb->name_sid[(size_t)ci], ch);
+    return mentioned_in_par(kb->name_sid[(size_t)candidate], ch);
 }
 
 // resolve.py Context.dated_percentile (the reference's org/event score less
 // its name and LOCATION probes, which read buckets that are never made)
-double Context::dated_percentile(Doc &d, int64_t candidate) {
-    int64_t ci = kb_index(kb, candidate);
-    if (ci < 0) { d.fail(); return 0.0; }
-    int32_t ds[2] = {kb->start_sid[(size_t)ci], kb->end_sid[(size_t)ci]};
+double Context::dated_percentile(int64_t candidate) {
+    int32_t ds[2] = {kb->start_sid[(size_t)candidate],
+                     kb->end_sid[(size_t)candidate]};
     ParStats &ps = par[(size_t)paragraph_index];
     double date_score = 0.0;
     for (const U32 *cd : ps.dates)
@@ -961,7 +939,7 @@ static void ordered_dedup(vector<int64_t> &v) {
 static const Py_UCS4 INTO_PAD[] = {' ', 'i', 'n', 't', 'o', ' '};
 
 // EN sense eliminations (lang.py:42-61 _en_sense_rules)
-static bool en_sense_rules(Doc &d, Mention &m) {
+static void en_sense_rules(const Doc &d, Mention &m) {
     const KBImage *kb = d.kb;
     Py_ssize_t n = (Py_ssize_t)d.text.size();
     bool rs = m.end + 2 <= n && d.text[(size_t)m.end] == '\'' &&
@@ -969,18 +947,15 @@ static bool en_sense_rules(Doc &d, Mention &m) {
     bool the = m.flags & FL_THE_TITLE;
     bool ls = m.start >= 6 &&
               u32_eq(d.text.data() + m.start - 6, 6, INTO_PAD, 6);
-    if (!(rs || the || ls)) return true;
+    if (!(rs || the || ls)) return;
     vector<int64_t> out;
     for (int64_t s : m.senses) {
-        int64_t si = kb_index(kb, s);
-        if (si < 0) { d.fail(); return false; }
-        bool loc = kb->loc_sub[(size_t)si];
+        bool loc = kb->loc_sub[(size_t)s];
         if (loc && (rs || the)) continue;
         if (!loc && ls) continue;
         out.push_back(s);
     }
     m.senses.swap(out);
-    return true;
 }
 
 // resolve.py disambiguate_without_context
@@ -991,19 +966,14 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
         m.is_coreference = true;
         return true;
     }
-    if (!en_sense_rules(d, m)) return false;
+    en_sense_rules(d, m);
 
     // artist → exclude groups
     for (int64_t s : m.senses) {
-        int64_t si = kb_index(kb, s);
-        if (si < 0) { d.fail(); return false; }
-        if (kb->artist[(size_t)si]) {
+        if (kb->artist[(size_t)s]) {
             vector<int64_t> kept;
-            for (int64_t x : m.senses) {
-                int64_t xi = kb_index(kb, x);
-                if (xi < 0) { d.fail(); return false; }
-                if (!kb->group[(size_t)xi]) kept.push_back(x);
-            }
+            for (int64_t x : m.senses)
+                if (!kb->group[(size_t)x]) kept.push_back(x);
             m.senses.swap(kept);
             break;
         }
@@ -1012,11 +982,8 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
     // verb + JOBS elimination (disambiguate_without_context)
     int64_t verb_index = -1;
     bool has_person = false;
-    for (int64_t s : m.senses) {
-        int64_t si = kb_index(kb, s);
-        if (si < 0) { d.fail(); return false; }
-        if (kb->person_flag[(size_t)si]) { has_person = true; break; }
-    }
+    for (int64_t s : m.senses)
+        if (kb->person_flag[(size_t)s]) { has_person = true; break; }
     U32 sentence;
     bool have_sentence = false;
     int64_t send = -1;
@@ -1057,55 +1024,36 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
         }
     }
     if (verb_index != -1) {
+        // the post-verb window: the paren-free sentence from the verb, or
+        // the text from the verb to the sentence end
+        const Py_UCS4 *w = have_sentence ? sentence.data() : d.text.data();
+        int64_t lo = have_sentence ? verb_index : m.end + verb_index;
+        int64_t hi = have_sentence ? (int64_t)sentence.size() : send;
         // professions: first person sense whose JOBS match post-verb
         vector<int32_t> professions;
         for (int64_t s : m.senses) {
-            int64_t si = kb_index(kb, s);
-            if (si < 0) { d.fail(); return false; }
-            if (!kb->person_flag[(size_t)si]) continue;
+            if (!kb->person_flag[(size_t)s]) continue;
             vector<int32_t> cand;
-            for (int32_t jsid : kb->jobs[(size_t)si]) {
+            for (int32_t jsid : kb->jobs[(size_t)s]) {
                 Str job = kb->str(jsid);
                 // search " " + job + " " in the window
-                bool found = false;
-                if (have_sentence) {
-                    Py_ssize_t sn = (Py_ssize_t)sentence.size();
-                    for (Py_ssize_t i = verb_index;
-                         i + (Py_ssize_t)job.size() + 2 <= sn; i++) {
-                        if (sentence[(size_t)i] == ' ' &&
-                            sentence[(size_t)(i + 1 + job.size())] == ' ' &&
-                            (job.empty() ||
-                             memcmp(sentence.data() + i + 1, job.data(),
-                                    job.size() * sizeof(Py_UCS4)) == 0)) {
-                            found = true;
-                            break;
-                        }
-                    }
-                } else {
-                    int64_t base = m.end + verb_index;
-                    for (int64_t i = base;
-                         i + (int64_t)job.size() + 2 <= send; i++) {
-                        if (d.text[(size_t)i] == ' ' &&
-                            d.text[(size_t)(i + 1 + job.size())] == ' ' &&
-                            (job.empty() ||
-                             memcmp(d.text.data() + i + 1, job.data(),
-                                    job.size() * sizeof(Py_UCS4)) == 0)) {
-                            found = true;
-                            break;
-                        }
+                for (int64_t i = lo; i + (int64_t)job.size() + 2 <= hi; i++) {
+                    if (w[i] == ' ' && w[i + 1 + job.size()] == ' ' &&
+                        (job.empty() ||
+                         memcmp(w + i + 1, job.data(),
+                                job.size() * sizeof(Py_UCS4)) == 0)) {
+                        cand.push_back(jsid);
+                        break;
                     }
                 }
-                if (found) cand.push_back(jsid);
             }
             if (!cand.empty()) { professions.swap(cand); break; }
         }
         if (!professions.empty()) {
             vector<int64_t> new_senses;
             for (int64_t s : m.senses) {
-                int64_t si = kb_index(kb, s);
-                if (si < 0) { d.fail(); return false; }
-                if (!kb->person_flag[(size_t)si]) continue;
-                Span<int32_t> jb = kb->jobs[(size_t)si];
+                if (!kb->person_flag[(size_t)s]) continue;
+                Span<int32_t> jb = kb->jobs[(size_t)s];
                 const int32_t empty_probe[1] = {kb->empty_sid};
                 const int32_t *probe = jb.empty() ? empty_probe : jb.data();
                 size_t np = jb.empty() ? 1 : jb.size();
@@ -1132,13 +1080,9 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
     if (!pref_truthy(m.pref)) {  // dead in practice
         // Python APPENDS to the existing lists here; reachable only with
         // empty ones (see resolve.py comment) — anything else → fallback
-        if (!m.score.empty() || !m.static_score.empty()) {
-            d.fail();
-            return false;
-        }
+        if (!m.score.empty() || !m.static_score.empty()) return false;
         for (int64_t c : m.candidates) {
-            int64_t ci = kb_index(kb, c);
-            double st = ci < 0 ? 0.0 : kb->score[(size_t)ci];
+            double st = kb->score[(size_t)c];
             m.static_score.push_back(st);
             m.score.push_back(st);
         }
@@ -1151,43 +1095,21 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
 }
 
 // resolve.py disambiguate_with_context
-static bool dwc(Doc &d, Context &ctx, Register &reg, int32_t mi) {
+static void dwc(Doc &d, Context &ctx, Register &reg, int32_t mi) {
     const KBImage *kb = d.kb;
     Mention &m = d.men[(size_t)mi];
-    if (m.is_coreference || m.candidates.empty()) return true;
+    if (m.is_coreference || m.candidates.empty()) return;
     ctx.recompute_paragraph_offset(m.start);
-    if (m.candidates.size() == 1) {
-        int64_t c = m.candidates[0];
-        int64_t ci = kb_index(kb, c);
-        if (ci < 0) { d.fail(); return false; }
-        double context_score = 0.0;
-        uint8_t k = kb->ctx_kind[(size_t)ci];
-        if (k == CTX_PERSON) context_score = ctx.person_percentile(d, c);
-        else if (k == CTX_DATED) context_score = ctx.dated_percentile(d, c);
-        else if (k == CTX_CHAR)
-            context_score = ctx.common_percentile(c, kb->ctx_char[(size_t)ci]);
-        if (d.fallback) return false;
-        if (context_score > 0) m.poorly_disambiguated = false;
-        double st = kb->score[(size_t)ci];
-        m.static_score.assign(1, st);
-        m.context_score.assign(1, context_score);
-        m.score.assign(1, st + context_score);
-        set_preferred(d, reg, mi, Pref{P_INT, c});
-        return true;
-    }
     vector<double> score, static_score, context_score_l;
     bool poorly = m.poorly_disambiguated;
     for (int64_t c : m.candidates) {
-        int64_t ci = kb_index(kb, c);
-        if (ci < 0) { d.fail(); return false; }
-        double st = kb->score[(size_t)ci];
+        double st = kb->score[(size_t)c];
         double context_score = 0.0;
-        uint8_t k = kb->ctx_kind[(size_t)ci];
+        uint8_t k = kb->ctx_kind[(size_t)c];
         if (k == CTX_PERSON) context_score = ctx.person_percentile(d, c);
-        else if (k == CTX_DATED) context_score = ctx.dated_percentile(d, c);
+        else if (k == CTX_DATED) context_score = ctx.dated_percentile(c);
         else if (k == CTX_CHAR)
-            context_score = ctx.common_percentile(c, kb->ctx_char[(size_t)ci]);
-        if (d.fallback) return false;
+            context_score = ctx.common_percentile(c, kb->ctx_char[(size_t)c]);
         if (context_score > 0) poorly = false;
         static_score.push_back(st);
         context_score_l.push_back(context_score);
@@ -1204,14 +1126,11 @@ static bool dwc(Doc &d, Context &ctx, Register &reg, int32_t mi) {
     set_preferred(d, reg, mi, Pref{P_INT, pref});
 
     // explicit per-paragraph person bump (disambiguate_with_context)
-    int64_t pi = kb_index(kb, pref);
-    if (pi < 0) { d.fail(); return false; }
-    if (kb->person_sub[(size_t)pi] && m.candidates.size() != 1) {
+    if (kb->person_sub[(size_t)pref] && m.candidates.size() != 1) {
         Bucket &b = ctx.par[(size_t)ctx.paragraph_index].fields[FK_PERSON];
-        b.cnt[kb->name_sid[(size_t)pi]] += 1;
+        b.cnt[kb->name_sid[(size_t)pref]] += 1;
         b.total += 1;
     }
-    return true;
 }
 
 // ---------------------------------------------------------------------------
@@ -1237,31 +1156,21 @@ static void pronoun_coref(Doc &d, Context &ctx, Register &reg, int32_t mi) {
     Mention &m = d.men[(size_t)mi];
     if (is_location_coreference(d, m)) return;
     int64_t bop = m.begin_of_paragraph >= 0 ? m.begin_of_paragraph : 0;
-    if (m.flags & FL_PRON_M) {
-        if (ctx.last_unknown_gender >= 0) {
-            ctx.last_male = ctx.last_unknown_gender;
-            ctx.last_unknown_gender = -1;
-        }
-        if (ctx.last_male >= 0 &&
-            d.men[(size_t)ctx.last_male].start >= bop) {
-            // get_preferred_entity: the antecedent itself or its Mention pref
-            int32_t ant = ctx.last_male;
-            const Pref &ap = d.men[(size_t)ant].pref;
-            int64_t target = ap.tag == P_MEN ? ap.v : ant;
-            set_preferred(d, reg, mi, Pref{P_MEN, target});
-        }
-    } else if (m.flags & FL_PRON_F) {
-        if (ctx.last_unknown_gender >= 0) {
-            ctx.last_female = ctx.last_unknown_gender;
-            ctx.last_unknown_gender = -1;
-        }
-        if (ctx.last_female >= 0 &&
-            d.men[(size_t)ctx.last_female].start >= bop) {
-            int32_t ant = ctx.last_female;
-            const Pref &ap = d.men[(size_t)ant].pref;
-            int64_t target = ap.tag == P_MEN ? ap.v : ant;
-            set_preferred(d, reg, mi, Pref{P_MEN, target});
-        }
+    // the register of the pronoun's gender (M first, as in the twin)
+    int32_t *last = (m.flags & FL_PRON_M)   ? &ctx.last_male
+                    : (m.flags & FL_PRON_F) ? &ctx.last_female
+                                            : nullptr;
+    if (!last) return;
+    if (ctx.last_unknown_gender >= 0) {
+        *last = ctx.last_unknown_gender;
+        ctx.last_unknown_gender = -1;
+    }
+    if (*last >= 0 && d.men[(size_t)*last].start >= bop) {
+        // get_preferred_entity: the antecedent itself or its Mention pref
+        int32_t ant = *last;
+        const Pref &ap = d.men[(size_t)ant].pref;
+        int64_t target = ap.tag == P_MEN ? ap.v : ant;
+        set_preferred(d, reg, mi, Pref{P_MEN, target});
     }
 }
 
@@ -1313,8 +1222,8 @@ static bool fix_poor(Doc &d, Register &reg, const vector<int32_t> &entities) {
         if (e.pref.tag == P_MEN) {
             ent = (int32_t)e.pref.v;
             const Pref &p2 = d.men[(size_t)ent].pref;
-            if (p2.tag == P_MEN) { d.fail(); return false; }  // 2-level chain:
-            // Python would key the dict by a Mention object — not supported
+            if (p2.tag == P_MEN) return false;  // 2-level chain: Python
+            // would key the dict by a Mention object — not supported
             sense_key = p2.tag == P_NONE ? SENSE_NONE : p2.v;
         } else {
             ent = mi;
@@ -1358,10 +1267,8 @@ static bool resolve_corefs(Doc &d, Context &ctx, Register &reg,
         if (!e.is_coreference && pref_truthy(e.pref)) {
             Pref p = e.pref;
             if (p.tag == P_MEN) p = d.men[(size_t)p.v].pref;
-            if (p.tag == P_INT && p.v >= 1 && p.v <= kb->n &&
-                kb->person_sub[(size_t)p.v])
-                ctx.people_in_text[(size_t)p.v] = 1;
-            else if (p.tag == P_INT && p.v > kb->n) { d.fail(); return false; }
+            if (p.tag == P_INT && kb->person_sub[(size_t)p.v])
+                ctx.people_in_text.insert(p.v);
         }
     }
     for (int32_t mi : entities) {
@@ -1370,8 +1277,7 @@ static bool resolve_corefs(Doc &d, Context &ctx, Register &reg,
             // filter pms to people_in_text
             vector<int64_t> pms2;
             for (int64_t s : e.pms)
-                if (s >= 1 && s <= kb->n && ctx.people_in_text[(size_t)s])
-                    pms2.push_back(s);
+                if (ctx.people_in_text.count(s)) pms2.push_back(s);
             e.pms.swap(pms2);
             if (!e.pms.empty()) {
                 // min by (-score, id): pms sorted ascending by id, so scan
@@ -1397,20 +1303,17 @@ static bool resolve_corefs(Doc &d, Context &ctx, Register &reg,
                     e.is_coreference = false;
                     e.pms.clear();
                     if (!dwoc(d, reg, mi)) return false;
-                    if (!dwc(d, ctx, reg, mi)) return false;
+                    dwc(d, ctx, reg, mi);
                 }
             } else if (e.flags & FL_PRON_ANY) {
                 pronoun_coref(d, ctx, reg, mi);
             } else if (!e.senses.empty()) {
                 e.is_coreference = false;
                 if (!dwoc(d, reg, mi)) return false;
-                if (!dwc(d, ctx, reg, mi)) return false;
+                dwc(d, ctx, reg, mi);
             }
         }
-        if (pref_truthy(d.men[(size_t)mi].pref)) {
-            ctx.update(d, mi);
-            if (d.fallback) return false;
-        }
+        if (pref_truthy(d.men[(size_t)mi].pref)) ctx.update(d, mi);
     }
     return true;
 }
@@ -1450,25 +1353,16 @@ static void remove_nearby(Doc &d, vector<int32_t> &entities) {
         for (int64_t o = bef.end; o < ent.start; o++)
             if (d.text[(size_t)o] != ' ') { all_spaces = false; break; }
         if (!all_spaces) continue;
-        // get_preferred_sense: one hop through a Mention pref
-        auto psense = [&](Mention &m) -> int64_t {
+        // get_ent_type of get_preferred_sense (one hop through a Mention
+        // pref): None → ""
+        auto texact = [&](const Mention &m) -> uint8_t {
             Pref p = m.pref;
             if (p.tag == P_MEN) p = d.men[(size_t)p.v].pref;
-            return p.tag == P_INT ? p.v : SENSE_NONE;  // None → type ""
+            return p.tag == P_INT ? kb->type_exact[(size_t)p.v] : 0;
         };
-        int64_t s1 = psense(ent), s2 = psense(bef);
-        auto texact = [&](int64_t s) -> uint8_t {
-            // get_ent_type (kb.py:343-352): None or line < 1 → ""; out of
-            // range → IndexError caught → "" — never a negative-index wrap
-            if (s == SENSE_NONE || s < 1 || s > kb->n) return 0;
-            return kb->type_exact[(size_t)s];
-        };
-        uint8_t t1 = texact(s1);
-        if (d.fallback) return;
+        uint8_t t1 = texact(ent);
         if (t1 == 0) continue;  // not "person"/"location"
-        uint8_t t2 = texact(s2);
-        if (d.fallback) return;
-        if (t2 == t1) {
+        if (texact(bef) == t1) {
             ent.next_to_same_type = true;
             bef.next_to_same_type = true;
         }
@@ -1506,8 +1400,6 @@ static bool parse_dates(Doc &d, PyObject *dates) {
 }
 
 static PyObject *run_stages(Doc &d) {
-    const KBImage *kb = d.kb;
-    (void)kb;
     Register reg(d.men.size());
 
     // stage 1: global senses + pms intersection (resolve_document)
@@ -1571,8 +1463,7 @@ static PyObject *run_stages(Doc &d) {
         // stage 6: context pass 1 + scalar dwc sweep + fix_poor
         Context ctx1;
         if (!ctx1.init(d, ed, nationalities)) goto fallback;
-        for (int32_t mi : entities)
-            if (!dwc(d, ctx1, reg, mi)) goto fallback;
+        for (int32_t mi : entities) dwc(d, ctx1, reg, mi);
         if (!fix_poor(d, reg, entities)) goto fallback;
 
         // stage 7: fresh context + two coref passes (resolve_document)
@@ -1591,7 +1482,6 @@ static PyObject *run_stages(Doc &d) {
     // stage 8: resolve.py remove_nearby_entities (the proper-noun overlap
     // stage before it is the identity; see resolve_document)
     remove_nearby(d, entities);
-    if (d.fallback) goto fallback;
 
     {
         vector<uint8_t> kept(d.men.size(), 0);

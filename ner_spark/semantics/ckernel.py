@@ -23,10 +23,15 @@ broadcasts it; a worker wraps it zero-copy and decodes the bundle and the
 automaton from it only when a document falls back to Python.
 ``try_scan_resolve`` serves direct object callers: it builds the image
 lazily and caches it on the bundle (``_ck_image``, never pickled).
+``wrap_image`` checks the image once — every section bound, string id,
+enum and KB row id — and refuses a bad one with ValueError; an image whose
+automaton values are not KB rows (a ``qid_mode`` export compile) is
+refused there, so extraction over it on the kernel's path fails up front.
 
 ``None`` means "take the pure-Python path" — the kernel covers exactly the
 Spark production surface (mode="default", lang="en", find_names=False) and
-raises ``Fallback`` for any state it cannot reproduce bug-for-bug; the
+raises ``Fallback`` for any state it cannot reproduce bug-for-bug (never
+for a bad id: the wrap bounded every id the stages read); the
 callers (recognize.scan_and_resolve, pipeline.ner.resolved_docs) then run
 ``recognize.resolve_in_python``.  Parity is pinned by the differential
 fuzz test (tests/test_ckernel.py) and the byte-identical reference goldens.
@@ -158,7 +163,7 @@ def available() -> bool:
 # KB image
 # ---------------------------------------------------------------------------
 
-IMAGE_VERSION = 3  # _resolve_kernel.cpp IMAGE_VERSION; bump on any change
+IMAGE_VERSION = 4  # _resolve_kernel.cpp IMAGE_VERSION; bump on any change
 _MAGIC = b"NERKBIMG"
 # the section table, in order (the kernel's S_* enum mirrors it)
 _SECTIONS = (
@@ -180,7 +185,7 @@ _SECTIONS = (
     ("natf_key", "<i4"),
     ("pron_key", "<i4"), ("pron_mask", "<i4"),
     ("w_key", "<i4"),
-    ("t_keys", "<u8"), ("t_next", "<i4"),
+    ("t_keys", "<u8"),
     ("term_state", "<i4"), ("term_off", "<u4"), ("term_ids", "<i8"),
 )
 
@@ -216,11 +221,12 @@ def kb_image(kb, automaton) -> bytes:
     and the automaton's word-id trie.  The trie sections only serialize
     :class:`GazetteerAutomaton`'s own fields, in insertion order:
     ``words`` the word keys, ``trans`` (packed ``(state, sep ∈ {"", " "},
-    word id)`` step → next state) as ``t_keys``/``t_next``, ``term`` as
-    the final states and their CSR ids; :func:`image_automaton` reads them
-    back.  Every table holds each key once; the kernel builds its probe
-    tables when it wraps the image.  Built once per KB on the driver;
-    numpy only, no compiled code."""
+    word id)`` step → next state) as its steps ``t_keys`` alone, since
+    ``GazetteerAutomaton.add`` numbers the state step ``e`` makes ``e + 1``,
+    and ``term`` as the final states and their CSR ids;
+    :func:`image_automaton` reads them back.  Every table holds each key
+    once; the kernel builds its probe tables when it wraps the image.
+    Built once per KB on the driver; numpy only, no compiled code."""
     from collections import defaultdict
 
     import numpy as np
@@ -276,7 +282,7 @@ def kb_image(kb, automaton) -> bytes:
     # the automaton's word-id trie, as GazetteerAutomaton.add built it
     trans, term = automaton.trans, automaton.term
     sec["w_key"] = [sid(w) for w in automaton.words]
-    sec["t_keys"], sec["t_next"] = list(trans), list(trans.values())
+    sec["t_keys"] = list(trans)
     sec["term_state"] = list(term)
     sec["term_off"], sec["term_ids"] = _csr(list(term.values()))
     sec["meta"] = [n, sid("")]
@@ -310,13 +316,15 @@ def _image_sections(image):
 @functools.lru_cache(maxsize=1)
 def image_automaton(image) -> GazetteerAutomaton:
     """The automaton a KB image serializes, read back in :func:`kb_image`'s
-    insertion order: ``kb_image(kb, image_automaton(image)) == image``.
+    insertion order, ``trans`` as ``zip(t_keys, range(1, n + 1))``:
+    ``kb_image(kb, image_automaton(image)) == image``.
     Memoized for the last image, like :func:`wrap_image`: a worker decodes
     it once."""
     sec, strs = _image_sections(image)
     atm = GazetteerAutomaton()
     atm.words = {w: i for i, w in enumerate(strs(sec["w_key"]))}
-    atm.trans = dict(zip(sec["t_keys"].tolist(), sec["t_next"].tolist()))
+    t_keys = sec["t_keys"].tolist()
+    atm.trans = dict(zip(t_keys, range(1, len(t_keys) + 1)))
     off, ids = sec["term_off"].tolist(), sec["term_ids"].tolist()
     atm.term = {s: tuple(ids[a:b]) for s, a, b in
                 zip(sec["term_state"].tolist(), off, off[1:])}
@@ -363,8 +371,9 @@ def image_bundle(image) -> KBBundle:
 @functools.lru_cache(maxsize=1)
 def wrap_image(image):
     """The kernel's handle on an image, checked once — magic, version,
-    every section bound and index, no duplicate key, step or final state —
-    and then read in place, with the probe tables built from its key
+    every section bound and index, every row id (``term_ids`` in [0, n],
+    ``nd_ids`` in [1, n]), no duplicate key, step or final state — and
+    then read in place, with the probe tables built from its key
     lists; ValueError on a bad image.  The handle of the last image
     wrapped is memoized, so a worker that reads the same broadcast value
     for every batch wraps it once and keeps its fragment cache."""

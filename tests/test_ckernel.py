@@ -219,9 +219,10 @@ def _section(image, name):
 
 
 def test_bad_image_raises_value_error(env):
-    """A truncated, corrupted or old-version image, or one whose tables
-    hold a key, a trie step or a final state twice, fails when it is
-    wrapped, with ValueError, before the kernel reads any of it."""
+    """A truncated, corrupted or old-version image, one whose tables hold
+    a key, a trie step or a final state twice, or one with a row id out
+    of range fails when it is wrapped, with ValueError, before the kernel
+    reads any of it."""
     import struct
 
     bundle, atm, lang, _ = env
@@ -242,10 +243,12 @@ def test_bad_image_raises_value_error(env):
     name_off, _ = _section(image, "name_sid")
     wkey_off, _ = _section(image, "w_key")
     keys_off, keys_len = _section(image, "t_keys")
-    next_off, _ = _section(image, "t_next")
     final_off, _ = _section(image, "term_state")
     kind_off, _ = _section(image, "ctx_kind")
+    tid_off, _ = _section(image, "term_ids")
+    nd_off, _ = _section(image, "nd_ids")
     n_states = keys_len // 8 + 1  # the root, and one state per step
+    n = bundle.n_rows()
     cases = {
         "truncated header": image[:40],
         "truncated sections": image[:len(image) // 2],
@@ -263,7 +266,7 @@ def test_bad_image_raises_value_error(env):
         "duplicate word": bad(lambda b: b.__setitem__(
             slice(wkey_off + 4, wkey_off + 8), b[wkey_off:wkey_off + 4])),
         "trie state": bad(lambda b: struct.pack_into(
-            "<i", b, next_off, 1 << 30)),
+            "<Q", b, keys_off, n_states << 32)),
         "duplicate trie step": bad(lambda b: b.__setitem__(
             slice(keys_off + 8, keys_off + 16), b[keys_off:keys_off + 8])),
         "final state": bad(lambda b: struct.pack_into(
@@ -271,6 +274,10 @@ def test_bad_image_raises_value_error(env):
         "duplicate final state": bad(lambda b: b.__setitem__(
             slice(final_off + 4, final_off + 8), b[final_off:final_off + 4])),
         "ctx kind": bad(lambda b: b.__setitem__(kind_off + 1, 4)),
+        "term id": bad(lambda b: struct.pack_into("<q", b, tid_off, n + 1)),
+        "subname id 0": bad(lambda b: struct.pack_into("<q", b, nd_off, 0)),
+        "subname id": bad(lambda b: struct.pack_into(
+            "<q", b, nd_off, n + 1)),
     }
     for case, img in cases.items():
         with pytest.raises(ValueError, match="bad KB image"):
@@ -296,29 +303,42 @@ def test_missing_kernel_raises_unless_disabled(monkeypatch, tmp_path):
 
 
 def test_corrupted_image_never_crashes(env):
-    """Seeded byte flips anywhere in the image: each wrap either raises
-    ValueError or yields an image the kernel scans without crashing
-    (rows or Fallback).  Run under ASan/UBSan by test_sanitizers.py."""
+    """Seeded byte flips in the image: each wrap either raises ValueError
+    or yields an image the kernel scans without crashing (rows or
+    Fallback).  A third of the flips hit the header and section table, a
+    third the row ids and trie steps the stages read unchecked once the
+    image is wrapped (``term_ids``, ``nd_ids``, ``t_keys``), a third
+    anywhere.  Run under ASan/UBSan by test_sanitizers.py."""
     bundle, atm, lang, kb_rows = env
     image = ckernel.kb_image(bundle, atm)
     ck = ckernel._load()
     text = gen_pages(kb_rows, n_pages=1, seed=3)[0]["text"]
     head = 16 + 16 * len(ckernel._SECTIONS)
+    trusted = [_section(image, s) for s in ("term_ids", "nd_ids", "t_keys")]
     rng = random.Random(9)
-    n_ok = 0
+    n_ok = n_ok_trusted = 0
     for _ in range(300):
         b = bytearray(image)
+        hit_trusted = False
         for _ in range(rng.randint(1, 4)):
-            # the header and table half the time, the sections otherwise
-            pos = rng.randrange(head if rng.random() < 0.5 else len(b))
+            r = rng.random()
+            if r < 1 / 3:
+                pos = rng.randrange(head)
+            elif r < 2 / 3:
+                off, nbytes = rng.choice(trusted)
+                pos = off + rng.randrange(nbytes)
+                hit_trusted = True
+            else:
+                pos = rng.randrange(len(b))
             b[pos] ^= 1 << rng.randrange(8)
         try:
             handle = ck.wrap_image(bytes(b))
         except ValueError:
             continue
         n_ok += 1
+        n_ok_trusted += hit_trusted
         ckernel.scan_resolve(handle, text, as_tuples=True)
-    assert n_ok > 0
+    assert n_ok > 0 and n_ok_trusted > 0
 
 
 def test_extraction_reads_only_the_image(env, monkeypatch):
@@ -360,3 +380,27 @@ def test_extraction_reads_only_the_image(env, monkeypatch):
         None if text == texts[3] else real(img, text, *a, **k)))
     assert list(resolved_docs(urls, texts, image)) == want
     assert decoded == [image.value]
+
+
+def test_qid_image_refused_at_wrap(env):
+    """A ``qid_mode`` compile (automaton values are Q-id numbers, not KB
+    rows: an export form) compiles and serializes, but its image fails
+    the wrap's row-id check, so extraction over it raises ValueError up
+    front instead of falling back to a Python path that indexes the KB
+    with a Q-id (IndexError)."""
+    from types import SimpleNamespace
+
+    from ner_spark.kb.build import compile_gazetteer
+    from ner_spark.pipeline.ner import resolved_docs
+
+    _, _, lang, kb_rows = env
+    rows = [dict(r, qid=f"Q{1000 + r['id']}") for r in kb_rows]
+    bundle, atm = compile_gazetteer(rows, qid_mode=True)
+    image = ckernel.kb_image(bundle, atm)
+    with pytest.raises(ValueError, match="bad KB image"):
+        ckernel._load().wrap_image(image)
+    text = gen_pages(kb_rows, n_pages=1, seed=13)[0]["text"]
+    with pytest.raises(ValueError, match="bad KB image"):
+        list(resolved_docs(["u"], [text], SimpleNamespace(value=image)))
+    with pytest.raises(ValueError, match="bad KB image"):
+        ckernel.try_scan_resolve(bundle, atm, text, lang=lang)
