@@ -11,8 +11,8 @@
     the C kernel's KB image, the only serialized form of either, and
     broadcasts it — the replacement for the reference's shared-memory KB
     daemon (ner/kb_daemon.py:30-61) and ``.dct`` file.  A worker reads
-    the image; only a Python fallback decodes the bundle and the
-    automaton from it (``ckernel.image_bundle``/``image_automaton``).
+    the image; only a configuration the kernel does not cover decodes the
+    bundle and the automaton from it (``ckernel.image_bundle``/``image_automaton``).
     The scored KB is one driver-local Arrow table; a KB of millions of
     rows is served from the file-backed artifact instead;
   * :func:`save_kb_artifact` / :func:`load_kb_artifact` persist that

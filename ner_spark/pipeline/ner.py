@@ -5,10 +5,10 @@ scan + disambiguation + coreference — is ONE narrow ``mapInArrow`` stage
 over the pages table.  The reference has no cross-document state
 (ner.py:837-856 resets per doc), so this stage needs **zero shuffles**: one
 Arrow batch in, one Arrow batch of mention rows out, the C kernel reading
-the broadcast KB image in place (a document that falls back to Python
-decodes the bundle and the automaton from the same image).  Everything
-relational (dedup, co-mention join, canonicalization) happens downstream on
-the much smaller mentions/triples tables.
+the broadcast KB image in place (a configuration the kernel does not cover
+decodes the bundle and the automaton from the same image and resolves in
+Python).  Everything relational (dedup, co-mention join, canonicalization)
+happens downstream on the much smaller mentions/triples tables.
 
 Its workers never load pandas: they read a batch with ``to_pylist()``
 and emit one built from buffers by :func:`arrow_batch` (pyarrow's
@@ -135,22 +135,30 @@ def resolved_docs(urls, texts, image_bc, lang: str = "en",
     (the artifact's ``scan_config``); see :func:`extract_mentions`.
 
     ``image_bc`` is the artifact's one broadcast, the KB image (anything
-    with a ``.value``).  The C kernel reads it in place; the first time a
-    document falls back to Python, the bundle and the automaton are
-    decoded from it (``ckernel.image_bundle``/``image_automaton``)."""
+    with a ``.value``).  The path is chosen once, from the configuration:
+    where ``ckernel.covers`` admits it, the C kernel reads the image in
+    place and resolves every document; otherwise the bundle and the
+    automaton are decoded from it (``ckernel.image_bundle``/
+    ``image_automaton``) for ``resolve_in_python``.  Whenever the kernel
+    is loaded, the image is checked (``ckernel.wrap_image``) before the
+    first document on either path, so a bad image, such as a
+    ``qid_mode`` export compile, raises ValueError up front;
+    ``NER_SPARK_CKERNEL=0`` skips that check."""
     from ner_spark.semantics import ckernel
     from ner_spark.semantics.lang import get_lang
     from ner_spark.semantics.recognize import resolve_in_python
     from ner_spark.semantics.textnorm import apply_scan_modes
 
     lang_mod, img = get_lang(lang), image_bc.value
-    image = (ckernel.wrap_image(img)
-             if ckernel.covers(lang_mod, find_names) else None)
+    # the wrap checks the image, so a bad one fails here on either path
+    image = ckernel.wrap_image(img) if ckernel.available() else None
+    on_kernel = ckernel.covers(lang_mod, find_names)
     for url, text in zip(urls, texts):
         text, scan_text = apply_scan_modes(text, lowercase, deaccent)
-        rows = None if image is None else ckernel.scan_resolve(
-            image, text, scan_text, as_tuples=True)
-        if rows is None:
+        if on_kernel:
+            rows = ckernel.scan_resolve(image, text, scan_text,
+                                        as_tuples=True)
+        else:
             rows = resolve_in_python(
                 ckernel.image_bundle(img), ckernel.image_automaton(img), text,
                 scan_text, find_names=find_names, lang=lang_mod,

@@ -25,12 +25,13 @@
  *     Context, disambiguation, coreference, the nearby filter, output
  *     rows.
  *
- * Anything this file cannot faithfully reproduce raises _resolve_ck.Fallback
- * and the wrapper re-runs the pure-Python path for that document.
- * Fallback means an unsupported state, never a bad id: wrap_image bounds
- * every row id in the image (term_ids in [0, n], nd_ids in [1, n]), so
- * every sense, candidate and partial-match id a stage reads is a KB row
- * and the stages index the row arrays with it directly.
+ * The kernel is total on that surface: it resolves every document and
+ * never hands one back to Python.  wrap_image bounds every row id in the
+ * image (term_ids in [0, n], nd_ids in [1, n]), so every sense, candidate
+ * and partial-match id a stage reads is a KB row and the stages index the
+ * row arrays with it directly; senses and partial matches are never 0
+ * (the scan drops 0, nd_ids start at 1), so every preferred sense a stage
+ * sets is truthy.
  */
 
 #define PY_SSIZE_T_CLEAN
@@ -46,8 +47,6 @@
 #include <vector>
 
 using std::vector;
-
-static PyObject *FallbackError;  // _resolve_ck.Fallback
 
 // ---------------------------------------------------------------------------
 // UCS4 string helpers (all text handled as Py_UCS4 arrays)
@@ -642,7 +641,7 @@ struct Context {
     // are ever read (context.py:331-342)
     int32_t last_male = -1, last_female = -1, last_unknown_gender = -1;
 
-    bool init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats);
+    void init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats);
     void recompute_paragraph_offset(int64_t start);
     void update(Doc &d, int32_t mi);
     double mentioned_in_par(int32_t name_sid, uint32_t field);
@@ -733,7 +732,7 @@ static U32 right_sentence(const Doc &d, const Mention &m) {
 // Context implementation (resolve.py Context)
 // ---------------------------------------------------------------------------
 
-bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
+void Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
     kb = d.kb;
     paragraphs = d.paragraphs;
     par.clear();
@@ -772,12 +771,11 @@ bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
                 Mention &m = d.men[(size_t)e.idx];
                 m.begin_of_paragraph = par_off;
                 if (!m.poorly_disambiguated) {
-                    Pref p = m.pref;
-                    if (p.tag == P_MEN) p = d.men[(size_t)p.v].pref;
-                    // "pref is a KB line id here" (Context.__init__); a
-                    // None or a Mention would crash the Python twin
-                    if (p.tag != P_INT) return false;
-                    int64_t line = p.v;
+                    // "pref is a KB line id here" (Context.__init__): a
+                    // mention stops being poorly disambiguated only where
+                    // a KB id is stored (dwoc, dwc, fix_poor), and no
+                    // Mention pref exists before the coref stage
+                    int64_t line = m.pref.v;
                     Str t = kb->str(kb->type_sid[(size_t)line]);
                     uint32_t fk = t.empty() ? 0 : (uint32_t)t.back();
                     Bucket &b = ps.fields[fk];
@@ -815,7 +813,6 @@ bool Context::init(Doc &d, const vector<ED> &ed, const vector<int32_t> &nats) {
             ent_index++;
         }
     }
-    return true;
 }
 
 // resolve.py Context.recompute_paragraph_offset — forward-only paragraph
@@ -959,12 +956,12 @@ static void en_sense_rules(const Doc &d, Mention &m) {
 }
 
 // resolve.py disambiguate_without_context
-static bool dwoc(Doc &d, Register &reg, int32_t mi) {
+static void dwoc(Doc &d, Register &reg, int32_t mi) {
     const KBImage *kb = d.kb;
     Mention &m = d.men[(size_t)mi];
     if ((m.flags & FL_PRON_ANY) || !m.pms.empty()) {
         m.is_coreference = true;
-        return true;
+        return;
     }
     en_sense_rules(d, m);
 
@@ -1070,28 +1067,17 @@ static bool dwoc(Doc &d, Register &reg, int32_t mi) {
 
     if (m.senses.size() > 1) ordered_dedup(m.senses);
     m.candidates = m.senses;
-    if (m.candidates.empty()) return true;
+    if (m.candidates.empty()) return;
     if (m.candidates.size() == 1) {
         set_preferred(d, reg, mi, Pref{P_INT, m.candidates[0]});
         m.poorly_disambiguated = false;
     } else if (m.score.empty()) {
         set_preferred(d, reg, mi, Pref{P_INT, m.candidates[0]});
     }
-    if (!pref_truthy(m.pref)) {  // dead in practice
-        // Python APPENDS to the existing lists here; reachable only with
-        // empty ones (see resolve.py comment) — anything else → fallback
-        if (!m.score.empty() || !m.static_score.empty()) return false;
-        for (int64_t c : m.candidates) {
-            double st = kb->score[(size_t)c];
-            m.static_score.push_back(st);
-            m.score.push_back(st);
-        }
-        size_t best = 0;
-        for (size_t i = 1; i < m.score.size(); i++)
-            if (m.score[i] > m.score[best]) best = i;
-        set_preferred(d, reg, mi, Pref{P_INT, m.candidates[best]});
-    }
-    return true;
+    // resolve.py's `if not m.has_preferred_sense()` block is dead: only
+    // dwc fills score, and dwoc runs again only on mentions that were
+    // coreferences (dwc skips those), so one of the branches above has
+    // just set a sense id, which is never 0
 }
 
 // resolve.py disambiguate_with_context
@@ -1207,7 +1193,7 @@ static Pref nearest_entity_sense(Doc &d, const Mention &m,
 }
 
 // resolve.py fix_poor_disambiguation
-static bool fix_poor(Doc &d, Register &reg, const vector<int32_t> &entities) {
+static void fix_poor(Doc &d, Register &reg, const vector<int32_t> &entities) {
     // strong keyed by source content (== source_id) / by raw sense
     std::unordered_map<int32_t, vector<int32_t>> strong;       // srcid → ents
     std::unordered_map<int64_t, vector<int32_t>> strong_by_id; // sense → ents
@@ -1217,20 +1203,10 @@ static bool fix_poor(Doc &d, Register &reg, const vector<int32_t> &entities) {
     for (int32_t mi : ents) {
         Mention &e = d.men[(size_t)mi];
         if (e.poorly_disambiguated) continue;
-        int32_t ent;
-        int64_t sense_key;
-        if (e.pref.tag == P_MEN) {
-            ent = (int32_t)e.pref.v;
-            const Pref &p2 = d.men[(size_t)ent].pref;
-            if (p2.tag == P_MEN) return false;  // 2-level chain: Python
-            // would key the dict by a Mention object — not supported
-            sense_key = p2.tag == P_NONE ? SENSE_NONE : p2.v;
-        } else {
-            ent = mi;
-            sense_key = e.pref.tag == P_NONE ? SENSE_NONE : e.pref.v;
-        }
-        strong[e.source_id].push_back(ent);
-        strong_by_id[sense_key].push_back(ent);
+        // a strong entity's pref is a KB id: Mention prefs are only set
+        // by the coref stage, which runs after this one
+        strong[e.source_id].push_back(mi);
+        strong_by_id[e.pref.v].push_back(mi);
     }
     for (int32_t mi : ents) {
         Mention &e = d.men[(size_t)mi];
@@ -1254,12 +1230,11 @@ static bool fix_poor(Doc &d, Register &reg, const vector<int32_t> &entities) {
             }
         }
     }
-    return true;
 }
 
 // resolve.py resolve_coreferences (print_all always False here —
 // the C kernel serves mode="default" only)
-static bool resolve_corefs(Doc &d, Context &ctx, Register &reg,
+static void resolve_corefs(Doc &d, Context &ctx, Register &reg,
                            const vector<int32_t> &entities) {
     const KBImage *kb = d.kb;
     for (int32_t mi : entities) {
@@ -1302,20 +1277,19 @@ static bool resolve_corefs(Doc &d, Context &ctx, Register &reg,
                 } else if (!e.senses.empty()) {
                     e.is_coreference = false;
                     e.pms.clear();
-                    if (!dwoc(d, reg, mi)) return false;
+                    dwoc(d, reg, mi);
                     dwc(d, ctx, reg, mi);
                 }
             } else if (e.flags & FL_PRON_ANY) {
                 pronoun_coref(d, ctx, reg, mi);
             } else if (!e.senses.empty()) {
                 e.is_coreference = false;
-                if (!dwoc(d, reg, mi)) return false;
+                dwoc(d, reg, mi);
                 dwc(d, ctx, reg, mi);
             }
         }
         if (pref_truthy(d.men[(size_t)mi].pref)) ctx.update(d, mi);
     }
-    return true;
 }
 
 // ---------------------------------------------------------------------------
@@ -1456,98 +1430,88 @@ static PyObject *run_stages(Doc &d) {
                      [](const ED &a, const ED &b) { return a.start < b.start; });
 
     // stage 5: disambiguate without context (resolve_document)
-    for (int32_t mi : entities)
-        if (!dwoc(d, reg, mi)) goto fallback;
+    for (int32_t mi : entities) dwoc(d, reg, mi);
 
-    {
-        // stage 6: context pass 1 + scalar dwc sweep + fix_poor
-        Context ctx1;
-        if (!ctx1.init(d, ed, nationalities)) goto fallback;
-        for (int32_t mi : entities) dwc(d, ctx1, reg, mi);
-        if (!fix_poor(d, reg, entities)) goto fallback;
+    // stage 6: context pass 1 + scalar dwc sweep + fix_poor
+    Context ctx1;
+    ctx1.init(d, ed, nationalities);
+    for (int32_t mi : entities) dwc(d, ctx1, reg, mi);
+    fix_poor(d, reg, entities);
 
-        // stage 7: fresh context + two coref passes (resolve_document)
-        Context ctx2;
-        if (!ctx2.init(d, ed, nationalities)) goto fallback;
-        vector<int32_t> name_corefs;
-        for (int32_t mi : entities) {
-            const Mention &e = d.men[(size_t)mi];
-            if (!(e.flags & FL_PRON_ANY) && !(e.flags & FL_THE_LOWER))
-                name_corefs.push_back(mi);
-        }
-        if (!resolve_corefs(d, ctx2, reg, name_corefs)) goto fallback;
-        if (!resolve_corefs(d, ctx2, reg, entities)) goto fallback;
+    // stage 7: fresh context + two coref passes (resolve_document)
+    Context ctx2;
+    ctx2.init(d, ed, nationalities);
+    vector<int32_t> name_corefs;
+    for (int32_t mi : entities) {
+        const Mention &e = d.men[(size_t)mi];
+        if (!(e.flags & FL_PRON_ANY) && !(e.flags & FL_THE_LOWER))
+            name_corefs.push_back(mi);
     }
+    resolve_corefs(d, ctx2, reg, name_corefs);
+    resolve_corefs(d, ctx2, reg, entities);
 
     // stage 8: resolve.py remove_nearby_entities (the proper-noun overlap
     // stage before it is the identity; see resolve_document)
     remove_nearby(d, entities);
 
-    {
-        vector<uint8_t> kept(d.men.size(), 0);
-        for (int32_t mi : entities) kept[(size_t)mi] = 1;
+    vector<uint8_t> kept(d.men.size(), 0);
+    for (int32_t mi : entities) kept[(size_t)mi] = 1;
 
-        // stage 9: final default-mode filter + output (resolve_document)
-        PyObject *out = PyList_New(0);
-        if (!out) return NULL;
-        for (const ED &e : ed) {
-            PyObject *row = NULL;
-            int64_t start, end;
-            if (e.is_date) {
-                const DateM &dm = d.dates[(size_t)e.idx];
-                start = dm.start;
-                end = dm.end;
-                Py_ssize_t pi = bisect_right(d.paragraphs, start) - 1;
-                row = Py_BuildValue(
-                    "(llLOOOOi)", (long)start, (long)end,
-                    (long long)d.paragraphs[(size_t)pi],
-                    s_date, dm.source, Py_None,
-                    dm.iso_out, (int)dm.conf);
-            } else {
-                if (!kept[(size_t)e.idx]) continue;
-                Mention &m = d.men[(size_t)e.idx];
-                if (!pref_truthy(m.pref)) continue;  // default-mode filter
-                start = m.start;
-                end = m.end;
-                Py_ssize_t pi = bisect_right(d.paragraphs, start) - 1;
-                // text slice with \n→' ' and \r dropped
-                U32 buf;
-                buf.reserve((size_t)(end - start));
-                for (int64_t o = start; o < end; o++) {
-                    Py_UCS4 c = d.text[(size_t)o];
-                    if (c == '\n') buf.push_back(' ');
-                    else if (c != '\r') buf.push_back(c);
-                }
-                PyObject *txt = PyUnicode_FromKindAndData(
-                    PyUnicode_4BYTE_KIND, buf.data(), (Py_ssize_t)buf.size());
-                if (!txt) { Py_DECREF(out); return NULL; }
-                // get_preferred_sense: one hop through a Mention pref
-                Pref p = m.pref;
-                if (p.tag == P_MEN) p = d.men[(size_t)p.v].pref;
-                PyObject *sense;
-                if (p.tag == P_INT) sense = PyLong_FromLongLong(p.v);
-                else { sense = Py_None; Py_INCREF(Py_None); }
-                row = Py_BuildValue(
-                    "(llLONNOO)", (long)start, (long)end,
-                    (long long)d.paragraphs[(size_t)pi],
-                    m.is_coreference ? s_coref : s_kb, txt, sense, Py_None,
-                    Py_None);
+    // stage 9: final default-mode filter + output (resolve_document)
+    PyObject *out = PyList_New(0);
+    if (!out) return NULL;
+    for (const ED &e : ed) {
+        PyObject *row = NULL;
+        int64_t start, end;
+        if (e.is_date) {
+            const DateM &dm = d.dates[(size_t)e.idx];
+            start = dm.start;
+            end = dm.end;
+            Py_ssize_t pi = bisect_right(d.paragraphs, start) - 1;
+            row = Py_BuildValue(
+                "(llLOOOOi)", (long)start, (long)end,
+                (long long)d.paragraphs[(size_t)pi],
+                s_date, dm.source, Py_None,
+                dm.iso_out, (int)dm.conf);
+        } else {
+            if (!kept[(size_t)e.idx]) continue;
+            Mention &m = d.men[(size_t)e.idx];
+            if (!pref_truthy(m.pref)) continue;  // default-mode filter
+            start = m.start;
+            end = m.end;
+            Py_ssize_t pi = bisect_right(d.paragraphs, start) - 1;
+            // text slice with \n→' ' and \r dropped
+            U32 buf;
+            buf.reserve((size_t)(end - start));
+            for (int64_t o = start; o < end; o++) {
+                Py_UCS4 c = d.text[(size_t)o];
+                if (c == '\n') buf.push_back(' ');
+                else if (c != '\r') buf.push_back(c);
             }
-            if (!row) { Py_DECREF(out); return NULL; }
-            if (PyList_Append(out, row) < 0) {
-                Py_DECREF(row);
-                Py_DECREF(out);
-                return NULL;
-            }
-            Py_DECREF(row);
+            PyObject *txt = PyUnicode_FromKindAndData(
+                PyUnicode_4BYTE_KIND, buf.data(), (Py_ssize_t)buf.size());
+            if (!txt) { Py_DECREF(out); return NULL; }
+            // get_preferred_sense: one hop through a Mention pref
+            Pref p = m.pref;
+            if (p.tag == P_MEN) p = d.men[(size_t)p.v].pref;
+            PyObject *sense;
+            if (p.tag == P_INT) sense = PyLong_FromLongLong(p.v);
+            else { sense = Py_None; Py_INCREF(Py_None); }
+            row = Py_BuildValue(
+                "(llLONNOO)", (long)start, (long)end,
+                (long long)d.paragraphs[(size_t)pi],
+                m.is_coreference ? s_coref : s_kb, txt, sense, Py_None,
+                Py_None);
         }
-        return out;
+        if (!row) { Py_DECREF(out); return NULL; }
+        if (PyList_Append(out, row) < 0) {
+            Py_DECREF(row);
+            Py_DECREF(out);
+            return NULL;
+        }
+        Py_DECREF(row);
     }
-
-fallback:
-    if (PyErr_Occurred()) return NULL;  // real error beats Fallback
-    PyErr_SetString(FallbackError, "unsupported state; use the Python path");
-    return NULL;
+    return out;
 }
 
 // ---------------------------------------------------------------------------
@@ -1800,9 +1764,6 @@ static struct PyModuleDef moduledef = {
 PyMODINIT_FUNC PyInit__resolve_ck(void) {
     PyObject *m = PyModule_Create(&moduledef);
     if (!m) return NULL;
-    FallbackError = PyErr_NewException("_resolve_ck.Fallback", NULL, NULL);
-    Py_INCREF(FallbackError);
-    PyModule_AddObject(m, "Fallback", FallbackError);
     PyModule_AddIntConstant(m, "IMAGE_VERSION", IMAGE_VERSION);
     s_kb = PyUnicode_InternFromString("kb");
     s_coref = PyUnicode_InternFromString("coref");

@@ -32,8 +32,9 @@ skips any word with no step from the root via one dict probe, and extends
 a match with one int-keyed probe per word.  Observably equivalent to the
 char-trie walk: values only exist at word ends, and a state with no step
 for the next word can never be completed (same backtrack point).  This
-class is the Python path (fallback and fuzz oracle) and the one source of
-the C kernel's trie: ``ckernel.kb_image`` serializes its three fields into
+class is the Python path (configurations the kernel does not cover, and
+its fuzz oracle) and the one source of the C kernel's trie:
+``ckernel.kb_image`` serializes its three fields into
 the flat KB image, the Spark analogue of the reference's memory-mapped
 ``.dct`` automaton file (figa/src/figa.cpp:22-31), and
 ``ckernel.image_automaton`` decodes them back — the image is the only

@@ -12,7 +12,7 @@ and exposes:
     image_automaton(image) -> automaton     the trie back, numpy only
     image_bundle(image) -> bundle           the KB bundle back, numpy only
     wrap_image(image) -> handle             checks the image, builds probes
-    scan_resolve(handle, text, ...) -> rows | None
+    scan_resolve(handle, text, ...) -> rows
     try_scan_resolve(bundle, automaton, text, ...) -> rows | None
 
 The KB image is the kernel's whole KB: the bundle's columns, the subname,
@@ -20,21 +20,22 @@ nationality-form and pronoun tables, and the automaton as a word-id trie,
 in one flat, position-independent buffer, the only serialized form of
 the bundle and the automaton.  ``compile_kb`` builds it once and
 broadcasts it; a worker wraps it zero-copy and decodes the bundle and the
-automaton from it only when a document falls back to Python.
+automaton from it only for a configuration the kernel does not cover.
 ``try_scan_resolve`` serves direct object callers: it builds the image
 lazily and caches it on the bundle (``_ck_image``, never pickled).
 ``wrap_image`` checks the image once — every section bound, string id,
 enum and KB row id — and refuses a bad one with ValueError; an image whose
 automaton values are not KB rows (a ``qid_mode`` export compile) is
-refused there, so extraction over it on the kernel's path fails up front.
+refused there, and extraction wraps the image on either path while the
+kernel is loaded, so extraction over such an image fails up front.
 
-``None`` means "take the pure-Python path" — the kernel covers exactly the
-Spark production surface (mode="default", lang="en", find_names=False) and
-raises ``Fallback`` for any state it cannot reproduce bug-for-bug (never
-for a bad id: the wrap bounded every id the stages read); the
-callers (recognize.scan_and_resolve, pipeline.ner.resolved_docs) then run
-``recognize.resolve_in_python``.  Parity is pinned by the differential
-fuzz test (tests/test_ckernel.py) and the byte-identical reference goldens.
+The kernel covers exactly the Spark production surface (mode="default",
+lang="en", find_names=False; :func:`covers`) and resolves every document
+on it.  The callers (recognize.scan_and_resolve,
+pipeline.ner.resolved_docs) choose the path once per call from the
+configuration alone and run ``recognize.resolve_in_python`` where the
+kernel does not cover it.  Parity is pinned by the differential fuzz test
+(tests/test_ckernel.py) and the byte-identical reference goldens.
 
 Division of labor: Python keeps everything that needs re / dateutil /
 unicodedata — date detection with pre-rendered ISO strings, paragraph
@@ -416,19 +417,11 @@ def covers(lang, find_names=False, mode="default") -> bool:
 
 def scan_resolve(image, text, scan_text=None, as_tuples=False):
     """Fused scan+resolve in C over a wrapped image (:func:`wrap_image`)
-    for a configuration :func:`covers` admits.  Returns rows, or None when
-    this document raises ``Fallback`` (the caller runs
-    ``recognize.resolve_in_python``)."""
-    ck = _load()
-    dates = _dates_for(text)
-    paragraphs = offsets_of_paragraphs(text)
-    try:
-        rows = ck.scan_resolve_doc(
-            image, text,
-            None if scan_text is None or scan_text is text else scan_text,
-            dates, paragraphs, _frag_helper)
-    except ck.Fallback:
-        return None
+    for a configuration :func:`covers` admits: the document's rows."""
+    rows = _load().scan_resolve_doc(
+        image, text,
+        None if scan_text is None or scan_text is text else scan_text,
+        _dates_for(text), offsets_of_paragraphs(text), _frag_helper)
     if as_tuples:
         return rows
     return [dict(zip(ROW_FIELDS, r)) for r in rows]
@@ -438,8 +431,8 @@ def try_scan_resolve(kb, atm, text, scan_text=None, find_names=False,
                      mode="default", lang=None, as_tuples=False):
     """:func:`scan_resolve` for object callers: the image of ``kb`` +
     ``atm`` is built on first use and cached on the bundle (``_ck_*``
-    never rides a pickle).  Returns None when the kernel does not cover
-    this configuration or this document."""
+    never rides a pickle).  Returns None only when the kernel does not
+    cover this configuration (:func:`covers`)."""
     if not covers(lang, find_names, mode):
         return None
     cached = kb.__dict__.get("_ck_image")

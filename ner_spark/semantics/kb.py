@@ -23,8 +23,8 @@ Brand-new code reproducing the reference's KB semantics:
 
 The bundle is a plain picklable object.  The Spark pipeline broadcasts it
 inside the C kernel's flat KB image, with the automaton (ckernel.py
-``kb_image``); a Python worker decodes it from the image only when a
-document falls back to Python — the replacement for the reference's POSIX
+``kb_image``); a Python worker decodes it from the image only for a
+configuration the kernel does not cover — the replacement for the reference's POSIX
 shared-memory KB daemon (ner/kb_daemon.py:30-61, SURVEY S5); SCALE.md
 "Memory and spill" has the per-worker bytes.
 """

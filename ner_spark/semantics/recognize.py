@@ -8,8 +8,9 @@ stages b-k (ner.py:576-714), optionally with unknown-name discovery
 (``-n``).  :func:`scan_and_resolve` is the per-document call on KB
 objects (the CLI reaches it through :func:`recognize`): it runs the fused C
 kernel when that covers the configuration and :func:`resolve_in_python`
-otherwise.  Batch and streaming (``pipeline.ner.resolved_docs``) make the
-same choice on the broadcast KB image.  The Spark pipeline is
+otherwise; the configuration alone decides, never the document.  Batch
+and streaming (``pipeline.ner.resolved_docs``) make the same choice on the
+broadcast KB image.  The Spark pipeline is
 parity-tested against :func:`recognize` (SURVEY §5.1).
 """
 
@@ -40,11 +41,9 @@ def scan_and_resolve(
     identical by the ckernel differential suite."""
     from . import ckernel
 
-    rows = ckernel.try_scan_resolve(
-        kb, automaton, text, scan_text, find_names=find_names, mode=mode,
-        lang=lang, as_tuples=as_tuples)
-    if rows is not None:
-        return rows
+    if ckernel.covers(lang, find_names, mode):
+        return ckernel.try_scan_resolve(
+            kb, automaton, text, scan_text, lang=lang, as_tuples=as_tuples)
     return resolve_in_python(
         kb, automaton, text, scan_text, find_names=find_names, mode=mode,
         lang=lang, as_tuples=as_tuples, names_strict=names_strict)
@@ -62,7 +61,8 @@ def resolve_in_python(
     names_strict: bool = False,
 ) -> list:
     """The pure-Python path: ``automaton.scan`` + :func:`resolve_document`
-    — the kernel's fallback and its fuzz oracle."""
+    — every configuration the kernel does not cover, and its fuzz
+    oracle."""
     matches = automaton.scan(scan_text if scan_text is not None else text)
     return resolve_document(
         text, [(m.ids, m.start, m.end, m.fragment) for m in matches], kb,

@@ -155,6 +155,8 @@ def test_uncovered_surfaces_fall_through(env):
         bundle, atm, "text", mode="all", lang=lang) is None
     assert ckernel.try_scan_resolve(
         bundle, atm, "text", lang=lang, as_tuples=True) is not None
+    # the configuration alone decides: the kernel declines no document
+    assert not hasattr(ckernel._load(), "Fallback")
 
 
 def test_force_disable_roundtrip(env):
@@ -304,8 +306,8 @@ def test_missing_kernel_raises_unless_disabled(monkeypatch, tmp_path):
 
 def test_corrupted_image_never_crashes(env):
     """Seeded byte flips in the image: each wrap either raises ValueError
-    or yields an image the kernel scans without crashing (rows or
-    Fallback).  A third of the flips hit the header and section table, a
+    or yields an image the kernel scans without crashing into a list of
+    rows.  A third of the flips hit the header and section table, a
     third the row ids and trie steps the stages read unchecked once the
     image is wrapped (``term_ids``, ``nd_ids``, ``t_keys``), a third
     anywhere.  Run under ASan/UBSan by test_sanitizers.py."""
@@ -337,15 +339,16 @@ def test_corrupted_image_never_crashes(env):
             continue
         n_ok += 1
         n_ok_trusted += hit_trusted
-        ckernel.scan_resolve(handle, text, as_tuples=True)
+        assert isinstance(ckernel.scan_resolve(handle, text, as_tuples=True),
+                          list)
     assert n_ok > 0 and n_ok_trusted > 0
 
 
 def test_extraction_reads_only_the_image(env, monkeypatch):
-    """resolved_docs reads one broadcast, the KB image: when the kernel
-    covers every document, no bundle is decoded; a document that falls
-    back decodes the bundle and the automaton from the image, and its
-    rows equal the pure-Python path's on the compiled bundle."""
+    """resolved_docs reads one broadcast, the KB image: on the kernel's
+    path no bundle is decoded; on the pure-Python path the bundle and the
+    automaton are decoded from the image, and the rows equal the
+    kernel's and those of the pure-Python path on the compiled bundle."""
     from types import SimpleNamespace
 
     from ner_spark.pipeline.ner import resolved_docs
@@ -373,21 +376,14 @@ def test_extraction_reads_only_the_image(env, monkeypatch):
         resolve_in_python(bundle, atm, t, lang=lang, as_tuples=True)
         for t in texts]
 
-    # one document falls back: only it decodes, rows still equal
-    decoded.clear()
-    real = ckernel.scan_resolve
-    monkeypatch.setattr(ckernel, "scan_resolve", lambda img, text, *a, **k: (
-        None if text == texts[3] else real(img, text, *a, **k)))
-    assert list(resolved_docs(urls, texts, image)) == want
-    assert decoded == [image.value]
-
 
 def test_qid_image_refused_at_wrap(env):
     """A ``qid_mode`` compile (automaton values are Q-id numbers, not KB
     rows: an export form) compiles and serializes, but its image fails
-    the wrap's row-id check, so extraction over it raises ValueError up
-    front instead of falling back to a Python path that indexes the KB
-    with a Q-id (IndexError)."""
+    the wrap's row-id check, so extraction over it raises ValueError
+    before the first document, also for a configuration the kernel does
+    not cover (cs, ``find_names``), instead of a Python path that indexes
+    the KB with a Q-id (IndexError)."""
     from types import SimpleNamespace
 
     from ner_spark.kb.build import compile_gazetteer
@@ -400,7 +396,11 @@ def test_qid_image_refused_at_wrap(env):
     with pytest.raises(ValueError, match="bad KB image"):
         ckernel._load().wrap_image(image)
     text = gen_pages(kb_rows, n_pages=1, seed=13)[0]["text"]
-    with pytest.raises(ValueError, match="bad KB image"):
-        list(resolved_docs(["u"], [text], SimpleNamespace(value=image)))
+    for kw in ({}, {"lang": "cs"}, {"find_names": True}):
+        texts = iter([text])
+        with pytest.raises(ValueError, match="bad KB image"):
+            list(resolved_docs(["u"], texts, SimpleNamespace(value=image),
+                               **kw))
+        assert next(texts, None) == text  # no document was read
     with pytest.raises(ValueError, match="bad KB image"):
         ckernel.try_scan_resolve(bundle, atm, text, lang=lang)

@@ -10,7 +10,8 @@ Prints ONE JSON line with MB-chars/s for scan-only and scan+resolve, plus
 the KB image's size, build seconds and wrap seconds (what one worker pays
 before its first document), the seconds to decode the automaton
 (``image_decode_s``) and the bundle (``bundle_decode_s``) from it (what a
-worker's first Python fallback pays), and ``arrow_build_s``: the extraction UDF's output step (transpose, then
+worker pays once for a configuration the kernel does not cover), and
+``arrow_build_s``: the extraction UDF's output step (transpose, then
 ``pipeline.ner.arrow_batch``) over the web fixture's ``arrow_rows`` rows.
 Usage: python tools/bench_kernel.py [n_mb] [--profile]
 """
