@@ -8,11 +8,13 @@ partitioned materialization with per-partition lineage.
 
 Layout
 ------
-semantics/   pure-Python reference semantics (no Spark imports) — shared by
-             the in-repo test oracle and the executor-side pandas UDFs.
-kb/          KB compile job: static scores, namelist, broadcast automaton.
+semantics/   reference semantics (no Spark imports): the pure-Python
+             resolver, the test oracle, and the C scan+resolve kernel that
+             the executor-side ``mapInArrow`` UDFs run.
+kb/          KB compile job: static scores, namelist, the KB image (the
+             job's only broadcast).
 pipeline/    the Spark pipeline: mention scan, resolve, triples, lineage.
-io/          table catalog (Iceberg if jars present, else parquet+manifest).
+io/          bucketed parquet writes with a lineage sidecar, KB.tsv, WARC.
 textops/     large-scale training-data ops: dedup, quality, lang-id, tokens.
 similarity/  embedding ANN: brute-force cosine top-k, LSH buckets.
 multimodal/  binary-column plumbing (decode stubbed, schema/batching real).

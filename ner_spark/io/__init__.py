@@ -1,1 +1,1 @@
-"""Table materialization: Iceberg when available, parquet+manifest fallback."""
+"""Table materialization: bucketed parquet writes with a lineage sidecar."""

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from ner_spark.pipeline.cc import union_find
 from ner_spark.semantics.automaton import GazetteerAutomaton
 from ner_spark.semantics.ckernel import IMAGE_VERSION, image_automaton, \
-    image_bundle, kb_image
+    image_bundle, kb_image, section_views
 from ner_spark.semantics.kb import (KB_COLUMNS, KBBundle,
                                     build_autocomplete_namelists,
                                     build_namelist, build_uri_namelist,
@@ -142,13 +142,12 @@ MANIFEST_FORMAT = 3
 class KBArtifacts:
     """Everything the pipeline needs: relational KB, the KB image's
     broadcast, the driver's bundle (compiled, or decoded from a loaded
-    image) and the scan modes every scan of the automaton applies."""
+    image) and the scan modes every scan of the automaton applies.  The
+    automaton and the counts are read from the image."""
 
     kb_df: DataFrame          # with static scores and sameAs component
     image_bc: "object"        # Broadcast[bytes]: ckernel.kb_image
     bundle: KBBundle
-    n_entities: int
-    n_keys: int
     lowercase: bool = False   # -d: keys lowered, scan text lowered
     deaccent: bool = False    # -r: keys and working text accent-stripped
     lang: str = "en"          # language module of namelist + scan rules
@@ -160,6 +159,14 @@ class KBArtifacts:
     @property
     def automaton(self) -> GazetteerAutomaton:
         return image_automaton(self.image_bc.value)
+
+    @property
+    def n_entities(self) -> int:  # the image's row count
+        return int(section_views(self.image_bc.value)["meta"][0])
+
+    @property
+    def n_keys(self) -> int:  # the automaton's final states
+        return len(section_views(self.image_bc.value)["term_state"])
 
 
 def _transform_namelist(namelist: dict[str, list[int]], lowercase: bool,
@@ -175,8 +182,7 @@ def _transform_namelist(namelist: dict[str, list[int]], lowercase: bool,
 
     out: dict[str, list[int]] = {}
     for key, ids in namelist.items():
-        k, scan_k = apply_scan_modes(key, lowercase, deaccent)
-        k = scan_k if scan_k is not None else k
+        k = apply_scan_modes(key, lowercase, deaccent)[1]
         if not k:
             continue
         if k in out:
@@ -337,10 +343,7 @@ def compile_kb(spark: SparkSession, rows: list[dict],
     return KBArtifacts(
         kb_df=kb_df,
         image_bc=spark.sparkContext.broadcast(kb_image(bundle, automaton)),
-        bundle=bundle,
-        n_entities=bundle.n_rows(),
-        n_keys=automaton.n_keys,
-        lowercase=lowercase, deaccent=deaccent, lang=lang,
+        bundle=bundle, lowercase=lowercase, deaccent=deaccent, lang=lang,
     )
 
 
@@ -360,9 +363,9 @@ def save_kb_artifact(art: KBArtifacts, path: str,
                                  components (kb_df)
         <path>/kb_image.bin      the C kernel's KB image (ckernel.kb_image),
                                  the only serialized bundle and automaton
-        <path>/MANIFEST.json     layout format, counts, scan config,
-                                 image format and sha256, version
-                                 handshake key
+        <path>/MANIFEST.json     layout format, scan config, image
+                                 format and sha256, version handshake
+                                 key
 
     ``path`` is a driver-local or NFS directory: all three entries go
     through the local filesystem (``kb.parquet`` as a ``file://`` URI,
@@ -379,7 +382,6 @@ def save_kb_artifact(art: KBArtifacts, path: str,
         fh.write(art.image_bc.value)
     with open(os.path.join(path, "MANIFEST.json"), "w") as fh:
         json.dump({"manifest_format": MANIFEST_FORMAT,
-                   "n_entities": art.n_entities, "n_keys": art.n_keys,
                    "kb_version": kb_version, "image_format": IMAGE_VERSION,
                    "image_sha256": sha256(art.image_bc.value).hexdigest(),
                    **art.scan_config}, fh)
@@ -398,7 +400,8 @@ def load_kb_artifact(spark: SparkSession, path: str,
     another KB image format or with an ``image_sha256`` that is missing or
     not the image's (``wrap_image`` checks bounds, not content) raises:
     recompile.  The image is broadcast as is; the driver's bundle is
-    decoded from it."""
+    decoded from it.  The ``n_entities`` and ``n_keys`` that a MANIFEST
+    written before they were read from the image carries are ignored."""
     with open(os.path.join(path, "MANIFEST.json")) as fh:
         manifest = json.load(fh)
     for key, what, want in (("manifest_format", "MANIFEST", MANIFEST_FORMAT),
@@ -426,8 +429,6 @@ def load_kb_artifact(spark: SparkSession, path: str,
         kb_df=kb_df,
         image_bc=spark.sparkContext.broadcast(image),
         bundle=image_bundle(image),
-        n_entities=manifest["n_entities"],
-        n_keys=manifest["n_keys"],
         **{k: manifest[k] for k in SCAN_KEYS},
     )
 

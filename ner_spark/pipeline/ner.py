@@ -187,10 +187,9 @@ def scan_mentions(pages: DataFrame, artifacts: KBArtifacts,
             rows = []
             for url, text in zip(batch.column(0).to_pylist(),
                                  batch.column(1).to_pylist()):
-                text, scan_text = apply_scan_modes(text, lowercase, deaccent)
-                text = scan_text if scan_text is not None else text
+                scan_text = apply_scan_modes(text, lowercase, deaccent)[1]
                 rows += [(url, m.start, m.end, m.fragment, m.ids)
-                         for m in atm.scan(text)]
+                         for m in atm.scan(scan_text)]
             yield arrow_batch(list(zip(*rows)), schema)
 
     return src.mapInArrow(fn, SCAN_SCHEMA)

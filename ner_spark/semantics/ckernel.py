@@ -11,6 +11,7 @@ and exposes:
     kb_image(bundle, automaton) -> bytes    driver side, numpy only
     image_automaton(image) -> automaton     the trie back, numpy only
     image_bundle(image) -> bundle           the KB bundle back, numpy only
+    section_views(image) -> {name: array}   its sections, nothing decoded
     wrap_image(image) -> handle             checks the image, builds probes
     scan_resolve(handle, text, ...) -> rows
     try_scan_resolve(bundle, automaton, text, ...) -> rows | None
@@ -236,24 +237,24 @@ def kb_image(kb, automaton) -> bytes:
     sid = intern.__getitem__  # str → strtab id, interning on first use
 
     n = kb.n_rows()
-    tarr = kb.type_arr()
+    tarr = kb.type_arr
     sec = {
-        "score": kb.score_arr(),
-        "name_sid": [sid(x) for x in kb.name_arr()],
-        "country_sid": [sid(x) for x in kb.country_arr()],
+        "score": kb.score_arr,
+        "name_sid": [sid(x) for x in kb.name_arr],
+        "country_sid": [sid(x) for x in kb.country_arr],
         "type_sid": [sid(t) for t in tarr],
-        "ctx_char": [ord(c) if c else 0 for c in kb.ctx_char_arr()],
+        "ctx_char": [ord(c) if c else 0 for c in kb.ctx_char_arr],
         "gender": [1 if g == "M" else 2 if g == "F" else 0
-                   for g in kb.gender_arr()],
-        "person_flag": kb.person_flag_arr(),
-        "artist": kb.artist_flag_arr(),
-        "group": kb.group_flag_arr(),
-        "person_sub": kb.person_sub_flag_arr(),
-        "loc_sub": kb.loc_sub_flag_arr(),
-        "geo_sub": kb.geo_sub_flag_arr(),
+                   for g in kb.gender_arr],
+        "person_flag": kb.person_flag_arr,
+        "artist": kb.artist_flag_arr,
+        "group": kb.group_flag_arr,
+        "person_sub": kb.person_sub_flag_arr,
+        "loc_sub": kb.loc_sub_flag_arr,
+        "geo_sub": kb.geo_sub_flag_arr,
         "type_exact": [1 if t == "person" else 2 if t == "location" else 0
                        for t in tarr],
-        "ctx_kind": kb.ctx_kind_arr(),
+        "ctx_kind": kb.ctx_kind_arr,
         "verbs": [sid(v) for v in EN.verbs],
         "there_ctx": [sid(v) for v in EN_THERE_CONTEXTS],
     }
@@ -302,13 +303,18 @@ def kb_image(kb, automaton) -> bytes:
                      np.asarray(table, "<u8").tobytes(), *chunks])
 
 
-def _image_sections(image):
-    """An image's sections as numpy views, and strtab ids → strings."""
+def section_views(image) -> dict:
+    """An image's sections as numpy views, nothing decoded."""
     import numpy as np
 
     tab = np.frombuffer(image, "<u8", 2 * len(_SECTIONS), 16).tolist()
-    sec = {name: np.frombuffer(image, dt, n // np.dtype(dt).itemsize, pos)
-           for (name, dt), pos, n in zip(_SECTIONS, tab[::2], tab[1::2])}
+    return {name: np.frombuffer(image, dt, n // np.dtype(dt).itemsize, pos)
+            for (name, dt), pos, n in zip(_SECTIONS, tab[::2], tab[1::2])}
+
+
+def _image_sections(image):
+    """An image's sections as numpy views, and strtab ids → strings."""
+    sec = section_views(image)
     off = sec["str_off"].tolist()
     strtab = sec["str_blob"].tobytes().decode("utf-32-le", "surrogatepass")
     return sec, lambda ids: [strtab[off[s]:off[s + 1]] for s in ids.tolist()]

@@ -21,8 +21,8 @@ Brand-new code reproducing the reference's KB semantics:
     order, trailing 'N'); key suitability per namelist.py:968-1015 taking the
     ``derived_names`` branch of the unresolved merge conflict (SURVEY §1.4.5).
 
-The bundle is a plain picklable object.  The Spark pipeline broadcasts it
-inside the C kernel's flat KB image, with the automaton (ckernel.py
+The bundle is a plain picklable value.  The Spark pipeline ships it
+serialized in the C kernel's flat KB image, with the automaton (ckernel.py
 ``kb_image``); a Python worker decodes it from the image only for a
 configuration the kernel does not cover — the replacement for the reference's POSIX
 shared-memory KB daemon (ner/kb_daemon.py:30-61, SURVEY S5); SCALE.md
@@ -33,6 +33,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import cached_property
 from typing import Iterable, Sequence
 
 from .lang import EN, LangModule
@@ -163,41 +164,21 @@ def parse_aliases_with_ntypes(name: str, aliases: str) -> dict[str, str | None]:
 
 @dataclass
 class KBBundle:
-    """Columnar, broadcast-able KB snapshot (1-based ids; index 0 unused)."""
+    """Columnar KB snapshot (1-based ids; index 0 unused): the value of its
+    three fields.  The per-row arrays below are derived from ``cols`` on
+    first read and cached per process (index 0 carries the neutral value);
+    the resolvers index them instead of calling the accessors (~10 calls
+    per mention otherwise).  They stay lazy so a raw ``KBBundle(cols=...)``
+    over a subset of the columns stays valid.  Equality and pickling see
+    the three fields only."""
 
     cols: dict[str, list]  # column name → list indexed by id
     name_dict: dict[str, frozenset[int]] = field(default_factory=dict)
     nationality_forms: frozenset[str] = frozenset()
-    # per-process memo caches for hot derived values (candidates repeat
-    # heavily under a Zipf mention distribution); keys are KB line ids so
-    # the caches are bounded by n_rows — they fill lazily in each worker
-    # after broadcast unpickling and are never invalidated (KB immutable)
-    _nat_cache: dict = field(default_factory=dict, repr=False)
-    _dates_cache: dict = field(default_factory=dict, repr=False)
-    _multival_cache: dict = field(default_factory=dict, repr=False)
-    # hot-path derived arrays (type/score/name/gender by line id) — built
-    # lazily per process so raw `KBBundle(cols=...)` constructions (tests)
-    # stay valid; index 0 carries the neutral value.  The resolve kernel
-    # indexes these directly instead of bouncing through the accessor
-    # methods (~10 accessor calls per mention otherwise)
-    _type_arr: list = field(default_factory=list, repr=False)
-    _score_arr: list = field(default_factory=list, repr=False)
-    _name_arr: list = field(default_factory=list, repr=False)
-    _gender_arr: list = field(default_factory=list, repr=False)
-    _person_flag: list = field(default_factory=list, repr=False)
-    _ctx_kind: list = field(default_factory=list, repr=False)
-    _ctx_char: list = field(default_factory=list, repr=False)
-    _artist_flag: list = field(default_factory=list, repr=False)
-    _group_flag: list = field(default_factory=list, repr=False)
-    _person_sub: list = field(default_factory=list, repr=False)
-    _loc_sub: list = field(default_factory=list, repr=False)
-    _geo_sub: list = field(default_factory=list, repr=False)
-    _country_arr: list = field(default_factory=list, repr=False)
 
     def __getstate__(self):
-        # only the source state rides a pickle (compiled or image_bundle's;
-        # jobs ship the KB image): the derived caches above and the
-        # kernel's image handle (_ck_*, ckernel.py) refill per process
+        # the derived arrays, the per-line memos and the kernel's image
+        # handle (_ck_image, ckernel.py) refill per process
         return {"cols": self.cols, "name_dict": self.name_dict,
                 "nationality_forms": self.nationality_forms}
 
@@ -209,43 +190,37 @@ class KBBundle:
         return len(self.cols["name"]) - 1
 
     # -- derived hot arrays (values identical to the accessors) --------
+    @cached_property
     def type_arr(self) -> list:
-        """type_arr()[line] == get_ent_type(line) for line in 1..n."""
-        if not self._type_arr:
-            self._type_arr = [x or "" for x in self.cols["type"]]
-        return self._type_arr
+        """type_arr[line] == get_ent_type(line) for line in 1..n."""
+        return [x or "" for x in self.cols["type"]]
 
+    @cached_property
     def score_arr(self) -> list:
-        """score_arr()[line] == get_score(line) for line in 1..n."""
-        if not self._score_arr:
-            out = []
-            for x in self.cols["confidence"]:
-                try:
-                    out.append(float(x))
-                except (ValueError, TypeError):
-                    out.append(0.0)
-            self._score_arr = out
-        return self._score_arr
+        """score_arr[line] == get_score(line) for line in 1..n."""
+        return [*map(self.get_score, range(len(self.cols["confidence"])))]
 
+    @cached_property
     def name_arr(self) -> list:
-        """name_arr()[line] == get_data_for(line, 'NAME')."""
-        if not self._name_arr:
-            self._name_arr = [str(x or "") for x in self.cols["name"]]
-        return self._name_arr
+        """name_arr[line] == get_data_for(line, 'NAME')."""
+        return [str(x or "") for x in self.cols["name"]]
 
+    @cached_property
     def gender_arr(self) -> list:
-        """gender_arr()[line] == get_data_for(line, 'GENDER')."""
-        if not self._gender_arr:
-            self._gender_arr = [str(x or "") for x in self.cols["gender"]]
-        return self._gender_arr
+        """gender_arr[line] == get_data_for(line, 'GENDER')."""
+        return [str(x or "") for x in self.cols["gender"]]
 
+    @cached_property
+    def country_arr(self) -> list:
+        """country_arr[line] == get_data_for(line, 'COUNTRY')."""
+        return [str(x or "") for x in self.cols["country"]]
+
+    @cached_property
     def person_flag_arr(self) -> list:
         """flag[line] == get_ent_type(line) in ('person', 'person:artist',
         'person:fictional') — the exact-person test of entity.py:151-185."""
-        if not self._person_flag:
-            pf = ("person", "person:artist", "person:fictional")
-            self._person_flag = [t in pf for t in self.type_arr()]
-        return self._person_flag
+        pf = ("person", "person:artist", "person:fictional")
+        return [t in pf for t in self.type_arr]
 
     # context-dispatch precomputation for disambiguate_with_context
     # (entity.py:227-245): the per-candidate branch tests only substrings
@@ -256,73 +231,58 @@ class KBBundle:
     # 'organisation' spelling test never passes, context.py:307-310).
     CTX_ZERO, CTX_PERSON, CTX_DATED, CTX_CHAR = range(4)
 
+    @cached_property
     def ctx_kind_arr(self) -> list:
         """kind[line]: which context-percentile branch entity.py:227-245
         takes for this type string (substring tests, in reference order)."""
-        if not self._ctx_kind:
-            kinds, chars = [], []
-            for t in self.type_arr():
-                if "geo" in t or not t:
-                    k, c = self.CTX_ZERO, ""
-                elif "person" in t:
-                    k, c = self.CTX_PERSON, ""
-                elif "organization" in t or "event" in t:
-                    k, c = self.CTX_DATED, ""
-                else:
-                    # the reference iterates chars and breaks on the first
-                    # one passing ch[:2] != "__" and ch != "__" — for a
-                    # 1-char ch both are always true, so it's t[0]
-                    k, c = self.CTX_CHAR, t[0]
-                kinds.append(k)
-                chars.append(c)
-            self._ctx_kind = kinds
-            self._ctx_char = chars
-        return self._ctx_kind
+        return [self.CTX_ZERO if "geo" in t or not t
+                else self.CTX_PERSON if "person" in t
+                else self.CTX_DATED if "organization" in t or "event" in t
+                else self.CTX_CHAR for t in self.type_arr]
 
+    @cached_property
     def ctx_char_arr(self) -> list:
-        """char[line]: the single-char bucket key for CTX_CHAR lines."""
-        if not self._ctx_char:
-            self.ctx_kind_arr()
-        return self._ctx_char
+        """char[line]: the single-char bucket key of a CTX_CHAR line, ""
+        on any other.  The reference iterates the type's chars and breaks
+        on the first one passing ch[:2] != "__" and ch != "__"; for a
+        1-char ch both always hold, so it is t[0]."""
+        return [t[0] if k == self.CTX_CHAR else ""
+                for t, k in zip(self.type_arr, self.ctx_kind_arr)]
 
+    @cached_property
     def artist_flag_arr(self) -> list:
         """flag[line] == 'artist' in type string (entity.py:146-149)."""
-        if not self._artist_flag:
-            self._artist_flag = ["artist" in t for t in self.type_arr()]
-        return self._artist_flag
+        return ["artist" in t for t in self.type_arr]
 
+    @cached_property
     def group_flag_arr(self) -> list:
         """flag[line] == 'group' in type string (entity.py:146-149)."""
-        if not self._group_flag:
-            self._group_flag = ["group" in t for t in self.type_arr()]
-        return self._group_flag
+        return ["group" in t for t in self.type_arr]
 
+    @cached_property
     def person_sub_flag_arr(self) -> list:
         """flag[line] == 'person' in type string (substring, NOT the exact
         tuple test of person_flag_arr)."""
-        if not self._person_sub:
-            self._person_sub = ["person" in t for t in self.type_arr()]
-        return self._person_sub
+        return ["person" in t for t in self.type_arr]
 
+    @cached_property
     def geo_sub_flag_arr(self) -> list:
         """flag[line] == 'geo' in type string (context.py:121-126's
         country-bump branch test)."""
-        if not self._geo_sub:
-            self._geo_sub = ["geo" in t for t in self.type_arr()]
-        return self._geo_sub
+        return ["geo" in t for t in self.type_arr]
 
-    def country_arr(self) -> list:
-        """country_arr()[line] == get_data_for(line, 'COUNTRY')."""
-        if not self._country_arr:
-            self._country_arr = [str(x or "") for x in self.cols["country"]]
-        return self._country_arr
-
+    @cached_property
     def loc_sub_flag_arr(self) -> list:
         """flag[line] == 'location' in type string (the kernel's twin of
         lang.py's EN sense rules)."""
-        if not self._loc_sub:
-            self._loc_sub = ["location" in t for t in self.type_arr()]
-        return self._loc_sub
+        return ["location" in t for t in self.type_arr]
+
+    # per-line memos of get_dates, get_nationalities and get_multival:
+    # candidates repeat heavily under a Zipf mention distribution, so a
+    # line is split once per process, and only when a mention reads it
+    _dates_memo = cached_property(lambda self: {})
+    _nat_memo = cached_property(lambda self: {})
+    _multival_memo = cached_property(lambda self: {})
 
     def get_ent_type(self, line: int) -> str:
         """Type path STRING; all callers do substring tests (SURVEY §1.4.1)."""
@@ -349,7 +309,7 @@ class KBBundle:
             return 0.0
 
     def get_dates(self, line: int) -> frozenset[str]:
-        c = self._dates_cache.get(line)
+        c = self._dates_memo.get(line)
         if c is None:
             if "person" in self.get_ent_type(line):
                 d = {self.get_data_for(line, "DATE OF BIRTH"),
@@ -358,11 +318,11 @@ class KBBundle:
                 c = frozenset(d)
             else:
                 c = frozenset()
-            self._dates_cache[line] = c
+            self._dates_memo[line] = c
         return c
 
     def get_nationalities(self, line: int) -> frozenset[str]:
-        c = self._nat_cache.get(line)
+        c = self._nat_memo.get(line)
         if c is None:
             t = self.get_ent_type(line)
             nation: list[str] = []
@@ -373,7 +333,7 @@ class KBBundle:
             elif "person" in t:
                 nation = self.get_data_for(line, "NATIONALITIES", separator=MULTIVAL)
             c = frozenset(n.lower() for n in nation if n != "")
-            self._nat_cache[line] = c
+            self._nat_memo[line] = c
         return c
 
     def get_multival(self, line: int, col_name: str) -> tuple[str, ...]:
@@ -382,11 +342,11 @@ class KBBundle:
         ``if data: for v in data.split('|')`` and to iterating the raw
         ``''.split('|') == ['']`` (the '' entry never matches anything)."""
         key = (line, col_name)
-        c = self._multival_cache.get(key)
+        c = self._multival_memo.get(key)
         if c is None:
             data = self.get_data_for(line, col_name)
             c = tuple(data.split(MULTIVAL)) if data else ()
-            self._multival_cache[key] = c
+            self._multival_memo[key] = c
         return c
 
     # -- construction ----------------------------------------------------

@@ -244,13 +244,13 @@ class Context:
         self._person_total: dict[int, int] = {}
         # hot KB arrays pinned once per Context (update() runs per mention;
         # disambiguate_with_context reads the last five once per mention)
-        self._tarr = kb.type_arr()
-        self._garr = kb.gender_arr()
-        self._sarr = kb.score_arr()
-        self._kinds = kb.ctx_kind_arr()
-        self._kchars = kb.ctx_char_arr()
-        self._psub = kb.person_sub_flag_arr()
-        self._names = kb.name_arr()
+        self._tarr = kb.type_arr
+        self._garr = kb.gender_arr
+        self._sarr = kb.score_arr
+        self._kinds = kb.ctx_kind_arr
+        self._kchars = kb.ctx_char_arr
+        self._psub = kb.person_sub_flag_arr
+        self._names = kb.name_arr
 
         bounds = self.paragraphs + [2**62]
         ent_index = 0
@@ -258,8 +258,8 @@ class Context:
         n_ed = len(entities_and_dates)
         n_nat = len(nationalities)
         tarr = self._tarr
-        geoflag = kb.geo_sub_flag_arr()
-        countries_arr = kb.country_arr()
+        geoflag = kb.geo_sub_flag_arr
+        countries_arr = kb.country_arr
         names = self._names
         for pi, par in enumerate(self.paragraphs):
             buckets = self.mentions[par] = {}
@@ -487,10 +487,10 @@ def disambiguate_without_context(m: Mention, kb: KBBundle, text: str,
 
     # artist → exclude groups (intended semantics; see module docstring);
     # substring tests folded into per-KB flag arrays
-    aflag = kb.artist_flag_arr()
+    aflag = kb.artist_flag_arr
     for s in m.senses:
         if aflag[s]:
-            gflag = kb.group_flag_arr()
+            gflag = kb.group_flag_arr
             m.senses = [x for x in m.senses if not gflag[x]]
             break
 
@@ -499,7 +499,7 @@ def disambiguate_without_context(m: Mention, kb: KBBundle, text: str,
     # senses, so skip it entirely when no sense is person-typed (the
     # reference computes it unconditionally; results are identical).
     verb_index = -1
-    pflag = kb.person_flag_arr()
+    pflag = kb.person_flag_arr
     if any(pflag[s] for s in m.senses):
         sentence = _right_sentence(text, m)
         for verb in lang.verbs:
@@ -702,8 +702,8 @@ def resolve_coreferences(entities: list[Mention], kb: KBBundle, ctx: Context,
     — partial-match senses stay unfiltered and corefs stay unresolved
     (ner.py:350 ``if not print_all``); the people_in_text fill and the
     ``ctx.update`` register pass still run in every mode."""
-    psub = kb.person_sub_flag_arr()
-    sarr = kb.score_arr()
+    psub = kb.person_sub_flag_arr
+    sarr = kb.score_arr
     people_in_text = ctx.people_in_text
     for e in entities:
         ps = e.preferred_sense

@@ -50,16 +50,16 @@ def remove_accent(text: str) -> str:
 
 
 def apply_scan_modes(text: str, lowercase: bool = False,
-                     deaccent: bool = False) -> tuple[str, "str | None"]:
+                     deaccent: bool = False) -> tuple[str, str]:
     """The ``-d``/``-r`` rule, for a sanitized text or a namelist key:
     ``-r`` TRANSFORMS the working text (plain, possibly length-changing
     removal, ner.py:614 — offsets refer to the deaccented text), while
     ``-d`` lowers only the SCAN input (ner.py:473-476: resolution and
     output keep the original case).  Returns ``(text, scan_text)``, with
-    ``scan_text`` None when the scan reads ``text`` itself."""
+    ``scan_text`` the text object itself when the scan reads ``text``."""
     if deaccent:
         text = remove_accent(text)
-    return text, (text.lower() if lowercase else None)
+    return text, (text.lower() if lowercase else text)
 
 
 def _deaccent_unicode(text: str) -> str:

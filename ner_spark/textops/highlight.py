@@ -174,7 +174,7 @@ def highlight_pages(pages, artifacts, url_col: str = "url",
             htmls = []
             for text in batch.column(1).to_pylist():
                 text, scan_text = apply_scan_modes(text, lowercase, deaccent)
-                ms = atm.scan(scan_text if scan_text is not None else text)
+                ms = atm.scan(scan_text)
                 rows = [(m.ids[0], m.start + 1, m.end, text[m.start:m.end])
                         for m in ms]
                 htmls.append(render_html_highlights(text, rows))

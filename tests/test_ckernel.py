@@ -200,7 +200,9 @@ def test_trie_scan_matches_automaton_scan(env):
 
 def test_pickled_bundle_size_unchanged_by_kernel_call(env):
     """Only the bundle's source state rides a pickle: the derived caches
-    a kernel call (and the image build) fill stay in the process."""
+    a kernel call (and the image build) fill stay in the process, and
+    neither pickling nor equality sees them."""
+    import dataclasses
     import pickle
 
     bundle, atm, lang, kb_rows = env
@@ -208,8 +210,11 @@ def test_pickled_bundle_size_unchanged_by_kernel_call(env):
     before = len(pickle.dumps(fresh))
     text = gen_pages(kb_rows, n_pages=1, seed=5)[0]["text"]
     assert scan_and_resolve(fresh, atm, text, lang=lang, as_tuples=True)
-    assert fresh.__dict__.get("_ck_image") and fresh._type_arr
+    assert fresh.__dict__.get("_ck_image") and "type_arr" in fresh.__dict__
     assert len(pickle.dumps(fresh)) == before
+    assert pickle.loads(pickle.dumps(fresh)) == fresh
+    assert [f.name for f in dataclasses.fields(KBBundle)] == [
+        "cols", "name_dict", "nationality_forms"]
 
 
 def _section(image, name):

@@ -504,12 +504,12 @@ def test_ctx_dispatch_arrays_match_substring_semantics(bundle):
     """ctx_kind_arr/ctx_char_arr/flag arrays must reproduce the exact
     substring branch of entity.py:227-245 for every KB line (drift guard
     for the precomputed dispatch used by disambiguate_with_context)."""
-    kinds, chars = bundle.ctx_kind_arr(), bundle.ctx_char_arr()
-    aflag, gflag = bundle.artist_flag_arr(), bundle.group_flag_arr()
-    psub = bundle.person_sub_flag_arr()
+    kinds, chars = bundle.ctx_kind_arr, bundle.ctx_char_arr
+    aflag, gflag = bundle.artist_flag_arr, bundle.group_flag_arr
+    psub = bundle.person_sub_flag_arr
     K = bundle
-    for line in range(len(bundle.type_arr())):
-        t = bundle.type_arr()[line]
+    for line in range(len(bundle.type_arr)):
+        t = bundle.type_arr[line]
         if "geo" in t:
             want, wch = K.CTX_ZERO, ""  # country_percentile is always 0
         elif "person" in t:
@@ -545,9 +545,9 @@ def test_ctx_dispatch_synthetic_edge_types():
              description="d" * 60, wiki_backlinks=1, wiki_hits=1, wiki_ps=1),
     ]
     kb = KBBundle.from_rows(rows)
-    assert kb.ctx_kind_arr()[1] == KBBundle.CTX_ZERO
-    assert kb.person_sub_flag_arr()[1] is True   # tail check still fires
-    assert kb.ctx_kind_arr()[2] == KBBundle.CTX_ZERO
-    assert kb.ctx_kind_arr()[3] == KBBundle.CTX_CHAR
-    assert kb.ctx_char_arr()[3] == "m"
-    assert kb.ctx_kind_arr()[4] == kb.ctx_kind_arr()[5] == KBBundle.CTX_DATED
+    assert kb.ctx_kind_arr[1] == KBBundle.CTX_ZERO
+    assert kb.person_sub_flag_arr[1] is True   # tail check still fires
+    assert kb.ctx_kind_arr[2] == KBBundle.CTX_ZERO
+    assert kb.ctx_kind_arr[3] == KBBundle.CTX_CHAR
+    assert kb.ctx_char_arr[3] == "m"
+    assert kb.ctx_kind_arr[4] == kb.ctx_kind_arr[5] == KBBundle.CTX_DATED

@@ -333,8 +333,19 @@ def test_kb_artifact_save_load_roundtrip(spark, kb_rows, pages_df,
     assert kb_image(loaded.bundle, loaded.automaton) == \
         artifacts.image_bc.value
 
-    assert loaded.n_entities == artifacts.n_entities
-    assert loaded.n_keys == artifacts.n_keys
+    # the counts are read from the image, not written to the MANIFEST
+    with open(os.path.join(path, "MANIFEST.json")) as fh:
+        saved = json.load(fh)
+    assert not {"n_entities", "n_keys"} & saved.keys()
+    assert loaded.n_entities == artifacts.n_entities == len(kb_rows)
+    assert loaded.n_keys == artifacts.n_keys == artifacts.automaton.n_keys
+    # a MANIFEST that still carries them, as older artifacts do, loads
+    with open(os.path.join(path, "MANIFEST.json"), "w") as fh:
+        json.dump(dict(saved, n_entities=1, n_keys=1), fh)
+    old = load_kb_artifact(spark, path, kb_version="v1")
+    assert (old.n_entities, old.n_keys) == (len(kb_rows), loaded.n_keys)
+    with open(os.path.join(path, "MANIFEST.json"), "w") as fh:
+        json.dump(saved, fh)
     # scored KB identical row-for-row
     cols = sorted(artifacts.kb_df.columns)
     want = sorted(map(tuple, artifacts.kb_df.select(*cols).collect()))

@@ -469,7 +469,7 @@ def _ref_verb_jobs(kb, m, text, lang):
     """Direct transcription of entity.py:151-185."""
     from ner_spark.semantics.resolve import _right_sentence
 
-    pflag = kb.person_flag_arr()
+    pflag = kb.person_flag_arr
     verb_index = -1
     sentence = _right_sentence(text, m)
     for verb in lang.verbs:
